@@ -9,10 +9,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * The reference keeps its post-Load state in a SQLite table that every
   * query reads; the Spark-native equivalent of "the loaded table" is a
-  * persisted DataFrame. Without this, each of the 13 `v_*` queries in one
-  * Verify/Bench run would re-derive and re-shuffle the full upsert
-  * (13 scans + 13 shuffles, as flagged in round 1's VERDICT). `persist`
-  * is lazy — a single query still pays exactly one derive+upsert.
+  * persisted DataFrame. Without this, each of the 13 latest-state `v_*`
+  * queries in one Verify/Bench run would re-derive and re-shuffle the
+  * full upsert (13 scans + 13 shuffles). The history `v_*` queries read the full observation feed
+  * instead; [[observations]] persists it hash-partitioned by vehicle id
+  * and sorted in window order, so their shuffle and sort are paid once
+  * per session rather than once per call. `persist` is lazy — a single
+  * query still pays exactly one derive (+ upsert or shuffle).
   *
   * Lifecycle: entries are keyed by (session, dir) and evicted lazily —
   * every lookup first drops entries whose session has been stopped, so
@@ -23,6 +26,7 @@ import org.apache.spark.storage.StorageLevel
   */
 object Catalog {
   private val vehiclesCache = TrieMap.empty[(SparkSession, String), DataFrame]
+  private val observationsCache = TrieMap.empty[(SparkSession, String), DataFrame]
   private val sigCache = TrieMap.empty[(SparkSession, String), DataFrame]
   private val fpCache = TrieMap.empty[(SparkSession, String), DataFrame]
   private val ivfCache = TrieMap.empty[(SparkSession, String, Int), (Seq[Seq[Double]], DataFrame)]
@@ -84,6 +88,7 @@ object Catalog {
 
   private def evictStopped(): Unit = {
     vehiclesCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+    observationsCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
     sigCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
     fpCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
     ivfCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
@@ -114,6 +119,7 @@ object Catalog {
         cache.remove(k).foreach(df => if (!spark.sparkContext.isStopped) df.unpersist())
       }
     drop(vehiclesCache, (k: (SparkSession, String)) => k._1)
+    drop(observationsCache, (k: (SparkSession, String)) => k._1)
     drop(sigCache, (k: (SparkSession, String)) => k._1)
     drop(fpCache, (k: (SparkSession, String)) => k._1)
     drop(ccCache, (k: (SparkSession, String)) => k._1)
@@ -247,7 +253,7 @@ object Catalog {
     * is recounted over sub-cap shingles). The capped build reads the
     * MATERIALIZED uncapped index, so its df aggregate and anti-join
     * never re-tokenize the corpus. One owner for every index consumer
-    * (d_ngram_jaccard, d_containment, d_dedup_curve, d_ngram_novelty)
+    * (d_ngram_jaccard, d_containment, d_dedup_curve)
     * — the in-session analogue of a durable posting-list table. */
   def shingleIndex(spark: SparkSession, dir: String,
                    dfCap: Option[Int] = None): DataFrame = {
@@ -261,11 +267,10 @@ object Catalog {
       }
       // Materialize HASH-PARTITIONED BY SHINGLE (guide §2.4): the cached
       // relation reports its partitioning, so the pair miners' index
-      // self-join and d_ngram_novelty's df aggregate/join-back run with
-      // ZERO additional exchanges — the one shuffle here is paid once
-      // per session instead of twice per query. Partition count comes
-      // from spark.sql.shuffle.partitions (conf-driven, scale-adaptive),
-      // never a local constant.
+      // self-join runs with ZERO additional exchanges — the one shuffle
+      // here is paid once per session instead of twice per query.
+      // Partition count comes from spark.sql.shuffle.partitions
+      // (conf-driven, scale-adaptive), never a local constant.
       base.repartition(org.apache.spark.sql.functions.col("shingle"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     })
@@ -278,6 +283,28 @@ object Catalog {
       (spark, dir),
       graft.etl.VehicleFeed.vehiclesFromEvents(spark, dir)
         .persist(StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** The full vehicle observation feed for a scale-factor dir (cached,
+    * shared): `VehicleFeed.fromEvents` over the events table,
+    * hash-partitioned by `id` and sorted within partitions by
+    * `(id, updated_at, obs_id)` — the order of every per-vehicle window.
+    * The cached relation reports that partitioning and ordering, so the
+    * history keys' per-vehicle windows (scd2, gap, dwell, teleport) plan
+    * as `Window` directly over the in-memory scan with no exchange and
+    * no sort, and the `latest`-based keys aggregate by id without a
+    * shuffle. The one shuffle and sort are paid here, once per session
+    * — the layout a trajectory store keeps on disk (each vehicle's
+    * history in one partition, in time order). */
+  def observations(spark: SparkSession, dir: String): DataFrame = {
+    evictStopped()
+    observationsCache.getOrElseUpdate((spark, dir), {
+      import org.apache.spark.sql.functions.col
+      graft.etl.VehicleFeed.fromEvents(Tables(spark, dir).events)
+        .repartition(col("id"))
+        .sortWithinPartitions(col("id"), col("updated_at"), col("obs_id"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    })
   }
 
   /** The MinHash signature table for a dir's documents (cached, shared) —

@@ -405,13 +405,17 @@ object Store {
     * it. Public since r14 so `streaming.Maintenance.tick` can skip the
     * rewrite on an already-compact table. */
   def dataFileCount(spark: SparkSession, table: String): Long = {
-    val loc = new org.apache.hadoop.fs.Path(
-      spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
-        "/" + currentBacking(spark, table).toLowerCase(java.util.Locale.ROOT))
+    val loc = backingLocation(spark, table)
     val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(loc)) 0L
     else fs.listStatus(loc).count(s => s.isFile && !s.getPath.getName.startsWith("_"))
   }
+
+  /** The directory holding `table`'s CURRENT backing version's files. */
+  private def backingLocation(spark: SparkSession, table: String): org.apache.hadoop.fs.Path =
+    new org.apache.hadoop.fs.Path(
+      spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
+        "/" + currentBacking(spark, table).toLowerCase(java.util.Locale.ROOT))
 
   def compact(spark: SparkSession, table: String, key: String,
               buckets: Int = 8): (Long, Long) = {
@@ -422,14 +426,15 @@ object Store {
     // satisfies the repartition's distribution, so EnsureRequirements
     // would elide the exchange and each (per-file) scan task would write
     // its own file per bucket — reproducing the fragmentation this job
-    // exists to remove. With bucketing off, the explicit repartition
-    // stays and each write task emits exactly one file.
-    val bucketingConf = "spark.sql.sources.bucketing.enabled"
-    val prevBucketing = spark.conf.get(bucketingConf)
-    try {
-      spark.conf.set(bucketingConf, "false")
-      publish(spark, spark.table(table).repartition(buckets, col(key)), table, buckets, key)
-    } finally spark.conf.set(bucketingConf, prevBucketing)
+    // exists to remove. Reading the current backing's files by path
+    // (the table's schema, no bucket spec) keeps the explicit
+    // repartition, so each write task emits exactly one file — and
+    // leaves the session's bucketing conf alone, which every query
+    // planned concurrently on the session (a reader beside a
+    // maintenance tick) would otherwise see flipped.
+    val source = spark.read.schema(spark.table(table).schema)
+      .parquet(backingLocation(spark, table).toString)
+    publish(spark, source.repartition(buckets, col(key)), table, buckets, key)
     (before, dataFiles())
   }
 

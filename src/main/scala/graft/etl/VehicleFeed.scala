@@ -129,11 +129,14 @@ object VehicleFeed {
     * reference pipeline needs exactly this table to answer "what did the
     * fleet look like at time T".
     *
-    * Plan: ONE shuffle on the key, then `row_number` + `lead` inside the
-    * same window sort — per-key state is bounded by that key's history
-    * (same scale shape as sessionization, SURVEY §5). Ordering carries the
-    * unique `obs_id` tie-break, so versions are total-ordered even when
-    * two observations share a timestamp. */
+    * Plan: `row_number` + `lead` inside one window over the key — per-key
+    * state is bounded by that key's history (same scale shape as
+    * sessionization, SURVEY §5). The `v_scd2_history` key reads
+    * `Catalog.observations`, already hash-partitioned by id and sorted in
+    * window order, so the shuffle and sort are paid once per session
+    * there, not per call. Ordering carries the unique `obs_id`
+    * tie-break, so versions are total-ordered even when two observations
+    * share a timestamp. */
   def scd2History(observations: DataFrame, key: String = "id"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(key)).orderBy(col("updated_at"), col("obs_id"))

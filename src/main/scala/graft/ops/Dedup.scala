@@ -1125,8 +1125,8 @@ object Dedup {
         .cache())
 
   /** [[ngramNovelty]] over a prebuilt uncapped index fan-out (any frame
-    * carrying `doc_id, shingle` rows — the Catalog-materialized index
-    * the driver key reads, r17; extra columns like `len` are ignored). */
+    * carrying `doc_id, shingle` rows — the `d_ngram_novelty` key fans out the
+    * Catalog-cached shingle sets; extra columns like `len` are ignored). */
   def ngramNoveltyFromIndex(index: DataFrame): DataFrame = {
     val ex = index.select(col("doc_id"), col("shingle"))
     val dfreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -1396,8 +1396,11 @@ object Dedup {
       jaccardOnCandidatesFrom(graft.core.Catalog.shingledDocs(s, d),
         minhashCandidatesFromSignatures(graft.core.Catalog.minhashSignatures(s, d)), 0.8),
       Tables(s, d).documents)),
+    // the df aggregate needs no shingle partitioning: fan out the cached
+    // shingle sets rather than read the shingle-partitioned index, which
+    // measured slower for this key at 32 shuffle partitions
     "d_ngram_novelty"    -> ((s, d) =>
-      ngramNoveltyFromIndex(graft.core.Catalog.shingleIndex(s, d))),
+      ngramNoveltyFromIndex(shingleIndexFrom(graft.core.Catalog.shingledDocs(s, d)))),
     "d_dedup_curve"      -> ((s, d) =>
       dedupCurveFromIndex(graft.core.Catalog.shingleIndex(s, d, Some(100)))),
     "d_embed_neardup"    -> ((s, d) => embedNearDup(Tables(s, d).embeddings)),

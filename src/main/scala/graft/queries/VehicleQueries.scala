@@ -148,8 +148,13 @@ object VehicleQueries {
     * exceeding `maxGapHours` — the data-quality monitor a fleet feed
     * needs (a silent vehicle is indistinguishable from a healthy one in
     * the latest-only table; the reference keeps no history at all).
-    * One shuffle on the key (same window shape as sessionization);
-    * `delta_us` is an exact integer µs difference. */
+    * One per-vehicle window (same shape as sessionization); over
+    * `Catalog.observations` — the `v_gap_detection` key's input — the feed is
+    * already hash-partitioned by id and sorted in window order, so the
+    * shuffle and sort are paid once per session there and the window
+    * runs straight off the cached scan (an unpartitioned feed gets the
+    * shuffle Spark plans for it). `delta_us` is an exact integer µs
+    * difference. */
   def gapDetection(feed: DataFrame, maxGapHours: Int = 24): DataFrame = {
     val w = Window.partitionBy(col("id")).orderBy(col("updated_at"), col("obs_id"))
     val gapUs = maxGapHours.toLong * 3600L * 1000000L
@@ -175,9 +180,11 @@ object VehicleQueries {
     * max²·Δus²) so no division participates in the predicate; the
     * reported speed is ONE sqrt + ONE division, ROUND(,4).
     *
-    * One per-vehicle window shuffle (shared order with gapDetection);
-    * all-integer µs deltas; zero-Δt pairs (same-timestamp obs) are
-    * excluded — they are duplicate-feed artifacts, not motion. */
+    * One per-vehicle window (shared order with gapDetection), whose
+    * shuffle and sort are paid once per session in
+    * `Catalog.observations`; all-integer µs deltas; zero-Δt pairs
+    * (same-timestamp obs) are excluded — they are duplicate-feed
+    * artifacts, not motion. */
   def teleportDetection(feed: DataFrame, maxDegPerHour: Double = 0.5): DataFrame = {
     val w = Window.partitionBy(col("id")).orderBy(col("updated_at"), col("obs_id"))
     feed
@@ -207,10 +214,11 @@ object VehicleQueries {
     * nothing float to diverge on; single-observation episodes count
     * with dwell 0 (a stop seen once is still a stop).
     *
-    * One shuffle (the per-vehicle window) feeds both the episode
-    * assignment and the final aggregate — the same partitioning is
-    * reused, so at fleet scale this is one exchange + two local
-    * aggregations. */
+    * The per-vehicle partitioning feeds both the episode assignment
+    * and the final aggregate. Over `Catalog.observations` the feed
+    * already carries it (its shuffle and sort are paid once per
+    * session there), so the key is two windows and two local
+    * aggregations with no exchange. */
   def dwellTimes(feed: DataFrame): DataFrame = {
     val w = Window.partitionBy(col("id")).orderBy(col("updated_at"), col("obs_id"))
     feed
@@ -235,8 +243,10 @@ object VehicleQueries {
     * the rider-facing cadence, vs [[gapDetection]]'s per-vehicle
     * silence), reported per route as observation count plus mean/max
     * headway. Exact integer µs deltas, ONE double division for the
-    * mean, ROUND(,4)+0.0. One shuffle: the per-route window; the
-    * per-route aggregate reuses its partitioning. */
+    * mean, ROUND(,4)+0.0. One shuffle: the per-route window (the
+    * per-vehicle layout of `Catalog.observations` does not serve a
+    * per-route window, though it saves the feed's scan and derive);
+    * the per-route aggregate reuses its partitioning. */
   def headway(feed: DataFrame): DataFrame =
     feed
       .select(routeType(col("id")).as("route_type"), col("updated_at"), col("obs_id"))
@@ -340,24 +350,19 @@ object VehicleQueries {
   private def vehicles(s: SparkSession, dir: String): DataFrame =
     graft.core.Catalog.vehicles(s, dir)
 
+  private def observations(s: SparkSession, dir: String): DataFrame =
+    graft.core.Catalog.observations(s, dir)
+
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "v_transform"      -> ((s, d) => VehicleFeed.fromEvents(graft.core.Tables(s, d).events)),
-    "v_scd2_history"   -> ((s, d) =>
-      VehicleFeed.scd2History(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
-    "v_gap_detection"  -> ((s, d) =>
-      gapDetection(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
-    "v_teleport"       -> ((s, d) =>
-      teleportDetection(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
-    "v_dwell_times"    -> ((s, d) =>
-      dwellTimes(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
-    "v_headway"        -> ((s, d) =>
-      headway(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
-    "v_snapshot_diff"  -> ((s, d) =>
-      snapshotDiff(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
-    "v_upsert_tombstone" -> ((s, d) =>
-      upsertTombstone(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
-    "v_snapshot_diff_tombstone" -> ((s, d) =>
-      snapshotDiffTombstone(VehicleFeed.fromEvents(graft.core.Tables(s, d).events))),
+    "v_transform"      -> ((s, d) => observations(s, d)),
+    "v_scd2_history"   -> ((s, d) => VehicleFeed.scd2History(observations(s, d))),
+    "v_gap_detection"  -> ((s, d) => gapDetection(observations(s, d))),
+    "v_teleport"       -> ((s, d) => teleportDetection(observations(s, d))),
+    "v_dwell_times"    -> ((s, d) => dwellTimes(observations(s, d))),
+    "v_headway"        -> ((s, d) => headway(observations(s, d))),
+    "v_snapshot_diff"  -> ((s, d) => snapshotDiff(observations(s, d))),
+    "v_upsert_tombstone" -> ((s, d) => upsertTombstone(observations(s, d))),
+    "v_snapshot_diff_tombstone" -> ((s, d) => snapshotDiffTombstone(observations(s, d))),
     "v_upsert_latest"  -> ((s, d) => vehicles(s, d)),
     "v_top10_fastest"  -> ((s, d) => topFastest(vehicles(s, d))),
     "v_route_breakdown"-> ((s, d) => routeBreakdown(vehicles(s, d))),

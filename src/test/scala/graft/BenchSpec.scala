@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The bench battery's load-gated self-adjudication machinery (r14):
@@ -131,5 +133,28 @@ class BenchSpec extends AnyFunSuite {
       poll = () => { polled = true; 99.0 }, sleep = _ => ())
     assert(waitedSec == 0L && !underLoad && !polled,
       "a key-filtered run (the adjudication child itself) must not wait on load")
+  }
+
+  test("Report: the full and slim JSON lines parse with duplicate-key detection on") {
+    import com.fasterxml.jackson.core.{JsonFactory, JsonParseException, JsonParser}
+    import com.fasterxml.jackson.databind.ObjectMapper
+    val strict = new ObjectMapper(
+      new JsonFactory().enable(JsonParser.Feature.STRICT_DUPLICATE_DETECTION))
+    // the detector is really on: a repeated key is a parse error
+    intercept[JsonParseException](strict.readTree("""{"a":1,"a":2}"""))
+    val r = Bench.Report(total = 1.25, queries = Seq("k1" -> 0.5, "k2" -> 0.75),
+      errors = Seq("k3"), flags = Seq("k1"), flagsConfirmed = Seq("k1"),
+      adjRan = true, adjSec = Map("k1" -> 0.4), adj2Ran = true,
+      adj2Sec = Map("k1" -> 0.45), warmBreakdown = Map("ivf" -> 2.0),
+      keyLoad = Map("k1" -> 0.3, "k2" -> 0.2), adjKeyLoad = Map("k1" -> 0.1),
+      adj2KeyLoad = Map("k1" -> 0.1), sf = "/data/sf0.1")
+    val full = strict.readTree(r.fullJson)
+    val slim = strict.readTree(r.slimJson("/tmp/out.json"))
+    assert(full.get("adjudication2_under_load").asBoolean() == false)
+    assert(slim.get("full_json").asText() == "/tmp/out.json")
+    // the file artifact carries every slim field except the pointer to it
+    val fullKeys = Iterator.from(full.fieldNames().asScala).toSet
+    val slimKeys = Iterator.from(slim.fieldNames().asScala).toSet
+    assert(slimKeys - "full_json" subsetOf fullKeys)
   }
 }

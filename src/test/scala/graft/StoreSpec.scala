@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.core.{Catalog, Store, Tables}
@@ -133,6 +135,31 @@ class StoreSpec extends SparkSpec {
     assert(finalPlan.linesIterator.count(_.contains("Exchange hashpartitioning")) <= 1,
       s"compacted side should be exchange-free:\n$plan")
     dropTable("t_compact_sigs")
+  }
+
+  test("compact: the session's bucketing conf never changes while a compact runs") {
+    dropTable("t_compact_conf")
+    val docs = graft.core.Tables(spark, TestSpark.sf0001).documents
+    Store.refreshMinhashSignatures(spark, docs.filter($"doc_id" < 150),
+      buckets = 4, table = "t_compact_conf")
+    Store.refreshMinhashSignatures(spark, docs, buckets = 4, table = "t_compact_conf")
+    val conf = "spark.sql.sources.bucketing.enabled"
+    val before = spark.conf.get(conf)
+    // a concurrent observer on the same session: every value it reads
+    // while the compact runs is what a query planned then would see
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val observer = new Thread(() =>
+      while (!done.get()) { seen.add(spark.conf.get(conf)); Thread.sleep(1) })
+    observer.start()
+    val (filesBefore, filesAfter) = try
+      Store.compact(spark, "t_compact_conf", key = "doc_id", buckets = 4)
+    finally { done.set(true); observer.join() }
+    assert(filesBefore > 4 && filesAfter == 4)
+    assert(seen.asScala.toSet == Set(before),
+      s"the compact changed $conf on the session: observed ${seen.asScala.toSet}")
+    assert(spark.conf.get(conf) == before)
+    dropTable("t_compact_conf")
   }
 
   test("snapshot publish: a reader resolved before a rewrite keeps its version; crash-safe swap") {

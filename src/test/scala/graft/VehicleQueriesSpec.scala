@@ -277,4 +277,87 @@ class VehicleQueriesSpec extends SparkSpec {
       assert(r.getAs[Long]("n_stop_episodes") >= 1L)
     }
   }
+
+  /** The nine feed keys as the uncached operators over the plain
+    * `fromEvents(Tables.events)` feed — the form every key ran before
+    * the feed was served from `Catalog.observations`. */
+  private val uncachedFeedKeys: Map[String, org.apache.spark.sql.DataFrame =>
+      org.apache.spark.sql.DataFrame] = Map(
+    "v_transform" -> (f => f),
+    "v_scd2_history" -> (f => VehicleFeed.scd2History(f)),
+    "v_gap_detection" -> (f => VehicleQueries.gapDetection(f)),
+    "v_teleport" -> (f => VehicleQueries.teleportDetection(f)),
+    "v_dwell_times" -> (f => VehicleQueries.dwellTimes(f)),
+    "v_headway" -> (f => VehicleQueries.headway(f)),
+    "v_snapshot_diff" -> (f => VehicleQueries.snapshotDiff(f)),
+    "v_upsert_tombstone" -> (f => VehicleQueries.upsertTombstone(f)),
+    "v_snapshot_diff_tombstone" -> (f => VehicleQueries.snapshotDiffTombstone(f)))
+
+  test("Catalog.observations: the nine feed keys return the rows of the uncached fromEvents form") {
+    val dir = TestSpark.sf0001
+    val feed = VehicleFeed.fromEvents(graft.core.Tables(spark, dir).events)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    uncachedFeedKeys.foreach { case (k, op) =>
+      val served = SparkEntry.queries(k)(spark, dir)
+      val plain = op(feed)
+      assert(served.columns.toSeq == plain.columns.toSeq, k)
+      val got = rows(served)
+      // the default 0.5 deg/h teleport threshold flags nothing at this
+      // scale; the low-threshold comparison below is its non-empty case
+      if (k != "v_teleport") assert(got.nonEmpty, s"$k returned no rows at sf0.001")
+      assert(got == rows(plain), s"$k: cached-feed rows differ from the uncached form")
+    }
+    val obs = graft.core.Catalog.observations(spark, dir)
+    val jumps = rows(VehicleQueries.teleportDetection(obs, maxDegPerHour = 0.01))
+    assert(jumps.nonEmpty)
+    assert(jumps == rows(VehicleQueries.teleportDetection(feed, maxDegPerHour = 0.01)))
+  }
+
+  test("Catalog.observations: per-vehicle windows run straight off the cached scan (no Exchange or Sort)") {
+    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    import org.apache.spark.sql.execution.window.WindowExec
+    // adaptive execution wraps the final plan and each stage; look through both
+    def strip(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
+      case q: QueryStageExec => strip(q.plan)
+      case other => other
+    }
+    def nodes(p: SparkPlan): Seq[SparkPlan] = {
+      val s = strip(p)
+      s +: s.children.flatMap(nodes)
+    }
+    // the chain of operators from a Window down to the leaf it reads
+    def below(p: SparkPlan): Seq[SparkPlan] = p.children.map(strip) match {
+      case Seq(c) => c +: below(c)
+      case _ => Nil
+    }
+    Seq("v_scd2_history", "v_gap_detection", "v_dwell_times", "v_teleport").foreach { k =>
+      val df = SparkEntry.queries(k)(spark, TestSpark.sf0001)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val windows = nodes(plan).collect { case w: WindowExec => w }
+      assert(windows.nonEmpty, s"$k: no Window in\n$plan")
+      windows.foreach { w =>
+        val chain = below(w)
+        assert(chain.lastOption.exists(_.isInstanceOf[InMemoryTableScanExec]),
+          s"$k: the Window does not read the cached observations\n$plan")
+        assert(!chain.exists(n => n.isInstanceOf[ShuffleExchangeLike] || n.isInstanceOf[SortExec]),
+          s"$k: Exchange or Sort between Window and InMemoryTableScan\n$plan")
+      }
+    }
+  }
+
+  test("Catalog.clear releases the observations entry's cached blocks") {
+    val dir = TestSpark.sf0001
+    graft.core.Catalog.clear(spark)
+    val before = spark.sparkContext.getPersistentRDDs.size
+    graft.core.Catalog.observations(spark, dir).count()
+    assert(spark.sparkContext.getPersistentRDDs.size > before,
+      "building the entry must persist its frame")
+    graft.core.Catalog.clear(spark)
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
 }
