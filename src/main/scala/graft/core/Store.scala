@@ -155,7 +155,11 @@ object Store {
     // in-flight reader; every subsequent rewrite is snapshot-safe.)
     if (spark.catalog.tableExists(table) && !isView(spark, table))
       spark.sql(s"DROP TABLE $table")
-    spark.sql(s"CREATE OR REPLACE VIEW $table AS SELECT * FROM $backing")
+    // The swap is one catalog update: CREATE OR REPLACE VIEW drops the
+    // old view and creates the new one, and a reader resolving the name
+    // between the two fails with TABLE_OR_VIEW_NOT_FOUND.
+    if (isView(spark, table)) spark.sql(s"ALTER VIEW $table AS SELECT * FROM $backing")
+    else spark.sql(s"CREATE VIEW $table AS SELECT * FROM $backing")
     // keep current + previous for in-flight readers; retire older
     vs.dropRight(1).foreach { case (_, t) => spark.sql(s"DROP TABLE IF EXISTS $t") }
   }
@@ -231,15 +235,6 @@ object Store {
                           table: String = FingerprintsTable): Unit =
     publish(spark, Catalog.docFingerprints(spark, dir), table, buckets, "doc_id")
 
-  /** Persist the duplicate-cluster assignment (doc_id → cluster_id)
-    * bucketed by doc_id — the durable "cluster map" every downstream
-    * keep/drop decision joins against. Survivor filtering and funnel
-    * stages key on doc_id, so the bucketed layout makes those semi-joins
-    * read pre-partitioned buckets. */
-  def saveDupClusters(spark: SparkSession, dir: String, buckets: Int = 8,
-                      table: String = ClustersTable): Unit =
-    publish(spark, Catalog.dupClusters(spark, dir), table, buckets, "doc_id")
-
   /** Persist the trained NB quality-model artifact (r16) — the 256-row
     * (bucket, log-odds) table from `Catalog.qualityModel` — as a durable
     * table: the stored classifier the streaming gate's quality_model
@@ -314,15 +309,18 @@ object Store {
       graft.ops.Dedup.docFingerprints, "fp")
 
   /** Shared incremental-refresh protocol for doc_id-keyed derived
-    * tables (signatures, fingerprints): derive rows ONLY for documents
-    * not yet present and append them (the bucketed layout is preserved —
-    * Spark validates the bucket spec on append). At 100 TB this is the
-    * difference between re-deriving the whole corpus per ingest batch
-    * and paying compute proportional to NEW documents only; the
-    * anti-join driving it reads just the stored table's doc_id column
-    * (pruned scan). Idempotent: a re-run with the same corpus appends
-    * nothing. Appends only ever ADD files, so they need no version
-    * swap; they target the current backing table directly. */
+    * tables (signatures, fingerprints): given a documents frame, derive
+    * rows ONLY for documents the table does not hold yet and append them
+    * (the bucketed layout is preserved — Spark validates the bucket spec
+    * on append). Derivation is proportional to NEW documents, but
+    * finding them anti-joins every document in `documents` against the
+    * stored table's doc_id column (pruned scan), so handing it a whole
+    * corpus costs a corpus-wide pass. Used to seed the tables
+    * (`IngestGate.seedCorpus`) and to catch a table up with a corpus;
+    * the ingest gate itself appends each batch's rows directly from the
+    * admitted documents. Idempotent: a re-run with the same corpus
+    * appends nothing. Appends only ever ADD files, so they need no
+    * version swap; they target the current backing table directly. */
   private def refreshDocDerived(spark: SparkSession, documents: DataFrame,
                                 buckets: Int, table: String,
                                 derive: DataFrame => DataFrame,

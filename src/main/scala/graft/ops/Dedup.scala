@@ -46,7 +46,16 @@ object Dedup {
   def shingled(documents: DataFrame): DataFrame =
     documents
       .select(col("doc_id"), GraftFunctions.shingles(col("text")).as("shingles"))
-      .filter(size(col("shingles")) > 0)
+      .filter(hasShingles(col("shingles")))
+
+  /** Only documents with at least one shingle have a MinHash signature. */
+  private def hasShingles(shingles: Column): Column = size(shingles) > 0
+
+  /** The stored fingerprint of a text column: md5 of the normalized text. */
+  private def fingerprint(text: Column): Column = md5(normText(text))
+
+  /** The stored MinHash signature of a shingle set. */
+  private def signature(shingles: Column): Column = GraftFunctions.minhash(shingles)
 
   /** Content fingerprint per document: `(doc_id, norm_hash)` — the
     * md5 of the normalized text. Alongside the MinHash signature table,
@@ -54,7 +63,22 @@ object Dedup {
     * materializes once (Store.saveDocFingerprints) so that admitting a
     * batch never re-reads corpus text. */
   def docFingerprints(documents: DataFrame): DataFrame =
-    documents.select(col("doc_id"), md5(normText(col("text"))).as("norm_hash"))
+    documents.select(col("doc_id"), fingerprint(col("text")).as("norm_hash"))
+
+  /** `documents` plus both stored derived columns: `norm_hash` (the
+    * [[docFingerprints]] column) and `sig` (the [[minhashSignatures]]
+    * column, null for a document without shingles — the rows that
+    * table leaves out). Lets a writer that already holds the documents
+    * (the ingest gate's admitted rows) append fingerprint and signature
+    * rows without deriving them from the stored corpus. The shingle set
+    * feeds two expressions, so the optimizer keeps it in its own
+    * projection and tokenizes each document once. */
+  private[graft] def withStoredColumns(documents: DataFrame): DataFrame =
+    documents
+      .withColumn("norm_hash", fingerprint(col("text")))
+      .withColumn("shingles", GraftFunctions.shingles(col("text")))
+      .withColumn("sig", when(hasShingles(col("shingles")), signature(col("shingles"))))
+      .drop("shingles")
 
   /** Exact dedup by normalized content hash: keep the smallest doc_id per
     * group. One map-side-combined hash aggregate — the cheapest possible
@@ -127,8 +151,7 @@ object Dedup {
     * dedup runs, and spares candidate generation the second corpus scan
     * its self-join otherwise costs (see SCALING.md). */
   def minhashSignatures(documents: DataFrame): DataFrame =
-    shingled(documents)
-      .select(col("doc_id"), GraftFunctions.minhash(col("shingles")).as("sig"))
+    shingled(documents).select(col("doc_id"), signature(col("shingles")).as("sig"))
 
   /** LSH band buckets of a signature table: one (doc_id, band, bhash)
     * row per (doc, band) — the shared candidate-generation intermediate
@@ -440,13 +463,13 @@ object Dedup {
   /** [[crossDedup]] served off PRECOMPUTED corpus fingerprint and
     * signature frames (the durable `Store.docFingerprints` /
     * `Store.minhashSignatures` tables, or the in-session Catalog
-    * caches). The corpus's raw rows are touched exactly once, by a
-    * broadcast semi-join that extracts only the CANDIDATE rows for
-    * Jaccard verification — everything else reads the compact derived
-    * columns.
+    * caches). The corpus's raw rows are read once, streamed through a
+    * join with the broadcast candidate pairs, and only the matched
+    * rows are shingled for Jaccard verification — everything else reads
+    * the compact derived columns.
     *
     * Join strategy: the batch side (fingerprints, band buckets,
-    * candidate ids) is explicitly `broadcast()` — an ingest batch is
+    * candidate pairs) is explicitly `broadcast()` — an ingest batch is
     * small relative to the corpus by contract, so the stored corpus
     * side stays scan-only with ZERO exchanges (spec-proven,
     * StoreSpec). A batch too large to broadcast should be split into
@@ -467,15 +490,16 @@ object Dedup {
     // Jaccard verify shingles ONLY the candidate corpus rows: at 100 TB
     // the shingle table is ~corpus-sized (unlike the 1%-sized signature
     // table), so it is cheaper to re-shingle the few collision rows than
-    // to materialize corpus shingles.
-    val candCorpus = corpus.join(
-      broadcast(cand.select(col("corpus_id").as("doc_id")).distinct()),
-      Seq("doc_id"), "left_semi")
+    // to materialize corpus shingles. The corpus streams through one
+    // join with the broadcast candidate pairs (each carrying its batch
+    // document's shingle set), and only matched rows are shingled (a
+    // document without shingles has no signature, so it is never a
+    // candidate).
     val shB = shingled(batch).select(col("doc_id").as("batch_id"), col("shingles").as("sh_a"))
-    val shC = shingled(candCorpus).select(col("doc_id").as("corpus_id"), col("shingles").as("sh_b"))
-    val near = cand
-      .join(shB, "batch_id")
-      .join(shC, "corpus_id")
+    val near = corpus.select(col("doc_id").as("corpus_id"), col("text"))
+      .join(broadcast(cand.join(shB, "batch_id")), "corpus_id")
+      .select(col("batch_id"), col("corpus_id"), col("sh_a"),
+        GraftFunctions.shingles(col("text")).as("sh_b"))
       .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))))
       .filter(round(col("inter") / (size(col("sh_a")) + size(col("sh_b")) - col("inter")), 4) >= tau)
       .select(col("batch_id"), col("corpus_id"))

@@ -15,18 +15,20 @@ import graft.ops.Dedup
   * Architecture: there is no streaming state store — the state IS the
   * durable corpus (documents + fingerprint + signature tables in
   * `core.Store`), which each micro-batch reads for vetting and extends
-  * by its ADMITTED rows only (the incremental `Store.refresh*` path:
-  * compute ∝ batch, never ∝ corpus). The batch's decision frame is
+  * by its ADMITTED rows only. The batch's decision frame is
   * materialized ONCE, appended to a decision-log table FIRST, and the
-  * admitted set is derived from that same in-hand frame (r16 — never
-  * by re-reading the log, whose size grows ∝ admitted history, and
-  * never from a plan that reads tables the batch just mutated). The
-  * log is the gate's durable write-ahead record (a crashed batch
-  * re-runs idempotently: the corpus-as-of-before-the-batch
-  * reconstruction below makes re-derived decisions equal the
-  * originals, the corpus append anti-joins out doc_ids a crashed
-  * attempt already landed, and the fingerprint/signature refreshes
-  * append only missing rows).
+  * admitted set is derived from that same in-hand frame (never by
+  * re-reading the log, whose size grows ∝ admitted history, and never
+  * from a plan that reads tables the batch just mutated). The admitted
+  * rows, their fingerprint and signature columns (`Dedup`'s stored-
+  * column definitions) and their presence flags are materialized as
+  * one batch-sized frame that feeds the corpus, fingerprint and
+  * signature appends — compute ∝ batch, never ∝ corpus. The log is the
+  * gate's durable write-ahead record (a crashed batch re-runs
+  * idempotently: the corpus-as-of-before-the-batch reconstruction
+  * below makes re-derived decisions equal the originals, and each of
+  * the three appends drops the doc_ids a crashed attempt already
+  * landed in its table).
   *
   * Sequencing semantics: batch N is vetted against the corpus AS OF
   * batch N−1's admissions — a duplicate of a document admitted two
@@ -380,6 +382,24 @@ object IngestGate {
     val walFrame = graft.ops.DupClusters.materialize(
       (contam ++ quality ++ langQuality ++ sampling ++ semRejects ++ dsirRejects ++ qmRejects)
         .foldLeft(decisions)(_ unionByName _))
+    // Crash-replay guard for the appends: a crashed attempt may already
+    // have landed this batch's rows in some of the stored tables (the
+    // corpus, then the fingerprints, then the signatures — the write
+    // order below), and an unconditional re-append would duplicate those
+    // doc_ids. One batch-sized probe over all three (each scan semi-
+    // joined against the broadcast batch ids) flags which ids each table
+    // already holds; it is MATERIALIZED (eager localCheckpoint) before
+    // any append, so no write re-reads the table it appends to. Empty on
+    // a clean run.
+    val stored = Seq(corpusTable -> "in_corpus", fpTable -> "in_fp", sigTable -> "in_sig")
+    val flags = stored.map(_._2)
+    def flagged(ids: DataFrame, holder: String): DataFrame =
+      ids.select(col("doc_id") +: flags.map(f => lit(f == holder).as(f)): _*)
+    val present = stored
+      .collect { case (t, flag) if spark.catalog.tableExists(t) =>
+        flagged(spark.table(t).join(broadcast(batchIds), Seq("doc_id"), "left_semi"), flag) }
+      .foldLeft(flagged(batchIds.limit(0), ""))(_ unionByName _)
+      .localCheckpoint()
     // appendTarget: once [[compactDecisions]] has folded the log into
     // a versioned view, appends land on the current backing (plain
     // tables resolve to themselves — the corpus-append discipline)
@@ -387,33 +407,37 @@ object IngestGate {
       if (spark.catalog.tableExists(decisionsTable))
         Store.appendTarget(spark, decisionsTable)
       else decisionsTable)
-    val rejected = walFrame.select(col("batch_id").as("doc_id")).distinct()
-    val admitted = batch.join(rejected, Seq("doc_id"), "left_anti")
-    // Crash-replay guard for the corpus append itself: a crashed attempt
-    // may already have landed this batch's admitted rows in corpusTable,
-    // and an unconditional re-append would duplicate those doc_ids. Probe
-    // which batch ids are already present and anti-join them out. The
-    // probe is MATERIALIZED (eager localCheckpoint — it is batch-sized,
-    // ∝ ids, not corpus-sized) BEFORE the append, so the write never
-    // re-reads the table it is appending to. No-op on a clean run.
-    val toAppend =
-      if (!haveCorpus) admitted
-      else {
-        val present = spark.table(corpusTable)
-          .join(broadcast(batchIds), Seq("doc_id"), "left_semi")
-          .select(col("doc_id")).localCheckpoint()
-        admitted.join(broadcast(present), Seq("doc_id"), "left_anti")
+    // one row per present id; the probe is batch-sized, so a single
+    // partition aggregates it without a shuffle
+    val anyOf = flags.map(f => max(col(f)).as(f))
+    val presence = present.coalesce(1).groupBy(col("doc_id")).agg(anyOf.head, anyOf.tail: _*)
+    // The admitted rows, derived from the in-hand decision frame (a
+    // broadcast anti-join: duplicate build rows are harmless), with
+    // their presence flags and both stored derived columns — one
+    // materialized frame feeds all three appends, so the gate never
+    // re-reads the corpus to find what it just admitted.
+    val admitted = batch.join(broadcast(walFrame.select(col("batch_id").as("doc_id"))),
+      Seq("doc_id"), "left_anti")
+    val toStore = graft.ops.DupClusters.materialize(Dedup.withStoredColumns(admitted)
+      .join(broadcast(presence), Seq("doc_id"), "left_outer")
+      .na.fill(false, flags))
+    // Each append keeps only the rows its own table lacks and lands on
+    // the CURRENT BACKING when the table is a versioned view (Takedown.
+    // scrub, Store.compact) — plain tables resolve to themselves, and an
+    // append to a missing table creates it. A derived table that does
+    // not exist yet is published instead.
+    def lacking(flag: String, cols: Column*): DataFrame =
+      toStore.filter(!col(flag)).select(cols: _*)
+    def append(rows: DataFrame, table: String): Unit =
+      rows.write.mode("append").bucketBy(buckets, "doc_id").sortBy("doc_id")
+        .saveAsTable(Store.appendTarget(spark, table))
+    append(lacking("in_corpus", batch.columns.toSeq.map(col): _*), corpusTable)
+    Seq(fpTable -> lacking("in_fp", col("doc_id"), col("norm_hash")),
+        sigTable -> lacking("in_sig", col("doc_id"), col("sig")).filter(col("sig").isNotNull))
+      .foreach { case (table, rows) =>
+        if (spark.catalog.tableExists(table)) append(rows, table)
+        else Store.publish(spark, rows, table, buckets, "doc_id")
       }
-    // appends land on the CURRENT BACKING when the table has been
-    // scrubbed into a versioned view (Takedown.scrub, r15) — plain
-    // tables resolve to themselves
-    toAppend.write.mode(if (haveCorpus) "append" else "overwrite")
-      .bucketBy(buckets, "doc_id").sortBy("doc_id")
-      .saveAsTable(if (haveCorpus) Store.appendTarget(spark, corpusTable)
-                   else corpusTable)
-    // incremental: derives rows only for the just-admitted doc_ids
-    Store.refreshDocFingerprints(spark, spark.table(corpusTable), buckets, fpTable)
-    Store.refreshMinhashSignatures(spark, spark.table(corpusTable), buckets, sigTable)
     // Semantic arm state growth: the ADMITTED docs' vectors become
     // survivors for later batches (single-nearest cluster — the stored
     // serving layout), with the same presence-probe replay guard as the
@@ -440,11 +464,11 @@ object IngestGate {
         .saveAsTable(if (haveSurv) Store.appendTarget(spark, sem.survivorTable)
                      else sem.survivorTable)
     }
-    // every consumer of the batch's decision frame has executed (the
-    // WAL append, the corpus append, the survivor append) — release
-    // its checkpoint blocks so a long-running gate doesn't pin one
-    // batch-sized RDD per micro-batch for the session lifetime
-    graft.ops.DupClusters.release(walFrame)
+    // every consumer of the batch's materialized frames has executed
+    // (the WAL append, the three store appends, the survivor append) —
+    // release their checkpoint blocks so a long-running gate doesn't pin
+    // batch-sized RDDs per micro-batch for the session lifetime
+    Seq(walFrame, present, toStore).foreach(graft.ops.DupClusters.release)
   }
 
   /** The gate's operational readout (r14) — "why is my corpus

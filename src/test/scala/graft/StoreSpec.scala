@@ -189,6 +189,30 @@ class StoreSpec extends SparkSpec {
     dropTable("t_snap_sigs")
   }
 
+  test("snapshot publish: a reader resolving the name during view swaps always finds it") {
+    dropTable("t_swap")
+    val rows = spark.range(100).select($"id".as("doc_id"), ($"id" % 7).as("v"))
+    Store.publish(spark, rows, "t_swap", buckets = 2, key = "doc_id")
+    // a concurrent reader on the same session, looking the public name
+    // up in a tight loop while the writer re-points it at fresh versions
+    val name = org.apache.spark.sql.catalyst.TableIdentifier("t_swap")
+    val (lookups, misses) = (new java.util.concurrent.atomic.AtomicLong,
+      new java.util.concurrent.atomic.AtomicLong)
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val reader = new Thread(() =>
+      while (!done.get()) {
+        if (!spark.sessionState.catalog.tableExists(name)) misses.incrementAndGet()
+        lookups.incrementAndGet()
+      })
+    reader.start()
+    try (1 to 10).foreach(_ => Store.publish(spark, rows, "t_swap", buckets = 2, key = "doc_id"))
+    finally { done.set(true); reader.join() }
+    assert(lookups.get() > 0)
+    assert(misses.get() == 0, s"the name was missing in ${misses.get()} of ${lookups.get()} lookups")
+    assert(spark.table("t_swap").count() == 100)
+    dropTable("t_swap")
+  }
+
   test("publishAnnRefit: versioned swap cuts serving to the live-only index; previous retained") {
     dropTable("t_ann_idx")
     Store.saveAnnIndex(spark, TestSpark.sf0001, buckets = 4, table = "t_ann_idx")

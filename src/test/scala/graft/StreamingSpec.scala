@@ -711,6 +711,110 @@ class StreamingSpec extends SparkSpec {
     dropGateTables(tables: _*)
   }
 
+  /** An admit writes the decision log, then the corpus, then the
+    * fingerprints, then the signatures. A crash after the first
+    * `landed` of those writes leaves this batch's rows in them and in
+    * none of the later ones; replaying the batch must converge on the
+    * clean run's tables row for row, with no doc_id stored twice. */
+  private def crashWindowReplay(landed: Int): Unit = {
+    import graft.streaming.IngestGate
+    val Seq(corpusT, fpT, sigT, logT) =
+      Seq("corpus", "fps", "sigs", "log").map(t => s"t_gatecw${landed}_$t")
+    val docs = graft.core.Tables(spark, TestSpark.sf0001).documents
+    val batch = docs.filter($"source" === "src0")
+    def admit(): Unit = IngestGate.admitBatch(batch, corpusT, fpT, sigT, logT, buckets = 4)
+    def rows(t: String) = spark.table(t).collect().map(_.toString).sorted.toSeq
+    def logRows = spark.table(logT).distinct().collect().map(_.toString).sorted.toSeq
+    def stored = Seq(corpusT, fpT, sigT).map(rows) :+ logRows
+    dropGateTables(corpusT, fpT, sigT, logT)
+    IngestGate.seedCorpus(spark, docs.filter($"source" =!= "src0"), corpusT, fpT, sigT, buckets = 4)
+    val seeded = spark.table(corpusT).count()
+    admit()
+    val clean = stored
+    val batchIds = batch.select($"doc_id").collect().map(_.getLong(0)).toSeq
+    assert(spark.table(corpusT).count() > seeded, "the batch must admit some documents")
+    assert(spark.table(logT).count() > 0, "the batch must reject some documents")
+    // the post-crash state: this batch's rows gone from every table the
+    // crashed attempt had not yet written
+    Seq(corpusT, fpT, sigT).drop(landed - 1).foreach { t =>
+      graft.core.Store.publishLike(spark, spark.table(t).filter(!$"doc_id".isin(batchIds: _*)), t)
+    }
+    assert(stored != clean, "the crash must leave a table short of the batch")
+    admit()
+    assert(stored == clean, s"replay after a crash at write $landed must equal the clean run")
+    Seq(corpusT, fpT, sigT).foreach { t =>
+      assert(spark.table(t).groupBy($"doc_id").count().filter($"count" > 1).count() == 0,
+        s"no doc_id stored twice in $t")
+    }
+    dropGateTables(corpusT, fpT, sigT, logT)
+  }
+
+  test("ingest gate crash window: after the decision-log append, a replay converges on the clean run") {
+    crashWindowReplay(landed = 1)
+  }
+
+  test("ingest gate crash window: after the corpus append, a replay converges on the clean run") {
+    crashWindowReplay(landed = 2)
+  }
+
+  test("ingest gate crash window: after the fingerprint append, a replay converges on the clean run") {
+    crashWindowReplay(landed = 3)
+  }
+
+  /** Spark jobs started while `body` runs, counted by a SparkListener.
+    * The listener bus is asynchronous but ordered, so `body` is framed
+    * by two marker jobs and every job seen between the two markers'
+    * starts is `body`'s. */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-of-${java.util.UUID.randomUUID}"
+    val counted = new java.util.concurrent.atomic.AtomicInteger
+    @volatile var open = false
+    val closed = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))) match {
+          case Some(d) if d == s"$tag-open" => open = true
+          case Some(d) if d == s"$tag-close" => open = false; closed.countDown()
+          case _ => if (open) counted.incrementAndGet()
+        }
+    }
+    def marker(name: String): Unit = {
+      sc.setJobDescription(s"$tag-$name")
+      try spark.range(1).rdd.count() finally sc.setJobDescription(null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      marker("open")
+      body
+      marker("close")
+      assert(closed.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+      counted.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("ingest gate: one warm admit runs a bounded number of Spark jobs (no corpus-wide pass)") {
+    import graft.streaming.IngestGate
+    val tables = Seq("t_gatej_corpus", "t_gatej_fps", "t_gatej_sigs", "t_gatej_log")
+    dropGateTables(tables: _*)
+    val docs = graft.core.Tables(spark, TestSpark.sf0001).documents
+    IngestGate.seedCorpus(spark, docs.filter(!$"source".isin("src0", "src1")),
+      "t_gatej_corpus", "t_gatej_fps", "t_gatej_sigs")
+    // the served layout: every table a versioned view, appends landing
+    // on its current backing
+    Seq("t_gatej_corpus", "t_gatej_fps", "t_gatej_sigs")
+      .foreach(graft.core.Store.compact(spark, _, "doc_id"))
+    def admit(src: String): Unit = IngestGate.admitBatch(docs.filter($"source" === src),
+      "t_gatej_corpus", "t_gatej_fps", "t_gatej_sigs", "t_gatej_log")
+    admit("src0") // warm-up: the decision log comes into being here
+    val jobs = jobsOf(admit("src1"))
+    // 17 measured with the batch-derived appends (30 when each derived
+    // table re-read the whole corpus to find the batch's new rows)
+    assert(jobs <= 17, s"a warm admit ran $jobs Spark jobs; more than 17 means a pass the batch does not need")
+    dropGateTables(tables: _*)
+  }
+
   test("ingest gate with eval vetting: streamed contam rejections equal batch decontaminateBloom") {
     import graft.streaming.IngestGate
     val tables = Seq("t_gate4_corpus", "t_gate4_fps", "t_gate4_sigs", "t_gate4_log")
