@@ -380,23 +380,6 @@ object Store {
     publish(spark, assignment, table, buckets, "doc_id")
   }
 
-  /** Compact a stored bucketed table back to ONE file per bucket.
-    *
-    * Every incremental [[refreshMinhashSignatures]] append lands one
-    * file-set per batch, so bucket b accumulates one file per refresh —
-    * the classic small-files decay of any append-only table (the
-    * Delta/Iceberg OPTIMIZE problem). `repartition(buckets, key)` uses
-    * the same murmur3-hash partitioning as the bucket spec, so each
-    * write task holds exactly one bucket's rows and emits exactly one
-    * file; the rewrite changes the LAYOUT only — contents and the
-    * exchange-free join property are preserved (spec-proven). The
-    * rewrite goes through the versioned publish, reading the current
-    * version and swapping the view — concurrent readers are never torn.
-    *
-    * Returns (files before, files after). Run it when
-    * files-per-bucket × open cost starts to show in scan times — at
-    * 100 TB that is a scheduled maintenance job, exactly like SQLite's
-    * VACUUM for the reference's store. */
   /** Data-file count of `table`'s CURRENT backing version — the cheap
     * "does this table need a [[compact]]?" probe (one directory
     * listing, no data read): > buckets means appends have fragmented
@@ -415,6 +398,23 @@ object Store {
       spark.conf.get("spark.sql.warehouse.dir").stripSuffix("/") +
         "/" + currentBacking(spark, table).toLowerCase(java.util.Locale.ROOT))
 
+  /** Compact a stored bucketed table back to ONE file per bucket.
+    *
+    * Every incremental [[refreshMinhashSignatures]] append lands one
+    * file-set per batch, so bucket b accumulates one file per refresh —
+    * the classic small-files decay of any append-only table (the
+    * Delta/Iceberg OPTIMIZE problem). `repartition(buckets, key)` uses
+    * the same murmur3-hash partitioning as the bucket spec, so each
+    * write task holds exactly one bucket's rows and emits exactly one
+    * file; the rewrite changes the LAYOUT only — contents and the
+    * exchange-free join property are preserved (spec-proven). The
+    * rewrite goes through the versioned publish, reading the current
+    * version and swapping the view — concurrent readers are never torn.
+    *
+    * Returns (files before, files after). Run it when
+    * files-per-bucket × open cost starts to show in scan times — at
+    * 100 TB that is a scheduled maintenance job, exactly like SQLite's
+    * VACUUM for the reference's store. */
   def compact(spark: SparkSession, table: String, key: String,
               buckets: Int = 8): (Long, Long) = {
     import org.apache.spark.sql.functions.col

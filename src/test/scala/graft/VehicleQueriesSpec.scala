@@ -1,8 +1,10 @@
 package graft
 
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.functions._
 import graft.etl.VehicleFeed
 import graft.queries.VehicleQueries
+import graft.tools.Audit.planNodes
 
 class VehicleQueriesSpec extends SparkSpec {
   import spark.implicits._
@@ -293,10 +295,12 @@ class VehicleQueriesSpec extends SparkSpec {
     "v_upsert_tombstone" -> (f => VehicleQueries.upsertTombstone(f)),
     "v_snapshot_diff_tombstone" -> (f => VehicleQueries.snapshotDiffTombstone(f)))
 
+  private def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
   test("Catalog.observations: the nine feed keys return the rows of the uncached fromEvents form") {
     val dir = TestSpark.sf0001
     val feed = VehicleFeed.fromEvents(graft.core.Tables(spark, dir).events)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     uncachedFeedKeys.foreach { case (k, op) =>
       val served = SparkEntry.queries(k)(spark, dir)
       val plain = op(feed)
@@ -314,34 +318,18 @@ class VehicleQueriesSpec extends SparkSpec {
   }
 
   test("Catalog.observations: per-vehicle windows run straight off the cached scan (no Exchange or Sort)") {
-    import org.apache.spark.sql.execution.{SortExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.window.WindowExec
-    // adaptive execution wraps the final plan and each stage; look through both
-    def strip(p: SparkPlan): SparkPlan = p match {
-      case a: AdaptiveSparkPlanExec => strip(a.executedPlan)
-      case q: QueryStageExec => strip(q.plan)
-      case other => other
-    }
-    def nodes(p: SparkPlan): Seq[SparkPlan] = {
-      val s = strip(p)
-      s +: s.children.flatMap(nodes)
-    }
-    // the chain of operators from a Window down to the leaf it reads
-    def below(p: SparkPlan): Seq[SparkPlan] = p.children.map(strip) match {
-      case Seq(c) => c +: below(c)
-      case _ => Nil
-    }
     Seq("v_scd2_history", "v_gap_detection", "v_dwell_times", "v_teleport").foreach { k =>
       val df = SparkEntry.queries(k)(spark, TestSpark.sf0001)
       df.collect()
       val plan = df.queryExecution.executedPlan
-      val windows = nodes(plan).collect { case w: WindowExec => w }
+      val windows = planNodes(plan).collect { case w: WindowExec => w }
       assert(windows.nonEmpty, s"$k: no Window in\n$plan")
       windows.foreach { w =>
-        val chain = below(w)
+        // the operators under the Window, down to the leaf it reads
+        val chain = planNodes(w).tail
         assert(chain.lastOption.exists(_.isInstanceOf[InMemoryTableScanExec]),
           s"$k: the Window does not read the cached observations\n$plan")
         assert(!chain.exists(n => n.isInstanceOf[ShuffleExchangeLike] || n.isInstanceOf[SortExec]),
@@ -350,14 +338,69 @@ class VehicleQueriesSpec extends SparkSpec {
     }
   }
 
-  test("Catalog.clear releases the observations entry's cached blocks") {
+  test("Catalog.vehicles: the 14 latest-state keys return the rows of the uncached upsert") {
     val dir = TestSpark.sf0001
-    graft.core.Catalog.clear(spark)
-    val before = spark.sparkContext.getPersistentRDDs.size
-    graft.core.Catalog.observations(spark, dir).count()
-    assert(spark.sparkContext.getPersistentRDDs.size > before,
-      "building the entry must persist its frame")
-    graft.core.Catalog.clear(spark)
-    assert(spark.sparkContext.getPersistentRDDs.size == before)
+    val plain = VehicleFeed.vehiclesFromEvents(spark, dir)
+    assert(VehicleQueries.latestState.size == 14)
+    // the three lookups' fixed parameters may miss at this scale; their
+    // non-empty cases follow
+    val lookups = Set("v_bearing_filter", "v_geo_bbox", "v_speed_by_id")
+    VehicleQueries.latestState.foreach { case (k, op) =>
+      val served = SparkEntry.queries(k)(spark, dir)
+      val expected = op(plain)
+      assert(served.columns.toSeq == expected.columns.toSeq, k)
+      val got = rows(served)
+      if (!lookups(k)) assert(got.nonEmpty, s"$k returned no rows at sf0.001")
+      assert(got == rows(expected), s"$k: cached-upsert rows differ from the uncached form")
+    }
+    val cached = graft.core.Catalog.vehicles(spark, dir)
+    val id = plain.select("id").orderBy("id").head().getString(0)
+    Seq[org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame](
+      v => VehicleQueries.byBearing(v, 180.0, 90.0),
+      v => VehicleQueries.geoBox(v, 42.0, 43.0, -72.0, -71.0),
+      v => VehicleQueries.speedById(v, id)
+    ).foreach { op =>
+      val hit = rows(op(cached))
+      assert(hit.nonEmpty)
+      assert(hit == rows(op(plain)))
+    }
+  }
+
+  test("Catalog.vehicles: every latest-state plan runs without an Exchange") {
+    import org.apache.spark.sql.execution.exchange.Exchange
+    VehicleQueries.latestState.keys.foreach { k =>
+      val df = SparkEntry.queries(k)(spark, TestSpark.sf0001)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val all = planNodes(plan)
+      assert(all.exists(_.isInstanceOf[InMemoryTableScanExec]),
+        s"$k does not read the cached vehicles\n$plan")
+      assert(!all.exists(_.isInstanceOf[Exchange]), s"$k plans an Exchange\n$plan")
+    }
+  }
+
+  test("Catalog.vehicles: a warm latest-state call starts exactly one Spark job") {
+    val dir = TestSpark.sf0001
+    VehicleQueries.latestState.keys.foreach { k =>
+      SparkEntry.queries(k)(spark, dir).collect() // warm: the cached upsert is built
+      val jobs = jobsOf(SparkEntry.queries(k)(spark, dir).collect())
+      assert(jobs == 1, s"a warm $k ran $jobs Spark jobs")
+    }
+  }
+
+  Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
+    "observations" -> graft.core.Catalog.observations,
+    "vehicles" -> graft.core.Catalog.vehicles
+  ).foreach { case (entry, build) =>
+    test(s"Catalog.clear releases the $entry entry's cached blocks") {
+      val dir = TestSpark.sf0001
+      graft.core.Catalog.clear(spark)
+      val before = spark.sparkContext.getPersistentRDDs.size
+      build(spark, dir).count()
+      assert(spark.sparkContext.getPersistentRDDs.size > before,
+        "building the entry must persist its frame")
+      graft.core.Catalog.clear(spark)
+      assert(spark.sparkContext.getPersistentRDDs.size == before)
+    }
   }
 }
