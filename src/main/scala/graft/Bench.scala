@@ -293,10 +293,12 @@ object Bench {
     // schedules concurrent jobs, and the block's fits were serialized
     // only because this driver code called them sequentially — the
     // measured idle block dropped ~32 s -> ~13 s with identical fits.
-    // Within a lane, a fit runs AFTER the Catalog entries it reads
-    // (dup_clusters<-minhash_sigs, ivfpq/semantic_survivors<-ivf,
-    // pq_curve_books<-pq) so no fit is ever double-built by a
-    // getOrElseUpdate race. Per-fit seconds in warm_fits_breakdown
+    // The Catalog builds each entry once however many lanes ask for it
+    // at the same time (a second caller waits for the first build), so
+    // the lanes group fits for overlap only: a fit placed after the
+    // entries it reads (dup_clusters<-minhash_sigs,
+    // ivfpq/semantic_survivors<-ivf, pq_curve_books<-pq) times its own
+    // build rather than a wait. Per-fit seconds in warm_fits_breakdown
     // still time each fit's own call (they overlap; their sum can
     // exceed warm_fits_sec, which is the block's wall-clock).
     val C = graft.core.Catalog

@@ -3,6 +3,7 @@ package graft.core
 import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
 /** Memoized derived frames shared across queries within a session.
@@ -19,220 +20,122 @@ import org.apache.spark.storage.StorageLevel
   * per session rather than once per call. `persist` is lazy — a single
   * query still pays exactly one derive (+ upsert or shuffle).
   *
-  * Lifecycle: entries are keyed by (session, dir) and evicted lazily —
-  * every lookup first drops entries whose session has been stopped, so
-  * frames bound to dead sessions don't accumulate for the JVM lifetime
-  * (a stopped session's cached blocks are already gone with its
-  * BlockManager; this just drops the references). [[clear]] is the
-  * explicit hook for tests / long-lived processes.
+  * Registry: every getter is one entry of a single memo keyed by
+  * (session, entry name, dir, parameter). The dir may carry a variant
+  * suffix (`#prev`, `#live`, `#mrl16`) for an entry fitted over a
+  * derived corpus; the parameter is the entry's one integer knob
+  * (nlist, m, rounds, dfCap; 0 when it has none). Each key holds an
+  * [[Entry]] that runs its build once: concurrent readers of one key
+  * wait for the first build and get its value, readers of different
+  * keys build concurrently, and a build that throws leaves the entry
+  * unbuilt, so the next reader builds again. A build reads the entries
+  * it depends on through their getters.
+  *
+  * Lifecycle: a lookup that misses first drops the entries whose
+  * session has been stopped, so frames bound to dead sessions don't
+  * accumulate for the JVM lifetime (a stopped session's cached blocks
+  * are already gone with its BlockManager; this just drops the
+  * references). A hit does no eviction: entries accumulate only
+  * through misses, and a full-registry walk on every hit would cost
+  * the hit more than the lookup itself. [[clear]]
+  * drops a live session's entries and releases what each one holds by
+  * one rule ([[release]]). It is the explicit hook for tests and
+  * long-lived processes.
   */
 object Catalog {
-  private val vehiclesCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val observationsCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sigCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val fpCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val ivfCache = TrieMap.empty[(SparkSession, String, Int), (Seq[Seq[Double]], DataFrame)]
-  private val ccCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val pqCache = TrieMap.empty[(SparkSession, String), (Seq[Seq[Seq[Double]]], DataFrame)]
-  private val ivfPqCache =
-    TrieMap.empty[(SparkSession, String), (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame)]
-  private val bloomCache = TrieMap.empty[(SparkSession, String), Option[Array[Byte]]]
-  private val semCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val semCcCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  // resolved auto-nlist per corpus (one count() each — a scalar, no frame to unpersist)
-  private val nlistCache = TrieMap.empty[(SparkSession, String), Int]
-  private val opqCache =
-    TrieMap.empty[(SparkSession, String), (Seq[Int], Seq[Seq[Seq[Double]]], DataFrame)]
-  // keyed on rounds too (the ivfCache (session, dir, nlist) precedent):
-  // a non-default rounds must not serve — or poison — the 8-round model
-  // the oracle-gated t_bpe_train/t_bpe_apply keys replay.
-  private val bpeCache =
-    TrieMap.empty[(SparkSession, String, Int), (Seq[(Int, String, Long)], DataFrame)]
-  private val rankCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  // keyed on m (the ivfCache (session, dir, nlist) precedent): the PQ
-  // m-sweep fits one codebook tensor per candidate subquantizer count
-  private val pqCurveCache =
-    TrieMap.empty[(SparkSession, String, Int), Seq[Seq[Seq[Double]]]]
-  // the BPE compression-curve scalars: |panel| (round, Σf, Σf·|syms|)
-  // triples, keyed like bpeCache (the rounds the model trained) —
-  // landed by the SAME hooked training run that fills bpeCache
-  private val bpeCurveCache =
-    TrieMap.empty[(SparkSession, String, Int), Seq[(Int, Long, Long)]]
-  // the NB quality classifier (r16): ONE hooked training per
-  // (session, dir) lands the 256-row fit artifact AND the materialized
-  // per-doc score frame — t_quality_model, t_quality_model_curve and
-  // d_cluster_keep_quality all serve off it (the bpeModel precedent);
-  // the artifact is also what Store.saveQualityModel publishes for the
-  // streaming gate's quality_model arm
-  private val qmCache =
-    TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame)]
-  // the tokenized corpus and its shingle inverted index(es) (r17):
-  // the FOURTH corpus-derived family a 100 TB pipeline materializes
-  // once (next to fingerprints, signatures and dup clusters) — every
-  // exact-overlap key was re-tokenizing the corpus per invocation
-  private val shDocsCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  // keyed on the dfCap (0 = uncapped), the ivfCache per-nlist precedent
-  private val shIdxCache = TrieMap.empty[(SparkSession, String, Int), DataFrame]
-  // the materialized host-graph tables (w, out-degree, nodes, n) every
-  // iterative graph key reads (r17) — the stored link-weight layout
-  // RankStream maintains incrementally
-  private val hostGraphCache =
-    TrieMap.empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame, Long)]
-  // the verified canopy candidate-pair frame (r17): s_knn_ivf,
-  // s_hard_negatives and s_knn_accuracy each re-mined the identical
-  // canopy self-join per invocation
-  private val canopyPairsCache = TrieMap.empty[(SparkSession, String), DataFrame]
-  // the hashed-bigram feature stream (r17): referenced by BOTH the
-  // model aggregate and the scoring join of every DSIR-family key (and
-  // the NB quality-model training), so the un-materialized form ran
-  // the bigram kernel twice per action
-  private val dsirFeatsCache = TrieMap.empty[(SparkSession, String), DataFrame]
+  private final case class Key(spark: SparkSession, entry: String, dir: String, param: Int)
 
-  private def evictStopped(): Unit = {
-    vehiclesCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    observationsCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    sigCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    fpCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    ivfCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    ccCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    pqCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    ivfPqCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    bloomCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    semCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    semCcCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    nlistCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    opqCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    bpeCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    rankCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    pqCurveCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    bpeCurveCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    qmCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    shDocsCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    shIdxCache.filterInPlace { case ((s, _, _), _) => !s.sparkContext.isStopped }
-    hostGraphCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    dsirFeatsCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
-    canopyPairsCache.filterInPlace { case ((s, _), _) => !s.sparkContext.isStopped }
+  /** Runs `build` once, on the first read; a throwing build stays unbuilt. */
+  private final class Entry(build: () => Any) {
+    @volatile private var held: Option[Any] = None
+    def built: Option[Any] = held
+    def value: Any = held.getOrElse(synchronized {
+      if (held.isEmpty) held = Some(build())
+      held.get
+    })
   }
 
-  /** Unpersist and drop every cached frame for `spark` (all dirs). */
-  def clear(spark: SparkSession): Unit = {
-    def drop[K](cache: TrieMap[K, DataFrame], of: K => SparkSession): Unit =
-      cache.keys.filter(k => of(k) eq spark).foreach { k =>
-        cache.remove(k).foreach(df => if (!spark.sparkContext.isStopped) df.unpersist())
-      }
-    drop(vehiclesCache, (k: (SparkSession, String)) => k._1)
-    drop(observationsCache, (k: (SparkSession, String)) => k._1)
-    drop(sigCache, (k: (SparkSession, String)) => k._1)
-    drop(fpCache, (k: (SparkSession, String)) => k._1)
-    drop(ccCache, (k: (SparkSession, String)) => k._1)
-    ivfCache.keys.filter(_._1 eq spark).foreach { k =>
-      ivfCache.remove(k).foreach { case (_, df) =>
-        if (!spark.sparkContext.isStopped) df.unpersist()
-      }
-    }
-    pqCache.keys.filter(_._1 eq spark).foreach { k =>
-      pqCache.remove(k).foreach { case (_, df) =>
-        if (!spark.sparkContext.isStopped) df.unpersist()
-      }
-    }
-    ivfPqCache.keys.filter(_._1 eq spark).foreach { k =>
-      ivfPqCache.remove(k).foreach { case (_, _, df) =>
-        if (!spark.sparkContext.isStopped) df.unpersist()
+  private val registry = TrieMap.empty[Key, Entry]
+
+  private def memo[V](spark: SparkSession, entry: String, dir: String, param: Int = 0)
+                     (build: => V): V = {
+    val key = Key(spark, entry, dir, param)
+    val e = registry.getOrElse(key, {
+      registry.filterInPlace { case (k, _) => !k.spark.sparkContext.isStopped }
+      val fresh = new Entry(() => build)
+      registry.putIfAbsent(key, fresh).getOrElse(fresh)
+    })
+    e.value.asInstanceOf[V]
+  }
+
+  /** Drop every entry for `spark` (all dirs) and release what it held. */
+  def clear(spark: SparkSession): Unit =
+    registry.keys.filter(_.spark eq spark).foreach { k =>
+      registry.remove(k).flatMap(_.built).foreach { v =>
+        if (!spark.sparkContext.isStopped) release(v)
       }
     }
-    bloomCache.keys.filter(_._1 eq spark).foreach(bloomCache.remove)
-    drop(semCache, (k: (SparkSession, String)) => k._1)
-    drop(semCcCache, (k: (SparkSession, String)) => k._1)
-    nlistCache.keys.filter(_._1 eq spark).foreach(nlistCache.remove)
-    opqCache.keys.filter(_._1 eq spark).foreach { k =>
-      opqCache.remove(k).foreach { case (_, _, df) =>
-        if (!spark.sparkContext.isStopped) df.unpersist()
+
+  /** The one release rule, over a held value: a frame leaves the cache
+    * manager and gives up the localCheckpoint blocks its plan reads (a
+    * checkpoint's blocks hang off its `LogicalRDD`, not the cache
+    * manager, so `unpersist` alone cannot reach them — a persisted
+    * frame over a checkpointed one would otherwise keep the latter's
+    * blocks); a tuple releases each part; driver-side models and
+    * scalars hold nothing. */
+  private def release(v: Any): Unit = v match {
+    case df: org.apache.spark.sql.Dataset[_] =>
+      df.unpersist()
+      df.queryExecution.analyzed.foreach {
+        case lr: LogicalRDD => lr.rdd.unpersist(blocking = false)
+        case _ =>
       }
-    }
-    bpeCache.keys.filter(_._1 eq spark).foreach { k =>
-      bpeCache.remove(k).foreach { case (_, df) =>
-        if (!spark.sparkContext.isStopped) df.unpersist()
-      }
-    }
-    drop(rankCache, (k: (SparkSession, String)) => k._1)
-    pqCurveCache.keys.filter(_._1 eq spark).foreach(pqCurveCache.remove)
-    // (the two curve caches hold value scalars — nothing to unpersist)
-    bpeCurveCache.keys.filter(_._1 eq spark).foreach(bpeCurveCache.remove)
-    // the quality-model frames are localCheckpoints — their blocks hang
-    // off the LogicalRDD, so release them via DupClusters.release
-    qmCache.keys.filter(_._1 eq spark).foreach { k =>
-      qmCache.remove(k).foreach { case (m, sc) =>
-        if (!spark.sparkContext.isStopped) {
-          graft.ops.DupClusters.release(m)
-          graft.ops.DupClusters.release(sc)
-        }
-      }
-    }
-    drop(shDocsCache, (k: (SparkSession, String)) => k._1)
-    drop(dsirFeatsCache, (k: (SparkSession, String)) => k._1)
-    drop(canopyPairsCache, (k: (SparkSession, String)) => k._1)
-    shIdxCache.keys.filter(_._1 eq spark).foreach { k =>
-      shIdxCache.remove(k).foreach(df =>
-        if (!spark.sparkContext.isStopped) df.unpersist())
-    }
-    // host-graph tables are localCheckpoints — release via DupClusters
-    hostGraphCache.keys.filter(_._1 eq spark).foreach { k =>
-      hostGraphCache.remove(k).foreach { case (w, o, nodes, _) =>
-        if (!spark.sparkContext.isStopped) {
-          graft.ops.DupClusters.release(w)
-          graft.ops.DupClusters.release(o)
-          graft.ops.DupClusters.release(nodes)
-        }
-      }
-    }
+    case _: Iterable[_] =>
+    case t: Product => t.productIterator.foreach(release)
+    case _ =>
   }
 
   /** The verified canopy candidate-pair frame `(vec_id, label, nbr_id,
-    * nbr_label, cos_sim)` for a dir's embeddings (cached, shared —
-    * r17): the k-means-canopy blocked, least-shared-canopy-deduped,
+    * nbr_label, cos_sim)` for a dir's embeddings (cached, shared): the
+    * k-means-canopy blocked, least-shared-canopy-deduped,
     * exact-cosine-verified pair set that s_knn_ivf, s_hard_negatives
     * and s_knn_accuracy each re-mined per invocation. At scale this is
     * the stored kNN-graph candidate table an index-maintenance run
     * materializes before its consumers fan out. Centroids come from
     * the shared [[ivfIndex]] fit. */
-  def canopyPairs(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    canopyPairsCache.getOrElseUpdate((spark, dir), {
+  def canopyPairs(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "canopy_pairs", dir) {
       val (cents, _) = ivfIndex(spark, dir)
       graft.ops.Similarity.canopyCandidatePairs(
         Tables(spark, dir).embeddings, cents)
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
   /** The hashed-bigram feature stream `(doc_id, source, b)` for a
-    * dir's documents (cached, shared — r17): the four DSIR keys each
+    * dir's documents (cached, shared): the four DSIR keys each
     * referenced it twice per action (model fit + scoring join), and
     * the NB quality-model training extracts the identical stream. At
     * scale this is the stored per-document feature table a selection
     * pipeline extracts once per corpus. */
-  def dsirFeats(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    dsirFeatsCache.getOrElseUpdate(
-      (spark, dir),
+  def dsirFeats(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "dsir_feats", dir) {
       graft.ops.Sampling.dsirFeats(Tables(spark, dir).documents)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-  }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The materialized host-graph tables (edge weights, out-degrees,
     * node set, node count) over the corpus's synthetic link graph
-    * (cached, shared — r17): d_domain_rank, d_rank_delta,
+    * (cached, shared): d_domain_rank, d_rank_delta,
     * d_rank_convergence and d_domain_hits each re-materialized the
     * identical three frames per invocation; at scale this is the stored
     * link-weight table a scheduled rank refresh reads
     * ([[graft.streaming.RankStream]] maintains it incrementally). */
   def hostGraph(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame, DataFrame, Long) = {
-    evictStopped()
-    hostGraphCache.getOrElseUpdate((spark, dir),
+      : (DataFrame, DataFrame, DataFrame, Long) =
+    memo(spark, "host_graph", dir) {
       graft.ops.DomainGraph.edgeTables(
-        graft.ops.DomainGraph.syntheticEdges(Tables(spark, dir).documents)))
-  }
+        graft.ops.DomainGraph.syntheticEdges(Tables(spark, dir).documents))
+    }
 
   /** The tokenized corpus `(doc_id, shingles)` for a dir's documents
     * (cached, shared) — the set-valued sibling of [[docFingerprints]]:
@@ -241,13 +144,11 @@ object Catalog {
     * re-tokenizing corpus text once per reference (guide §6 — at 100 TB
     * this is the materialized shingle table SCALING.md already assumes
     * for the signature family). */
-  def shingledDocs(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    shDocsCache.getOrElseUpdate(
-      (spark, dir),
+  def shingledDocs(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "shingled_docs", dir) {
       graft.ops.Dedup.shingled(Tables(spark, dir).documents)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-  }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The `(doc_id, len, shingle)` shingle inverted index over
     * [[shingledDocs]] (cached, shared; keyed per dfCap — `None` is the
@@ -258,9 +159,8 @@ object Catalog {
     * (d_ngram_jaccard, d_containment, d_dedup_curve)
     * — the in-session analogue of a durable posting-list table. */
   def shingleIndex(spark: SparkSession, dir: String,
-                   dfCap: Option[Int] = None): DataFrame = {
-    evictStopped()
-    shIdxCache.getOrElseUpdate((spark, dir, dfCap.getOrElse(0)), {
+                   dfCap: Option[Int] = None): DataFrame =
+    memo(spark, "shingle_index", dir, dfCap.getOrElse(0)) {
       val base = dfCap match {
         case None =>
           graft.ops.Dedup.shingleIndexFrom(shingledDocs(spark, dir))
@@ -275,8 +175,7 @@ object Catalog {
       // (conf-driven, scale-adaptive), never a local constant.
       base.repartition(org.apache.spark.sql.functions.col("shingle"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
   /** The upserted vehicles table for a scale-factor dir (cached, shared),
     * one row per vehicle, held as ONE partition. The upsert itself stays
@@ -288,14 +187,12 @@ object Catalog {
     * plan over it (aggregates, exact percentiles, the unpartitioned
     * window, top-k, the lookups) runs as one stage: no Exchange, one job,
     * one task. The data-scale history feed is [[observations]]. */
-  def vehicles(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    vehiclesCache.getOrElseUpdate(
-      (spark, dir),
+  def vehicles(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "vehicles", dir) {
       graft.etl.VehicleFeed.vehiclesFromEvents(spark, dir)
         .repartition(1)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-  }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The full vehicle observation feed for a scale-factor dir (cached,
     * shared): `VehicleFeed.fromEvents` over the events table,
@@ -308,75 +205,59 @@ object Catalog {
     * shuffle. The one shuffle and sort are paid here, once per session
     * — the layout a trajectory store keeps on disk (each vehicle's
     * history in one partition, in time order). */
-  def observations(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    observationsCache.getOrElseUpdate((spark, dir), {
+  def observations(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "observations", dir) {
       import org.apache.spark.sql.functions.col
       graft.etl.VehicleFeed.fromEvents(Tables(spark, dir).events)
         .repartition(col("id"))
         .sortWithinPartitions(col("id"), col("updated_at"), col("obs_id"))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
   /** The MinHash signature table for a dir's documents (cached, shared) —
     * the in-session analogue of the materialized signature table every
     * LSH-based dedup operator reads (SCALING.md: compute once, reuse). */
-  def minhashSignatures(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    sigCache.getOrElseUpdate(
-      (spark, dir),
+  def minhashSignatures(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "minhash_sigs", dir) {
       graft.ops.Dedup.minhashSignatures(Tables(spark, dir).documents)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-  }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The content-fingerprint table for a dir's documents (cached,
     * shared) — the in-session analogue of the durable
     * `Store.docFingerprints` table the cross-corpus ingest gate reads
     * instead of re-hashing corpus text. */
-  def docFingerprints(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    fpCache.getOrElseUpdate(
-      (spark, dir),
+  def docFingerprints(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "doc_fps", dir) {
       graft.ops.Dedup.docFingerprints(Tables(spark, dir).documents)
-        .persist(StorageLevel.MEMORY_AND_DISK))
-  }
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    }
 
   /** The duplicate-cluster assignment (doc_id → cluster_id) for a dir's
     * documents (cached, shared): connected components over the near-dup +
     * exact-dup edge set, computed once per (session, dir) off the cached
     * signature table — at scale this is the materialized "cluster map"
     * table both `d_dup_clusters` and `d_cluster_keep` serve from. */
-  def dupClusters(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    ccCache.getOrElseUpdate((spark, dir), {
+  def dupClusters(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "dup_clusters", dir) {
       val docs = Tables(spark, dir).documents
       val candidates =
         graft.ops.Dedup.minhashCandidatesFromSignatures(minhashSignatures(spark, dir))
       graft.ops.DupClusters.dupClusters(docs, candidates)
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
-  /** The fitted IVF index for a dir's embeddings (cached, shared):
-    * deterministic k-means centroids + the cluster-assigned corpus,
-    * persisted. Fitting inside every query invocation was round 2's
-    * slowest similarity path (two blocking Lloyd jobs per call); a fitted
-    * index is a MODEL — built once per (session, dir, nlist), served
-    * many times, exactly like [[minhashSignatures]]. */
   /** The fitted PQ index for a dir's embeddings (cached, shared):
     * deterministic per-subspace codebooks + the encoded code table,
     * persisted — the compressed-corpus counterpart of [[ivfIndex]]. */
-  def pqIndex(spark: SparkSession, dir: String): (Seq[Seq[Seq[Double]]], DataFrame) = {
-    evictStopped()
-    pqCache.getOrElseUpdate((spark, dir), {
+  def pqIndex(spark: SparkSession, dir: String): (Seq[Seq[Seq[Double]]], DataFrame) =
+    memo(spark, "pq", dir) {
       val emb = Tables(spark, dir).embeddings
       val books = graft.ops.Similarity.pqCodebooks(emb)
       val codes = graft.ops.Similarity.pqCodes(emb, books)
         .persist(StorageLevel.MEMORY_AND_DISK)
       (books, codes)
-    })
-  }
+    }
 
   /** The PQ codebook tensor for a dir's embeddings at a CANDIDATE
     * subquantizer count (cached, shared) — the per-m fits the
@@ -384,12 +265,11 @@ object Catalog {
     * m), like [[ivfIndex]]'s per-nlist key. m = 8 aliases the serving
     * index's own books ([[pqIndex]] — the identical fit) so the sweep
     * never refits what serving already fitted. */
-  def pqCurveBooks(spark: SparkSession, dir: String, m: Int): Seq[Seq[Seq[Double]]] = {
-    evictStopped()
+  def pqCurveBooks(spark: SparkSession, dir: String, m: Int): Seq[Seq[Seq[Double]]] =
     if (m == 8) pqIndex(spark, dir)._1
-    else pqCurveCache.getOrElseUpdate((spark, dir, m),
-      graft.ops.Similarity.pqCodebooks(Tables(spark, dir).embeddings, m = m))
-  }
+    else memo(spark, "pq_curve_books", dir, m) {
+      graft.ops.Similarity.pqCodebooks(Tables(spark, dir).embeddings, m = m)
+    }
 
   /** The permutation-OPQ index for a dir's embeddings (cached, shared):
     * the variance-balancing dimension permutation, the PQ codebooks
@@ -398,9 +278,8 @@ object Catalog {
     * `s_ann_opq` serve scans — built once per (session, dir) like every
     * other fit. */
   def opqIndex(spark: SparkSession, dir: String)
-      : (Seq[Int], Seq[Seq[Seq[Double]]], DataFrame) = {
-    evictStopped()
-    opqCache.getOrElseUpdate((spark, dir), {
+      : (Seq[Int], Seq[Seq[Seq[Double]]], DataFrame) =
+    memo(spark, "opq", dir) {
       val emb = Tables(spark, dir).embeddings
       val perm = graft.ops.Similarity.opqPermutation(emb)
       val permuted = graft.ops.Similarity.opqPermute(emb, perm)
@@ -408,35 +287,31 @@ object Catalog {
       val codes = graft.ops.Similarity.pqCodes(permuted, books)
         .persist(StorageLevel.MEMORY_AND_DISK)
       (perm, books, codes)
-    })
-  }
+    }
 
   /** The decontamination Bloom sketch for a dir's eval source (cached,
     * shared): a fixed-size model built once per corpus, like the fitted
     * ANN indexes — every t_decontam_bloom invocation probes the same
     * sketch instead of re-aggregating the eval grams. */
-  def evalNgramBloom(spark: SparkSession, dir: String): Option[Array[Byte]] = {
-    evictStopped()
-    bloomCache.getOrElseUpdate((spark, dir),
-      graft.ops.TextAnalysis.evalNgramBloom(Tables(spark, dir).documents))
-  }
+  def evalNgramBloom(spark: SparkSession, dir: String): Option[Array[Byte]] =
+    memo(spark, "eval_bloom", dir) {
+      graft.ops.TextAnalysis.evalNgramBloom(Tables(spark, dir).documents)
+    }
 
   /** The fitted IVF-PQ index for a dir's embeddings (cached, shared):
     * the coarse quantizer's centroids (shared with [[ivfIndex]]), the
     * residual PQ codebooks, and the persisted (cluster, codes) table —
     * the compressed inverted-file layout `s_ann_ivfpq` serves from. */
   def ivfPqIndex(spark: SparkSession, dir: String)
-      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame) = {
-    evictStopped()
-    ivfPqCache.getOrElseUpdate((spark, dir), {
+      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame) =
+    memo(spark, "ivfpq", dir) {
       val emb = Tables(spark, dir).embeddings
       val (cents, _) = ivfIndex(spark, dir)
       val books = graft.ops.Similarity.ivfPqCodebooks(emb, cents)
       val codes = graft.ops.Similarity.ivfPqCodes(emb, cents, books)
         .persist(StorageLevel.MEMORY_AND_DISK)
       (cents, books, codes)
-    })
-  }
+    }
 
   /** The semantic-dedup SURVIVOR set for a dir's embeddings (cached,
     * shared): IVF-canopy edges → CC closure → min-id survivors, joined
@@ -444,9 +319,8 @@ object Catalog {
     * (vec_id, label, embedding, cluster). The in-session form of the
     * durable survivor table (`Store.saveSemanticSurvivors`) that
     * incremental semantic vetting serves from. */
-  def semanticSurvivors(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    semCache.getOrElseUpdate((spark, dir), {
+  def semanticSurvivors(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "semantic_survivors", dir) {
       import org.apache.spark.sql.functions.col
       val (_, assigned) = ivfIndex(spark, dir)
       val keep = graft.ops.Dedup
@@ -454,21 +328,18 @@ object Catalog {
         .select(col("vec_id"))
       assigned.join(keep, Seq("vec_id"), "left_semi")
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
   /** The IVF-canopy semantic component assignment (vec_id → cluster_id)
     * for a dir's embeddings (cached, shared) — the VECTOR-space twin of
-    * [[dupClusters]]'s doc-space cluster map (r16 opt): canopy pair
-    * mining + the iterative large-star/small-star closure run once per
+    * [[dupClusters]]'s doc-space cluster map: canopy pair mining + the
+    * iterative large-star/small-star closure run once per
     * (session, dir) and the assignment is persisted; `d_semantic_ivf`,
-    * `d_semantic_medoid` and [[semanticSurvivors]] all serve off it
-    * (pre-r16 each serve re-mined the identical pair set and re-ran the
-    * identical closure). At scale this is the durable cluster-map table
-    * next to the survivor store. */
-  def semanticCc(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    semCcCache.getOrElseUpdate((spark, dir), {
+    * `d_semantic_medoid` and [[semanticSurvivors]] all serve off it.
+    * At scale this is the durable cluster-map table next to the
+    * survivor store. */
+  def semanticCc(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "semantic_cc", dir) {
       import org.apache.spark.sql.functions.col
       val (cents, assigned) = ivfIndex(spark, dir)
       val emb = assigned.drop("cluster")
@@ -477,8 +348,7 @@ object Catalog {
           .select(col("vec_a"), col("vec_b")),
         emb.select(col("vec_id")))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
 
   /** The PRE-DELTA host-rank snapshot for a dir (cached, shared): the
     * cold 10-iteration PageRank on the synthetic graph minus every
@@ -487,15 +357,28 @@ object Catalog {
     * last scheduled refresh's output — `domainRankDelta`'s own input
     * contract); the cache stands in for that table so the key times
     * the warm refresh, not the re-derivation of history. */
-  def rankSnapshot(spark: SparkSession, dir: String): DataFrame = {
-    evictStopped()
-    rankCache.getOrElseUpdate((spark, dir), {
+  def rankSnapshot(spark: SparkSession, dir: String): DataFrame =
+    memo(spark, "rank_snapshot", dir) {
       import org.apache.spark.sql.functions.{col, lit, pmod}
       graft.ops.DomainGraph.domainRank(graft.ops.DomainGraph.syntheticEdges(
           Tables(spark, dir).documents.filter(pmod(col("doc_id"), lit(50)) =!= 0)))
         .persist(StorageLevel.MEMORY_AND_DISK)
-    })
-  }
+    }
+
+  /** One hooked BPE training per (session, dir, rounds): the merge
+    * table, the persisted final vocab segmentation, and the
+    * compression-curve scalars the hook reads off each panel round's
+    * already-persisted segmentation. [[bpeModel]] and [[bpeCurve]]
+    * both serve from it, so the curve never retrains. Keyed on rounds:
+    * a non-default rounds must not serve the 8-round model the
+    * oracle-gated t_bpe_train/t_bpe_apply keys replay. */
+  private def bpe(spark: SparkSession, dir: String, rounds: Int)
+      : (Seq[(Int, String, Long)], DataFrame, Seq[(Int, Long, Long)]) =
+    memo(spark, "bpe", dir, rounds) {
+      val ((merges, syms), totals) = graft.ops.TextAnalysis
+        .bpeLoopWithCurve(Tables(spark, dir).documents, rounds)
+      (merges, syms, totals) // syms is already persisted + materialized by the loop
+    }
 
   /** The trained BPE model for a dir's documents (cached, shared): the
     * merge table (driver-scale — `rounds` rows) plus the PERSISTED
@@ -506,17 +389,8 @@ object Catalog {
     * re-running the 8 sequential training rounds per invocation. */
   def bpeModel(spark: SparkSession, dir: String,
                rounds: Int = 8): (Seq[(Int, String, Long)], DataFrame) = {
-    evictStopped()
-    bpeCache.getOrElseUpdate((spark, dir, rounds), {
-      // ONE hooked training lands the model AND the compression-curve
-      // scalars (the hook's per-round aggregates are vocab-sized and
-      // nearly free) — t_bpe_curve must never retrain what t_bpe_train
-      // already trained
-      val ((merges, syms), totals) = graft.ops.TextAnalysis
-        .bpeLoopWithCurve(Tables(spark, dir).documents, rounds)
-      bpeCurveCache.putIfAbsent((spark, dir, rounds), totals)
-      (merges, syms) // syms is already persisted + materialized by the loop
-    })
+    val (merges, syms, _) = bpe(spark, dir, rounds)
+    (merges, syms)
   }
 
   /** The BPE compression-curve scalars for a dir's documents (cached,
@@ -527,67 +401,67 @@ object Catalog {
     * generator); no per-call panel here, so a cache hit can never
     * silently answer for different parameters. */
   def bpeCurve(spark: SparkSession, dir: String,
-               rounds: Int = 8): Seq[(Int, Long, Long)] = {
-    evictStopped()
-    bpeCurveCache.get((spark, dir, rounds)) match {
-      case Some(t) => t
-      case None =>
-        bpeModel(spark, dir, rounds) // the hooked training fills BOTH caches
-        bpeCurveCache.getOrElseUpdate((spark, dir, rounds),
-          // unreachable unless the model landed via some pre-hook path:
-          // pay one standalone instrumented run rather than throw
-          graft.ops.TextAnalysis.bpeCurveTotals(
-            Tables(spark, dir).documents, rounds, graft.ops.TextAnalysis.BpePanel))
-    }
-  }
+               rounds: Int = 8): Seq[(Int, Long, Long)] =
+    bpe(spark, dir, rounds)._3
 
   /** The BPE model trained on the PREVIOUS corpus snapshot (the
     * d_rank_delta / t_corpus_drift fixture: corpus minus every 50th
     * doc) — `t_bpe_fertility`'s serving model. In production this is
     * yesterday's STORED tokenizer applied to today's crawl — the case
     * where out-of-vocabulary words genuinely exist; the snapshot-
-    * trained cache stands in for that stored model. Keyed alongside
-    * [[bpeModel]] by suffixing the dir (same cache, same eviction). */
+    * trained entry stands in for that stored model (dir variant
+    * `#prev`). */
   def bpeModelSnapshot(spark: SparkSession, dir: String,
-                       rounds: Int = 8): (Seq[(Int, String, Long)], DataFrame) = {
-    evictStopped()
-    bpeCache.getOrElseUpdate((spark, dir + "#prev", rounds), {
+                       rounds: Int = 8): (Seq[(Int, String, Long)], DataFrame) =
+    memo(spark, "bpe_snapshot", dir + "#prev", rounds) {
       import org.apache.spark.sql.functions.{col, lit, pmod}
       graft.ops.TextAnalysis.bpeLoop(
         Tables(spark, dir).documents.filter(pmod(col("doc_id"), lit(50)) =!= 0),
         rounds)
-    })
-  }
+    }
 
-  private def qmPair(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    evictStopped()
-    qmCache.getOrElseUpdate((spark, dir),
-      // trained over the SHARED materialized feature stream (r17) —
-      // the fit no longer extracts its own copy of the bigram stream
-      graft.ops.TextAnalysis.qualityModelFitScoresOverFeats(dsirFeats(spark, dir)))
-  }
+  /** The NB quality classifier: ONE training per (session, dir) lands
+    * the 256-row fit artifact AND the materialized per-doc score frame,
+    * trained over the shared [[dsirFeats]] stream. */
+  private def qualityFit(spark: SparkSession, dir: String): (DataFrame, DataFrame) =
+    memo(spark, "quality_model", dir) {
+      graft.ops.TextAnalysis.qualityModelFitScoresOverFeats(dsirFeats(spark, dir))
+    }
 
   /** The trained NB quality-model ARTIFACT for a dir's documents
-    * (r16, cached, shared): the 256-row (bucket, log-odds) table —
+    * (cached, shared): the 256-row (bucket, log-odds) table —
     * the stored object `Store.saveQualityModel` publishes and the
     * streaming gate's quality_model arm serves against corpora the
-    * model never saw. One hooked training per (session, dir) lands
-    * this AND [[qualityScores]] (the bpeModel/bpeCurve precedent —
-    * the classifier is a MODEL exactly like the IVF/PQ/BPE fits). */
+    * model never saw. One training per (session, dir) lands
+    * this AND [[qualityScores]] (the classifier is a MODEL exactly like
+    * the IVF/PQ/BPE fits). */
   def qualityModel(spark: SparkSession, dir: String): DataFrame =
-    qmPair(spark, dir)._1
+    qualityFit(spark, dir)._1
 
   /** The MATERIALIZED per-doc quality-score frame for a dir's
-    * documents (r16, cached, shared): (doc_id, source, n_feats,
+    * documents (cached, shared): (doc_id, source, n_feats,
     * q_score) — `t_quality_model`'s tercile card,
     * `t_quality_model_curve`'s budget sweep and
     * `d_cluster_keep_quality`'s survivor argmax all read THIS frame;
     * the corpus token-stream scan and the NB fit run once per
     * (session, dir), never per serve. */
   def qualityScores(spark: SparkSession, dir: String): DataFrame =
-    qmPair(spark, dir)._2
+    qualityFit(spark, dir)._2
 
-  /** `nlist <= 0` (the default) resolves the list count from the corpus
+  /** The auto-sized list count for a corpus (or corpus variant): ONE
+    * metadata-cheap count() per (session, dir), then every fit-family
+    * consumer shares the same fitted index. */
+  private def autoNlist(spark: SparkSession, dir: String, corpus: => DataFrame): Int =
+    memo(spark, "nlist", dir)(graft.ops.Similarity.autoNlist(corpus.count()))
+
+  /** The fitted IVF index for a dir's embeddings (cached, shared):
+    * deterministic k-means centroids + the cluster-assigned corpus,
+    * persisted. Fitting inside every query invocation was the slowest
+    * similarity path (two blocking Lloyd jobs per call); a fitted
+    * index is a MODEL — built once per (session, dir, nlist), served
+    * many times, exactly like [[minhashSignatures]].
+    *
+    * `nlist <= 0` (the default) resolves the list count from the corpus
     * via [[graft.ops.Similarity.autoNlist]] — the SCALING.md sizing rule
     * (bucket width held ≈ constant as the corpus grows) applied
     * automatically instead of left as a manual knob. The resolved size
@@ -609,13 +483,9 @@ object Catalog {
     * consumer (probe selection, canopies, recall cards) reads the same
     * flat (cluster id → centroid) layout in both regimes. */
   def ivfIndex(spark: SparkSession, dir: String, nlist: Int = 0): (Seq[Seq[Double]], DataFrame) = {
-    evictStopped()
-    val emb = Tables(spark, dir).embeddings
-    val k =
-      if (nlist > 0) nlist
-      else nlistCache.getOrElseUpdate((spark, dir),
-        graft.ops.Similarity.autoNlist(emb.count()))
-    ivfCache.getOrElseUpdate((spark, dir, k), fitIvf(emb, k))
+    lazy val emb = Tables(spark, dir).embeddings
+    val k = if (nlist > 0) nlist else autoNlist(spark, dir, emb)
+    memo(spark, "ivf", dir, k)(fitIvf(emb, k))
   }
 
   /** The LIVE-ONLY refit of [[ivfIndex]] — the index the `s_ann_refit`
@@ -628,18 +498,13 @@ object Catalog {
     * production this is the out-of-band rebuild `AnnStream.refitSignal`
     * recommends — fitted on live vectors only, then published over the
     * stale index via `Store`'s versioned swap (spec-proven in
-    * StoreSpec); the dir-suffixed cache key stands in for that
-    * published artifact. Cached independently of the stale index
-    * (`#live` suffix — the bpeModelSnapshot convention). */
+    * StoreSpec); the `#live` dir variant stands in for that published
+    * artifact, cached independently of the stale index. */
   def ivfIndexLive(spark: SparkSession, dir: String, nlist: Int = 0): (Seq[Seq[Double]], DataFrame) = {
-    evictStopped()
-    val live = ivfIndex(spark, dir)._2
+    lazy val live = ivfIndex(spark, dir)._2
       .filter(graft.ops.Similarity.takedownLive).drop("cluster")
-    val k =
-      if (nlist > 0) nlist
-      else nlistCache.getOrElseUpdate((spark, dir + "#live"),
-        graft.ops.Similarity.autoNlist(live.count()))
-    ivfCache.getOrElseUpdate((spark, dir + "#live", k), fitIvf(live, k))
+    val k = if (nlist > 0) nlist else autoNlist(spark, dir + "#live", live)
+    memo(spark, "ivf", dir + "#live", k)(fitIvf(live, k))
   }
 
   /** IVF index fitted in MRL PREFIX space (the first `shortDim`
@@ -652,20 +517,16 @@ object Catalog {
     * past [[graft.ops.Similarity.TwoLevelMinNlist]] it delegates to the
     * shared hier fit over the prefix projection and joins the cluster
     * ids back on vec_id (a co-locatable key join at corpus scale).
-    * Cached under the `#mrl` dir suffix (the ivfIndexLive convention). */
+    * Cached under the `#mrl<shortDim>` dir variant. */
   def ivfIndexMrl(spark: SparkSession, dir: String, shortDim: Int = 16,
                   nlist: Int = 0): (Seq[Seq[Double]], DataFrame) = {
     import org.apache.spark.sql.functions.{col, slice, typedlit}
-    evictStopped()
-    val emb = Tables(spark, dir).embeddings
-    val pre = emb.select(col("vec_id"), col("label"),
-      slice(col("embedding"), 1, shortDim).as("embedding"))
-    val key = dir + s"#mrl$shortDim"
-    val k =
-      if (nlist > 0) nlist
-      else nlistCache.getOrElseUpdate((spark, key),
-        graft.ops.Similarity.autoNlist(emb.count()))
-    ivfCache.getOrElseUpdate((spark, key, k), {
+    lazy val emb = Tables(spark, dir).embeddings
+    val variant = dir + s"#mrl$shortDim"
+    val k = if (nlist > 0) nlist else autoNlist(spark, variant, emb)
+    memo(spark, "ivf", variant, k) {
+      val pre = emb.select(col("vec_id"), col("label"),
+        slice(col("embedding"), 1, shortDim).as("embedding"))
       if (k <= graft.ops.Similarity.TwoLevelMinNlist) {
         val cents = graft.ops.Similarity.ivfCentroids(pre, k)
         val assigned = emb
@@ -681,12 +542,12 @@ object Catalog {
         // materialize the joined frame, then release fitIvf's interim
         // prefix-space persist — only `assigned` is this entry's cached
         // value, and holding both would pin two corpus-scale frames for
-        // the session lifetime (r13 review finding)
+        // the session lifetime
         assigned.count()
         aPre.unpersist()
         (cents, assigned)
       }
-    })
+    }
   }
 
   /** Shared IVF fit body (regime switching per the [[ivfIndex]]

@@ -1348,8 +1348,8 @@ object TextAnalysis {
 
   /** One training run instrumented for the curve: the full
     * [[bpeLoop]] result PLUS the per-panel-round (Σf, Σf·|syms|)
-    * scalars — what lets `Catalog.bpeModel` land BOTH the model and
-    * the curve caches from a single training (the curve's marginal
+    * scalars — what lets one Catalog entry hold BOTH the model and
+    * the curve from a single training (the curve's marginal
     * cost is one 2-long aggregate per panel point on the round's
     * already-persisted vocab frame). */
   private[graft] def bpeLoopWithCurve(documents: DataFrame, rounds: Int,

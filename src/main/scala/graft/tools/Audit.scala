@@ -3,6 +3,8 @@ package graft.tools
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeLike}
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+  BroadcastNestedLoopJoinExec, CartesianProductExec, ShuffledHashJoinExec, SortMergeJoinExec}
 
 import graft.core.GraftSession
 
@@ -14,15 +16,16 @@ import graft.core.GraftSession
   *   sbt "runMain graft.tools.Audit --assert"   # gate mode: non-zero exit on violation
   *   sbt "runMain graft.tools.Audit q5_local_supplier"
   *
-  * Gate rules (`--assert`):
+  * Gate rules (`--assert`), each counted by node class over
+  * [[planNodes]]:
   *  - every key executes (no FAILED rows);
   *  - ZERO CartesianProduct anywhere;
   *  - BroadcastNestedLoopJoin only on the declared 1-row-broadcast
   *    keys (ANN query vectors — a bnlj against a 1-row side is a scan,
   *    not a blow-up);
   *  - SortMergeJoin only on the declared fact×fact keys;
-  *  - shuffle count per key (over [[planNodes]]: the key's own plan,
-  *    not the once-per-session build of a cached relation it reads)
+  *  - shuffle count per key (the key's own plan, not the
+  *    once-per-session build of a cached relation it reads)
   *    within its declared budget (default [[DefaultMaxExchanges]] — a
   *    loose tripwire for plan explosions; tighter per-key budgets for
   *    the audited-hot keys).
@@ -310,23 +313,25 @@ object Audit {
       try {
         val df = fn(spark, sfDir)
         df.count()
-        val p = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
-        def c(s: String) = p.linesIterator.count(_.contains(s))
-        val shuffles = planNodes(df.queryExecution.executedPlan)
-          .count(_.isInstanceOf[ShuffleExchangeLike])
+        val plan = df.queryExecution.executedPlan
+        val nodes = planNodes(plan)
+        def c(cls: Class[_]) = nodes.count(n => cls.isInstance(n))
+        val shuffles = c(classOf[ShuffleExchangeLike])
+        val (cart, bnlj, smj) = (c(classOf[CartesianProductExec]),
+          c(classOf[BroadcastNestedLoopJoinExec]), c(classOf[SortMergeJoinExec]))
         val notes = Seq(
-          if (c("SortMergeJoin") > 0) Some("sort-merge join") else None,
-          if (c("CartesianProduct") > 0) Some("CARTESIAN") else None,
-          if (c("BroadcastNestedLoopJoin") > 0) Some("bnlj") else None
+          if (smj > 0) Some("sort-merge join") else None,
+          if (cart > 0) Some("CARTESIAN") else None,
+          if (bnlj > 0) Some("bnlj") else None
         ).flatten.mkString(", ")
-        println(f"$name%-22s $shuffles%-3d ${c("BroadcastHashJoin")}%-3d ${c("SortMergeJoin")}%-3d ${c("ShuffledHashJoin")}%-3d  $notes")
-        if (args.contains(name)) println(p)
+        println(f"$name%-22s $shuffles%-3d ${c(classOf[BroadcastHashJoinExec])}%-3d $smj%-3d ${c(classOf[ShuffledHashJoinExec])}%-3d  $notes")
+        if (args.contains(name)) println(plan)
         if (assertMode) {
-          if (c("CartesianProduct") > 0)
+          if (cart > 0)
             violations ::= s"$name: CartesianProduct in executed plan"
-          if (c("BroadcastNestedLoopJoin") > 0 && !BnljAllowed(name))
+          if (bnlj > 0 && !BnljAllowed(name))
             violations ::= s"$name: BroadcastNestedLoopJoin outside the 1-row-broadcast whitelist"
-          if (c("SortMergeJoin") > 0 && !SmjAllowed(name))
+          if (smj > 0 && !SmjAllowed(name))
             violations ::= s"$name: SortMergeJoin outside the declared fact-join whitelist"
           val budget = MaxExchanges.getOrElse(name, DefaultMaxExchanges)
           if (shuffles > budget)

@@ -317,6 +317,23 @@ class VehicleQueriesSpec extends SparkSpec {
     assert(jumps == rows(VehicleQueries.teleportDetection(feed, maxDegPerHour = 0.01)))
   }
 
+  test("Audit.planNodes reaches v_snapshot_diff's SortMergeJoin and both of its cached sides") {
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    val df = SparkEntry.queries("v_snapshot_diff")(spark, TestSpark.sf0001)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val smjs = planNodes(plan).collect { case j: SortMergeJoinExec => j }
+    assert(smjs.nonEmpty, s"no SortMergeJoinExec in\n$plan")
+    // the executed-plan text prints the first side's cached build (and an
+    // "== Initial Plan ==" marker) before the second side; the walk reads both
+    smjs.foreach { j =>
+      Seq(j.left, j.right).foreach { side =>
+        assert(planNodes(side).exists(_.isInstanceOf[InMemoryTableScanExec]),
+          s"a join side does not reach the cached observations\n$plan")
+      }
+    }
+  }
+
   test("Catalog.observations: per-vehicle windows run straight off the cached scan (no Exchange or Sort)") {
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
@@ -388,19 +405,61 @@ class VehicleQueriesSpec extends SparkSpec {
     }
   }
 
-  Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)](
-    "observations" -> graft.core.Catalog.observations,
-    "vehicles" -> graft.core.Catalog.vehicles
-  ).foreach { case (entry, build) =>
+  /** Every Catalog registry entry (Bench's warm set), each with a
+    * build that materializes what the entry holds; a build reads its
+    * dependencies' entries too, and `clear` must release those as well. */
+  private val registryEntries: Seq[(String, () => Unit)] = {
+    import graft.core.{Catalog => C}
+    val dir = TestSpark.sf0001
+    Seq[(String, () => Unit)](
+      "observations" -> (() => C.observations(spark, dir).count()),
+      "vehicles" -> (() => C.vehicles(spark, dir).count()),
+      "minhash_sigs" -> (() => C.minhashSignatures(spark, dir).count()),
+      "doc_fps" -> (() => C.docFingerprints(spark, dir).count()),
+      "shingled_docs" -> (() => C.shingledDocs(spark, dir).count()),
+      "shingle_index" -> (() => C.shingleIndex(spark, dir).count()),
+      "shingle_index_capped" -> (() => C.shingleIndex(spark, dir, Some(100)).count()),
+      "dup_clusters" -> (() => C.dupClusters(spark, dir).count()),
+      "eval_bloom" -> (() => C.evalNgramBloom(spark, dir)),
+      "ivf" -> (() => C.ivfIndex(spark, dir)._2.count()),
+      "ivf_live" -> (() => C.ivfIndexLive(spark, dir)._2.count()),
+      "ivf_mrl" -> (() => C.ivfIndexMrl(spark, dir)._2.count()),
+      "ivfpq" -> (() => C.ivfPqIndex(spark, dir)._3.count()),
+      "canopy_pairs" -> (() => C.canopyPairs(spark, dir).count()),
+      "semantic_cc" -> (() => C.semanticCc(spark, dir).count()),
+      "semantic_survivors" -> (() => C.semanticSurvivors(spark, dir).count()),
+      "pq" -> (() => C.pqIndex(spark, dir)._2.count()),
+      "pq_curve_books" -> (() => C.pqCurveBooks(spark, dir, 2)),
+      "opq" -> (() => C.opqIndex(spark, dir)._3.count()),
+      "bpe" -> (() => { C.bpeModel(spark, dir)._2.count(); C.bpeCurve(spark, dir) }),
+      "bpe_snapshot" -> (() => C.bpeModelSnapshot(spark, dir)._2.count()),
+      "rank_snapshot" -> (() => C.rankSnapshot(spark, dir).count()),
+      "host_graph" -> (() => C.hostGraph(spark, dir)),
+      "dsir_feats" -> (() => C.dsirFeats(spark, dir).count()),
+      "quality_model" -> (() => { C.qualityModel(spark, dir).count(); C.qualityScores(spark, dir).count() })
+    )
+  }
+  // entries whose value is a driver-side model: nothing of theirs stays persisted
+  private val scalarEntries = Set("eval_bloom", "pq_curve_books")
+
+  /** The persisted-RDD count after a GC has dropped the RDDs nothing
+    * references (the context tracks persisted RDDs weakly). */
+  private def persistedAfterGc(): Int = {
+    System.gc()
+    spark.sparkContext.getPersistentRDDs.size
+  }
+
+  registryEntries.foreach { case (entry, build) =>
     test(s"Catalog.clear releases the $entry entry's cached blocks") {
-      val dir = TestSpark.sf0001
       graft.core.Catalog.clear(spark)
-      val before = spark.sparkContext.getPersistentRDDs.size
-      build(spark, dir).count()
-      assert(spark.sparkContext.getPersistentRDDs.size > before,
-        "building the entry must persist its frame")
+      val before = persistedAfterGc()
+      build()
+      if (!scalarEntries(entry))
+        assert(spark.sparkContext.getPersistentRDDs.size > before,
+          "building the entry must persist its frame")
       graft.core.Catalog.clear(spark)
-      assert(spark.sparkContext.getPersistentRDDs.size == before)
+      val after = persistedAfterGc()
+      assert(after == before, s"$entry left ${after - before} persisted RDD(s) after clear")
     }
   }
 }
