@@ -25,8 +25,9 @@ object SparkEntry {
     VehicleQueries.topFastest(
       VehicleFeed.vehiclesFromEvents(spark, "/root/testdata/sf0.001"))
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
+  /** One entry per implemented operator from SURVEY.md §2, merged once
+    * from the per-module maps. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
     VehicleQueries.queries ++ AnalyticsQueries.queries ++
       graft.ops.Dedup.queries ++ graft.ops.UrlDedup.queries ++
       graft.ops.DupClusters.queries ++
@@ -74,8 +75,9 @@ object SparkEntry {
       keyCols = Seq("l_returnflag"),
       exactKey = "q_distinct_agg"))
 
-  /** DuckDB-equivalent SQL per query key (column names aligned). */
-  def oracleSql: Map[String, String] =
+  /** DuckDB-equivalent SQL per query key (column names aligned), merged
+    * once like [[queries]]. */
+  val oracleSql: Map[String, String] =
     VehicleQueries.oracles ++ AnalyticsQueries.oracles ++
       graft.ops.Dedup.oracles ++ graft.ops.UrlDedup.oracles ++
       graft.ops.DupClusters.oracles ++

@@ -31,6 +31,17 @@ import org.apache.spark.storage.StorageLevel
   * unbuilt, so the next reader builds again. A build reads the entries
   * it depends on through their getters.
   *
+  * Served keys: [[served]] holds a query key's planned frame in the
+  * same registry, so a key answered again and again in one session is
+  * analyzed, optimized and planned once, not once per call. A held
+  * frame pins what its plan read when it was planned and, after its
+  * first run, AQE's final plan with its shuffle and broadcast outputs.
+  * Only a key whose input is itself a session-fixed entry qualifies:
+  * the `VehicleQueries` keys over [[vehicles]] and [[observations]]. A
+  * key over raw table files, whose file listing a held plan would
+  * freeze, or one with a caller-supplied parameter builds a fresh
+  * frame per call.
+  *
   * Lifecycle: a lookup that misses first drops the entries whose
   * session has been stopped, so frames bound to dead sessions don't
   * accumulate for the JVM lifetime (a stopped session's cached blocks
@@ -94,6 +105,31 @@ object Catalog {
     case t: Product => t.productIterator.foreach(release)
     case _ =>
   }
+
+  /** Query key `key` over `dir`, built once per (session, dir, key):
+    * every later caller gets the same `Dataset`, so a repeat `collect()`
+    * skips analysis, optimization and physical planning and, after the
+    * first run, AQE's re-planning as well.
+    *
+    * The frame is planned on its first use, not in the build. A plan
+    * made before a lazily persisted input is materialized cannot see the
+    * cached layout and starts with an exchange that AQE drops only once
+    * the cache stage has run; a caller that materializes the input
+    * first (`Audit` counts the frame before it reads the plan) thus
+    * reads the same plan it would read from a fresh frame.
+    *
+    * `build` must read only session-fixed Catalog entries and take no
+    * per-call parameter. The held frame keeps what its first run
+    * materialized: a plan with a shuffle (`v_headway`,
+    * `v_snapshot_diff*`) keeps its shuffle output and a broadcast its
+    * broadcast value, and later runs read them instead of recomputing
+    * them. That is correct only because the input is an entry that
+    * does not change until [[clear]]. `clear` drops the held frame with
+    * the entries it reads, and Spark's cleaner removes its shuffle
+    * files once the dropped plan is garbage-collected. Several threads
+    * may plan and collect a held frame at once. */
+  def served(spark: SparkSession, dir: String, key: String)(build: => DataFrame): DataFrame =
+    memo(spark, key, dir)(build)
 
   /** The verified canopy candidate-pair frame `(vec_id, label, nbr_id,
     * nbr_label, cos_sim)` for a dir's embeddings (cached, shared): the

@@ -396,11 +396,38 @@ class VehicleQueriesSpec extends SparkSpec {
     }
   }
 
-  test("Catalog.vehicles: a warm latest-state call starts exactly one Spark job") {
-    val dir = TestSpark.sf0001
-    VehicleQueries.latestState.keys.foreach { k =>
-      SparkEntry.queries(k)(spark, dir).collect() // warm: the cached upsert is built
-      val jobs = jobsOf(SparkEntry.queries(k)(spark, dir).collect())
+  /** Key `k`'s operator over the uncached upsert or feed. */
+  private def uncached(k: String): org.apache.spark.sql.DataFrame =
+    VehicleQueries.latestState.get(k) match {
+      case Some(op) => op(VehicleFeed.vehiclesFromEvents(spark, TestSpark.sf0001))
+      case None => uncachedFeedKeys(k)(
+        VehicleFeed.fromEvents(graft.core.Tables(spark, TestSpark.sf0001).events))
+    }
+
+  // the lookups' fixed parameters and the default teleport threshold
+  // may select nothing at sf0.001; their non-empty cases are above
+  private val mayBeEmpty = Set("v_bearing_filter", "v_geo_bbox", "v_speed_by_id", "v_teleport")
+
+  VehicleQueries.queries.keys.toSeq.sorted.foreach { k =>
+    test(s"served $k: a second call returns the same frame and QueryExecution") {
+      val first = SparkEntry.queries(k)(spark, TestSpark.sf0001)
+      val second = SparkEntry.queries(k)(spark, TestSpark.sf0001)
+      assert(second eq first, s"$k built a second frame")
+      assert(second.queryExecution eq first.queryExecution)
+    }
+
+    test(s"served $k: three re-collects return the uncached operator's rows") {
+      val served = SparkEntry.queries(k)(spark, TestSpark.sf0001)
+      val expected = uncached(k)
+      assert(served.columns.toSeq == expected.columns.toSeq)
+      val want = rows(expected)
+      if (!mayBeEmpty(k)) assert(want.nonEmpty, s"$k returned no rows at sf0.001")
+      (1 to 3).foreach(i => assert(rows(served) == want, s"$k: collect $i differs"))
+    }
+
+    test(s"served $k: a warm call starts exactly one Spark job") {
+      SparkEntry.queries(k)(spark, TestSpark.sf0001).collect()
+      val jobs = jobsOf(SparkEntry.queries(k)(spark, TestSpark.sf0001).collect())
       assert(jobs == 1, s"a warm $k ran $jobs Spark jobs")
     }
   }
@@ -460,6 +487,25 @@ class VehicleQueriesSpec extends SparkSpec {
       graft.core.Catalog.clear(spark)
       val after = persistedAfterGc()
       assert(after == before, s"$entry left ${after - before} persisted RDD(s) after clear")
+    }
+  }
+
+  // two served keys: a one-stage plan over the vehicles and a plan with
+  // a shuffle over the observations
+  Seq("v_top10_fastest", "v_headway").foreach { k =>
+    test(s"Catalog.clear releases the $k entry's cached blocks; the next call builds anew") {
+      graft.core.Catalog.clear(spark)
+      val before = persistedAfterGc()
+      val held = SparkEntry.queries(k)(spark, TestSpark.sf0001)
+      val heldRows = rows(held)
+      assert(spark.sparkContext.getPersistentRDDs.size > before,
+        "building the entry must persist its input")
+      graft.core.Catalog.clear(spark)
+      val after = persistedAfterGc()
+      assert(after == before, s"$k left ${after - before} persisted RDD(s) after clear")
+      val next = SparkEntry.queries(k)(spark, TestSpark.sf0001)
+      assert(next ne held, s"$k served the cleared frame")
+      assert(rows(next) == heldRows)
     }
   }
 }
