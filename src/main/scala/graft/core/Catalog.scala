@@ -390,7 +390,7 @@ object Catalog {
     * cold 10-iteration PageRank on the synthetic graph minus every
     * 50th document — `d_rank_delta`'s "yesterday" fixture. In
     * production the previous rank vector is a STORED artifact (the
-    * last scheduled refresh's output — `domainRankDelta`'s own input
+    * last scheduled refresh's output — `domainRankDeltaFromTables`' own input
     * contract); the cache stands in for that table so the key times
     * the warm refresh, not the re-derivation of history. */
   def rankSnapshot(spark: SparkSession, dir: String): DataFrame =
@@ -556,7 +556,7 @@ object Catalog {
     * Cached under the `#mrl<shortDim>` dir variant. */
   def ivfIndexMrl(spark: SparkSession, dir: String, shortDim: Int = 16,
                   nlist: Int = 0): (Seq[Seq[Double]], DataFrame) = {
-    import org.apache.spark.sql.functions.{col, slice, typedlit}
+    import org.apache.spark.sql.functions.{col, slice}
     lazy val emb = Tables(spark, dir).embeddings
     val variant = dir + s"#mrl$shortDim"
     val k = if (nlist > 0) nlist else autoNlist(spark, variant, emb)
@@ -565,9 +565,7 @@ object Catalog {
         slice(col("embedding"), 1, shortDim).as("embedding"))
       if (k <= graft.ops.Similarity.TwoLevelMinNlist) {
         val cents = graft.ops.Similarity.ivfCentroids(pre, k)
-        val assigned = emb
-          .withColumn("cluster", graft.functions.GraftFunctions.nearestCentroid(
-            slice(col("embedding"), 1, shortDim), typedlit(cents)))
+        val assigned = graft.ops.Similarity.mrlAssign(emb, cents, shortDim)
           .persist(StorageLevel.MEMORY_AND_DISK)
         (cents, assigned)
       } else {

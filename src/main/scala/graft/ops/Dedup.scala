@@ -156,7 +156,7 @@ object Dedup {
   /** LSH band buckets of a signature table: one (doc_id, band, bhash)
     * row per (doc, band) — the shared candidate-generation intermediate
     * for both self-join ([[minhashCandidatesFromSignatures]]) and
-    * cross-corpus ([[crossDedup]]) dedup. */
+    * cross-corpus ([[crossDedupFromSignatures]]) dedup. */
   private def bandBuckets(signatures: DataFrame, bands: Int): DataFrame = {
     val numPerms = 128
     require(bands > 0 && numPerms % bands == 0, "bands must be positive and divide 128")
@@ -308,8 +308,8 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
 
   /** The `(doc_id, len, shingle)` inverted-index frame shared by
-    * [[ngramJaccardPairs]] and [[containmentPairs]], with the optional
-    * `dfCap` skew guard applied — ONE owner so the two exact-overlap
+    * [[ngramJaccardPairs]] and [[containmentPairsFromIndex]], with the
+    * optional `dfCap` skew guard applied — ONE owner so the two exact-overlap
     * measures cannot desynchronize on what "the shingle universe" means.
     *
     * With the cap on, shingles appearing in more than `dfCap` documents
@@ -317,7 +317,7 @@ object Dedup {
     * the capped vocabulary, so every downstream measure is the exact
     * jaccard/containment of the SUB-CAP shingle sets — a well-defined
     * measure, not a corrupted one. */
-  private def shingleInvertedIndex(documents: DataFrame, dfCap: Option[Int]): DataFrame = {
+  private[graft] def shingleInvertedIndex(documents: DataFrame, dfCap: Option[Int]): DataFrame = {
     // r16 opt (guide §3.3/§5): the returned frame feeds a SELF-join, and
     // the capped branch additionally references the fan-out three times
     // (df aggregate, anti-join left side, capped-lens recount). Broadcast
@@ -365,8 +365,11 @@ object Dedup {
       .select(col("doc_id"), col("capped_len").as("len"), col("shingle"))
   }
 
-  /** Containment near-dup pairs — the EXCERPT detector (Broder 1997's
-    * containment measure): C(A,B) = |A∩B| / min(|A|,|B|) ≥ θ. A short
+  /** Containment near-dup pairs over a `(doc_id, len, shingle)`
+    * inverted index ([[shingleInvertedIndex]] in-plan, or the
+    * Catalog-materialized index the `d_containment` key reads) — the
+    * EXCERPT detector (Broder 1997's containment measure):
+    * C(A,B) = |A∩B| / min(|A|,|B|) ≥ θ. A short
     * document fully quoted inside a long one has containment ≈ 1 but
     * LOW jaccard (the union is dominated by the long side), so
     * jaccard-θ dedup keeps both copies; training corpora are full of
@@ -381,12 +384,6 @@ object Dedup {
     * universe. Only the denominator changes vs jaccard, and both
     * measures are emitted so a consumer can separate true near-dups
     * (both high) from excerpts (containment high, jaccard low). */
-  def containmentPairs(documents: DataFrame, theta: Double = 0.9,
-                       dfCap: Option[Int] = None): DataFrame =
-    containmentPairsFromIndex(shingleInvertedIndex(documents, dfCap), theta)
-
-  /** [[containmentPairs]] over a prebuilt inverted index (the
-    * Catalog-materialized form the driver key reads, r17). */
   def containmentPairsFromIndex(inverted: DataFrame, theta: Double = 0.9): DataFrame = {
     inverted.as("a")
       .join(inverted.as("b"),
@@ -446,27 +443,18 @@ object Dedup {
     * Jaccard ≥ τ on candidates only, minus pairs already exact).
     *
     * Work is proportional to the BATCH and its collisions, never to
-    * corpus × batch: the corpus side enters only through its fingerprint
-    * and signature columns. This convenience form recomputes both from
-    * corpus text; a production deployment calls
-    * [[crossDedupFromSignatures]] with the durable store's tables
-    * (`Store.docFingerprints` / `Store.minhashSignatures` —
-    * materialized once, extended incrementally) so an ingest batch
-    * never re-reads corpus text. τ defaults to 0.8 where 32×4 banding
-    * recall is ≈1, so the candidate path loses nothing vs all-pairs
-    * (the oracle checks exactly that). */
-  def crossDedup(corpus: DataFrame, batch: DataFrame, tau: Double = 0.8,
-                 bands: Int = 32): DataFrame =
-    crossDedupFromSignatures(corpus, docFingerprints(corpus),
-      minhashSignatures(corpus), batch, tau, bands)
-
-  /** [[crossDedup]] served off PRECOMPUTED corpus fingerprint and
-    * signature frames (the durable `Store.docFingerprints` /
-    * `Store.minhashSignatures` tables, or the in-session Catalog
-    * caches). The corpus's raw rows are read once, streamed through a
-    * join with the broadcast candidate pairs, and only the matched
-    * rows are shingled for Jaccard verification — everything else reads
-    * the compact derived columns.
+    * corpus × batch: the corpus side enters only through its
+    * fingerprint and signature frames — the durable
+    * `Store.docFingerprints` / `Store.minhashSignatures` tables
+    * (materialized once, extended incrementally), the in-session
+    * Catalog caches, or `docFingerprints(corpus)` /
+    * `minhashSignatures(corpus)` derived in-plan. The corpus's raw rows
+    * are read once, streamed through a join with the broadcast
+    * candidate pairs, and only the matched rows are shingled for
+    * Jaccard verification — everything else reads the compact derived
+    * columns, so an ingest batch never re-reads corpus text. τ defaults
+    * to 0.8 where 32×4 banding recall is ≈1, so the candidate path
+    * loses nothing vs all-pairs (the oracle checks exactly that).
     *
     * Join strategy: the batch side (fingerprints, band buckets,
     * candidate pairs) is explicitly `broadcast()` — an ingest batch is
@@ -510,7 +498,9 @@ object Dedup {
       .unionByName(near.withColumn("kind", lit("near")))
   }
 
-  /** Fuzzy (edit-distance) near-dup pairs: LSH candidates filtered by
+  /** Fuzzy (edit-distance) near-dup pairs: candidate pairs (LSH
+    * candidates — [[minhashCandidates]], or the same pairs off a
+    * materialized signature table) filtered by
     * `levenshtein ≤ maxDist` on the normalized text. Two scale guards:
     * a length-difference prefilter (|len(a)−len(b)| > maxDist can never
     * pass) and Spark's thresholded `levenshtein(a, b, k)`, which
@@ -521,11 +511,6 @@ object Dedup {
     * with fewer than 3 tokens are categorically excluded — this operator
     * targets document-scale near-dups, not short-string matching (an
     * exact-dedup pass catches identical short strings). */
-  def fuzzyPairs(documents: DataFrame, maxDist: Int = 10): DataFrame =
-    fuzzyPairsFromCandidates(documents, minhashCandidates(documents), maxDist)
-
-  /** Fuzzy verification over a precomputed candidate set (e.g. from a
-    * materialized signature table). */
   def fuzzyPairsFromCandidates(documents: DataFrame, candidates: DataFrame,
                                maxDist: Int = 10): DataFrame = {
     val norm = documents.select(col("doc_id"), normText(col("text")).as("nt"))
@@ -968,7 +953,10 @@ object Dedup {
         col("group_size"))
   }
 
-  /** [[semanticDedup]] with a MEDOID keep policy: within each duplicate
+  /** [[semanticDedup]] with a MEDOID keep policy, read off a component
+    * assignment (`cluster_id` per `doc_id` — the shared
+    * `Catalog.semanticCc` closure, or `DupClusters.connectedComponents`
+    * over [[embedNearDupClusters]] pairs in-plan): within each duplicate
     * component, keep the member closest to the component's own mean
     * embedding — the most REPRESENTATIVE example (the complement of
     * [[semanticDedupFarthest]]'s diversity-preserving boundary policy;
@@ -988,17 +976,6 @@ object Dedup {
     * expressible (the s_centroid_report floor+frac idiom), so the
     * mirror replays fit, closure, and medoid scoring; spec adds a JVM
     * reference on planted replica groups. */
-  def semanticDedupMedoid(embeddings: DataFrame, centroids: Seq[Seq[Double]],
-                          tau: Double = 0.3, nAssign: Int = 2): DataFrame =
-    semanticDedupMedoidFromCc(embeddings,
-      DupClusters.connectedComponents(
-        embedNearDupClusters(embeddings, centroids, tau, nAssign)
-          .select(col("vec_a"), col("vec_b")),
-        embeddings.select(col("vec_id"))))
-
-  /** The medoid read-off of [[semanticDedupMedoid]] off an
-    * already-computed component assignment (the [[semanticDedupFromCc]]
-    * rationale — one shared closure serves all the semantic keys). */
   def semanticDedupMedoidFromCc(embeddings: DataFrame, cc: DataFrame): DataFrame = {
     val members = embeddings.select(col("vec_id"), col("label"), col("embedding"))
       .join(cc, col("vec_id") === col("doc_id"))
@@ -1140,17 +1117,13 @@ object Dedup {
     * frequency), joined back to the fan-out, then one per-doc
     * aggregate: linear in corpus shingle volume, never pairwise. The
     * mega-frequency shingle is ONE aggregate row (df counting collapses
-    * map-side) — no skewed window anywhere. */
-  def ngramNovelty(documents: DataFrame): DataFrame =
-    // r16 opt: the fan-out feeds the df aggregate AND the join-back —
-    // lazily cached once so the corpus is shingled once, not twice
-    ngramNoveltyFromIndex(
-      shingled(documents).select(col("doc_id"), explode(col("shingles")).as("shingle"))
-        .cache())
-
-  /** [[ngramNovelty]] over a prebuilt uncapped index fan-out (any frame
-    * carrying `doc_id, shingle` rows — the `d_ngram_novelty` key fans out the
-    * Catalog-cached shingle sets; extra columns like `len` are ignored). */
+    * map-side) — no skewed window anywhere.
+    *
+    * Input: any uncapped index fan-out carrying `doc_id, shingle` rows
+    * (the `d_ngram_novelty` key fans out the Catalog-cached shingle
+    * sets; extra columns like `len` are ignored). The fan-out feeds both
+    * the df aggregate and the join-back, so an in-plan fan-out should be
+    * cached to shingle the corpus once. */
   def ngramNoveltyFromIndex(index: DataFrame): DataFrame = {
     val ex = index.select(col("doc_id"), col("shingle"))
     val dfreq = ex.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -1182,14 +1155,11 @@ object Dedup {
     * n/128·10⁴ an exact half), where HALF_UP on a binary double is
     * engine lottery — differencing the rounded columns keeps every
     * intermediate a near-multiple of 10⁻⁴, which no engine rounds
-    * differently. */
-  def jaccardCalibration(documents: DataFrame, signatures: DataFrame,
-                         bands: Int = 32): DataFrame =
-    jaccardCalibrationFrom(shingled(documents), signatures, bands)
-
-  /** [[jaccardCalibration]] over a prebuilt `(doc_id, shingles)`
-    * tokenized frame (the Catalog-materialized form the driver key
-    * reads, r17). */
+    * differently.
+    *
+    * `sh` is the `(doc_id, shingles)` tokenized frame — the
+    * Catalog-materialized one the driver key reads, or `shingled(docs)`
+    * in-plan. */
   def jaccardCalibrationFrom(sh: DataFrame, signatures: DataFrame,
                              bands: Int = 32): DataFrame =
     calibrationPairs(sh, signatures, bands)
@@ -1200,8 +1170,8 @@ object Dedup {
         (round(abs(col("est_jaccard") - col("jaccard")), 4) + lit(0.0))
           .as("abs_err"))
 
-  /** The shared calibration pair frame of [[jaccardCalibration]] and
-    * [[permCurve]]: the LSH-candidate pairs with their exact Jaccard
+  /** The shared calibration pair frame of [[jaccardCalibrationFrom]] and
+    * [[permCurveFrom]]: the LSH-candidate pairs with their exact Jaccard
     * and both full signatures attached — one place owns the chain so
     * the two cards cannot desynchronize. */
   private def calibrationPairs(sh: DataFrame, signatures: DataFrame,
@@ -1223,7 +1193,7 @@ object Dedup {
     * picks the p whose error the banding design tolerates, then pins
     * the signature width.
     *
-    * The sweep costs NOTHING beyond [[jaccardCalibration]]'s plan: a
+    * The sweep costs NOTHING beyond [[jaccardCalibrationFrom]]'s plan: a
     * p-perm MinHash IS the first p rows of the 128-perm signature
     * (each permutation is independent), so every arm reads a prefix
     * slice of the SAME Catalog-cached signatures — no refit, no extra
@@ -1232,13 +1202,8 @@ object Dedup {
     * unpivoted by stack. Estimates round n/p to 4 in EXACT integers
     * ((2·10⁴·n + p) DIV 2p — n/p is an exact binary fraction, both
     * engines land on true ties and round away together); MAE uses the
-    * property-tested Σ round(err·10⁴) integer-mean recipe. */
-  def permCurve(documents: DataFrame, signatures: DataFrame,
-                perms: Seq[Int] = Seq(16, 32, 64, 128),
-                bands: Int = 32): DataFrame =
-    permCurveFrom(shingled(documents), signatures, perms, bands)
-
-  /** [[permCurve]] over a prebuilt tokenized frame (r17, Catalog). */
+    * property-tested Σ round(err·10⁴) integer-mean recipe. `sh` is the
+    * tokenized frame, as for [[jaccardCalibrationFrom]]. */
   def permCurveFrom(sh: DataFrame, signatures: DataFrame,
                     perms: Seq[Int] = Seq(16, 32, 64, 128),
                     bands: Int = 32): DataFrame = {
@@ -1335,11 +1300,8 @@ object Dedup {
     * correctly rounded); the retention sum is the DECIMAL(28,10)
     * convention. Plan: the calibration frame collapses to a ≤ 11-row
     * Jaccard histogram, then a literal 4-config explode — the analytic
-    * grid never touches the corpus again. */
-  def lshTuning(documents: DataFrame, signatures: DataFrame): DataFrame =
-    lshTuningFrom(shingled(documents), signatures)
-
-  /** [[lshTuning]] over a prebuilt tokenized frame (r17, Catalog). */
+    * grid never touches the corpus again. `sh` is the tokenized frame,
+    * as for [[jaccardCalibrationFrom]]. */
   def lshTuningFrom(sh: DataFrame, signatures: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     def log2(n: Int): Int = Integer.numberOfTrailingZeros(n)
@@ -1734,7 +1696,7 @@ object Dedup {
 
   val oracles: Map[String, String] = Map(
     // Same inverted-index pair chain as the jaccard oracle but over the
-    // dfCap=100 capped universe (mirrors the shipped containmentPairs
+    // dfCap=100 capped universe (mirrors the shipped containmentPairsFromIndex
     // guard); containment denominator = the smaller capped set.
     "d_containment" ->
       s"""$shingleCte,
@@ -1845,7 +1807,7 @@ object Dedup {
     // est_jaccard: round4(n/128) computed in INTEGERS — round_half_up
     // (n·625/8)/10⁴ = (n·625+4) div 8 over 10⁴ — because n ≡ 4 mod 8
     // makes the double form an exact decimal tie (HALF_UP lottery);
-    // abs_err differs the two ROUNDED columns (see jaccardCalibration).
+    // abs_err differs the two ROUNDED columns (see jaccardCalibrationFrom).
     // dupMatrix mirror: the verified pair set via the same all-pairs
     // exact form that serves d_neardup_pipeline (identical set at
     // τ=0.8 — LSH recall certified there), canonicalized source pair,
@@ -1876,7 +1838,7 @@ object Dedup {
          |SELECT src_a, src_b, CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |  ROUND(CAST(SUM(CAST(jaccard AS DECIMAL(28,10))) AS DOUBLE) / COUNT(*), 4) + 0.0 AS mean_jaccard
          |FROM ldm GROUP BY 1, 2""".stripMargin,
-    // lshTuning mirror: same candidate pairs + exact-Jaccard bin, the
+    // lshTuningFrom mirror: same candidate pairs + exact-Jaccard bin, the
     // analytic p(s)/s50 via the SAME repeated-squaring / nested-sqrt
     // association order (IEEE mult/sqrt are bit-identical across
     // engines; pow would not be), DECIMAL(28,10) retention sum.
@@ -1937,7 +1899,7 @@ object Dedup {
          |        - ROUND(CAST(inter AS DOUBLE) / (la + lb - inter), 4)), 4) + 0.0 AS abs_err
          |FROM j
          |WHERE ROUND(CAST(inter AS DOUBLE) / (la + lb - inter), 4) >= 0.0""".stripMargin,
-    // permCurve mirror: the calibration pair chain with PREFIX-sliced
+    // permCurveFrom mirror: the calibration pair chain with PREFIX-sliced
     // signature agreements per candidate p (a p-perm MinHash is the
     // first p rows of the 128-perm signature), exact-integer n/p
     // estimates and the integer-mean MAE, unioned per p.
@@ -2032,7 +1994,7 @@ object Dedup {
          |       FROM (SELECT tau, unnest([doc_a, doc_b]) AS doc FROM ff) GROUP BY 1)
          |SELECT CAST(tau AS DOUBLE) AS tau, n_pairs, n_docs_affected
          |FROM np JOIN nd USING (tau)""".stripMargin,
-    // Mirror of ngramNovelty: same distinct-per-doc shingles, df over
+    // Mirror of ngramNoveltyFromIndex: same distinct-per-doc shingles, df over
     // the fan-out, one int/int ROUND(,4)+0.0 per doc.
     "d_ngram_novelty" ->
       s"""$shingleCte,

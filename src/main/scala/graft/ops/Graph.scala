@@ -98,7 +98,7 @@ object DomainGraph {
   }
 
   /** `iters` exact-decimal power iterations from `ranks0` — the shared
-    * loop of [[domainRank]] (cold uniform start) and [[domainRankDelta]]
+    * loop of [[domainRank]] (cold uniform start) and [[domainRankDeltaFromTables]]
     * (warm start from previous ranks). Returns the final (host, r)
     * decimal rank vector, materialized. */
   private def powerIterations(w: DataFrame, out: DataFrame, nodes: DataFrame,
@@ -277,7 +277,7 @@ object DomainGraph {
 
   /** PageRank CONVERGENCE curve — the governance card that justifies an
     * iteration count before anyone trusts [[domainRank]]'s horizon or
-    * [[domainRankDelta]]'s refresh depth: per power iteration, the L1
+    * [[domainRankDeltaFromTables]]'s refresh depth: per power iteration, the L1
     * and max rank movement across the whole host set. Power iteration
     * converges geometrically in the damping factor, so the curve should
     * drop ~0.85× per round once transients pass — a curve that plateaus
@@ -293,35 +293,23 @@ object DomainGraph {
     * the last unit.
     *
     * Plan: each iteration adds ONE host-keyed join of two one-row-per-
-    * host rank vectors + a 1-row aggregate on top of the iteration's
-    * own two key shuffles — the per-round delta frame is materialized
-    * (1 row) and the older vector released, so at most two rank
-    * snapshots are ever live, same as the plain loop. The final frame
-    * is a union of `iters` 1-row cards. */
-  def rankConvergence(edges: DataFrame, iters: Int = 10,
-                      damping: Double = 0.85): DataFrame =
-    rankConvergenceImpl(edgeTables(edges), iters, damping, releaseTables = true)
-
-  /** [[rankConvergence]] over the shared Catalog host-graph tables
-    * (r17 — see [[domainRankFromTables]]). */
+    * host rank vectors on top of the iteration's own two key shuffles,
+    * materialized as one (host, r, rp) frame; the per-round 1-row delta
+    * aggregates are lazy and evaluated together by the final
+    * materialize of the union of `iters` 1-row cards, so the loop runs
+    * one blocking job per iteration.
+    *
+    * `tables` are the host-graph tables ([[edgeTables]]; the serving
+    * key reads the shared `Catalog.hostGraph`, see
+    * [[domainRankFromTables]]); the caller owns their lifecycle. */
   def rankConvergenceFromTables(tables: (DataFrame, DataFrame, DataFrame, Long),
                                 iters: Int = 10,
-                                damping: Double = 0.85): DataFrame =
-    rankConvergenceImpl(tables, iters, damping, releaseTables = false)
-
-  private def rankConvergenceImpl(tables: (DataFrame, DataFrame, DataFrame, Long),
-                                  iters: Int, damping: Double,
-                                  releaseTables: Boolean): DataFrame = {
+                                damping: Double = 0.85): DataFrame = {
     val (w, out, nodes, n) = tables
     val teleport = (1.0 - damping) / n
-    // r17 (VERDICT r16 #7): ONE materialized frame per iteration carries
-    // BOTH the new rank and the previous rank (host, r, rp) — the delta
-    // card becomes a LAZY 1-row aggregate over that frame's cached
-    // blocks, evaluated for all iterations together by the single final
-    // materialize, so the loop runs one blocking job per iteration
-    // instead of two. Retention: all `iters` rank snapshots stay live
-    // until the final card union is computed (each is one row per host
-    // — for a diagnostics card run on a 10⁸-host graph that is a few GB
+    // Retention: all `iters` rank snapshots stay live until the final
+    // card union is computed (each is one row per host — for a
+    // diagnostics card run on a 10⁸-host graph that is a few GB
     // cluster-wide, released in one sweep below; the SERVING loop,
     // powerIterations, keeps its ≤ 2-snapshot discipline).
     val init = DupClusters.materialize(
@@ -344,9 +332,6 @@ object DomainGraph {
     }
     val cards = DupClusters.materialize(deltas.reverse.reduce(_ unionByName _))
     mats.foreach(DupClusters.release)
-    if (releaseTables) {
-      DupClusters.release(w); DupClusters.release(out); DupClusters.release(nodes)
-    }
     cards
   }
 
@@ -371,20 +356,23 @@ object DomainGraph {
     * bit-identical per iteration and the final delta is the same IEEE
     * subtraction of identical doubles.
     *
-    * @param edges     the FULL updated edge list (old ∪ delta)
+    * @param tables    the host-graph tables of the FULL updated edge list
+    *                  (old ∪ delta): the shared `Catalog.hostGraph`, or
+    *                  [[edgeTables]] in-plan; the caller owns their
+    *                  lifecycle
     * @param prevRanks (host, pagerank) — [[domainRank]]'s output on the
     *                  pre-delta graph */
-  def domainRankDelta(edges: DataFrame, prevRanks: DataFrame, iters: Int = 3,
-                      damping: Double = 0.85): DataFrame =
-    domainRankDeltaFromWeights(
-      edges.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")),
-      prevRanks, iters, damping)
+  def domainRankDeltaFromTables(tables: (DataFrame, DataFrame, DataFrame, Long),
+                                prevRanks: DataFrame, iters: Int = 3,
+                                damping: Double = 0.85): DataFrame =
+    domainRankDeltaImpl(tables, prevRanks, iters, damping, releaseTables = false)
 
-  /** [[domainRankDelta]] over a pre-aggregated (src, dst, w) weight
-    * table — the serve path of the streaming rank maintainer
+  /** [[domainRankDeltaFromTables]] over a pre-aggregated (src, dst, w)
+    * weight table, built into host-graph tables and released after
+    * the refresh — the serve path of the streaming rank maintainer
     * ([[graft.streaming.RankStream]]): identical arithmetic (weights
     * enter the contribution term as the same integer values whether
-    * counted here or summed from stored partials), so the streamed
+    * counted from raw edges or summed from stored partials), so the streamed
     * refresh is bit-equal to the batch delta over the same edge
     * multiset. An EMPTY prevRanks degrades to the cold uniform start
     * (the coalesce), so the first refresh doubles as [[domainRank]]
@@ -394,13 +382,6 @@ object DomainGraph {
                                                 damping: Double = 0.85): DataFrame =
     domainRankDeltaImpl(edgeTablesFromWeights(weights), prevRanks, iters,
       damping, releaseTables = true)
-
-  /** [[domainRankDelta]] over the shared Catalog host-graph tables
-    * (r17 — see [[domainRankFromTables]]). */
-  def domainRankDeltaFromTables(tables: (DataFrame, DataFrame, DataFrame, Long),
-                                prevRanks: DataFrame, iters: Int = 3,
-                                damping: Double = 0.85): DataFrame =
-    domainRankDeltaImpl(tables, prevRanks, iters, damping, releaseTables = false)
 
   private def domainRankDeltaImpl(tables: (DataFrame, DataFrame, DataFrame, Long),
                                   prevRanks: DataFrame, iters: Int,
@@ -527,7 +508,7 @@ object DomainGraph {
            |  FROM nodes CROSS JOIN cnt c),
            |$iterCtes
            |SELECT host, ROUND(CAST(r AS DOUBLE), 6) + 0.0 AS pagerank FROM r10""".stripMargin,
-      // domainRankDelta mirror: the cold 10-iter chain on the pre-delta
+      // domainRankDeltaFromTables mirror: the cold 10-iter chain on the pre-delta
       // graph (suffix `od`) → prev ranks at ROUND(,6) (the exact warm
       // start both engines hold bit-identically), then 3 refresh
       // iterations on the full graph from d0 = COALESCE(prev, 1/n).
@@ -560,7 +541,7 @@ object DomainGraph {
             |  ROUND(CAST(f.r AS DOUBLE), 6) + 0.0
             |    - COALESCE(p.prev_rank, CAST(0.0 AS DOUBLE)) + 0.0 AS delta
             |FROM dnw3 f LEFT JOIN prevd p ON p.host = f.host""".stripMargin),
-      // rankConvergence mirror: the SAME r0..r10 decimal chain as
+      // rankConvergenceFromTables mirror: the SAME r0..r10 decimal chain as
       // d_domain_rank, then one delta card per consecutive pair. Every
       // per-host |r_i − r_{i−1}| is an exact scale-10 decimal, so
       // ×10¹⁰ is an exact integer — both engines agree to the unit

@@ -766,7 +766,7 @@ object Sampling {
 
   // ---- driver wiring ----
 
-  /** The hashed-bigram feature stream [[dsirWeights]] scores on: one
+  /** The hashed-bigram feature stream [[dsirWeightsOverFeats]] scores on: one
     * (doc_id, source, bucket) row per bigram instance; docs with < 2
     * tokens produce NO rows (no bigram signal — absent from every
     * weight/selection result by construction). */
@@ -815,7 +815,7 @@ object Sampling {
     dsirFeats(docs).groupBy(col("b")).agg(count(lit(1)).as("n"))
 
   /** The trained DSIR model as a standalone artifact: the `buckets`-row
-    * (bucket, log-ratio) table [[dsirWeights]] fits — driver/model
+    * (bucket, log-ratio) table [[dsirWeightsOverFeats]] fits — driver/model
     * scale, the stored object a SERVING pipeline (e.g. the streaming
     * ingest gate's target-likeness arm) applies to corpora the model
     * never saw. */
@@ -824,7 +824,7 @@ object Sampling {
     dsirModelFromFeats(dsirFeats(documents), targetSource, buckets)
 
   /** Score arbitrary docs under a PRE-TRAINED model (the serving form
-    * of [[dsirWeights]] — same bigram features, same broadcast join,
+    * of [[dsirWeightsOverFeats]] — same bigram features, same broadcast join,
     * same ROUND(,4) mean): per doc, feature count + dsir_weight. Docs
     * with < 2 tokens yield no row (no bigram signal — the caller's
     * policy decides their fate; the gate arm rejects them). */
@@ -855,23 +855,20 @@ object Sampling {
     * totals enter via an unpartitioned window over the 256-row model
     * table (the documented tiny-aggregate window exception); the model
     * broadcasts back into the feature stream and one per-doc aggregate
-    * finishes. Linear, two passes over the token stream. */
-  def dsirWeights(documents: DataFrame, targetSource: String = "src19",
-                  buckets: Int = 256): DataFrame =
-    dsirWeightsOverFeats(dsirFeats(documents), targetSource, buckets)
-
-  /** [[dsirWeights]] over a prebuilt feature stream (r17: the feature
-    * frame is referenced by BOTH the model aggregate and the scoring
-    * join, so the in-plan form runs the bigram kernel twice per action
-    * — the four DSIR driver keys read the Catalog-materialized stream
-    * instead, the stored feature table a DSIR pipeline extracts once). */
+    * finishes. Linear, two passes over the token stream.
+    *
+    * `feats` is the [[dsirFeats]] stream. It is referenced by BOTH the
+    * model aggregate and the scoring join, so an in-plan
+    * `dsirFeats(docs)` runs the bigram kernel twice per action; the
+    * four DSIR driver keys read the Catalog-materialized stream, the
+    * stored feature table a DSIR pipeline extracts once. */
   def dsirWeightsOverFeats(feats: DataFrame, targetSource: String = "src19",
                            buckets: Int = 256): DataFrame =
     dsirScoreFeats(feats.filter(col("source") =!= targetSource),
       dsirModelFromFeats(feats, targetSource, buckets))
 
   /** DSIR importance SELECTION — the second half of Xie et al. 2023:
-    * [[dsirWeights]] scores every raw-corpus doc by target-domain
+    * [[dsirWeightsOverFeats]] scores every raw-corpus doc by target-domain
     * log-likelihood ratio; this keeps the top-`n` by that weight (the
     * deterministic selection form of the paper's importance resampling
     * — same ranking, no sampling noise, reproducible across runs and
@@ -885,18 +882,13 @@ object Sampling {
     * selection is usually expressed as a per-partition threshold
     * instead (select where weight ≥ τ with τ from a quantile sketch);
     * the top-n form is the oracle-exact contract for both. */
-  def dsirSelect(documents: DataFrame, n: Int = 100,
-                 targetSource: String = "src19"): DataFrame =
-    dsirSelectOverFeats(dsirFeats(documents), n, targetSource)
-
-  /** [[dsirSelect]] over a prebuilt feature stream (r17, Catalog). */
   def dsirSelectOverFeats(feats: DataFrame, n: Int = 100,
                           targetSource: String = "src19"): DataFrame =
     dsirWeightsOverFeats(feats, targetSource)
       .orderBy(col("dsir_weight").desc, col("doc_id").asc)
       .limit(n)
 
-  /** DSIR threshold-form selection — the 100 TB shape of [[dsirSelect]]:
+  /** DSIR threshold-form selection — the 100 TB shape of [[dsirSelectOverFeats]]:
     * keep every doc whose dsir_weight ≥ τ, with τ read from ONE
     * approx-quantile sketch over the weight column at
     * q = 1 − budgetFraction. Top-n needs a global TakeOrdered whose n
@@ -916,13 +908,6 @@ object Sampling {
     * it by explicit rank, making this key hash-checkable at test SF
     * while the production path is the sketch itself. Spec adds the
     * top-n equivalence at matched budget and the sketch-error bound. */
-  def dsirThreshold(documents: DataFrame, budgetFraction: Double = 0.2,
-                    targetSource: String = "src19",
-                    accuracy: Int = 10000): DataFrame =
-    dsirThresholdOverFeats(dsirFeats(documents), budgetFraction,
-      targetSource, accuracy)
-
-  /** [[dsirThreshold]] over a prebuilt feature stream (r17, Catalog). */
   def dsirThresholdOverFeats(feats: DataFrame, budgetFraction: Double = 0.2,
                              targetSource: String = "src19",
                              accuracy: Int = 10000): DataFrame = {
@@ -941,7 +926,7 @@ object Sampling {
   }
 
   /** DSIR budget-fraction CURVE — the governance sweep behind
-    * [[dsirThreshold]]'s single `budgetFraction` (the data-selection
+    * [[dsirThresholdOverFeats]]'s single `budgetFraction` (the data-selection
     * budget debate of Xie et al. 2023 §5: a tight budget concentrates
     * on near-target text but starves diversity, a loose one dilutes
     * the target signal): per candidate fraction, the realized
@@ -958,7 +943,7 @@ object Sampling {
     * d_dsir_threshold shape), and every fraction is a conditional-sum
     * triple in ONE aggregate unpivoted by stack — adding fractions
     * costs a sketch query, never a scan. The weights frame is
-    * MATERIALIZED once (r12) and shared by both consumers (the sketch
+    * MATERIALIZED once and shared by both consumers (the sketch
     * aggregate and the sweep scan), so the dsirFeats subtree — the
     * bigram kernel + bucket join, the expensive part — runs a single
     * time regardless of |fractions|. Gate exactness: below `accuracy`
@@ -967,12 +952,6 @@ object Sampling {
     * by explicit rank (the d_dsir_threshold contract, per fraction).
     * Shares AND the mean weight use the exact-integer half-away idiom
     * (weights are ROUND(,4), so Σ(w·10⁴) is an exact long). */
-  def dsirCurve(documents: DataFrame,
-                fractions: Seq[Double] = Seq(0.05, 0.1, 0.2, 0.5),
-                targetSource: String = "src19", accuracy: Int = 10000): DataFrame =
-    dsirCurveOverFeats(dsirFeats(documents), fractions, targetSource, accuracy)
-
-  /** [[dsirCurve]] over a prebuilt feature stream (r17, Catalog). */
   def dsirCurveOverFeats(feats: DataFrame,
                          fractions: Seq[Double] = Seq(0.05, 0.1, 0.2, 0.5),
                          targetSource: String = "src19",
@@ -980,8 +959,8 @@ object Sampling {
     budgetCurveOverWeights(dsirWeightsOverFeats(feats, targetSource),
       "dsir_weight", fractions, accuracy, "mean_weight")
 
-  /** The budget-fraction sweep shared by [[dsirCurve]] and
-    * `TextAnalysis.qualityModelCurve` (r15) — generic over which
+  /** The budget-fraction sweep shared by [[dsirCurveOverFeats]] and
+    * `TextAnalysis.qualityModelCurveFromScores` — generic over which
     * ROUND(,4) per-doc score it thresholds: one materialized scores
     * frame read by both consumers (the sketch aggregate and the sweep
     * scan), every candidate τ from a single GK sketch pass, one
@@ -1002,7 +981,7 @@ object Sampling {
                                           meanAlias: String,
                                           materialized: Boolean = false): DataFrame = {
     // one scores computation shared by the sketch and the sweep (the
-    // dsirThreshold materialization — without it the full feature
+    // dsirThresholdOverFeats materialization — without it the full feature
     // subtree executes under both consumers); `materialized = true`
     // declares the caller already holds a materialized frame (r16 —
     // the Catalog-cached quality scores), so no per-serve re-copy
@@ -1375,7 +1354,7 @@ object Sampling {
            |  WHERE rn = CAST(ceil(0.8 * n) AS BIGINT))
            |SELECT w.doc_id, w.source, w.dsir_weight, t.tau + 0.0 AS tau
            |FROM w, t WHERE w.dsir_weight >= t.tau""".stripMargin,
-      // dsirCurve mirror via the shared generator ([[budgetCurveSql]]).
+      // dsirCurveOverFeats mirror via the shared generator ([[budgetCurveSql]]).
       "d_dsir_curve" ->
         budgetCurveSql(dsirSql, "dsir_weight", Seq(0.05, 0.1, 0.2, 0.5),
           "mean_weight"),

@@ -357,9 +357,12 @@ object Similarity {
 
   /** IVF ANN over a PRE-FITTED index (centroids + cluster-assigned
     * corpus): probe the query's `nProbe` nearest lists, rank candidates
-    * by exact cosine. This is the serving path — the fit happens once
-    * (see `Catalog.ivfIndex`), exactly as a materialized signature table
-    * amortizes LSH; ranking touches ~nProbe/nlist of the corpus. */
+    * by exact cosine. The complement of [[annLsh]]: IVF adapts to the
+    * data distribution (clusters), LSH is data-independent. The fit
+    * happens once (see `Catalog.ivfIndex`; one-off use fits in-plan:
+    * [[ivfCentroids]], then a `graft_nearest_centroid` projection adds
+    * `cluster`), exactly as a materialized signature table amortizes
+    * LSH; ranking touches ~nProbe/nlist of the corpus. */
   def annIvfFromIndex(centroids: Seq[Seq[Double]], assigned: DataFrame,
                       queryVecId: Long = 0L, k: Int = 10, nProbe: Int = 2): DataFrame = {
     val qVec = assigned.filter(col("vec_id") === queryVecId)
@@ -441,19 +444,6 @@ object Similarity {
       .orderBy(desc("cos"), asc("vec_id"))
       .limit(k)
       .select(col("vec_id"), col("label"), col("cluster"), round(col("cos"), 4).as("cos_sim"))
-  }
-
-  /** IVF ANN, self-contained (fits, assigns, then serves): the
-    * convenience form for one-off use. The complement of [[annLsh]]: IVF
-    * adapts to the data distribution (clusters), LSH is data-independent.
-    * Repeated queries should go through `Catalog.ivfIndex` +
-    * [[annIvfFromIndex]] so the fit is paid once per corpus. */
-  def annIvf(embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 10,
-             nlist: Int = 16, nProbe: Int = 2): DataFrame = {
-    val cents = ivfCentroids(embeddings, nlist)
-    val assigned = embeddings
-      .withColumn("cluster", GraftFunctions.nearestCentroid(col("embedding"), typedlit(cents)))
-    annIvfFromIndex(cents, assigned, queryVecId, k, nProbe)
   }
 
   /** Product-quantization codebooks: an independent deterministic k-means
@@ -869,7 +859,9 @@ object Similarity {
     * approximate cosine (m lookup-table reads per row, codegen,
     * `TakeOrderedAndProject` — the float corpus is never scanned), then
     * re-rank the top k×rerank candidates by exact cosine with one
-    * broadcast join back to the embeddings. */
+    * broadcast join back to the embeddings. `Catalog.pqIndex` pays fit
+    * and encode once per corpus; one-off use fits in-plan
+    * ([[pqCodebooks]], then [[pqCodes]]). */
   def annPqFromIndex(books: Seq[Seq[Seq[Double]]], codes: DataFrame,
                      embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 10,
                      rerank: Int = 4): DataFrame = {
@@ -916,14 +908,6 @@ object Similarity {
                       k: Int = 10): DataFrame =
     annPqFromIndex(books, codes, opqPermute(embeddings, perm), queryVecId, k)
 
-  /** PQ ANN, self-contained (fit + encode + serve) — the one-off form.
-    * Repeated queries go through `Catalog.pqIndex` so fit and encode are
-    * paid once per corpus. */
-  def annPq(embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 10): DataFrame = {
-    val books = pqCodebooks(embeddings)
-    annPqFromIndex(books, pqCodes(embeddings, books), embeddings, queryVecId, k)
-  }
-
   // ---- IVF-PQ: coarse quantizer + product-quantized residuals ----
 
   /** Every embedding with its coarse cluster and coarse RESIDUAL
@@ -967,7 +951,9 @@ object Similarity {
     * kernel serves unchanged); exact-cosine rerank of the top k×rerank.
     * The float corpus is touched only for the k×rerank rerank rows —
     * the serving scan is nProbe/nlist of an already m-byte-per-row
-    * table. */
+    * table. `Catalog.ivfPqIndex` pays both fits and the encode once;
+    * one-off use fits in-plan ([[ivfCentroids]], [[ivfPqCodebooks]],
+    * [[ivfPqCodes]]). */
   def annIvfPqFromIndex(cents: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
                         codes: DataFrame, embeddings: DataFrame,
                         queryVecId: Long = 0L, k: Int = 10, nProbe: Int = 4,
@@ -1008,17 +994,6 @@ object Similarity {
       .orderBy(desc("cos"), asc("vec_id"))
       .limit(k)
       .select(col("vec_id"), col("label"), round(col("cos"), 4).as("cos_sim"))
-  }
-
-  /** IVF-PQ ANN, self-contained (fit coarse + residual codebooks,
-    * encode, serve) — the one-off form. Repeated queries go through
-    * `Catalog.ivfPqIndex` so both fits and the encode are paid once. */
-  def annIvfPq(embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 10,
-               nlist: Int = 16, nProbe: Int = 4): DataFrame = {
-    val cents = ivfCentroids(embeddings, nlist)
-    val books = ivfPqCodebooks(embeddings, cents)
-    annIvfPqFromIndex(cents, books, ivfPqCodes(embeddings, cents, books),
-      embeddings, queryVecId, k, nProbe)
   }
 
   /** Exact k-NN GRAPH construction (the all-vectors analog of
@@ -1078,8 +1053,9 @@ object Similarity {
       canopyCandidatePairs(embeddings, centroids, nAssign), k)
 
   /** The verified canopy candidate-pair frame SHARED by
-    * [[knnJoinCanopy]], [[hardNegatives]] and [[knnLabelAccuracy]]
-    * (r17): `(vec_id, label, nbr_id, nbr_label, cos_sim)` — pairs
+    * [[knnJoinCanopy]], [[hardNegativesFromPairs]] and
+    * [[knnLabelAccuracyFromPairs]]: `(vec_id, label, nbr_id, nbr_label,
+    * cos_sim)` — pairs
     * deduped scan-side by the least-shared-canopy rule (r10), exact
     * cosine at report rounding. The three serving keys each re-mined
     * this identical frame per invocation; `Catalog.canopyPairs`
@@ -1137,26 +1113,20 @@ object Similarity {
     * neg_id, neg_cos); anchors missing either arm in their canopies
     * drop (both arms are required to form a triplet).
     *
-    * Candidates come from the k-means canopy blocker (Catalog-cached
-    * IVF fit shared with s_ann_ivf/s_knn_ivf) — which is exactly the
+    * Candidates come from the k-means canopy blocker
+    * ([[canopyCandidatePairs]] — Catalog-cached, over the IVF fit
+    * shared with s_ann_ivf/s_knn_ivf) — which is exactly the
     * right candidate set semantically: a hard negative is by
     * definition inside the anchor's geometric neighborhood, so canopy
     * blocking is not an approximation trade here, it IS the
     * definition. O(Σ bucket²) work bounded by nlist sizing, exact
-    * cosine verify, two row_number windows over the shared candidate
-    * frame, one join to pair the arms. Oracle-checked off the
+    * cosine verify; BOTH arms come from ONE conditional
+    * `graft_topk_pairs` aggregate — the heap skips the other arm's
+    * rows via the when()-null inputs, so the candidate frame is
+    * aggregated once, map-side-truncated, with no distinct, no window
+    * sort, no pos⋈neg arm join. Oracle-checked off the
     * portable fit CTE; spec plants cross-label near-duplicates and
     * asserts they are mined as the negatives. */
-  def hardNegatives(embeddings: DataFrame, centroids: Seq[Seq[Double]],
-                    nAssign: Int = 2): DataFrame =
-    hardNegativesFromPairs(canopyCandidatePairs(embeddings, centroids, nAssign))
-
-  /** [[hardNegatives]] over the prebuilt candidate-pair frame (r17,
-    * Catalog — the knnJoinCanopyFromPairs note, two-arm shape): BOTH
-    * arms come from ONE conditional `graft_topk_pairs` aggregate — the
-    * heap skips the other arm's rows via the when()-null inputs, so
-    * the candidate frame is aggregated once, map-side-truncated, with
-    * no distinct, no window sort, no pos⋈neg arm join. */
   def hardNegativesFromPairs(pairs: DataFrame): DataFrame = {
     val same = col("label") === col("nbr_label")
     pairs
@@ -1632,6 +1602,24 @@ object Similarity {
         (round(col("cos_s"), 4) + lit(0.0)).as("cos_short"))
   }
 
+  /** Route each vector to its prefix-fitted IVF list: `cluster` = the
+    * nearest of `centroids` (fitted on the first `shortDim` coordinates)
+    * by those coordinates alone, while the row keeps its FULL vector,
+    * which the serve's full-dimension rerank requires. The one
+    * assignment projection of the `s_ann_mrl_ivf` index: the batch fit
+    * (`Catalog.ivfIndexMrl`, inline-centroid regime) and streamed
+    * maintenance (arriving vectors appended to the assigned table) both
+    * call it — one code path, two execution modes. Stateless, so a
+    * stream appends; models refit out-of-band. Scale note: past
+    * [[JoinedAssignMinNlist]] lists the centroid model is too big to
+    * inline as a plan literal — route the stream through the
+    * broadcast-joined assignment form there (the `twoLevelAssignJoined`
+    * regime), same routing semantics. */
+  def mrlAssign(embeddings: DataFrame, centroids: Seq[Seq[Double]],
+                shortDim: Int = 16): DataFrame =
+    embeddings.withColumn("cluster",
+      GraftFunctions.nearestCentroid(slice(col("embedding"), 1, shortDim), typedlit(centroids)))
+
   /** Two-stage MRL funnel served off an IVF index FITTED IN PREFIX
     * SPACE ([[graft.core.Catalog.ivfIndexMrl]]) — the 100 TB form of
     * [[annMrlServe]], where the cost saving reaches the INDEX, not just
@@ -1749,20 +1737,14 @@ object Similarity {
     * does not separate the classes and every SemDeDup/clustering
     * decision built on it is suspect; the classic kNN-probe eval).
     * Per label: member count, top-1-neighbor-same-label count,
-    * accuracy ROUND(,4)+0.0. The kNN arm is [[knnJoinCanopy]] (shared
-    * Catalog fit); the neighbor's label arrives by one key join
-    * against the (vec_id, label) projection — key columns only, the
-    * embedding payload is not re-read. Oracle-checked off the
-    * portable fit CTE; spec: planted tight same-label clusters recover
-    * accuracy 1.0. */
-  def knnLabelAccuracy(embeddings: DataFrame, centroids: Seq[Seq[Double]]): DataFrame =
-    knnLabelAccuracyFromPairs(
-      canopyCandidatePairs(embeddings, centroids), embeddings)
-
-  /** [[knnLabelAccuracy]] over the prebuilt candidate-pair frame (r17,
-    * Catalog): the anchor's label rides the pair frame (identical to
-    * the old embeddings join — same source column), the top-1
-    * neighbor's label arrives by the same one key join as before. */
+    * accuracy ROUND(,4)+0.0. The kNN arm is the [[knnJoinCanopy]]
+    * top-1 over the canopy candidate-pair frame
+    * ([[canopyCandidatePairs]], Catalog-cached over the shared fit),
+    * where the anchor's label rides the pair frame; the neighbor's
+    * label arrives by one key join against the (vec_id, label)
+    * projection — key columns only, the embedding payload is not
+    * re-read. Oracle-checked off the portable fit CTE; spec: planted
+    * tight same-label clusters recover accuracy 1.0. */
   def knnLabelAccuracyFromPairs(pairs: DataFrame, embeddings: DataFrame): DataFrame = {
     val top1 = pairs
       .groupBy(col("vec_id"), col("label"))
@@ -2345,7 +2327,7 @@ object Similarity {
       "WITH " + (Seq(q, cand, s1) ++ (2 to 5).map(mmrStepCte)).mkString(",\n") + "\n" +
         (1 to 5).map(mmrRowSelect).mkString("\nUNION ALL\n")
     },
-    // Mirror of annPq (Catalog.pqIndex fit + encode + ADC serve +
+    // Mirror of annPqFromIndex (Catalog.pqIndex fit + encode + ADC serve +
     // exact rerank): the per-subspace Lloyd fit replays portably
     // (pqFitCte), LUT entries are index-order list folds over the
     // final books, ADC = Σdot/√Σnorm2 in subspace order.
@@ -2490,7 +2472,7 @@ object Similarity {
            |  WHERE pa3.vec_id != 0
            |  GROUP BY vec_id),
            |""".stripMargin + pqServeTail),
-    // Mirror of annIvfPq: coarse fit (ivfFitCte) → residual frame
+    // Mirror of annIvfPqFromIndex: coarse fit (ivfFitCte) → residual frame
     // (the vecResidual FLOAT cast is CAST(double − cent AS FLOAT)) →
     // PQ fit on residuals → per-probe LUTs with the centroid folded
     // into each codeword (the IVFADC decomposition) → ADC → rerank.

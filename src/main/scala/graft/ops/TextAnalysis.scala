@@ -204,7 +204,7 @@ object TextAnalysis {
     * scorer over hashed-bigram counts, target = a DECLARED high-quality
     * source (`hqSource`, the "wiki side" of CCNet's LM contrast; src0
     * is the testdata mixture's weight-8 source), contrast = everything
-    * else. Trained in-plan exactly like `Sampling.dsirWeights`' 256-row
+    * else. Trained in-plan exactly like `Sampling.dsirWeightsOverFeats`' 256-row
     * bucket model (integer counts, add-1 smoothing, DECIMAL(28,10) ln
     * terms — the same private machinery, shared, so the two families
     * cannot drift) and served scan-side by a broadcast model join.
@@ -230,8 +230,8 @@ object TextAnalysis {
     * scoring join with no materialization, so the token-stream scan
     * runs twice per ACTION — the in-plan form for one-shot use. Every
     * serving key reads `Catalog.qualityScores` instead (one hooked
-    * [[qualityModelFitScores]] training per (session, dir) — the
-    * bpeModel/ivfIndex precedent). */
+    * [[qualityModelFitScoresOverFeats]] training per (session, dir) —
+    * the bpeModel/ivfIndex precedent). */
   def qualityModelScores(documents: DataFrame, hqSource: String = "src0",
                          buckets: Int = 256): DataFrame = {
     val feats = Sampling.dsirFeats(documents)
@@ -240,29 +240,18 @@ object TextAnalysis {
       .withColumnRenamed("dsir_weight", "q_score")
   }
 
-  /** ONE hooked training run (r16): the fit ARTIFACT (the 256-row
-    * (bucket, log-odds) table — [[qualityModelFit]]'s output, the
-    * stored object the streaming gate's quality_model arm serves) AND
-    * the MATERIALIZED per-doc score frame, sharing one materialized
-    * pass over the feature stream — the token-stream scan runs once
-    * per corpus, not twice per serve. Both returned frames are
-    * materialized (the feature frame's blocks are released before
-    * returning); identical values to [[qualityModelFit]] /
+  /** ONE hooked training run over an ALREADY-MATERIALIZED feature
+    * stream (`Catalog.dsirFeats`, shared with the four DSIR keys): the
+    * fit ARTIFACT (the 256-row (bucket, log-odds) table —
+    * [[qualityModelFit]]'s output, the stored object the streaming
+    * gate's quality_model arm serves) AND the MATERIALIZED per-doc
+    * score frame, both off the one feature stream — the token-stream
+    * scan runs once per corpus, not twice per serve. Both returned
+    * frames are materialized; identical values to [[qualityModelFit]] /
     * [[qualityModelScores]] by construction (same plan arithmetic), so
     * every DuckDB mirror replays unchanged. Cached per (session, dir)
-    * by `Catalog.qualityModel`/`Catalog.qualityScores`. */
-  def qualityModelFitScores(documents: DataFrame, hqSource: String = "src0",
-                            buckets: Int = 256): (DataFrame, DataFrame) = {
-    val feats = DupClusters.materialize(Sampling.dsirFeats(documents))
-    val out = qualityModelFitScoresOverFeats(feats, hqSource, buckets)
-    DupClusters.release(feats)
-    out
-  }
-
-  /** [[qualityModelFitScores]] over an ALREADY-MATERIALIZED feature
-    * stream (r17 — `Catalog.dsirFeats`, shared with the four DSIR
-    * keys): the training run no longer extracts its own copy of the
-    * bigram stream. The caller owns the feats frame's lifecycle. */
+    * by `Catalog.qualityModel`/`Catalog.qualityScores`. The caller owns
+    * the feats frame's lifecycle. */
   def qualityModelFitScoresOverFeats(feats: DataFrame, hqSource: String = "src0",
                                      buckets: Int = 256): (DataFrame, DataFrame) = {
     val model = DupClusters.materialize(
@@ -302,25 +291,18 @@ object TextAnalysis {
           .otherwise("tail").as("q_bucket"))
   }
 
-  /** Budget-fraction curve over the model quality score (r15) — the
+  /** Budget-fraction curve over the model quality score — the
     * d_dsir_curve governance discipline applied to the classifier: per
     * candidate keep-fraction, the realized score threshold, selected
     * count/share, and the mean selected score (how fast hq-likeness
     * decays as the budget loosens) — the card that PICKS the quality
     * cut before a corpus-scale filter trusts it. Same shared sweep
-    * plan as dsirCurve ([[Sampling.budgetCurveOverWeights]]): scores
-    * materialized once, all τs from one sketch pass, one conditional
-    * aggregate unpivoted by stack. */
-  def qualityModelCurve(documents: DataFrame,
-                        fractions: Seq[Double] = Seq(0.05, 0.1, 0.2, 0.5),
-                        hqSource: String = "src0",
-                        accuracy: Int = 10000): DataFrame =
-    Sampling.budgetCurveOverWeights(qualityModelScores(documents, hqSource),
-      "q_score", fractions, accuracy, "mean_q_score")
-
-  /** [[qualityModelCurve]] served off an ALREADY-MATERIALIZED score
-    * frame (r16 — `Catalog.qualityScores`): the sweep's own
-    * materialization is skipped, no refit per serve. */
+    * plan as dsirCurveOverFeats ([[Sampling.budgetCurveOverWeights]]):
+    * all τs from one sketch pass, one conditional aggregate unpivoted
+    * by stack. Served off an ALREADY-MATERIALIZED score frame
+    * (`Catalog.qualityScores`, or a materialized
+    * [[qualityModelScores]]), which the sketch and the sweep scan both
+    * read — no refit per serve. */
   def qualityModelCurveFromScores(scores: DataFrame,
                                   fractions: Seq[Double] = Seq(0.05, 0.1, 0.2, 0.5),
                                   accuracy: Int = 10000): DataFrame =
@@ -1458,7 +1440,8 @@ object TextAnalysis {
     (merges.result(), syms)
   }
 
-  /** Tokenizer APPLY — the corpus-wide companion of [[bpeTrain]] that
+  /** Tokenizer APPLY over an already-trained segmentation table — the
+    * corpus-wide companion of [[bpeTrain]] that
     * closes the loop to token budgeting (`d_sample_tokens` /
     * `t_seq_pack` consume token counts; this is where a LEARNED
     * tokenizer's counts come from): per document, the word count and
@@ -1475,17 +1458,12 @@ object TextAnalysis {
     * side auto-broadcasts (AQE); at web scale it becomes a shuffle join
     * on the word key — same plan shape, no driver involvement either
     * way. Docs with no tokens (empty/NULL text) keep a (0, 0) row —
-    * the t_chunk coverage convention. */
-  def bpeApply(documents: DataFrame, rounds: Int = 8): DataFrame = {
-    val (_, syms) = bpeLoop(documents, rounds)
-    syms.unpersist(blocking = false) // re-evaluation is one scan-side kernel chain
-    bpeApplyFromModel(documents, syms)
-  }
-
-  /** The apply half alone, over an already-trained segmentation table
-    * (the `Catalog.bpeModel` serving path — training paid once per
-    * corpus like every other fit): word fan-out LEFT ⋈ vocab(word →
-    * n_tokens) + one per-doc aggregate. Out-of-vocabulary words (docs
+    * the t_chunk coverage convention.
+    *
+    * `syms` is the `Catalog.bpeModel` table (training paid once per
+    * corpus like every other fit) or [[bpeLoop]]'s in-plan one: word
+    * fan-out LEFT ⋈ vocab(word → n_tokens) + one per-doc aggregate.
+    * Out-of-vocabulary words (docs
     * outside the training corpus — the real serving case) still count
     * in `n_words` and fall back to their character count for
     * `n_bpe_tokens`: a word the trainer never saw gets no merges, so
@@ -1998,7 +1976,7 @@ object TextAnalysis {
         (1 to 8).map(r =>
           s"SELECT CAST($r AS INT) AS round, a || '+' || b AS pair, n FROM bs$r")
           .mkString("\nUNION ALL\n")),
-    // bpeApply mirror: the same 8-round chain, then the FINAL
+    // bpeApplyFromModel mirror: the same 8-round chain, then the FINAL
     // segmentation s8 keys word → len(syms) and per-doc word fan-out
     // LEFT-joins it (OOV word → character count — unreachable here
     // since the corpus trains itself, mirrored for plan fidelity);
@@ -2544,7 +2522,7 @@ object TextAnalysis {
          |       ELSE 'tail' END AS q_bucket
          |FROM w, t1, t2""".stripMargin
     },
-    // qualityModelCurve mirror via the shared generator.
+    // qualityModelCurveFromScores mirror via the shared generator.
     "t_quality_model_curve" ->
       Sampling.budgetCurveSql(
         Sampling.nbLogOddsSql("src0", excludeTarget = false, "q_score"),

@@ -3,8 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
 
-import graft.ops.Similarity
-
 /** Streaming ANN index maintenance (SURVEY.md §2.4): keep the
   * hyperplane-LSH signature index fresh as new embeddings arrive,
   * instead of re-indexing the corpus per batch job.
@@ -21,6 +19,17 @@ import graft.ops.Similarity
   * a stream refreshes IVF by re-fitting periodically out-of-band
   * (`Catalog.ivfIndex`), while assignment of arriving vectors is the
   * same stateless projection as here.
+  *
+  * Every serving index this engine fits is maintained this way, and the
+  * stream calls the batch operator itself — one code path, two
+  * execution modes: `Similarity.withSignatures` (LSH buckets),
+  * `Similarity.ivfPqCodes` (IVF-PQ codes: coarse-assign + residual
+  * encode), `Similarity.pqCodes` over `Similarity.opqPermute` (OPQ
+  * codes) and `Similarity.mrlAssign` (MRL prefix-list routing). The
+  * fitted models ship with the plan as literals and refit out-of-band
+  * (`Catalog.ivfPqIndex` / `opqIndex` / `ivfIndexMrl`); a drifted refit
+  * republishes the code table via Store's versioned swap, and the
+  * signals below say when.
   */
 object AnnStream {
 
@@ -33,25 +42,6 @@ object AnnStream {
   /** Raw embedding file stream. */
   def embeddingStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.schema(embeddingsSchema).parquet(dir)
-
-  /** Continuously-maintained signature index: one row per arriving
-    * vector with its LSH bucket — identical values to the batch
-    * `Similarity.withSignatures` (one code path, two execution modes). */
-  def signatureStream(embeddings: DataFrame, nPlanes: Int = 8, dim: Int = 64): DataFrame =
-    Similarity.withSignatures(embeddings, nPlanes, dim)
-
-  /** Continuously-maintained IVF-PQ code table: each arriving vector is
-    * coarse-assigned and residual-encoded against the FITTED index
-    * (centroids + codebooks ship with the plan as literals) — a
-    * stateless scan projection, so the inverted-file code table grows by
-    * appending exactly like the LSH index above. The models themselves
-    * are refit out-of-band (`Catalog.ivfPqIndex`; a drifted refit
-    * republishes the code table via Store's versioned swap). One code
-    * path, two execution modes: values are identical to the batch
-    * `Similarity.ivfPqCodes` (spec-proven). */
-  def ivfPqCodeStream(embeddings: DataFrame, centroids: Seq[Seq[Double]],
-                      books: Seq[Seq[Seq[Double]]]): DataFrame =
-    Similarity.ivfPqCodes(embeddings, centroids, books)
 
   /** Fit-time per-label centroid snapshot — the reference frame the
     * drift trigger compares against, captured from the SAME corpus the
@@ -204,41 +194,5 @@ object AnnStream {
     drift || volumeSignal(listSnap, mergedDeleteCounts(spark, countersTable),
         minLiveFrac)
       .filter(col("refit_recommended")).limit(1).count() > 0
-  }
-
-  /** Continuously-maintained OPQ code table: each arriving vector is
-    * PERMUTED (dim literal GetArrayItem projections — the permutation
-    * ships with the plan) and PQ-encoded against the fitted OPQ books —
-    * stateless, append-only, exactly like [[ivfPqCodeStream]]; the
-    * permutation + books refit out-of-band (`Catalog.opqIndex`). One
-    * code path, two execution modes: values identical to the batch
-    * OPQ code table the `s_ann_opq` serve scans (spec-proven). */
-  def opqCodeStream(embeddings: DataFrame, perm: Seq[Int],
-                    books: Seq[Seq[Seq[Double]]]): DataFrame =
-    Similarity.pqCodes(Similarity.opqPermute(embeddings, perm), books)
-
-  /** MRL prefix-space assignment maintenance — the insert leg of the
-    * `s_ann_mrl_ivf` index (the fourth code stream: LSH signatures,
-    * IVF-PQ codes, OPQ codes, and now prefix-list assignments — every
-    * serving index this engine fits has its streamed maintainer):
-    * arriving vectors are routed to their prefix-fitted IVF list by a
-    * stateless scan projection (the prefix centroid literal ships with
-    * the plan; models refit out-of-band, the [[ivfPqCodeStream]]
-    * contract). The routing reads only the first `shortDim` coordinates
-    * of each arriving vector — the MRL saving reaches maintenance too —
-    * while the appended row keeps the FULL vector, which the serve's
-    * full-dimension rerank requires. Append-only; spec-proven equal to
-    * the batch `Catalog.ivfIndexMrl` assignment and to serve identical
-    * top-k through `annMrlIvfFromIndex` off either table. Scale note:
-    * like the batch fit, past `Similarity.JoinedAssignMinNlist` lists
-    * the centroid model is too big to inline as a plan literal — route
-    * the stream through the broadcast-joined assignment form there
-    * (the `twoLevelAssignJoined` regime), same routing semantics. */
-  def mrlAssignStream(embeddings: DataFrame, centroids: Seq[Seq[Double]],
-                      shortDim: Int = 16): DataFrame = {
-    import org.apache.spark.sql.functions._
-    embeddings.withColumn("cluster",
-      graft.functions.GraftFunctions.nearestCentroid(
-        slice(col("embedding"), 1, shortDim), typedlit(centroids)))
   }
 }

@@ -77,7 +77,7 @@ import graft.ops.Dedup
   * against survivors-sans-batch; presence-probed append).
   *
   * Optional sixth arm ([[DsirVet]]): TARGET-LIKENESS admission — the
-  * streaming form of `Sampling.dsirThreshold`'s selection, served off
+  * streaming form of `Sampling.dsirThresholdOverFeats`'s selection, served off
   * a PRE-TRAINED model (the `Sampling.dsirModel` 256-row bucket table
   * + a pinned τ, both driver-scale artifacts — in production the
   * stored model a selection run fits once per (target, corpus-regime)

@@ -41,7 +41,7 @@ import org.apache.spark.sql.functions._
   *    cosine while every doc living in those buckets is misrouted.
   *
   * When the signal recommends, the out-of-band refit is the usual
-  * artifact cycle: re-run `TextAnalysis.qualityModelFitScores` /
+  * artifact cycle: re-run `TextAnalysis.qualityModelFitScoresOverFeats` /
   * `Sampling.dsirModel` on the grown corpus, publish via
   * `Store.saveQualityModel` (versioned swap), and the gate arms pick
   * up the new artifact on their refresh schedule. Composes under the

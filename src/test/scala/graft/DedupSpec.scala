@@ -121,7 +121,7 @@ class DedupSpec extends SparkSpec {
     val excerpt = (50 to 80).map(i => s"w$i").mkString(" ")   // contiguous slice of `long`
     val other = (1000 to 1200).map(i => s"v$i").mkString(" ")
     val df = Seq((1L, long), (2L, excerpt), (3L, other)).toDF("doc_id", "text")
-    val out = Dedup.containmentPairs(df).collect()
+    val out = Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(df, None)).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Double]("containment"), r.getAs[Double]("jaccard")))
     assert(out.length == 1)
@@ -131,7 +131,8 @@ class DedupSpec extends SparkSpec {
     assert(j < 0.8, s"jaccard ($j) must miss the excerpt — that is the operator's point")
     assert(Dedup.ngramJaccardPairs(df, tau = 0.8).collect().isEmpty)
     // corpus invariants: containment >= jaccard on every pair, thresholds respected
-    val corpus = Dedup.containmentPairs(docs).collect()
+    val corpus =
+      Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(docs, None)).collect()
     assert(corpus.nonEmpty)
     corpus.foreach { r =>
       assert(r.getAs[Double]("containment") >= r.getAs[Double]("jaccard"))
@@ -152,12 +153,14 @@ class DedupSpec extends SparkSpec {
     val df = (boiler ++ Seq((1L, long), (2L, excerpt)))
       .toDF("doc_id", "text")
     // θ=0 exposes the raw pair set: uncapped pays the C(50,2) fan-out...
-    val uncapped = Dedup.containmentPairs(df, theta = 0.0)
+    val uncapped =
+      Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(df, None), theta = 0.0)
       .filter($"doc_a" >= 100L).count()
     assert(uncapped == 50L * 49 / 2)
     // ...capped: the df=50 shingle is anti-joined out, boilerplate-only
     // pairs share nothing and vanish — pair work is bounded
-    val capped = Dedup.containmentPairs(df, theta = 0.0, dfCap = Some(10))
+    val capped =
+      Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(df, Some(10)), theta = 0.0)
     assert(capped.filter($"doc_a" >= 100L).count() == 0)
     // the clean excerpt pair is untouched by the cap: same containment,
     // same jaccard (its shingles are all below the cap)
@@ -166,9 +169,11 @@ class DedupSpec extends SparkSpec {
     assert(pair.head.getAs[Double]("containment") == 1.0)
     // corpus-level: no sf0.001 shingle reaches df 100, so the shipped
     // dfCap=100 key is measure-identical to the uncapped form there
-    val cappedCorpus = Dedup.containmentPairs(docs, dfCap = Some(100)).collect()
+    val cappedCorpus = Dedup.containmentPairsFromIndex(
+        Dedup.shingleInvertedIndex(docs, Some(100))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
-    val fullCorpus = Dedup.containmentPairs(docs).collect()
+    val fullCorpus = Dedup.containmentPairsFromIndex(
+        Dedup.shingleInvertedIndex(docs, None)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
     assert(cappedCorpus == fullCorpus)
   }
@@ -200,7 +205,8 @@ class DedupSpec extends SparkSpec {
       (101L, base + " changed"), // near dup of corpus doc 1 (one word edited)
       (102L, "a genuinely novel batch document with fresh content throughout"))
       .toDF("doc_id", "text")
-    val out = Dedup.crossDedup(corpus, batch, tau = 0.8).collect()
+    val out = Dedup.crossDedupFromSignatures(corpus, Dedup.docFingerprints(corpus),
+      Dedup.minhashSignatures(corpus), batch, tau = 0.8).collect()
       .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"), r.getAs[String]("kind")))
     assert(out.toSet == Set((100L, 1L, "exact"), (101L, 1L, "near")))
     // the batch-vs-corpus orientation is strict: corpus-internal and
@@ -209,7 +215,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fuzzyPairs: planted near-dups found, distances within bound, no false matches") {
-    val pairs = Dedup.fuzzyPairs(docs, maxDist = 10).collect()
+    val pairs = Dedup.fuzzyPairsFromCandidates(docs, Dedup.minhashCandidates(docs), maxDist = 10)
+      .collect()
     assert(pairs.nonEmpty)
     assert(pairs.forall(r => r.getAs[Int]("edit_distance") >= 0 &&
       r.getAs[Int]("edit_distance") <= 10))
@@ -440,7 +447,11 @@ class DedupSpec extends SparkSpec {
 
   test("semanticDedupMedoid: one survivor per group — the argmax-(cos-to-group-sum, min id) member") {
     val cents = graft.ops.Similarity.ivfCentroids(replicaEmbs, k = 8, iters = 2)
-    val out = Dedup.semanticDedupMedoid(replicaEmbs, cents, tau = 0.8, nAssign = 2)
+    val cc = graft.ops.DupClusters.connectedComponents(
+      Dedup.embedNearDupClusters(replicaEmbs, cents, tau = 0.8, nAssign = 2)
+        .select($"vec_a", $"vec_b"),
+      replicaEmbs.select($"vec_id"))
+    val out = Dedup.semanticDedupMedoidFromCc(replicaEmbs, cc)
       .collect().map(r => r.getAs[String]("label") ->
         (r.getAs[Long]("vec_id"), r.getAs[Int]("group_size"))).toMap
     assert(out.size == 40 && out.values.forall(_._2 == 3))
@@ -540,7 +551,9 @@ class DedupSpec extends SparkSpec {
       (2L, "a b c x"),   // shingles: "a b c"(df2), "b c x"(df1) → 1/2
       (3L, "p q r s")    // both shingles unique → 1.0
     ).toDF("doc_id", "text")
-    val got = Dedup.ngramNovelty(df).collect()
+    val got = Dedup.ngramNoveltyFromIndex(
+        Dedup.shingled(df).select($"doc_id", explode($"shingles").as("shingle")).cache())
+      .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3)))).toMap
     assert(got == Map(
       1L -> ((2L, 1L, 0.5)), 2L -> ((2L, 1L, 0.5)), 3L -> ((2L, 2L, 1.0))))
@@ -552,7 +565,7 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text", "source")
     val corpus = docs.select($"doc_id", $"text", $"source").unionByName(planted)
     val sigs = Dedup.minhashSignatures(corpus)
-    val out = Dedup.jaccardCalibration(corpus, sigs).collect()
+    val out = Dedup.jaccardCalibrationFrom(Dedup.shingled(corpus), sigs).collect()
     val pair = out.find(r => r.getLong(0) == 100001L && r.getLong(1) == 100002L)
     assert(pair.isDefined, "identical planted docs must surface as an LSH candidate")
     assert(pair.get.getAs[Double]("est_jaccard") == 1.0)
@@ -589,13 +602,13 @@ class DedupSpec extends SparkSpec {
 
   test("permCurve: p=128 arm equals jaccardCalibration's error set; error shrinks and storage grows with p") {
     val sigs = Dedup.minhashSignatures(docs)
-    val curve = Dedup.permCurve(docs, sigs).collect()
+    val curve = Dedup.permCurveFrom(Dedup.shingled(docs), sigs).collect()
       .map(r => r.getInt(0) ->
         ((r.getLong(1), r.getDouble(2), r.getDouble(3), r.getInt(4)))).toMap
     assert(curve.keySet == Set(16, 32, 64, 128))
     // the p=128 arm IS the calibration card's error column: same pair
     // count, MAE = the integer-mean of its abs_err values, same max
-    val calErrs = Dedup.jaccardCalibration(docs, sigs).collect()
+    val calErrs = Dedup.jaccardCalibrationFrom(Dedup.shingled(docs), sigs).collect()
       .map(_.getAs[Double]("abs_err"))
     val (n128, mae128, max128, bytes128) = curve(128)
     assert(n128 == calErrs.length)
@@ -638,7 +651,7 @@ class DedupSpec extends SparkSpec {
 
   test("lshTuning: S-curve law (s50 rises, retention falls as rows/band grow); JVM differential") {
     val sigs = Dedup.minhashSignatures(docs)
-    val out = Dedup.lshTuning(docs, sigs).collect()
+    val out = Dedup.lshTuningFrom(Dedup.shingled(docs), sigs).collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getDouble(2), r.getLong(3),
         r.getDouble(4), r.getDouble(5)))
       .sortBy(_._2)
@@ -653,7 +666,7 @@ class DedupSpec extends SparkSpec {
     assert(math.abs(s50_32x4 - math.pow(1.0 - math.pow(0.5, 1.0 / 32), 1.0 / 4)) < 1e-3)
     // JVM differential: recompute expected retention from the
     // calibration pairs with plain-double repeated squaring
-    val pairs = Dedup.jaccardCalibration(docs, sigs).collect()
+    val pairs = Dedup.jaccardCalibrationFrom(Dedup.shingled(docs), sigs).collect()
       .map(r => BigDecimal(r.getAs[Double]("exact_jaccard"))
         .setScale(1, BigDecimal.RoundingMode.HALF_UP).toDouble)
     out.foreach { case (b, r, _, nPairs, expRet, retFrac) =>

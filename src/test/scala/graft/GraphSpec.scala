@@ -70,7 +70,9 @@ class GraphSpec extends SparkSpec {
     val deltaEs = Seq(("h0", "h99"), ("h99", "h1"), ("h2", "h3"), ("h2", "h3"))
     val prev = DomainGraph.domainRank(oldEs.toDF("src", "dst"))
     val full = (oldEs ++ deltaEs).toDF("src", "dst")
-    val got = DomainGraph.domainRankDelta(full, prev).collect()
+    val got = DomainGraph.domainRankDeltaFromWeights(
+        full.groupBy($"src", $"dst").agg(count(lit(1)).as("w")), prev)
+      .collect()
       .map(r => r.getString(0) ->
         ((r.getDouble(1), r.getDouble(2), r.getDouble(3)))).toMap
     // one row per host of the NEW graph, including the new one
@@ -101,7 +103,8 @@ class GraphSpec extends SparkSpec {
   test("rankConvergence: exact-decimal JVM differential to the unit; geometric decay; max ≤ L1") {
     val rnd = new scala.util.Random(31)
     val es = Seq.fill(250)((s"h${rnd.nextInt(12)}", s"h${rnd.nextInt(12)}"))
-    val got = DomainGraph.rankConvergence(es.toDF("src", "dst")).collect()
+    val got = DomainGraph.rankConvergenceFromTables(DomainGraph.edgeTables(es.toDF("src", "dst")))
+      .collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got.keySet == (1 to 10).toSet)
     // JVM reference replaying the SAME arithmetic: per-edge double term

@@ -37,7 +37,7 @@ class SamplingSpec extends SparkSpec {
       (10L, "web", "query plan scan join filter scan"), // target-like
       (11L, "web", "cat dog bird fish cow horse goat")  // unrelated
     ).toDF("doc_id", "source", "text")
-    val out = Sampling.dsirWeights(df, targetSource = "tgt").collect()
+    val out = Sampling.dsirWeightsOverFeats(Sampling.dsirFeats(df), targetSource = "tgt").collect()
       .map(r => r.getAs[Long]("doc_id") ->
         (r.getAs[Long]("n_feats"), r.getAs[Double]("dsir_weight"))).toMap
     assert(out.keySet == Set(10L, 11L), "only non-target docs are scored")
@@ -71,8 +71,10 @@ class SamplingSpec extends SparkSpec {
     }
     // determinism under repartition, corpus coverage
     val corpus = docs
-    val w1 = Sampling.dsirWeights(corpus).collect().map(_.toString).sorted.toSeq
-    val w2 = Sampling.dsirWeights(corpus.repartition(13)).collect().map(_.toString).sorted.toSeq
+    val w1 = Sampling.dsirWeightsOverFeats(Sampling.dsirFeats(corpus))
+      .collect().map(_.toString).sorted.toSeq
+    val w2 = Sampling.dsirWeightsOverFeats(Sampling.dsirFeats(corpus.repartition(13)))
+      .collect().map(_.toString).sorted.toSeq
     assert(w1 == w2)
   }
 
@@ -202,13 +204,14 @@ class SamplingSpec extends SparkSpec {
 
   test("dsirCurve: taus match the exact JVM rank quantile; f=0.2 row equals dsirThreshold; monotone in the budget") {
     val fractions = Seq(0.05, 0.1, 0.2, 0.5)
-    val curve = Sampling.dsirCurve(docs, fractions).collect()
+    val curve = Sampling.dsirCurveOverFeats(Sampling.dsirFeats(docs), fractions).collect()
       .map(r => r.getDouble(0) ->
         ((r.getDouble(1), r.getLong(2), r.getLong(3), r.getDouble(4), r.getDouble(5)))).toMap
     assert(curve.keySet == fractions.toSet)
     // JVM reference: sorted weights, tau_f = rank-ceil((1-f)·n) element,
     // selected = the >= tau closure (ties all kept)
-    val ws = Sampling.dsirWeights(docs).collect().map(_.getDouble(3)).sorted
+    val ws = Sampling.dsirWeightsOverFeats(Sampling.dsirFeats(docs))
+      .collect().map(_.getDouble(3)).sorted
     val n = ws.length
     fractions.foreach { f =>
       val tau = ws(math.ceil((1.0 - f) * n).toLong.toInt - 1)
@@ -224,8 +227,8 @@ class SamplingSpec extends SparkSpec {
         ((200L * math.abs(bigW) + k) / (2L * k)).toDouble / 1000000.0
       assert(gotMean == mean, s"f=$f mean $gotMean != $mean")
     }
-    // the f=0.2 row IS dsirThreshold's selection (same tau, same set size)
-    val th = Sampling.dsirThreshold(docs, budgetFraction = 0.2).collect()
+    // the f=0.2 row IS dsirThresholdOverFeats' selection (same tau, same set size)
+    val th = Sampling.dsirThresholdOverFeats(Sampling.dsirFeats(docs), budgetFraction = 0.2).collect()
     assert(curve(0.2)._2 == th.length)
     assert(curve(0.2)._1 == th.head.getDouble(3))
     // loosening the budget is monotone: tau falls, selection grows, and
@@ -238,7 +241,7 @@ class SamplingSpec extends SparkSpec {
     // the curve is EMPTY on both engines — not |fractions| null rows
     val allTarget = Seq((1L, "alpha beta gamma", "src19"), (2L, "delta epsilon zeta", "src19"))
       .toDF("doc_id", "text", "source")
-    assert(Sampling.dsirCurve(allTarget, fractions).collect().isEmpty)
+    assert(Sampling.dsirCurveOverFeats(Sampling.dsirFeats(allTarget), fractions).collect().isEmpty)
   }
 
   test("softDedupSample: planted dup classes sampled at 1/n, singletons kept, JVM membership exact") {
@@ -653,25 +656,27 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("dsirSelect: exactly the top-n of dsirWeights under (weight desc, doc_id) order") {
-    val weights = Sampling.dsirWeights(docs).collect()
+    val weights = Sampling.dsirWeightsOverFeats(Sampling.dsirFeats(docs)).collect()
       .map(r => (r.getLong(0), r.getDouble(3)))
     val expect = weights.sortBy { case (id, w) => (-w, id) }.take(10).map(_._1).toSet
-    val got = Sampling.dsirSelect(docs, n = 10).collect().map(_.getLong(0)).toSet
+    val got = Sampling.dsirSelectOverFeats(Sampling.dsirFeats(docs), n = 10)
+      .collect().map(_.getLong(0)).toSet
     assert(got == expect)
     assert(got.size == 10)
     // an over-large n degrades to the full weighted set, never errors
-    assert(Sampling.dsirSelect(docs, n = 100000).count() == weights.length)
+    assert(Sampling.dsirSelectOverFeats(Sampling.dsirFeats(docs), n = 100000).count() ==
+      weights.length)
   }
 
   test("dsirThreshold: selection ≡ top-n at matched budget; τ is the exact ⌈q·N⌉ rank below sketch capacity") {
-    val sel = Sampling.dsirThreshold(docs, budgetFraction = 0.2).collect()
+    val sel = Sampling.dsirThresholdOverFeats(Sampling.dsirFeats(docs), budgetFraction = 0.2).collect()
     val tau = sel.head.getDouble(3)
     assert(sel.forall(_.getDouble(3) == tau), "one scalar τ broadcast to every row")
     assert(sel.forall(_.getDouble(2) >= tau), "selection is exactly { weight >= tau }")
     // matched-budget equivalence: |S| docs with weight >= τ means the
     // top-|S| under (weight desc, doc_id) is the SAME set — the
     // threshold form loses nothing vs top-n at the budget it realizes
-    val weights = Sampling.dsirWeights(docs).collect()
+    val weights = Sampling.dsirWeightsOverFeats(Sampling.dsirFeats(docs)).collect()
       .map(r => (r.getLong(0), r.getDouble(3)))
     val topN = weights.sortBy { case (id, w) => (-w, id) }.take(sel.length).map(_._1).toSet
     assert(sel.map(_.getLong(0)).toSet == topN)
@@ -686,7 +691,8 @@ class SamplingSpec extends SparkSpec {
     assert(math.abs(rankOfTau - 0.8 * n) <= n / 10000.0 + 1)
     // sketch-vs-exact differential at a LOWERED accuracy (forces the
     // compressed regime): τ' must stay within the declared rank error
-    val coarse = Sampling.dsirThreshold(docs, budgetFraction = 0.2, accuracy = 50)
+    val coarse = Sampling.dsirThresholdOverFeats(Sampling.dsirFeats(docs), budgetFraction = 0.2,
+        accuracy = 50)
       .collect().head.getDouble(3)
     // ties occupy a rank INTERVAL [count(<v)+1, count(≤v)]
     val lo = ws.count(_ < coarse) + 1

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -10,6 +11,24 @@ class SimilaritySpec extends SparkSpec {
   import spark.implicits._
 
   private lazy val embs = Tables(spark, TestSpark.sf0001).embeddings
+
+  // In-plan index builds (what the Catalog entries cache), each a fresh
+  // fit, so the determinism checks below compare two independent fits.
+  private def ivfIndexOf(e: DataFrame): (Seq[Seq[Double]], DataFrame) = {
+    val cents = Similarity.ivfCentroids(e, 16)
+    (cents, e.withColumn("cluster",
+      GraftFunctions.nearestCentroid($"embedding", typedlit(cents))))
+  }
+  private def pqIndexOf(e: DataFrame): (Seq[Seq[Seq[Double]]], DataFrame) = {
+    val books = Similarity.pqCodebooks(e)
+    (books, Similarity.pqCodes(e, books))
+  }
+  private def ivfPqIndexOf(e: DataFrame)
+      : (Seq[Seq[Double]], Seq[Seq[Seq[Double]]], DataFrame) = {
+    val cents = Similarity.ivfCentroids(e, 16)
+    val books = Similarity.ivfPqCodebooks(e, cents)
+    (cents, books, Similarity.ivfPqCodes(e, cents, books))
+  }
 
   test("graft_cosine matches a scala-side double fold, bit-exactly") {
     val rows = embs.limit(2).collect()
@@ -106,14 +125,16 @@ class SimilaritySpec extends SparkSpec {
   test("annIvf: deterministic index, candidates ranked by exact cosine") {
     val brute = Similarity.annTopK(embs, queryVecId = 0L, k = 500).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("cos_sim")).toMap
-    val ivf = Similarity.annIvf(embs, queryVecId = 0L, k = 10).collect()
+    val (cents, assigned) = ivfIndexOf(embs)
+    val ivf = Similarity.annIvfFromIndex(cents, assigned, queryVecId = 0L, k = 10).collect()
     assert(ivf.nonEmpty)
     ivf.foreach { r =>
       assert(r.getAs[Int]("cluster") >= 0 && r.getAs[Int]("cluster") < 16)
       assert(r.getAs[Double]("cos_sim") == brute(r.getAs[Long]("vec_id")))
     }
     // deterministic across invocations (decimal-exact means, fixed init)
-    val again = Similarity.annIvf(embs, queryVecId = 0L, k = 10).collect()
+    val (cents2, assigned2) = ivfIndexOf(embs)
+    val again = Similarity.annIvfFromIndex(cents2, assigned2, queryVecId = 0L, k = 10).collect()
     assert(ivf.map(_.toString).sameElements(again.map(_.toString)))
   }
 
@@ -421,7 +442,8 @@ class SimilaritySpec extends SparkSpec {
     assert(cents eq cents2, "second lookup must return the cached model, not refit")
     assert(assigned eq assigned2)
     val fromIndex = Similarity.annIvfFromIndex(cents, assigned, queryVecId = 0L, k = 10).collect()
-    val inline = Similarity.annIvf(embs, queryVecId = 0L, k = 10).collect()
+    val (inCents, inAssigned) = ivfIndexOf(embs)
+    val inline = Similarity.annIvfFromIndex(inCents, inAssigned, queryVecId = 0L, k = 10).collect()
     assert(fromIndex.map(_.toString).sameElements(inline.map(_.toString)))
   }
 
@@ -436,21 +458,24 @@ class SimilaritySpec extends SparkSpec {
   test("annPq: rerank cosines are exact, results deterministic, planted duplicate recalled") {
     val brute = Similarity.annTopK(embs, queryVecId = 0L, k = 500).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("cos_sim")).toMap
-    val pq = Similarity.annPq(embs, queryVecId = 0L, k = 10).collect()
+    val (books, codes) = pqIndexOf(embs)
+    val pq = Similarity.annPqFromIndex(books, codes, embs, queryVecId = 0L, k = 10).collect()
     assert(pq.length == 10)
     // every returned cosine is the exact brute-force value (ADC only
     // shortlists; the rerank is exact)
     pq.foreach { r =>
       assert(r.getAs[Double]("cos_sim") == brute(r.getAs[Long]("vec_id")))
     }
-    val again = Similarity.annPq(embs, queryVecId = 0L, k = 10).collect()
+    val (books2, codes2) = pqIndexOf(embs)
+    val again = Similarity.annPqFromIndex(books2, codes2, embs, queryVecId = 0L, k = 10).collect()
     assert(pq.map(_.toString).sameElements(again.map(_.toString)))
     // a planted exact duplicate of the query encodes to the query's own
     // codes, tops the ADC ranking, and must come back with cos_sim 1.0
     val qRow = embs.filter($"vec_id" === 0L).select($"embedding").collect()(0).getSeq[Float](0)
     val planted = embs.unionByName(
       Seq((99999L, qRow, -1)).toDF("vec_id", "embedding", "label"))
-    val hit = Similarity.annPq(planted, queryVecId = 0L, k = 10).collect()
+    val (pBooks, pCodes) = pqIndexOf(planted)
+    val hit = Similarity.annPqFromIndex(pBooks, pCodes, planted, queryVecId = 0L, k = 10).collect()
     assert(hit.head.getAs[Long]("vec_id") == 99999L && hit.head.getAs[Double]("cos_sim") == 1.0)
   }
 
@@ -496,9 +521,12 @@ class SimilaritySpec extends SparkSpec {
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("cos_sim")).toMap
     val trueTop = Similarity.annTopK(embs, queryVecId = 0L, k = k).collect()
       .map(_.getAs[Long]("vec_id")).toSet
-    val pqTop = Similarity.annPq(embs, queryVecId = 0L, k = k).collect()
+    val (books, codes) = pqIndexOf(embs)
+    val pqTop = Similarity.annPqFromIndex(books, codes, embs, queryVecId = 0L, k = k).collect()
       .map(_.getAs[Long]("vec_id")).toSet
-    val ivfpq = Similarity.annIvfPq(embs, queryVecId = 0L, k = k).collect()
+    val (cents, resBooks, resCodes) = ivfPqIndexOf(embs)
+    val ivfpq = Similarity.annIvfPqFromIndex(cents, resBooks, resCodes, embs, queryVecId = 0L, k = k)
+      .collect()
     assert(ivfpq.length == k)
     // rerank is exact: every returned cosine is the brute-force value
     ivfpq.foreach { r =>
@@ -510,7 +538,9 @@ class SimilaritySpec extends SparkSpec {
     assert(recallIvfPq >= recallPq,
       s"IVF-PQ recall@$k $recallIvfPq < plain-PQ baseline $recallPq")
     // deterministic end to end
-    val again = Similarity.annIvfPq(embs, queryVecId = 0L, k = k).collect()
+    val (cents2, resBooks2, resCodes2) = ivfPqIndexOf(embs)
+    val again = Similarity.annIvfPqFromIndex(cents2, resBooks2, resCodes2, embs, queryVecId = 0L, k = k)
+      .collect()
     assert(ivfpq.map(_.toString).sameElements(again.map(_.toString)))
   }
 
@@ -520,7 +550,9 @@ class SimilaritySpec extends SparkSpec {
       Seq((99999L, qRow, -1)).toDF("vec_id", "embedding", "label"))
     // the duplicate lands in the query's own coarse list with a zero
     // residual, so probe 1 already finds it
-    val hit = Similarity.annIvfPq(planted, queryVecId = 0L, k = 10).collect()
+    val (pCents, pBooks, pCodes) = ivfPqIndexOf(planted)
+    val hit = Similarity.annIvfPqFromIndex(pCents, pBooks, pCodes, planted, queryVecId = 0L, k = 10)
+      .collect()
     assert(hit.head.getAs[Long]("vec_id") == 99999L && hit.head.getAs[Double]("cos_sim") == 1.0)
   }
 
@@ -529,7 +561,8 @@ class SimilaritySpec extends SparkSpec {
     val (cents2, books2, codes2) = graft.core.Catalog.ivfPqIndex(spark, TestSpark.sf0001)
     assert((cents eq cents2) && (books eq books2) && (codes eq codes2))
     val served = Similarity.annIvfPqFromIndex(cents, books, codes, embs).collect()
-    val inline = Similarity.annIvfPq(embs).collect()
+    val (inCents, inBooks, inCodes) = ivfPqIndexOf(embs)
+    val inline = Similarity.annIvfPqFromIndex(inCents, inBooks, inCodes, embs).collect()
     assert(served.map(_.toString).sameElements(inline.map(_.toString)))
     // every code row carries its inverted-list id and an m-length code
     val row = codes.head()
@@ -639,7 +672,8 @@ class SimilaritySpec extends SparkSpec {
     }
     val embs = rows.toSeq.toDF("vec_id", "label", "embedding")
     val cents = Similarity.ivfCentroids(embs, k = 6, iters = 2)
-    val out = Similarity.hardNegatives(embs, cents).collect()
+    val out = Similarity.hardNegativesFromPairs(Similarity.canopyCandidatePairs(embs, cents))
+      .collect()
       .map(r => r.getLong(0) ->
         (r.getLong(2), r.getDouble(3), r.getLong(4), r.getDouble(5))).toMap
     for (g <- 0 until 5; r <- 0 until 3) {
@@ -900,12 +934,14 @@ class SimilaritySpec extends SparkSpec {
       (10 until 20).map(i => (i.toLong, 2, near(b))))
       .toDF("vec_id", "label", "embedding")
     val cents = Similarity.ivfCentroids(df, k = 4, iters = 2)
-    val got = Similarity.knnLabelAccuracy(df, cents).collect()
+    val got = Similarity.knnLabelAccuracyFromPairs(Similarity.canopyCandidatePairs(df, cents), df)
+      .collect()
       .map(r => r.getInt(0) -> r.getDouble(3)).toMap
     assert(got(1) == 1.0 && got(2) == 1.0)
     // real embeddings: accuracies bounded, labels covered
     val (realCents, _) = graft.core.Catalog.ivfIndex(spark, TestSpark.sf0001)
-    val real = Similarity.knnLabelAccuracy(embs, realCents).collect()
+    val real = Similarity.knnLabelAccuracyFromPairs(
+      Similarity.canopyCandidatePairs(embs, realCents), embs).collect()
     assert(real.nonEmpty)
     real.foreach { r =>
       val acc = r.getDouble(3)

@@ -373,7 +373,8 @@ class StoreSpec extends SparkSpec {
     Store.refreshDocFingerprints(spark, corpus, buckets = 4, table = "t_xd_fps")
     val fromStore = Dedup.crossDedupFromSignatures(corpus,
       spark.table("t_xd_fps"), spark.table("t_xd_sigs"), batch)
-    val recompute = Dedup.crossDedup(corpus, batch)
+    val recompute = Dedup.crossDedupFromSignatures(corpus, Dedup.docFingerprints(corpus),
+      Dedup.minhashSignatures(corpus), batch)
     val key = (r: org.apache.spark.sql.Row) =>
       (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"), r.getAs[String]("kind"))
     assert(fromStore.collect().map(key).toSet == recompute.collect().map(key).toSet)

@@ -209,7 +209,9 @@ class StreamingSpec extends SparkSpec {
       try gq.processAllAvailable() finally gq.stop()
       val streamedLog = fresh("t_rx_log").distinct().collect()
         .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"), r.getAs[String]("kind"))).toSet
-      val batchLog = graft.ops.Dedup.crossDedup(corpus, batch).collect()
+      val batchLog = graft.ops.Dedup.crossDedupFromSignatures(corpus,
+          graft.ops.Dedup.docFingerprints(corpus), graft.ops.Dedup.minhashSignatures(corpus), batch)
+        .collect()
         .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"), r.getAs[String]("kind"))).toSet
       assert(streamedLog == batchLog, "RocksDB-session ingest gate must equal the batch operator")
 
@@ -252,7 +254,7 @@ class StreamingSpec extends SparkSpec {
         .findFirst().get()
       Files.copy(part, streamDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
     }
-    val q = AnnStream.signatureStream(AnnStream.embeddingStream(spark, streamDir.toString))
+    val q = Similarity.withSignatures(AnnStream.embeddingStream(spark, streamDir.toString))
       .writeStream.format("memory").queryName("ann_sigs")
       .outputMode("append").start()
     try {
@@ -541,7 +543,7 @@ class StreamingSpec extends SparkSpec {
         .findFirst().get()
       Files.copy(part, streamDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
     }
-    val q = AnnStream.ivfPqCodeStream(
+    val q = Similarity.ivfPqCodes(
         AnnStream.embeddingStream(spark, streamDir.toString), cents, books)
       .writeStream.format("memory").queryName("ivfpq_codes")
       .outputMode("append").start()
@@ -575,7 +577,7 @@ class StreamingSpec extends SparkSpec {
         .findFirst().get()
       Files.copy(part, streamDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
     }
-    val q = AnnStream.mrlAssignStream(
+    val q = Similarity.mrlAssign(
         AnnStream.embeddingStream(spark, streamDir.toString), cents)
       .writeStream.format("memory").queryName("mrl_assigned")
       .outputMode("append").start()
@@ -609,8 +611,8 @@ class StreamingSpec extends SparkSpec {
         .findFirst().get()
       Files.copy(part, streamDir.resolve(name), StandardCopyOption.REPLACE_EXISTING)
     }
-    val q = AnnStream.opqCodeStream(
-        AnnStream.embeddingStream(spark, streamDir.toString), perm, books)
+    val q = Similarity.pqCodes(Similarity.opqPermute(
+        AnnStream.embeddingStream(spark, streamDir.toString), perm), books)
       .writeStream.format("memory").queryName("opq_codes")
       .outputMode("append").start()
     try {
@@ -667,7 +669,9 @@ class StreamingSpec extends SparkSpec {
     // streamed decision log == the batch operator, row for row
     val streamed = fresh("t_gate_log").distinct().collect()
       .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"), r.getAs[String]("kind"))).toSet
-    val batchOp = graft.ops.Dedup.crossDedup(corpus, batch).collect()
+    val batchOp = graft.ops.Dedup.crossDedupFromSignatures(corpus,
+        graft.ops.Dedup.docFingerprints(corpus), graft.ops.Dedup.minhashSignatures(corpus), batch)
+      .collect()
       .map(r => (r.getAs[Long]("batch_id"), r.getAs[Long]("corpus_id"), r.getAs[String]("kind"))).toSet
     assert(streamed == batchOp)
     // corpus grew by the admitted rows only; derived tables track it exactly
@@ -1904,8 +1908,8 @@ class StreamingSpec extends SparkSpec {
     RankStream.ingestBatch(chunk1, 1L, "t_rank_w", buckets = 4)
     RankStream.ingestBatch(chunk2, 2L, "t_rank_w", buckets = 4)
     val card = RankStream.refresh(spark, "t_rank_w", "t_rank_snap")
-    val batchCard = DomainGraph.domainRankDelta(
-      DomainGraph.syntheticEdges(docs),
+    val batchCard = DomainGraph.domainRankDeltaFromWeights(
+      DomainGraph.syntheticEdges(docs).groupBy($"src", $"dst").agg(count(lit(1)).as("w")),
       DomainGraph.domainRank(DomainGraph.syntheticEdges(pre)))
     assert(show(card) == show(batchCard),
       "streamed warm refresh must equal the batch d_rank_delta card")

@@ -144,7 +144,9 @@ class TextAnalysisSpec extends SparkSpec {
       "hq-source docs must score above the corpus mean")
     // budget curve: selection grows, threshold and mean score decay as
     // the budget loosens
-    val curve = TextAnalysis.qualityModelCurve(docs).collect()
+    val curve = TextAnalysis.qualityModelCurveFromScores(
+        graft.ops.DupClusters.materialize(TextAnalysis.qualityModelScores(docs)))
+      .collect()
       .sortBy(_.getAs[Double]("budget_frac"))
     assert(curve.length == 4)
     def monotone(vals: Seq[Double], incr: Boolean) =
@@ -1071,13 +1073,14 @@ class TextAnalysisSpec extends SparkSpec {
     val df = Seq((1L, "aa aa b"), (2L, "aaa"))
       .toDF("doc_id", "text")
       .unionByName(Seq(3L).toDF("doc_id").withColumn("text", lit(null).cast("string")))
-    val got = TextAnalysis.bpeApply(df, rounds = 1).collect()
+    val got = TextAnalysis.bpeApplyFromModel(df, TextAnalysis.bpeLoop(df, rounds = 1)._2).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(got == Map(1L -> ((3L, 3L)), 2L -> ((1L, 2L)), 3L -> ((0L, 0L))),
       s"got $got")
     // real corpus invariants: merging only ever SHRINKS the char-level
     // segmentation and can never go below one token per word
-    val applied = TextAnalysis.bpeApply(docs, rounds = 8).collect()
+    val applied = TextAnalysis.bpeApplyFromModel(docs, TextAnalysis.bpeLoop(docs, rounds = 8)._2)
+      .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val norm = lower(trim(regexp_replace(col("text"), "\\s+", " ")))
     val charRef = docs
@@ -1154,15 +1157,15 @@ class TextAnalysisSpec extends SparkSpec {
     assert(got(2) == ((3L, 3L, 1.0, 0.5)), s"r2: ${got(2)}")
     assert(got(4) == ((3L, 3L, 1.0, 0.5)), s"r4 (plateau): ${got(4)}")
     // real corpus: totals fall monotonically with merges, and the r=8
-    // point IS bpeApply's corpus-wide token count (same model depth)
+    // point IS bpeApplyFromModel's corpus-wide token count (same model depth)
     val curve = TextAnalysis.bpeCurve(docs).collect()
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val ts = Seq(0, 2, 4, 8).map(r => curve(r)._1)
     assert(ts.zip(ts.tail).forall { case (a, b) => a >= b }, s"totals $ts")
-    val applied = TextAnalysis.bpeApply(docs)
+    val applied = TextAnalysis.bpeApplyFromModel(docs, TextAnalysis.bpeLoop(docs, rounds = 8)._2)
       .agg(org.apache.spark.sql.functions.sum($"n_bpe_tokens"),
         org.apache.spark.sql.functions.sum($"n_words")).collect()(0)
-    assert(curve(8)._1 == applied.getLong(0), "r=8 total == bpeApply token mass")
+    assert(curve(8)._1 == applied.getLong(0), "r=8 total == bpeApplyFromModel token mass")
     assert(curve(8)._2 == applied.getLong(1), "word instances agree")
   }
 

@@ -132,6 +132,26 @@ class VehicleQueriesSpec extends SparkSpec {
     assert(r.getDouble(0) <= r.getDouble(1) && r.getDouble(1) <= r.getDouble(2))
   }
 
+  test("speedPercentilesApprox: each quantile is a moving speed within the sketch's rank error") {
+    val accuracy = 10000
+    val r = VehicleQueries.speedPercentilesApprox(vehicles, accuracy).collect()(0)
+    val speeds = vehicles.filter($"speed" > 0).select($"speed").collect().map(_.getDouble(0)).sorted
+    val n = speeds.length
+    assert(n > 0)
+    Seq(0.5, 0.9, 0.95).zipWithIndex.foreach { case (q, i) =>
+      val v = r.getDouble(i)
+      assert(speeds.contains(v), s"p${(q * 100).toInt} = $v is not a moving speed")
+      // ranks, not values: the exact percentile interpolates, the sketch
+      // returns a sample; ties hold v at every rank in [lo, hi]
+      val (lo, hi) = (speeds.count(_ < v) + 1, speeds.count(_ <= v))
+      val target = math.ceil(q * n)
+      val err = if (target >= lo && target <= hi) 0.0
+        else math.min(math.abs(lo - target), math.abs(hi - target))
+      assert(err <= n.toDouble / accuracy,
+        s"q=$q: rank [$lo,$hi] of $n vs target $target beyond n/accuracy")
+    }
+  }
+
   test("upsert shrank the feed to one row per id") {
     assert(vehicles.groupBy("id").count().filter($"count" > 1).count() == 0)
   }
@@ -353,6 +373,26 @@ class VehicleQueriesSpec extends SparkSpec {
           s"$k: Exchange or Sort between Window and InMemoryTableScan\n$plan")
       }
     }
+  }
+
+  test("Plans: v_dwell_times explains without the Exchange its executed plan does not have") {
+    // an empty registry: the observations entry is persisted lazily and
+    // not yet built, the state Plans meets in a fresh session
+    graft.core.Catalog.clear(spark)
+    val txt = graft.tools.Plans.planText(spark, TestSpark.sf0001, "v_dwell_times")
+    // the operator tree without the cached relation's own build plan,
+    // which the text prints (indented) under its InMemoryRelation line
+    val tree = txt.linesIterator.drop(1).takeWhile(_.trim.nonEmpty).toSeq
+    var buildDepth = Int.MaxValue
+    val perQuery = tree.filter { line =>
+      val depth = line.indexWhere(_.isLetterOrDigit)
+      if (depth <= buildDepth) buildDepth = Int.MaxValue
+      val own = buildDepth == Int.MaxValue
+      if (own && line.contains("InMemoryRelation")) buildDepth = depth
+      own
+    }
+    assert(perQuery.exists(_.contains("InMemoryTableScan")), txt)
+    assert(!perQuery.exists(l => l.contains("Exchange") || l.contains("Sort")), txt)
   }
 
   test("Catalog.vehicles: the 14 latest-state keys return the rows of the uncached upsert") {
