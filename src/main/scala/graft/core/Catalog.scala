@@ -390,8 +390,8 @@ object Catalog {
     * cold 10-iteration PageRank on the synthetic graph minus every
     * 50th document — `d_rank_delta`'s "yesterday" fixture. In
     * production the previous rank vector is a STORED artifact (the
-    * last scheduled refresh's output — `domainRankDeltaFromTables`' own input
-    * contract); the cache stands in for that table so the key times
+    * last scheduled refresh's output — `domainRankDeltaFromTables`' own
+    * input contract); the cache stands in for that table so the key times
     * the warm refresh, not the re-derivation of history. */
   def rankSnapshot(spark: SparkSession, dir: String): DataFrame =
     memo(spark, "rank_snapshot", dir) {
