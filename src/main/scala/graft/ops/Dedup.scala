@@ -1158,7 +1158,7 @@ object Dedup {
     * differently.
     *
     * `sh` is the `(doc_id, shingles)` tokenized frame — the
-    * Catalog-materialized one the driver key reads, or `shingled(docs)`
+    * Catalog-materialized one the served key reads, or `shingled(docs)`
     * in-plan. */
   def jaccardCalibrationFrom(sh: DataFrame, signatures: DataFrame,
                              bands: Int = 32): DataFrame =

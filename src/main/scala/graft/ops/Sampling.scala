@@ -815,7 +815,7 @@ object Sampling {
     dsirFeats(docs).groupBy(col("b")).agg(count(lit(1)).as("n"))
 
   /** The trained DSIR model as a standalone artifact: the `buckets`-row
-    * (bucket, log-ratio) table [[dsirWeightsOverFeats]] fits — driver/model
+    * (bucket, log-ratio) table [[dsirWeightsOverFeats]] fits — model
     * scale, the stored object a SERVING pipeline (e.g. the streaming
     * ingest gate's target-likeness arm) applies to corpora the model
     * never saw. */
@@ -860,7 +860,7 @@ object Sampling {
     * `feats` is the [[dsirFeats]] stream. It is referenced by BOTH the
     * model aggregate and the scoring join, so an in-plan
     * `dsirFeats(docs)` runs the bigram kernel twice per action; the
-    * four DSIR driver keys read the Catalog-materialized stream, the
+    * four DSIR keys read the Catalog-materialized stream, the
     * stored feature table a DSIR pipeline extracts once. */
   def dsirWeightsOverFeats(feats: DataFrame, targetSource: String = "src19",
                            buckets: Int = 256): DataFrame =
