@@ -52,9 +52,10 @@ object Cli {
       case "s_ann_topk" if p.k.isDefined =>
         graft.ops.Similarity.annTopK(
           graft.core.Tables(spark, dir).embeddings, k = p.k.get)
+      // the session's shingle index, as the driver key reads it
       case "d_ngram_jaccard" =>
-        graft.ops.Dedup.ngramJaccardPairs(
-          graft.core.Tables(spark, dir).documents, tau = p.tau)
+        graft.ops.Dedup.ngramJaccardPairsFromIndex(
+          graft.core.Catalog.shingleIndex(spark, dir), tau = p.tau)
       case _ =>
         SparkEntry.queries.getOrElse(key,
           throw new IllegalArgumentException(

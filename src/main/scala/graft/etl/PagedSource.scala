@@ -13,8 +13,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   * ~1000 vehicles/page) and rate-limited, so fetching belongs on the
   * driver; everything after the raw strings — JSON decode, validity
   * filter, upsert — is the distributed hot path. When the feed is big,
-  * pages land in object storage instead and the same parse runs via
-  * `VehicleFeed.extractFromJsonFiles` (a distributed text scan).
+  * pages land in object storage instead and the same parse runs over
+  * a distributed text scan of those files.
   *
   * Error semantics: a transport failure (non-200, timeout) throws —
   * the reference fails the whole batch the same way (extract.go:24-27).

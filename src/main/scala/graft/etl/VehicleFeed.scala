@@ -51,7 +51,11 @@ object VehicleFeed {
   /** Extract: raw JSON payload strings → one row per vehicle observation.
     * Corrupt payloads yield null structs and are dropped (the reference
     * errors the whole batch, extract.go:29-33; at scale per-record drop
-    * with a count is the right behavior — callers can assert on it). */
+    * with a count is the right behavior — callers can assert on it).
+    * `PagedSource` feeds it fetched page bodies; files of raw payloads
+    * (one API page per line, e.g. pages landed in object storage) feed
+    * it through `spark.read.textFile(path)`, a distributed text scan
+    * whose parallelism is the file splits. */
   def extract(raw: Dataset[String]): DataFrame = {
     val spark = raw.sparkSession
     import spark.implicits._
@@ -70,15 +74,6 @@ object VehicleFeed {
     raw.select($"value", from_json($"value", payloadSchema).as("p"))
       .filter($"p".isNull || $"p.data".isNull)
       .select($"value".as("raw_payload"))
-  }
-
-  /** Extract from files of raw JSON payloads (one API page per line) —
-    * the batch-file equivalent of the reference's HTTP fetch: at scale,
-    * pages land in object storage and this is a distributed text scan →
-    * `from_json`, parallelism = file splits. */
-  def extractFromJsonFiles(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    extract(spark.read.textFile(path))
   }
 
   /** Transform (transform.go:9-67): validity filter, null defaults,

@@ -169,18 +169,20 @@ object Dedup {
       .select(col("doc_id"), col("bb.band").as("band"), col("bb.bhash").as("bhash"))
   }
 
-  /** Candidate generation off a (possibly materialized) signature table.
+  /** MinHash/LSH candidate pairs (doc_a < doc_b) off a signature table:
+    * [[minhashSignatures]] in-plan, or the Catalog-cached or stored
+    * table the driver keys and the ingest gate read.
     *
     * The multi-band collision fan-in is collapsed by `.distinct()` — and
     * that is the RIGHT plan here, measured: the distinct's partial
     * aggregation dedups the ~20×-collided pair stream MAP-SIDE before
-    * its narrow (16-byte) rows ever shuffle. An r10 experiment replaced
-    * it with least-shared-band emission (each row carrying the 32-int
-    * band vector, the knnJoinCanopy trick): pushing those arrays through
-    * the self-join's build side read 7.5 → 233 s at the 100k stress
-    * point — REVERTED. The trick only pays when the carried block key
-    * is tiny (canopies: 2 ints; simhash: the fingerprint already on the
-    * row); with 32 bands the map-side-combined distinct wins. */
+    * its narrow (16-byte) rows ever shuffle. Least-shared-band emission
+    * (each row carrying the 32-int band vector, the canopy-pair trick)
+    * was measured instead: pushing those arrays through the self-join's
+    * build side read 7.5 → 233 s at the 100k stress point. The trick
+    * only pays when the carried block key is tiny (canopies: 2 ints;
+    * simhash: the fingerprint already on the row); with 32 bands the
+    * map-side-combined distinct wins. */
   def minhashCandidatesFromSignatures(signatures: DataFrame, bands: Int = 32): DataFrame = {
     val buckets = bandBuckets(signatures, bands)
     buckets.as("a")
@@ -190,9 +192,6 @@ object Dedup {
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
   }
-
-  def minhashCandidates(documents: DataFrame, bands: Int = 32): DataFrame =
-    minhashCandidatesFromSignatures(minhashSignatures(documents), bands)
 
   /** 64-bit SimHash fingerprint per document, computed scan-side: each
     * token votes ±1 on every bit of its FNV-1a hash; the fingerprint
@@ -219,12 +218,12 @@ object Dedup {
     val chunks = simhashFingerprints(documents)
       .select(col("doc_id"), col("simhash"), explode(expr(chunkSql)).as("ch"))
       .select(col("doc_id"), col("simhash"), col("ch.c").as("c"), col("ch.cv").as("cv"))
-    // r10: pairs agreeing on SEVERAL chunks used to be collapsed by a
-    // .distinct() that re-shuffled the whole pair frame; the least
+    // pairs agreeing on SEVERAL chunks are not collapsed by a
+    // .distinct() (it would re-shuffle the whole pair frame): the least
     // matching chunk is derivable scan-side from the two fingerprints
     // (a codegen when-chain over the four 16-bit comparisons), so each
     // pair is emitted from exactly one chunk and the join output never
-    // re-shuffles (the knnJoinCanopy least-shared-block note).
+    // re-shuffles (the `Similarity.canopyCandidatePairs` least-shared-canopy note).
     def chunkEq(i: Int) =
       shiftright(col("a.simhash"), 16 * i).bitwiseAND(lit(65535L)) ===
         shiftright(col("b.simhash"), 16 * i).bitwiseAND(lit(65535L))
@@ -274,28 +273,17 @@ object Dedup {
         s"stack(${radii.size}, $stackArgs) AS (max_hamming, n_pairs, n_docs)")
   }
 
-  /** EXACT 3-gram Jaccard ≥ τ near-dup pairs via a shingle inverted
-    * index: explode distinct shingles, equi-join on the shingle, count
-    * shared shingles per pair — any pair with J > 0 shares a shingle, so
+  /** EXACT 3-gram Jaccard ≥ τ near-dup pairs over a `(doc_id, len,
+    * shingle)` inverted index: equi-join on the shingle, count shared
+    * shingles per pair — any pair with J > 0 shares a shingle, so
     * nothing above the threshold is missed, and no all-pairs product is
-    * ever formed.
-    *
-    * `dfCap`: optionally restrict the measure to shingles appearing in
-    * at most `dfCap` documents — the skew guard at corpus scale (a
-    * shingle in 10⁶ docs generates 10¹² pair-rows). With the cap on,
-    * BOTH the intersection and each document's set size are computed
-    * over the capped vocabulary, so the result is the exact jaccard of
-    * the sub-cap shingle sets (a well-defined measure, not a corrupted
-    * one) — still an approximation of full-vocabulary jaccard near τ;
-    * for certified-exact recall on skewed corpora use [[nearDupPairs]].
-    * Default off. */
-  def ngramJaccardPairs(documents: DataFrame, tau: Double = 0.8, dfCap: Option[Int] = None): DataFrame =
-    ngramJaccardPairsFromIndex(shingleInvertedIndex(documents, dfCap), tau)
-
-  /** [[ngramJaccardPairs]] over a prebuilt `(doc_id, len, shingle)`
-    * inverted index — the form the driver key uses so the
-    * Catalog-materialized index is tokenized once per session (r17),
-    * like every LSH key reads the cached signature table. */
+    * ever formed. The `d_ngram_jaccard` key reads the session's
+    * `Catalog.shingleIndex`; a direct caller builds the index with
+    * [[shingleIndexFrom]] (and [[shingleIndexCapped]] for the skew
+    * guard) and owns its caching. Over a capped index the result is the
+    * exact jaccard of the sub-cap shingle sets — still an approximation
+    * of full-vocabulary jaccard near τ; for certified-exact recall on
+    * skewed corpora use [[nearDupPairs]]. */
   def ngramJaccardPairsFromIndex(inverted: DataFrame, tau: Double = 0.8): DataFrame =
     inverted.as("a")
       .join(inverted.as("b"),
@@ -307,56 +295,30 @@ object Dedup {
       .filter(round(col("jaccard"), 4) >= tau)
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 4).as("jaccard"))
 
-  /** The `(doc_id, len, shingle)` inverted-index frame shared by
-    * [[ngramJaccardPairs]] and [[containmentPairsFromIndex]], with the
-    * optional `dfCap` skew guard applied — ONE owner so the two exact-overlap
-    * measures cannot desynchronize on what "the shingle universe" means.
-    *
-    * With the cap on, shingles appearing in more than `dfCap` documents
-    * are removed and each document's set size (`len`) is recomputed over
-    * the capped vocabulary, so every downstream measure is the exact
-    * jaccard/containment of the SUB-CAP shingle sets — a well-defined
-    * measure, not a corrupted one. */
-  private[graft] def shingleInvertedIndex(documents: DataFrame, dfCap: Option[Int]): DataFrame = {
-    // r16 opt (guide §3.3/§5): the returned frame feeds a SELF-join, and
-    // the capped branch additionally references the fan-out three times
-    // (df aggregate, anti-join left side, capped-lens recount). Broadcast
-    // self-joins get no exchange reuse, so every reference replayed the
-    // whole tokenize+shingle chain — the executed d_containment plan
-    // carried SIXTEEN parquet scans of `documents`. A LAZY cache gives
-    // in-plan reuse without an extra materialization pass (an eager
-    // localCheckpoint here measured SLOWER at bench scale — one barrier
-    // job + block store per call; the cache populates during the first
-    // reference of the single action instead): the corpus is tokenized
-    // once per action, every other reference is a cached-block read.
-    // Results are bit-identical — same frame, only evaluated once.
-    // (r17: the DRIVER keys no longer take this path at all — they read
-    // the Catalog-materialized index, tokenized once per session; this
-    // self-contained form serves direct library callers and tests.)
-    val inv = shingleIndexFrom(shingled(documents)).cache()
-    dfCap match {
-      case Some(cap) => shingleIndexCapped(inv, cap).cache()
-      case None => inv
-    }
-  }
-
   /** The uncapped `(doc_id, len, shingle)` index fan-out over a
-    * `(doc_id, shingles)` tokenized frame — the build step
-    * `Catalog.shingleIndex` materializes once per session (r17). */
-  private[graft] def shingleIndexFrom(shingledDocs: DataFrame): DataFrame =
+    * `(doc_id, shingles)` tokenized frame — the one index shape the
+    * exact-overlap measures ([[ngramJaccardPairsFromIndex]],
+    * [[containmentPairsFromIndex]], [[dedupCurveFromIndex]]) read, so
+    * they cannot desynchronize on what "the shingle universe" means.
+    * `Catalog.shingleIndex` materializes it once per session. */
+  def shingleIndexFrom(shingledDocs: DataFrame): DataFrame =
     shingledDocs.select(col("doc_id"), size(col("shingles")).as("len"),
       explode(col("shingles")).as("shingle"))
 
   /** The dfCap skew guard over an (ideally already materialized)
-    * uncapped index: drop over-cap shingles, recount each document's
-    * set size over the capped vocabulary so numerator and denominators
-    * live in the same universe. The OVER-cap (frequent) set is
-    * broadcast and removed with an anti-join — it is small by
-    * construction (at most Σdf/cap shingles can exceed the cap), so the
-    * broadcast stays bounded no matter how large the corpus vocabulary
-    * grows; broadcasting the rare set would be the whole vocabulary at
-    * corpus scale. */
-  private[graft] def shingleIndexCapped(index: DataFrame, cap: Int): DataFrame = {
+    * uncapped index: drop shingles appearing in more than `cap`
+    * documents (a shingle in 10⁶ docs generates 10¹² pair-rows) and
+    * recount each document's set size over the capped vocabulary, so
+    * every downstream measure is the exact jaccard/containment of the
+    * SUB-CAP shingle sets — a well-defined measure, not a corrupted one.
+    * The OVER-cap (frequent) set is broadcast and removed with an
+    * anti-join — it is small by construction (at most Σdf/cap shingles
+    * can exceed the cap), so the broadcast stays bounded no matter how
+    * large the corpus vocabulary grows; broadcasting the rare set would
+    * be the whole vocabulary at corpus scale. The index is read three
+    * times (df aggregate, anti-join, recount), so an in-plan index
+    * should be cached by the caller. */
+  def shingleIndexCapped(index: DataFrame, cap: Int): DataFrame = {
     val frequent = index.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") > cap).select(col("shingle"))
     val filtered = index.join(broadcast(frequent), Seq("shingle"), "left_anti")
@@ -366,7 +328,7 @@ object Dedup {
   }
 
   /** Containment near-dup pairs over a `(doc_id, len, shingle)`
-    * inverted index ([[shingleInvertedIndex]] in-plan, or the
+    * inverted index ([[shingleIndexFrom]] in-plan, or the
     * Catalog-materialized index the `d_containment` key reads) — the
     * EXCERPT detector (Broder 1997's containment measure):
     * C(A,B) = |A∩B| / min(|A|,|B|) ≥ θ. A short
@@ -375,8 +337,8 @@ object Dedup {
     * jaccard-θ dedup keeps both copies; training corpora are full of
     * exactly this shape (articles quoting abstracts, pages embedding
     * snippets). Same certified-exact inverted-index plan as
-    * [[ngramJaccardPairs]], including the SAME `dfCap` skew guard (one
-    * shared [[shingleInvertedIndex]] owns both): a boilerplate shingle
+    * [[ngramJaccardPairsFromIndex]], including the SAME skew guard
+    * ([[shingleIndexCapped]]): a boilerplate shingle
     * present in n docs would otherwise fan the self-join into C(n,2)
     * pair rows — at web scale the 10¹²-row shuffle the cap exists to
     * prevent. The shipped `d_containment` key runs with dfCap=100 (the
@@ -401,14 +363,10 @@ object Dedup {
   /** Exact 3-gram Jaccard evaluated ONLY on given candidate pairs
     * (doc_a, doc_b) — the verification stage of the production near-dup
     * pipeline. Work is O(candidates), independent of how much shingle
-    * mass the corpus shares. */
-  def jaccardOnCandidates(documents: DataFrame, candidates: DataFrame, tau: Double): DataFrame =
-    jaccardOnCandidatesFrom(shingled(documents), candidates, tau)
-
-  /** [[jaccardOnCandidates]] over a prebuilt `(doc_id, shingles)`
-    * tokenized frame (the Catalog-materialized form the driver keys
-    * read, r17): the two verification joins read stored shingle sets
-    * instead of re-tokenizing the corpus twice per invocation. */
+    * mass the corpus shares. `sh` is the `(doc_id, shingles)` tokenized
+    * frame: [[shingled]] in-plan, or the Catalog-materialized form the
+    * driver keys read, so the two verification joins read stored
+    * shingle sets instead of re-tokenizing the corpus. */
   def jaccardOnCandidatesFrom(sh: DataFrame, candidates: DataFrame, tau: Double): DataFrame = {
     candidates
       .join(sh.select(col("doc_id").as("doc_a"), col("shingles").as("sh_a")), "doc_a")
@@ -424,15 +382,16 @@ object Dedup {
     * (recall ~1 for J ≥ 0.8 with 32×4 banding) followed by exact Jaccard
     * verification on candidates only.
     *
-    * Contrast with [[ngramJaccardPairs]], which is exact over the WHOLE
-    * corpus via the shingle inverted index: that pays per shingle-sharing
-    * pair, which explodes when the corpus is duplicate-heavy (measured at
-    * 50k docs / 249k true near-dup pairs: inverted index 91 s vs this
-    * pipeline 8.7 s, IDENTICAL pair set at τ=0.8 — graft.tools.Stress).
-    * Use the inverted index when you need certified-exact recall at any
-    * τ; use this at corpus scale. */
+    * Contrast with [[ngramJaccardPairsFromIndex]], which is exact over
+    * the WHOLE corpus via the shingle inverted index: that pays per
+    * shingle-sharing pair, which explodes when the corpus is
+    * duplicate-heavy (measured at 50k docs / 249k true near-dup pairs:
+    * inverted index 91 s vs this pipeline 8.7 s, IDENTICAL pair set at
+    * τ=0.8 — graft.tools.Stress). Use the inverted index when you need
+    * certified-exact recall at any τ; use this at corpus scale. */
   def nearDupPairs(documents: DataFrame, tau: Double = 0.8, bands: Int = 32): DataFrame =
-    jaccardOnCandidates(documents, minhashCandidates(documents, bands), tau)
+    jaccardOnCandidatesFrom(shingled(documents),
+      minhashCandidatesFromSignatures(minhashSignatures(documents), bands), tau)
 
   /** Cross-corpus dedup: which NEW-batch documents duplicate the
     * EXISTING corpus — the decision every incremental ingest makes
@@ -499,7 +458,7 @@ object Dedup {
   }
 
   /** Fuzzy (edit-distance) near-dup pairs: candidate pairs (LSH
-    * candidates — [[minhashCandidates]], or the same pairs off a
+    * candidates — [[minhashCandidatesFromSignatures]], or the same pairs off a
     * materialized signature table) filtered by
     * `levenshtein ≤ maxDist` on the normalized text. Two scale guards:
     * a length-difference prefilter (|len(a)−len(b)| > maxDist can never
@@ -535,7 +494,7 @@ object Dedup {
     * essentially zero, so pair work is proportional to TRUE duplicated
     * runs; grams above `dfCap` documents (site-wide boilerplate) are
     * removed with the same bounded broadcast anti-join as
-    * [[ngramJaccardPairs]] — the over-cap set is ≤ Σdf/cap grams. */
+    * [[shingleIndexCapped]] — the over-cap set is ≤ Σdf/cap grams. */
   def substringDupPairs(documents: DataFrame, k: Int = 8, minRuns: Int = 1,
                         dfCap: Int = 100): DataFrame = {
     val grams = documents
@@ -772,11 +731,11 @@ object Dedup {
     * rather than one pretending to be a shared bucket key. */
   def embedNearDupClusters(embeddings: DataFrame, centroids: Seq[Seq[Double]],
                            tau: Double = 0.3, nAssign: Int = 2): DataFrame = {
-    // r10: pair-dedup is SCAN-SIDE (each row carries its nAssign-length
+    // pair-dedup is SCAN-SIDE (each row carries its nAssign-length
     // canopies array; a pair is emitted only from its least shared
     // canopy — array_intersect/array_min of two tiny arrays, codegen)
     // instead of a .distinct() that re-shuffled every surviving pair;
-    // the emitted pair set is identical (the knnJoinCanopy note).
+    // the emitted pair set is identical (the `Similarity.canopyCandidatePairs` note).
     val e = embeddings
       .select(col("vec_id"), col("label"), col("embedding"),
         GraftFunctions.nearestCentroids(col("embedding"),
@@ -867,6 +826,15 @@ object Dedup {
     *      policy shape with a stable tie-break, matching d_exact_keep /
     *      d_cluster_keep conventions).
     *
+    * `pairs` carries the stage-2 edges (`vec_a`, `vec_b`):
+    * [[embedNearDup]] for label blocking ([[semanticDedupBuckets]]), or
+    * [[embedNearDupClusters]] for the scale form, which blocks on the
+    * fitted IVF coarse quantizer (canopy assignment to the `nAssign`
+    * nearest centroids, so near-dups straddling a cluster boundary still
+    * meet in ≥ 1 block). Spec-verified on the scale form:
+    * planted-replica removal and agreement with the exact bucketed form
+    * on tight pairs.
+    *
     * 100 TB shape: blocking is scan-side, edge work is O(Σ block²) with
     * blocks sized by nlist (never all-pairs), CC is O(log n) bounded
     * shuffles on the EDGE set only (≪ corpus; driver sees scalars), and
@@ -878,11 +846,11 @@ object Dedup {
         embeddings.select(col("vec_id"))))
 
   /** The post-closure survivor read-off of [[semanticDedupFromPairs]],
-    * served off an ALREADY-COMPUTED component assignment (r16 opt: the
-    * IVF-canopy CC is a shared derived table — `Catalog.semanticCc`, the
-    * vector-space twin of `Catalog.dupClusters` — so the serving keys
+    * served off an ALREADY-COMPUTED component assignment: the
+    * IVF-canopy CC is a shared derived table (`Catalog.semanticCc`, the
+    * vector-space twin of `Catalog.dupClusters`), so the serving keys
     * don't re-run pair mining + the iterative closure per invocation;
-    * at scale this is the stored cluster-map table). */
+    * at scale this is the stored cluster-map table. */
   def semanticDedupFromCc(embeddings: DataFrame, cc: DataFrame): DataFrame = {
     // cluster_id = min reachable id, so the survivor set IS the distinct
     // cluster ids — one aggregate for sizes, ONE join back to the corpus
@@ -897,31 +865,18 @@ object Dedup {
 
   /** Oracle form: semantic blocking on `label` (SQL-expressible; the
     * DuckDB mirror recomputes cosine edges + a recursive reachability
-    * closure). O(bucket²) within labels — fine at oracle scale, see
-    * [[semanticDedup]] for the corpus-scale blocker. */
+    * closure). O(bucket²) within labels — fine at oracle scale; the
+    * corpus-scale blocker is [[embedNearDupClusters]] into
+    * [[semanticDedupFromPairs]]. */
   def semanticDedupBuckets(embeddings: DataFrame, tau: Double = 0.3): DataFrame =
     semanticDedupFromPairs(embeddings, embedNearDup(embeddings, tau))
 
-  /** Scale form: blocks on the fitted IVF coarse quantizer (canopy
-    * assignment to the `nAssign` nearest centroids, so near-dups
-    * straddling a cluster boundary still meet in ≥ 1 block). Centroids
-    * come Catalog-cached (`Catalog.ivfIndex` — one fit per (session,
-    * dir), shared with `s_ann_ivf`/`d_semantic_ivf` serving). The fit
-    * replays portably (Similarity.ivfFitCte), so the key is
-    * hash-checked end to end (canopy edges + recursive closure);
-    * semantics are additionally spec-verified (planted-replica removal
-    * + agreement with the exact bucketed form on tight pairs). */
-  def semanticDedup(embeddings: DataFrame, centroids: Seq[Seq[Double]],
-                    tau: Double = 0.3, nAssign: Int = 2): DataFrame =
-    semanticDedupFromPairs(embeddings,
-      embedNearDupClusters(embeddings, centroids, tau, nAssign))
-
-  /** [[semanticDedup]] with the SemDeDup paper's keep policy: within
+  /** IVF-blocked semantic dedup with the SemDeDup paper's keep policy: within
     * each duplicate component, keep the member with the LOWEST cosine
     * to its coarse-cluster centroid (Abbas et al. 2023 §3 keep the
     * low-similarity example to preserve diversity at the cluster
     * boundary), tie-broken by vec_id. The min-id policy of
-    * [[semanticDedup]] stays the oracle-checked default — id-rank
+    * [[semanticDedupFromPairs]] stays the oracle-checked default — id-rank
     * needs no extra column; this variant is the paper-faithful option
     * (spec-verified: one survivor per planted group, and it is the
     * argmin-(centroid-cos, id) member).
@@ -953,7 +908,7 @@ object Dedup {
         col("group_size"))
   }
 
-  /** [[semanticDedup]] with a MEDOID keep policy, read off a component
+  /** Semantic dedup with a MEDOID keep policy, read off a component
     * assignment (`cluster_id` per `doc_id` — the shared
     * `Catalog.semanticCc` closure, or `DupClusters.connectedComponents`
     * over [[embedNearDupClusters]] pairs in-plan): within each duplicate
@@ -994,7 +949,7 @@ object Dedup {
   }
 
   /** Cross-corpus SEMANTIC vetting — the incremental form of
-    * [[semanticDedup]], with the ingest-gate contract: a batch vector is
+    * [[semanticDedupFromPairs]], with the ingest-gate contract: a batch vector is
     * rejected iff it semantically duplicates (round(cos,4) ≥ τ) an
     * EXISTING survivor; admitted vectors become survivors for later
     * batches; survivors are never retro-merged by a batch bridge (batch
@@ -1008,7 +963,7 @@ object Dedup {
     * minimum matching survivor id (deterministic report).
     *
     * @param survivors (vec_id, label, embedding) of the current
-    *                  survivor set (e.g. [[semanticDedup]] output joined
+    *                  survivor set (e.g. [[semanticDedupFromPairs]] output joined
     *                  back to vectors, or the durable stored form)
     * @param batch     arriving vectors, ids disjoint from survivors */
   def crossSemanticDedup(survivors: DataFrame, batch: DataFrame,
@@ -1070,20 +1025,15 @@ object Dedup {
     * curve, not once per threshold. Comparisons are on the ROUND(,4)
     * jaccard both engines share.
     *
-    * `dfCap` defaults ON (100, the d_substring_dup convention): the
-    * curve's mining stage is the uncapped inverted index's
-    * documented-quadratic shape on a boilerplate-heavy corpus, and a
-    * governance card must be runnable at corpus scale by default. The
-    * curve then reads over capped-universe jaccard — consistent with
-    * what a capped production dedup pass would act on. Pass None for
-    * the full-vocabulary curve on corpora known clean. */
-  def dedupCurve(documents: DataFrame,
-                 taus: Seq[Double] = Seq(0.7, 0.8, 0.9),
-                 dfCap: Option[Int] = Some(100)): DataFrame =
-    dedupCurveFromIndex(shingleInvertedIndex(documents, dfCap), taus)
-
-  /** [[dedupCurve]] over a prebuilt inverted index (the
-    * Catalog-materialized form the driver key reads, r17). */
+    * The `d_dedup_curve` key reads the session's capped index
+    * (`Catalog.shingleIndex` at dfCap=100, the d_substring_dup
+    * convention): the curve's mining stage is the uncapped inverted
+    * index's documented-quadratic shape on a boilerplate-heavy corpus,
+    * and a governance card must be runnable at corpus scale. The curve
+    * then reads over capped-universe jaccard — consistent with what a
+    * capped production dedup pass would act on. Over an uncapped index
+    * ([[shingleIndexFrom]] alone) it is the full-vocabulary curve, for
+    * corpora known clean. */
   def dedupCurveFromIndex(inverted: DataFrame,
                           taus: Seq[Double] = Seq(0.7, 0.8, 0.9)): DataFrame = {
     // materialized (the simhashCurve recipe) so the mining is LITERALLY
@@ -1142,7 +1092,7 @@ object Dedup {
     * is the whole justification for replacing the inverted index with
     * signatures). est = equal-component count / 128 via the codegen
     * `graft_sig_agree` kernel; exact = shingle-set Jaccard on the same
-    * candidate pairs ([[jaccardOnCandidates]] at τ=0 — candidates only,
+    * candidate pairs ([[jaccardOnCandidatesFrom]] at τ=0 — candidates only,
     * never all pairs). Two signature-table joins on the candidate frame
     * (signatures ≈ 1% of corpus bytes); work ∝ candidates, the LSH
     * guarantee. DuckDB-oracled via the portable FNV/splitmix64
@@ -1248,7 +1198,11 @@ object Dedup {
     * — the difference between dropping a mirror source and span-level
     * cleanup.
     *
-    * Plan: the shared cached-signature near-dup mining (work ∝ LSH
+    * `pairs` is the verified (doc_a, doc_b, jaccard) frame:
+    * [[nearDupPairs]] in-plan, or the `d_dup_matrix` key's mining off
+    * the Catalog-cached signature table, like every LSH key.
+    *
+    * Plan: the near-dup mining (work ∝ LSH
     * collisions, never all pairs) + two slim (doc_id, source)
     * projections joined onto the ≤ |pairs|-row frame, then a
     * ≤ |sources|²-row aggregate. The pairs⋈docs joins are equi-joins
@@ -1256,12 +1210,6 @@ object Dedup {
     * broadcast; at corpus scale they are the same fact×fact shape as
     * the d_semantic survivor joins. Source pair is canonicalized
     * (least, greatest) so the matrix is symmetric-free. */
-  def dupMatrix(documents: DataFrame, tau: Double = 0.8, bands: Int = 32): DataFrame =
-    dupMatrixFromPairs(nearDupPairs(documents, tau, bands), documents)
-
-  /** [[dupMatrix]] over an already-mined verified pair frame (doc_a,
-    * doc_b, jaccard) — the form the driver key uses so the
-    * Catalog-cached signature table is reused, like every LSH key. */
   def dupMatrixFromPairs(pairs: DataFrame, documents: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     val srcs = documents.select(col("doc_id"),
@@ -1561,7 +1509,7 @@ object Dedup {
       |               JOIN d db ON db.doc_id = pcp.doc_b)""".stripMargin
 
   /** [[invPairCte]] under the `dfCap` skew guard — the DuckDB mirror of
-    * [[shingleInvertedIndex]] with the cap on: over-cap shingles are
+    * [[shingleIndexCapped]]: over-cap shingles are
     * anti-joined out and each doc's set size recomputed over the capped
     * vocabulary (the `lp` CTE replaces `d`'s full-vocabulary `l`), so
     * the emitted `p(doc_a, doc_b, inter, la, lb)` measures the SUB-CAP
@@ -1808,7 +1756,7 @@ object Dedup {
     // (n·625/8)/10⁴ = (n·625+4) div 8 over 10⁴ — because n ≡ 4 mod 8
     // makes the double form an exact decimal tie (HALF_UP lottery);
     // abs_err differs the two ROUNDED columns (see jaccardCalibrationFrom).
-    // dupMatrix mirror: the verified pair set via the same all-pairs
+    // dupMatrixFromPairs mirror: the verified pair set via the same all-pairs
     // exact form that serves d_neardup_pipeline (identical set at
     // τ=0.8 — LSH recall certified there), canonicalized source pair,
     // DECIMAL(28,10) mean convention.
@@ -1977,7 +1925,7 @@ object Dedup {
         Seq(0, 1, 2, 3).map(r =>
           s"""SELECT CAST($r AS INT) AS max_hamming, p$r AS n_pairs, d$r AS n_docs
              |FROM pc, dc""".stripMargin).mkString("\nUNION ALL\n")),
-    // Mirror of dedupCurve: the same pair CTE at the loosest τ — under
+    // Mirror of dedupCurveFromIndex: the same pair CTE at the loosest τ — under
     // the default dfCap=100 capped universe — the same τ-grid fan-out
     // over the ROUND(,4) jaccard.
     "d_dedup_curve" ->

@@ -166,7 +166,7 @@ object DupClusters {
     *    never the quadratic within-group pair set, and it catches short
     *    (<3-token) exact dups that have no shingles. */
   def dupEdges(documents: DataFrame, candidates: DataFrame, tau: Double = 0.8): DataFrame = {
-    val near = Dedup.jaccardOnCandidates(documents, candidates, tau)
+    val near = Dedup.jaccardOnCandidatesFrom(Dedup.shingled(documents), candidates, tau)
       .select(col("doc_a"), col("doc_b"))
     val hashed = documents.select(col("doc_id"), md5(Dedup.normText(col("text"))).as("h"))
     val hubs = hashed.groupBy(col("h"))

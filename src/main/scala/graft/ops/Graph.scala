@@ -41,12 +41,15 @@ object DomainGraph {
     * that appears as a source or destination. Damping 0.85, uniform
     * teleport over the node set. Dangling hosts (no out-links) simply
     * contribute nothing — their mass exits through the teleport term,
-    * the standard simplification for crawl ranking. */
+    * the standard simplification for crawl ranking. The edge tables it
+    * materializes ([[edgeTables]]) are its own and are released once
+    * the rank vector is built; [[domainRankFromTables]] reads shared
+    * tables and must not release them, so the two forms stay apart. */
   def domainRank(edges: DataFrame, iters: Int = 10, damping: Double = 0.85): DataFrame =
     domainRankImpl(edgeTables(edges), iters, damping, releaseTables = true)
 
   /** [[domainRank]] over the SHARED materialized edge tables
-    * (`Catalog.hostGraph`, r17): the four host-graph keys read one
+    * (`Catalog.hostGraph`): the four host-graph keys read one
     * edge aggregation/out-degree/node build per session instead of
     * re-materializing it per invocation — the stored link-weight table
     * a scheduled 100 TB rank refresh reads (RankStream's layout). */
@@ -191,18 +194,17 @@ object DomainGraph {
     * ≤ 2 snapshots live at any time. Fixed horizon (default 5: HITS
     * converges geometrically in the principal eigengap; the
     * d_rank_convergence discipline applies if a deployment wants the
-    * curve). */
-  def domainHits(edges: DataFrame, iters: Int = 5): DataFrame =
-    domainHitsFromWeights(
-      edges.groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")), iters)
-
-  /** [[domainHits]] over a PRE-AGGREGATED (src, dst, w) weight table —
-    * the card-level entry point (the domainRankDeltaFromWeights
-    * convention): link weights are additive counts, so the streaming
-    * maintainer ([[graft.streaming.RankStream]]) can serve HITS off its
-    * stored per-batch weight partials with arithmetic bit-equal to the
-    * batch key over the same edge multiset. */
-  private[graft] def domainHitsFromWeights(w0: DataFrame, iters: Int = 5): DataFrame = {
+    * curve).
+    *
+    * Input: a PRE-AGGREGATED (src, dst, w) weight table (the
+    * [[domainRankDeltaFromWeights]] convention; a raw edge list is one
+    * `count` per (src, dst) away). Link weights are additive counts, so
+    * the streaming maintainer ([[graft.streaming.RankStream]]) serves
+    * HITS off its stored per-batch weight partials with arithmetic
+    * bit-equal to the batch key over the same edge multiset. The weight
+    * and node tables are materialized here and released once the score
+    * vectors no longer need them. */
+  def domainHitsFromWeights(w0: DataFrame, iters: Int = 5): DataFrame = {
     val w = DupClusters.materialize(w0)
     val nodes = DupClusters.materialize(
       w.select(col("src").as("host"))
@@ -210,8 +212,9 @@ object DomainGraph {
     domainHitsImpl(w, nodes, nodes.count(), iters, releaseTables = true)
   }
 
-  /** [[domainHits]] over the shared Catalog host-graph tables (r17 —
-    * see [[domainRankFromTables]]; the out-degree table is unused). */
+  /** [[domainHitsFromWeights]] over the shared Catalog host-graph
+    * tables (see [[domainRankFromTables]]; the out-degree table is
+    * unused). They are never released here: other keys serve off them. */
   def domainHitsFromTables(tables: (DataFrame, DataFrame, DataFrame, Long),
                            iters: Int = 5): DataFrame =
     domainHitsImpl(tables._1, tables._3, tables._4, iters, releaseTables = false)
@@ -220,7 +223,7 @@ object DomainGraph {
                              iters: Int, releaseTables: Boolean): DataFrame = {
     // hub scores only exist after a first half-step (h is derived from
     // a, never initialized) — a 0-iteration HITS has no defined output
-    require(iters >= 1, s"domainHits needs at least one iteration (got $iters)")
+    require(iters >= 1, s"HITS needs at least one iteration (got $iters)")
     import org.apache.spark.sql.expressions.Window
     val all = Window.partitionBy()
       .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
@@ -243,14 +246,13 @@ object DomainGraph {
     var a = DupClusters.materialize(
       nodes.select(col("host"), lit(1.0 / n).cast("decimal(28,10)").as("v")))
     var h: DataFrame = null
-    // r16 opt: materialize every SECOND iteration (both half-step
-    // vectors), not every half-step — the powerIterations discipline
-    // applied here. Lineage stays ≤ 2 iterations (4 half-steps) deep,
-    // bounding optimizer/shuffle growth, while halving the eager
-    // checkpoint round-trips that dominate wall time at test SF (each
-    // is a full blocking job over a ≤ #hosts-row frame). Arithmetic
-    // unchanged — same exact-decimal chain, same released-blocks
-    // bookkeeping (≤ 2 score snapshots live at any time).
+    // materialize every SECOND iteration (both half-step vectors), not
+    // every half-step — the powerIterations discipline applied here.
+    // Lineage stays ≤ 2 iterations (4 half-steps) deep, bounding
+    // optimizer/shuffle growth, while halving the eager checkpoint
+    // round-trips that dominate wall time at test SF (each is a full
+    // blocking job over a ≤ #hosts-row frame); ≤ 2 score snapshots are
+    // live at any time.
     var live: List[DataFrame] = List(a)
     for (i <- 1 to iters) {
       val mat = i % 2 == 0 || i == iters
@@ -565,11 +567,11 @@ object DomainGraph {
                |  MAX(CAST(ABS(a.r - b.r) * 10000000000 AS BIGINT)) AS max_delta_e10
                |FROM r$i a JOIN r${i - 1} b ON a.host = b.host""".stripMargin)
             .mkString("\nUNION ALL\n")),
-      // domainHits mirror: 5 unrolled (hub, authority) half-step pairs —
+      // domainHitsFromWeights mirror: 5 unrolled (hub, authority) half-step pairs —
       // each the same decimal-sum-of-double-terms shape as the rank
       // chain plus the L1-normalizing raw/total double division CAST
       // back to DECIMAL(28,10) (score vectors bit-identical per
-      // half-step, see domainHits scaladoc); the final ROUND(,6)+0.0
+      // half-step, see domainHitsFromWeights scaladoc); the final ROUND(,6)+0.0
       // is cosmetic. Every per-half-step CTE is MATERIALIZED (the
       // s_opq_recall precedent): hraw/araw are each referenced twice
       // (the frame + its normalizing total), so DuckDB's default

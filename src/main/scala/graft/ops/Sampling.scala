@@ -377,7 +377,7 @@ object Sampling {
         col("dup_in_train"))
   }
 
-  /** SEMANTIC split-leakage report (r14) — the embedding-space axis
+  /** SEMANTIC split-leakage report — the embedding-space axis
     * [[splitLeakage]]'s span overlap cannot see: a paraphrased or
     * re-embedded near-copy of a train document reaches the holdout
     * with ZERO shared 8-gram spans yet sits at cosine ≈ 1 in embedding
@@ -391,7 +391,7 @@ object Sampling {
     * sits far below any near-dup threshold; a paraphrase mill pushes
     * it toward 1).
     *
-    * Plan: the knnJoinCanopy blocking verbatim (nAssign-nearest-
+    * Plan: the canopy-pair blocking verbatim (nAssign-nearest-
     * centroid canopies off the Catalog-cached IVF fit — candidates
     * only within a shared canopy, work ∝ Σ bucket², never
     * holdout × train), pairs filtered to holdout × train, MAX cosine
@@ -781,8 +781,13 @@ object Sampling {
         substring(md5(concat(col("w1"), lit(" "),
           element_at(col("a"), col("i0") + 2))), 1, 2).as("b"))
 
-  private[ops] def dsirModelFromFeats(feats: DataFrame, targetSource: String,
-                                      buckets: Int): DataFrame = {
+  /** The trained DSIR model as a standalone artifact: the `buckets`-row
+    * (bucket, log-ratio) table fit over [[dsirFeats]] — model scale, the
+    * stored object a SERVING pipeline (e.g. the streaming ingest gate's
+    * target-likeness arm) applies through [[dsirScore]] to corpora the
+    * model never saw. */
+  private[graft] def dsirModelFromFeats(feats: DataFrame, targetSource: String = "src19",
+                                        buckets: Int = 256): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val counts = feats.groupBy(col("b")).agg(
       sum(when(col("source") === targetSource, 1L).otherwise(0L)).as("ct"),
@@ -813,15 +818,6 @@ object Sampling {
     * and accumulates per arriving batch. */
   def featureCounts(docs: DataFrame): DataFrame =
     dsirFeats(docs).groupBy(col("b")).agg(count(lit(1)).as("n"))
-
-  /** The trained DSIR model as a standalone artifact: the `buckets`-row
-    * (bucket, log-ratio) table [[dsirWeightsOverFeats]] fits — model
-    * scale, the stored object a SERVING pipeline (e.g. the streaming
-    * ingest gate's target-likeness arm) applies to corpora the model
-    * never saw. */
-  def dsirModel(documents: DataFrame, targetSource: String = "src19",
-                buckets: Int = 256): DataFrame =
-    dsirModelFromFeats(dsirFeats(documents), targetSource, buckets)
 
   /** Score arbitrary docs under a PRE-TRAINED model (the serving form
     * of [[dsirWeightsOverFeats]] — same bigram features, same broadcast join,
@@ -1097,21 +1093,16 @@ object Sampling {
     * each source realizes a binomial draw; this is where a mixture
     * rollout checks that no source drifted (a big abs_dev at large n
     * means the KEY SPACE is biased — e.g. doc_ids correlated with the
-    * hash — not sampling noise). One aggregation over the flagged
-    * scan ([[mixtureSummary]]); the target column is the same literal
+    * hash — not sampling noise). The target column is the same literal
     * CASE the sampler uses, so the report can never disagree with the
-    * sampler about intent. */
-  def mixReport(documents: DataFrame, rates: Map[String, Double],
-                defaultRate: Double): DataFrame =
-    mixReportFromCards(mixturePartials(documents, rates, defaultRate),
-      rates, defaultRate)
-
-  /** Card-level form of [[mixReport]]: the audit arithmetic over an
-    * already-merged (source, n_docs, n_kept) frame — shared by the
-    * batch key and the streaming maintainer's scheduled report, which
-    * re-merges durable per-batch partials instead of rescanning
-    * documents (bit-equal by the additive-partials property on
-    * [[mixturePartials]]). */
+    * sampler about intent.
+    *
+    * The audit arithmetic runs over an already-merged (source, n_docs,
+    * n_kept) card: the `d_mix_report` key passes [[mixturePartials]]
+    * of the corpus (one aggregation over the flagged scan), and the
+    * streaming maintainer's scheduled report re-merges durable
+    * per-batch partials instead of rescanning documents (bit-equal by
+    * the additive-partials property on [[mixturePartials]]). */
   def mixReportFromCards(cards: DataFrame, rates: Map[String, Double],
                          defaultRate: Double): DataFrame = {
     val target = rates.toSeq.sortBy(_._1)
@@ -1184,7 +1175,8 @@ object Sampling {
     "d_corpus_shuffle" -> ((s, d) => corpusShuffle(Tables(s, d).documents)),
     "d_weighted_sample" -> ((s, d) => weightedSample(Tables(s, d).documents)),
     "d_shard_assign" -> ((s, d) => shardAssign(Tables(s, d).documents)),
-    "d_mix_report" -> ((s, d) => mixReport(Tables(s, d).documents, MixRates, MixDefault)))
+    "d_mix_report" -> ((s, d) => mixReportFromCards(
+      mixturePartials(Tables(s, d).documents, MixRates, MixDefault), MixRates, MixDefault)))
 
   /** Add-1 smoothed hashed-bigram multinomial log-odds chain in DuckDB
     * SQL — every probability is a ratio of integers (bucket key = 2 hex
@@ -1652,7 +1644,7 @@ object Sampling {
           |  CAST(row_number() OVER (PARTITION BY substr(hh, 1, 1)
           |    ORDER BY substr(hh, 2, 14), doc_id) AS BIGINT) AS pos
           |FROM h""".stripMargin,
-      // mixReport mirror: the same hex-threshold membership counted
+      // mixReportFromCards mirror: the same hex-threshold membership counted
       // per source, the same numeric target CASE, nested ROUND parity.
       "d_mix_report" -> {
         val targetCases = MixRates.toSeq.sortBy(_._1)

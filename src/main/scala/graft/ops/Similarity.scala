@@ -14,7 +14,7 @@ import graft.functions.GraftFunctions
   *    WholeStageCodegen (`graft_cosine`), `TakeOrderedAndProject` for the
   *    top-k (per-partition heaps, no global sort). At 100 TB this is the
   *    plan you run when you genuinely must rank everything.
-  *  - [[annLsh]] — the scale path: random-hyperplane signatures bucket
+  *  - [[annLshFromSignatures]] — the scale path: random-hyperplane signatures bucket
   *    the corpus; the query probes its own bucket plus all buckets within
   *    hamming 1 (multi-probe), as an equi-join on the bucket id. Scan
   *    cost is unchanged (signatures are scan-side), but ranking touches
@@ -100,10 +100,11 @@ object Similarity {
       .select(col("vec_id"), col("label"), col("embedding"), col("bucket"))
   }
 
-  /** ANN served off a (possibly materialized or stream-maintained)
-    * signature index: candidates come from an equi-join of the corpus's
-    * bucket id against the query's multi-probe bucket set (own bucket +
-    * hamming-1 neighbors); top-k by exact cosine among candidates only. */
+  /** Random-hyperplane LSH ANN served off a signature index
+    * ([[withSignatures]] in-plan, or a materialized or stream-maintained
+    * table): candidates come from an equi-join of the corpus's bucket id
+    * against the query's multi-probe bucket set (own bucket + hamming-1
+    * neighbors); top-k by exact cosine among candidates only. */
   def annLshFromSignatures(index: DataFrame, queryVecId: Long = 0L, k: Int = 10,
                            nPlanes: Int = 8): DataFrame = {
     val probes = index.filter(col("vec_id") === queryVecId)
@@ -118,11 +119,6 @@ object Similarity {
       .limit(k)
       .select(col("vec_id"), col("label"), col("bucket"), round(col("cos"), 4).as("cos_sim"))
   }
-
-  /** Random-hyperplane LSH ANN, self-contained (index + serve). */
-  def annLsh(embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 10,
-             nPlanes: Int = 8, dim: Int = 64): DataFrame =
-    annLshFromSignatures(withSignatures(embeddings, nPlanes, dim), queryVecId, k, nPlanes)
 
   /** SCALING.md's "size nlist ∝ corpus" rule as code:
     * `nlist = max(16, ⌈n / targetBucket⌉)` holds the EXPECTED IVF bucket
@@ -357,7 +353,7 @@ object Similarity {
 
   /** IVF ANN over a PRE-FITTED index (centroids + cluster-assigned
     * corpus): probe the query's `nProbe` nearest lists, rank candidates
-    * by exact cosine. The complement of [[annLsh]]: IVF adapts to the
+    * by exact cosine. The complement of [[annLshFromSignatures]]: IVF adapts to the
     * data distribution (clusters), LSH is data-independent. The fit
     * happens once (see `Catalog.ivfIndex`; one-off use fits in-plan:
     * [[ivfCentroids]], then a `graft_nearest_centroid` projection adds
@@ -1006,8 +1002,9 @@ object Similarity {
     * This is the ORACLE form: a semantic blocking key makes the
     * neighbor set SQL-expressible, but it is O(bucket²) — the same
     * declared trade as `Dedup.embedNearDup`, confined to blocks. The
-    * scale path is [[knnJoinCanopy]]: same top-k contract, candidates
-    * from the k-means canopy blocker instead of exhaustive blocks.
+    * scale path is [[knnJoinCanopyFromPairs]] over
+    * [[canopyCandidatePairs]]: same top-k contract, candidates from the
+    * k-means canopy blocker instead of exhaustive blocks.
     * Ranking is on the ROUNDED cosine (what the row emits) with an
     * nbr_id tie-break — a total order both engines agree on; `+ 0.0`
     * kills IEEE −0.0 (same class as the annTopK fix). */
@@ -1016,7 +1013,7 @@ object Similarity {
     // bounded `graft_topk_pairs` heap instead of a row_number window:
     // the per-vector top-k truncates MAP-SIDE, so the only shuffle of
     // the O(Σ block²) pair frame is the label join itself (see
-    // knnJoinCanopy's r10 note; result identical by the same ordering)
+    // knnJoinCanopyFromPairs; result identical by the same ordering)
     e.as("a")
       .join(e.as("b"),
         col("a.label") === col("b.label") && col("a.vec_id") =!= col("b.vec_id"))
@@ -1032,43 +1029,24 @@ object Similarity {
         (col("off") + 1).cast("int").as("knn_rank"))
   }
 
-  /** k-NN graph at scale: candidates from the k-means CANOPY blocker
-    * (every vector assigned to its `nAssign` nearest centroids,
-    * scan-side via `graft_nearest_centroids`; candidates share ≥ 1
-    * canopy — the `Dedup.embedNearDupClusters` blocking), each
-    * verified with exact cosine, then the same rounded-cosine top-k
-    * window per vector. Candidate work is O(Σ bucket²) bounded by
-    * sizing nlist ∝ corpus/target-bucket — never O(n²); vectors with
-    * fewer than k in-canopy candidates emit fewer rows (the standard
-    * approximate-kNN recall trade; raise nAssign/nProbe to trade
-    * candidates for recall). Centroids come from the Catalog-cached
-    * IVF fit shared with `s_ann_ivf` — no per-call fit.
-    * Oracle-checked: the fit replays portably (`ivfFitCte`), so the
-    * canopy graph is hash-compared end to end; spec additionally proves
-    * planted replicas are rank-1 neighbors and agreement with
-    * [[knnJoin]] on high-cosine neighbors. */
-  def knnJoinCanopy(embeddings: DataFrame, centroids: Seq[Seq[Double]],
-                    k: Int = 5, nAssign: Int = 2): DataFrame =
-    knnJoinCanopyFromPairs(
-      canopyCandidatePairs(embeddings, centroids, nAssign), k)
-
   /** The verified canopy candidate-pair frame SHARED by
-    * [[knnJoinCanopy]], [[hardNegativesFromPairs]] and
+    * [[knnJoinCanopyFromPairs]], [[hardNegativesFromPairs]] and
     * [[knnLabelAccuracyFromPairs]]: `(vec_id, label, nbr_id, nbr_label,
-    * cos_sim)` — pairs
-    * deduped scan-side by the least-shared-canopy rule (r10), exact
-    * cosine at report rounding. The three serving keys each re-mined
-    * this identical frame per invocation; `Catalog.canopyPairs`
-    * materializes it once per session — the stored kNN-graph candidate
-    * table a 100 TB index maintenance run writes before its consumers
-    * fan out.
+    * cos_sim)`. Candidates come from the k-means CANOPY blocker: every
+    * vector is assigned to its `nAssign` nearest centroids scan-side
+    * (`graft_nearest_centroids`; the `Dedup.embedNearDupClusters`
+    * blocking), and each candidate sharing ≥ 1 canopy is verified with
+    * exact cosine at report rounding. Candidate work is O(Σ bucket²),
+    * bounded by sizing nlist ∝ corpus/target-bucket — never O(n²).
+    * `Catalog.canopyPairs` materializes it once per session off the
+    * Catalog-cached IVF fit — the stored kNN-graph candidate table a
+    * 100 TB index maintenance run writes before its consumers fan out.
     *
-    * r10 shuffle-diet provenance (unchanged): pair-dedup happens
-    * SCAN-SIDE — each row carries its tiny canopies array, and a pair
-    * is emitted only from its LEAST shared canopy (array_intersect/
-    * array_min of two nAssign-length arrays, codegen), so candidate
-    * rows never leave their canopy partition and no distinct pass
-    * exists. */
+    * Pair-dedup happens SCAN-SIDE: each row carries its tiny canopies
+    * array, and a pair is emitted only from its LEAST shared canopy
+    * (array_intersect/array_min of two nAssign-length arrays, codegen),
+    * so candidate rows never leave their canopy partition and no
+    * distinct pass exists. */
   def canopyCandidatePairs(embeddings: DataFrame, centroids: Seq[Seq[Double]],
                            nAssign: Int = 2): DataFrame = {
     val e = embeddings
@@ -1088,12 +1066,18 @@ object Similarity {
         (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
   }
 
-  /** [[knnJoinCanopy]] over a prebuilt candidate-pair frame (r17,
-    * Catalog): the per-vector top-k is the bounded `graft_topk_pairs`
+  /** k-NN graph at scale over the canopy candidate pairs
+    * ([[canopyCandidatePairs]]; the `s_knn_ivf` key reads
+    * `Catalog.canopyPairs`): for every vector, its `k` nearest in-canopy
+    * neighbors by rounded cosine, nbr_id tie-break. Vectors with fewer
+    * than k in-canopy candidates emit fewer rows (the standard
+    * approximate-kNN recall trade; raise nAssign to trade candidates for
+    * recall). The per-vector top-k is the bounded `graft_topk_pairs`
     * heap aggregate, truncated MAP-SIDE — the final shuffle ships ≤ k
-    * entries per (vec, partition) instead of every candidate row;
-    * result identical (same (cos_sim desc, nbr_id asc) order on the
-    * same deduped pair set). */
+    * entries per (vec, partition) instead of every candidate row.
+    * Oracle-checked end to end (the fit replays portably, `ivfFitCte`);
+    * the spec additionally proves planted replicas are rank-1 neighbors
+    * and agreement with [[knnJoin]] on high-cosine neighbors. */
   def knnJoinCanopyFromPairs(pairs: DataFrame, k: Int = 5): DataFrame =
     pairs
       .groupBy(col("vec_id"))
@@ -1521,62 +1505,38 @@ object Similarity {
             / lit(10000.0)) + lit(0.0)).as("recall"))
   }
 
-  /** Two-stage MRL serving — the operator [[mrlRecallCurve]] calibrates:
-    * stage 1 shortlists `shortlist` candidates by prefix-dim cosine
-    * (the cheap scan — at corpus scale it reads a stored shortDim/D
-    * prefix column, shortDim/D of the vector IO), stage 2 reranks the
-    * shortlist by FULL-dimension exact cosine and emits the top-k (the
-    * standard MRL funnel retrieval, adaptive-retrieval style). The
-    * rerank touches ≤ `shortlist` rows — model-scale, so the full
-    * vectors are only ever read for the shortlist (at scale: a
-    * broadcast-able id-join back to the full table; here the row
-    * already carries them). Both stages are TakeOrderedAndProject
-    * (per-partition heaps; stage 2 sorts ≤ shortlist rows), one corpus
-    * scan total. Output carries both cosines so the gap between
-    * shortlist rank and true rank stays visible per hit. Degenerate
-    * settings recover [[annTopK]] exactly (shortlist ≥ corpus, or
-    * shortDim = D) — spec-proven. */
-  def annMrlServe(embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 10,
-                  shortDim: Int = 16, shortlist: Int = 50): DataFrame = {
-    val q = broadcast(embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding"),
-        slice(col("embedding"), 1, shortDim).as("q_trunc")))
-    embeddings
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .withColumn("cos_s",
-        GraftFunctions.cosine(slice(col("embedding"), 1, shortDim), col("q_trunc")))
-      .orderBy(desc("cos_s"), asc("vec_id"))
-      .limit(shortlist)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"),
-        (round(col("cos"), 4) + lit(0.0)).as("cos_sim"),
-        (round(col("cos_s"), 4) + lit(0.0)).as("cos_short"))
-  }
-
   /** The scan-tier prefix projection `Store.saveMrlPrefix` materializes
     * — ONE definition for the stored column and the in-session
-    * fallback, so the two can never drift. */
+    * projection the `s_ann_mrl` key serves from, so the two can never
+    * drift. */
   def mrlPrefixProjection(embeddings: DataFrame, shortDim: Int = 16): DataFrame =
     embeddings.select(col("vec_id"), col("label"),
       slice(col("embedding"), 1, shortDim).as("prefix"))
 
-  /** [[annMrlServe]] with stage 1 served off the STORED prefix tier
-    * (r14) — the serve that realizes the funnel's IO claim at the SCAN
-    * tier, not just the index: stage 1 scans `prefixed` reading ONLY
-    * (vec_id, prefix) — a full-vector column prunes nothing WITHIN the
-    * vector, so the prefix must be its own stored column to cut bytes
-    * (~shortDim/D of the vector IO; measured in SCALING.md) — and
-    * stage 2 reads full vectors for the ≤ `shortlist` survivors only,
-    * via a broadcast id-join back to the full table (co-bucketed by
-    * vec_id in the Store → zero-exchange at scale). Bit-identical
-    * output to the single-table [[annMrlServe]] (spec-proven): the
-    * stored slice carries the same floats the scan-side slice
-    * computes, and the rerank candidates are the same stage-1 top-set.
-    * Both stages TakeOrderedAndProject; one prefix-tier scan + one
-    * shortlist-bounded probe of the full table. */
+  /** Two-stage MRL serving — the operator [[mrlRecallCurve]] calibrates:
+    * stage 1 shortlists `shortlist` candidates by prefix cosine over
+    * `prefixed` (the [[mrlPrefixProjection]] of the corpus: in-plan for
+    * the `s_ann_mrl` key, or the stored tier `Store.saveMrlPrefix`
+    * writes), stage 2 reranks the shortlist by FULL-dimension exact
+    * cosine and emits the top-k (the standard MRL funnel retrieval,
+    * adaptive-retrieval style).
+    *
+    * Over the stored tier the funnel's IO claim holds at the SCAN tier,
+    * not just the index: stage 1 reads ONLY (vec_id, prefix) — a
+    * full-vector column prunes nothing WITHIN the vector, so the prefix
+    * must be its own stored column to cut bytes (~shortDim/D of the
+    * vector IO; measured in SCALING.md) — and stage 2 reads full vectors
+    * for the ≤ `shortlist` survivors only, via a broadcast id-join back
+    * to the full table (co-bucketed by vec_id in the Store →
+    * zero-exchange at scale). The stored slice carries the same floats
+    * the in-plan slice computes, so both prefix sources give
+    * bit-identical output (spec-proven).
+    *
+    * Both stages are TakeOrderedAndProject (per-partition heaps; stage 2
+    * sorts ≤ shortlist rows), no shuffle. Output carries both cosines so
+    * the gap between shortlist rank and true rank stays visible per hit.
+    * Degenerate settings recover [[annTopK]] exactly (shortlist ≥
+    * corpus, or a full-dimension prefix) — spec-proven. */
   def annMrlServeFromPrefix(prefixed: DataFrame, embeddings: DataFrame,
                             queryVecId: Long = 0L, k: Int = 10,
                             shortlist: Int = 50): DataFrame = {
@@ -1622,7 +1582,7 @@ object Similarity {
 
   /** Two-stage MRL funnel served off an IVF index FITTED IN PREFIX
     * SPACE ([[graft.core.Catalog.ivfIndexMrl]]) — the 100 TB form of
-    * [[annMrlServe]], where the cost saving reaches the INDEX, not just
+    * [[annMrlServeFromPrefix]], where the cost saving reaches the INDEX, not just
     * a scan tier: lists are built and probed on the first `shortDim`
     * coordinates (shortDim/D of the fit IO and the probe math),
     * candidates inside the nProbe probed lists are shortlisted by
@@ -1737,7 +1697,7 @@ object Similarity {
     * does not separate the classes and every SemDeDup/clustering
     * decision built on it is suspect; the classic kNN-probe eval).
     * Per label: member count, top-1-neighbor-same-label count,
-    * accuracy ROUND(,4)+0.0. The kNN arm is the [[knnJoinCanopy]]
+    * accuracy ROUND(,4)+0.0. The kNN arm is the [[knnJoinCanopyFromPairs]]
     * top-1 over the canopy candidate-pair frame
     * ([[canopyCandidatePairs]], Catalog-cached over the shared fit),
     * where the anchor's label rides the pair frame; the neighbor's
@@ -1803,7 +1763,7 @@ object Similarity {
     "s_ann_filtered" -> ((s, d) =>
       annTopKFiltered(Tables(s, d).embeddings, col("label").isin(1, 3, 5))),
     "s_ann_batch" -> ((s, d) => annTopKBatch(Tables(s, d).embeddings)),
-    "s_ann_lsh"  -> ((s, d) => annLsh(Tables(s, d).embeddings)),
+    "s_ann_lsh"  -> ((s, d) => annLshFromSignatures(withSignatures(Tables(s, d).embeddings))),
     "s_ann_ivf"  -> ((s, d) => {
       val (cents, assigned) = graft.core.Catalog.ivfIndex(s, d)
       annIvfFromIndex(cents, assigned)
@@ -1881,7 +1841,10 @@ object Similarity {
       recallReport(Tables(s, d).embeddings, cents, assigned)
     }),
     "s_mrl_recall" -> ((s, d) => mrlRecallCurve(Tables(s, d).embeddings)),
-    "s_ann_mrl" -> ((s, d) => annMrlServe(Tables(s, d).embeddings)),
+    "s_ann_mrl" -> ((s, d) => {
+      val emb = Tables(s, d).embeddings
+      annMrlServeFromPrefix(mrlPrefixProjection(emb, 16), emb)
+    }),
     "s_ann_mrl_ivf" -> ((s, d) => {
       val (cents, assigned) = graft.core.Catalog.ivfIndexMrl(s, d)
       annMrlIvfFromIndex(cents, assigned)
@@ -2781,7 +2744,7 @@ object Similarity {
            |SELECT vec_id, label, cluster, ROUND(cos, 4) + 0.0 AS cos_sim,
            |  ROUND(cos_s, 4) + 0.0 AS cos_short
            |FROM r ORDER BY cos DESC, vec_id ASC LIMIT 10""".stripMargin),
-    // annMrlServe mirror: the prefix-cosine shortlist as a row_number
+    // annMrlServeFromPrefix mirror: the prefix-cosine shortlist as a row_number
     // window (rn <= 50, raw-cosine order with the vec_id tie-break),
     // then the full-dim rerank limited to k — both cosines emitted at
     // ROUND(,4)+0.0, ranking on the raw doubles exactly as the plan.

@@ -198,7 +198,7 @@ object TextAnalysis {
       .select(col("doc_id"), col("lang_pred"), col("n_tokens"),
         col("n_stop_lang"), col("stopword_ratio"), col("quality_bucket"))
 
-  /** MODEL-BASED quality scores (r15) — the CCNet/fastText-classifier
+  /** MODEL-BASED quality scores — the CCNet/fastText-classifier
     * slot between the heuristic rules ([[quality]]/[[gopherRules]]) and
     * DSIR's target-likeness: a deterministic multinomial-NB log-odds
     * scorer over hashed-bigram counts, target = a DECLARED high-quality
@@ -218,7 +218,7 @@ object TextAnalysis {
     * [[qualityModelFit]] is the trained classifier as a STANDALONE
     * artifact — the 256-row (bucket, log-odds) table the streaming
     * gate's quality_model arm serves against corpora the model never
-    * saw (the `Sampling.dsirModel` artifact shape, different
+    * saw (the `Sampling.dsirModelFromFeats` artifact shape, different
     * contrast). */
   def qualityModelFit(documents: DataFrame, hqSource: String = "src0",
                       buckets: Int = 256): DataFrame =
@@ -615,14 +615,21 @@ object TextAnalysis {
     * mixture hazard long before any model-side signal.
     *
     * Per source: doc counts on both snapshots, corpus-share on both
-    * (ROUND(,4)), the share delta, and mean chars/doc on both. Plan:
-    * one #sources-row aggregate per snapshot + two 1-row totals, one
+    * (ROUND(,4)), the share delta, and mean chars/doc on both. The
+    * inputs are two per-source CARDS (source, n_docs, n_chars): the
+    * `t_corpus_drift` key aggregates both snapshots with [[sourceCard]]
+    * (the fixture recomputes the previous one only because the test
+    * corpus ships no stored card), and the streaming maintainer
+    * ([[graft.streaming.DriftStream]]) serves its merged per-batch
+    * partials against the stored previous card — at 100 TB the
+    * "previous snapshot" side IS the stored card (one row per source),
+    * never a re-aggregation of history. Snapshot totals derive from the
+    * cards' own doc counts (Σ per-source = the corpus COUNT(*) exactly —
+    * integer sums are split-invariant), so the batch and streamed forms
+    * are bit-equal over the same corpus. Plan: two 1-row totals, one
     * full-outer join on source (a source may exist in only one
     * snapshot) + two 1-row broadcast joins — nothing doc-level ever
-    * shuffles, and at 100 TB the "previous snapshot" side is the
-    * STORED card itself (one row per source — re-aggregating history
-    * is never needed; the fixture recomputes it only because the test
-    * corpus ships no stored card).
+    * shuffles.
     *
     * Float discipline: shares and means are quotients of exact BIGINT
     * counts, rounded half-AWAY-FROM-ZERO in EXACT integer arithmetic
@@ -632,23 +639,6 @@ object TextAnalysis {
     * count over a 50 000-doc corpus terminates exactly at the tie; a
     * ROUND(dbl, 4) would diverge cross-engine). The share delta is
     * then an IEEE subtraction of identical doubles. */
-  def corpusDrift(prev: DataFrame, cur: DataFrame): DataFrame = {
-    def side(df: DataFrame) =
-      df.groupBy(col("source")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars").cast("long")).as("n_chars"))
-    corpusDriftFromCards(side(prev), side(cur))
-  }
-
-  /** [[corpusDrift]] over two already-aggregated per-source CARDS
-    * (source, n_docs, n_chars) — the serving entry point of the
-    * streaming maintainer ([[graft.streaming.DriftStream]]) and the
-    * literal 100-TB shape the batch docstring names: the previous
-    * snapshot side IS the stored card (one row per source), never a
-    * re-aggregation of history. Snapshot totals derive from the card's
-    * own doc counts (Σ per-source = the corpus COUNT(*) exactly —
-    * integer sums are split-invariant), so the batch form and the
-    * streamed form are bit-equal over the same corpus. */
   def corpusDriftFromCards(prevCard: DataFrame, curCard: DataFrame): DataFrame = {
     val p = prevCard.select(col("source"), col("n_docs").as("d_prev"),
       col("n_chars").as("c_prev"))
@@ -680,6 +670,15 @@ object TextAnalysis {
         ratio4("chars_prev", "docs_prev").as("mean_chars_prev"),
         ratio4("chars_cur", "docs_cur").as("mean_chars_cur"))
   }
+
+  /** The per-source (source, n_docs, n_chars) card of a document frame
+    * — one #sources-row aggregate, the input [[corpusDriftFromCards]]
+    * diffs. `DriftStream.ingestBatch` appends it per micro-batch as
+    * additive partials. */
+  def sourceCard(docs: DataFrame): DataFrame =
+    docs.groupBy(col("source")).agg(
+      count(lit(1)).as("n_docs"),
+      sum(col("n_chars").cast("long")).as("n_chars"))
 
   /** PII patterns — deliberately plain ASCII regex (no lookaround, no
     * engine-specific classes) so Java regex (Spark) and RE2 (DuckDB,
@@ -1838,7 +1837,8 @@ object TextAnalysis {
     // every 50th doc; today's crawl restores them
     "t_corpus_drift"   -> ((s, d) => {
       val docs = Tables(s, d).documents
-      corpusDrift(docs.filter(pmod(col("doc_id"), lit(50)) =!= 0), docs)
+      corpusDriftFromCards(
+        sourceCard(docs.filter(pmod(col("doc_id"), lit(50)) =!= 0)), sourceCard(docs))
     }),
     "t_perplexity"     -> ((s, d) => lmScore(Tables(s, d).documents)),
     "t_source_overlap" -> ((s, d) => sourceOverlap(Tables(s, d).documents)),
@@ -2635,7 +2635,7 @@ object TextAnalysis {
          |  v.n_keep,
          |  ROUND(CAST(v.n_keep AS DOUBLE) / v.n_docs, 4) AS keep_frac
          |FROM v JOIN h USING (source)""".stripMargin,
-    // corpusDrift mirror: same snapshot fixture (doc_id % 50), same
+    // corpusDriftFromCards mirror: same snapshot fixture (doc_id % 50), same
     // exact-integer half-away ratios (// and DIV agree — non-negative
     // operands only), same IEEE delta of identical doubles.
     "t_corpus_drift" ->

@@ -745,15 +745,13 @@ object AnalyticsQueries {
     * from exact integer counts) with a (part_a, part_b) tie-break.
     * Counts exact integers; support/lift ROUND once at the end. */
   def basketLift(lineitem: DataFrame, minPairCount: Long = 3L, k: Int = 20): DataFrame = {
-    // r16 opt: the distinct collapse feeds the order-count aggregate,
-    // the per-part counts AND both self-join sides — four evaluations
-    // of the scan+distinct without reuse. Lazily cached so the collapse
-    // is paid once per action (the shingleInvertedIndex recipe).
-    // (r17: caching the collapse REPARTITIONED by the order key — the
-    // Catalog shingle-index recipe — measured WORSE, 1.36 -> 1.92 s:
-    // the self-join's two exchanges were already deduplicated by
-    // ReuseExchange, so the extra cache-populate shuffle bought
-    // nothing. Kept as-is.)
+    // the distinct collapse feeds the order-count aggregate, the
+    // per-part counts AND both self-join sides — four evaluations of the
+    // scan+distinct without reuse. Lazily cached so the collapse is paid
+    // once per action. Caching it REPARTITIONED by the order key (the
+    // Catalog shingle-index recipe) measured WORSE, 1.36 -> 1.92 s: the
+    // self-join's two exchanges were already deduplicated by
+    // ReuseExchange, so the extra cache-populate shuffle bought nothing.
     val op = lineitem.select(col("l_orderkey").as("o"), col("l_partkey").as("p")).distinct()
       .cache()
     val nOrders = broadcast(op.select(col("o")).distinct()

@@ -42,7 +42,8 @@ import graft.ops.{DupClusters, TextAnalysis}
 object DriftStream {
 
   /** One micro-batch: append the batch's per-source (docs, chars)
-    * partials under its batch_id — skipping a batch_id already present
+    * partials ([[TextAnalysis.sourceCard]], the card `t_corpus_drift`
+    * diffs) under its batch_id — skipping a batch_id already present
     * (crash replay). `docs` carries (source, n_chars) per document. */
   def ingestBatch(docs: DataFrame, batchId: Long, statsTable: String): Unit = {
     val spark = docs.sparkSession
@@ -50,11 +51,7 @@ object DriftStream {
     // ledger so compaction's watermark can advance over it (the input
     // check short-circuits on the first row)
     if (docs.limit(1).isEmpty) { Wal.markEmpty(spark, statsTable, batchId); return }
-    val partials = docs
-      .groupBy(col("source")).agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("n_chars").cast("long")).as("n_chars"))
-      .withColumn("batch_id", lit(batchId))
+    val partials = TextAnalysis.sourceCard(docs).withColumn("batch_id", lit(batchId))
     if (!spark.catalog.tableExists(statsTable)) {
       partials.write.saveAsTable(statsTable)
     } else if (!Wal.seen(spark, statsTable, batchId)) {

@@ -78,7 +78,7 @@ import graft.ops.Dedup
   *
   * Optional sixth arm ([[DsirVet]]): TARGET-LIKENESS admission — the
   * streaming form of `Sampling.dsirThresholdOverFeats`'s selection, served off
-  * a PRE-TRAINED model (the `Sampling.dsirModel` 256-row bucket table
+  * a PRE-TRAINED model (the `Sampling.dsirModelFromFeats` 256-row bucket table
   * + a pinned τ, both driver-scale artifacts — in production the
   * stored model a selection run fits once per (target, corpus-regime)
   * and the τ its budget sweep picked, see d_dsir_curve). Each batch
@@ -154,7 +154,7 @@ object IngestGate {
                                nAssign: Int = 2)
 
   /** Optional target-likeness arm of the gate: `model` is the
-    * pre-trained 256-row DSIR bucket table (`Sampling.dsirModel` — fit
+    * pre-trained 256-row DSIR bucket table (`Sampling.dsirModelFromFeats` — fit
     * once on the reference corpus + target, a stored artifact like the
     * Bloom sketch), `tau` the pinned selection threshold (what
     * d_dsir_curve's budget sweep picks). */

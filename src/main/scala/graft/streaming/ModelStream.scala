@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Staleness/refit signal for the served TEXT models (r16) — the
   * [[AnnStream.refitSignal]]/[[AnnStream.volumeSignal]] discipline
   * applied to the OTHER family of fixed serving artifacts this engine
-  * ships: the DSIR target-likeness model (`Sampling.dsirModel`) and
+  * ships: the DSIR target-likeness model (`Sampling.dsirModelFromFeats`) and
   * the NB quality classifier (`TextAnalysis.qualityModelFit`). Both
   * gate arms serve a FIXED 256-row hashed-bigram bucket model ("models
   * refit out-of-band", the DsirVet/QualityModelVet contract) — but
@@ -42,7 +42,7 @@ import org.apache.spark.sql.functions._
   *
   * When the signal recommends, the out-of-band refit is the usual
   * artifact cycle: re-run `TextAnalysis.qualityModelFitScoresOverFeats` /
-  * `Sampling.dsirModel` on the grown corpus, publish via
+  * `Sampling.dsirModelFromFeats` on the grown corpus, publish via
   * `Store.saveQualityModel` (versioned swap), and the gate arms pick
   * up the new artifact on their refresh schedule. Composes under the
   * scheduled tick as [[Maintenance.TextRefitJob]].

@@ -119,10 +119,9 @@ object StreamBench {
         "sb_gate_corpus", "sb_gate_fps", "sb_gate_sigs"))(
       b => graft.streaming.IngestGate.admitBatch(replica(b),
         "sb_gate_corpus", "sb_gate_fps", "sb_gate_sigs", "sb_gate_log"))
-    // r16: the gate with a PRE-GROWN decision log — the r15 weak item
-    // was a per-batch `rejected` derivation that semi-joined the FULL
-    // decisions log (cost ∝ admitted history; a 5-batch horizon can't
-    // see the growth). Plant a 50-batch-deep log BEFORE timing: if any
+    // the gate with a PRE-GROWN decision log: a per-batch `rejected`
+    // derivation that semi-joined the FULL decisions log would cost ∝
+    // admitted history, which a 5-batch horizon can't see. Plant a 50-batch-deep log BEFORE timing: if any
     // per-batch path still reads the log, batch times here sit far
     // above the plain ingest_gate arm's; the fixed gate (rejected
     // derived from the batch's own in-hand frames) must read FLAT and
@@ -134,7 +133,7 @@ object StreamBench {
           "sb_lgate_corpus", "sb_lgate_fps", "sb_lgate_sigs")
         // 50 synthetic prior batches' decision rows (corpus-sized each,
         // ids disjoint from every timed batch) — the standing-pipeline
-        // history the r15 gate re-read per batch
+        // history a log-reading gate would re-read per batch
         (0 until 50).map(g => docs.select(
             (col("doc_id") + (100 + g) * 10_000_000L).as("batch_id"),
             col("doc_id").as("corpus_id"),
@@ -144,7 +143,7 @@ object StreamBench {
       })(
       b => graft.streaming.IngestGate.admitBatch(replica(b),
         "sb_lgate_corpus", "sb_lgate_fps", "sb_lgate_sigs", "sb_lgate_log"))
-    // full gate + the r15 TAKEDOWN leg: each batch first tombstones the
+    // full gate + the TAKEDOWN leg: each batch first tombstones the
     // PREVIOUS batch's doc_ids (one WAL fold into the tombstone table),
     // then admits the next replica with LIVE-only vetting — per-batch
     // cost must stay flat while the tombstone set grows by a corpus per
@@ -166,7 +165,7 @@ object StreamBench {
     gateBench("span_gate", st)(
       () => graft.streaming.SpanStream.dedupBatch(docs, "sb_span_reg", "sb_span_out"))(
       b => graft.streaming.SpanStream.dedupBatch(replica(b), "sb_span_reg", "sb_span_out"))
-    // full gate + the r11 SEMANTIC arm: every batch carries a jittered
+    // full gate + the SEMANTIC arm: every batch carries a jittered
     // copy of each base vector, so all vetted vectors are semantic dups
     // of the seeded survivors — the survivor table stays ≈ corpus size
     // and per-batch cost must stay flat (work ∝ batch × bucket)
@@ -194,11 +193,12 @@ object StreamBench {
         "sb_sgate_corpus", "sb_sgate_fps", "sb_sgate_sigs", "sb_sgate_log",
         semantic = Some(graft.streaming.IngestGate.SemanticVet(
           embFor(b), "sb_sgate_surv", cents))))
-    // full gate + the r11 DSIR arm: a FIXED pre-trained model (the
+    // full gate + the DSIR arm: a FIXED pre-trained model (the
     // localCheckpointed 256-row bucket table) + a pinned median τ;
     // per-batch cost must stay flat (scoring is a scan-side feature
     // stream + broadcast model join — corpus size never enters the arm)
-    lazy val dsirModel = graft.ops.Sampling.dsirModel(docs).localCheckpoint()
+    lazy val dsirModel = graft.ops.Sampling.dsirModelFromFeats(
+      graft.ops.Sampling.dsirFeats(docs)).localCheckpoint()
     lazy val dsirTau = graft.ops.Sampling.dsirScore(docs, dsirModel)
       .agg(org.apache.spark.sql.functions.percentile_approx(
         col("dsir_weight"), org.apache.spark.sql.functions.lit(0.5),
@@ -211,7 +211,7 @@ object StreamBench {
       b => graft.streaming.IngestGate.admitBatch(replica(b),
         "sb_dgate_corpus", "sb_dgate_fps", "sb_dgate_sigs", "sb_dgate_log",
         dsir = Some(graft.streaming.IngestGate.DsirVet(dsirModel, dsirTau))))
-    // rank maintainer (r11): each batch appends a replica corpus's edge
+    // rank maintainer: each batch appends a replica corpus's edge
     // weights (same 20-host universe — weights grow, hosts don't) and
     // runs the warm 3-iteration refresh; per-batch cost must stay FLAT
     // (ingest ∝ batch, refresh over one-row-per-host tables — neither
@@ -233,7 +233,7 @@ object StreamBench {
         graft.ops.DupClusters.release(
           graft.streaming.RankStream.refresh(spark, "sb_rank_w", "sb_rank_snap"))
       })
-    // rank maintainer + in-loop WAL fold (r13): same load as
+    // rank maintainer + in-loop WAL fold: same load as
     // rank_maintainer but each batch also runs Wal.compactPartials
     // before the refresh — per-batch cost must stay FLAT while the WAL
     // is held at key cardinality (one row per (src, dst) + the
@@ -255,7 +255,7 @@ object StreamBench {
         graft.ops.DupClusters.release(
           graft.streaming.RankStream.refresh(spark, "sb_rankc_w", "sb_rankc_snap"))
       })
-    // drift maintainer (r11): each batch appends a replica corpus's
+    // drift maintainer: each batch appends a replica corpus's
     // per-source counters (same 20-source universe — counts grow,
     // sources don't) and runs the snapshot-rotating refresh; per-batch
     // cost must stay FLAT (ingest ∝ batch's source aggregate, refresh
@@ -274,14 +274,14 @@ object StreamBench {
         graft.ops.DupClusters.release(
           graft.streaming.DriftStream.refresh(spark, "sb_drift_s", "sb_drift_snap"))
       })
-    // mixture maintainer (r12; re-plan r13): each batch appends a
+    // mixture maintainer (+ re-plan): each batch appends a
     // replica corpus's per-source (n_docs, n_kept, n_tokens) mixture
     // partials (same 20-source universe — counts grow, sources don't)
     // and serves BOTH the audit and the waterfill RE-PLAN off the
     // merged partials; per-batch cost must stay FLAT (ingest ∝ batch's
     // source aggregate, audit + re-plan over #sources-row cards —
     // documents are never stored or rescanned by the maintainer)
-    // volume-trigger maintainer (r13): each batch lands a disjoint ~1%
+    // volume-trigger maintainer: each batch lands a disjoint ~1%
     // delete wave's per-list counters (deletes broadcast-join the FIXED
     // serving index, so ingest ∝ batch) and evaluates the signal off
     // the merged ≤ nlist-row counters + the fit-time list-size
@@ -305,7 +305,7 @@ object StreamBench {
           graft.streaming.AnnStream.mergedDeleteCounts(spark, "sb_ann_del"))
           .count()
       })
-    // composed maintenance tick (r14; + the r15 tombstone fold): each
+    // composed maintenance tick (+ the tombstone fold): each
     // batch lands new rank/mix partials, a disjoint delete wave and a
     // text-takedown wave, then ONE Maintenance.tick folds all four
     // WALs and evaluates the refit leg off the merged counters;
@@ -314,7 +314,7 @@ object StreamBench {
     // model-scale snapshots) and the tick itself adds only a
     // ≤ #jobs-row log append per call
     lazy val fitSnapB = graft.streaming.AnnStream.fitSnapshot(emb).localCheckpoint()
-    // r16: the text-model staleness leg rides the same tick — fit-time
+    // the text-model staleness leg rides the same tick — fit-time
     // feature-distribution snapshot (model-scale, checkpointed once)
     lazy val textSnapB = graft.streaming.ModelStream.fitSnapshot(docs).localCheckpoint()
     val tt = Seq("sb_tick_w", "sb_tick_mix", "sb_tick_del", "sb_tick_tomb",

@@ -17,16 +17,16 @@ object Stress {
     // repaying the 10+-minute document arms)
     val embOnly = args.drop(1).contains("embonly")
     // "mixonly" = just the mixture-planning arms (the embonly idea for
-    // the r12 waterfill/anneal family)
+    // the waterfill/anneal family)
     val mixOnly = args.drop(1).contains("mixonly")
     // "graphonly" = just the host-graph arms (rank + HITS) — the same
-    // A/B idea for the r13 graph additions
+    // A/B idea for the graph family
     val graphOnly = args.drop(1).contains("graphonly")
-    // core count from SPARK_GRAFT_CPUS (r17 — the Bench convention):
-    // the stress ladder doubles as the CORE-SCALING probe at a corpus
-    // size where work dominates overhead (VERDICT r16 #9 — the sf0.1
-    // battery's 8-vs-32 ratios only measure fixed plan/driver cost);
-    // shuffle partitions scale with the cores, never a local constant
+    // core count from SPARK_GRAFT_CPUS (the Bench convention): the
+    // stress ladder doubles as the CORE-SCALING probe at a corpus size
+    // where work dominates overhead (the sf0.1 battery's 8-vs-32 ratios
+    // only measure fixed plan/driver cost); shuffle partitions scale
+    // with the cores, never a local constant
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt
     val spark = GraftSession.builder(s"local[$cpus]", "stress")
       .config("spark.sql.shuffle.partitions", 2 * cpus).getOrCreate()
@@ -45,7 +45,7 @@ object Stress {
       val t0 = System.nanoTime(); val r = f
       println(f"[stress] $label: ${(System.nanoTime()-t0)/1e9}%.1f s = $r")
     }
-    // mixture planning (r12): one scan-side token aggregate + model-
+    // mixture planning: one scan-side token aggregate + model-
     // scale windows — cost must stay ∝ corpus scan as replicas grow
     // (the #sources-row waterfill is corpus-size-independent); the
     // curve's 4 β arms share ONE localCheckpointed aggregate, so the
@@ -63,8 +63,9 @@ object Stress {
       // host cardinality, so the 10 half-steps (incl. the
       // L1-normalizing window over the ≤ #hosts frame) must cost ≈ the
       // sf0.1 run + the one bigger initial weight aggregate
-      time("domain_hits")(DomainGraph.domainHits(
-        DomainGraph.syntheticEdges(docs)).count())
+      time("domain_hits")(DomainGraph.domainHitsFromWeights(
+        DomainGraph.syntheticEdges(docs).groupBy(col("src"), col("dst"))
+          .agg(count(lit(1)).as("w"))).count())
     }
     if (graphOnly) { graphArms(); spark.stop(); return }
     if (!embOnly) {
@@ -85,24 +86,32 @@ object Stress {
     time("weighted_sample")(graft.ops.Sampling.weightedSample(docs).count())
     mixArms(docs)
     time("simhash_pairs")(Dedup.simhashPairs(docs).count())
-    time("minhash_candidates")(Dedup.minhashCandidates(docs).count())
-    if (!noExact) time("ngram_jaccard")(Dedup.ngramJaccardPairs(docs).count())
-    // governance curve at its shipped default (dfCap=100, τ grid from
-    // 0.7): the cap bounds BOILERPLATE skew (a df-n shingle's C(n,2)
-    // fan-out), not honest duplication — this replica ladder's shared
-    // shingles sit below the cap by construction (df ≈ replicas), so
-    // the arm prices the curve's real mining cost on a duplicate-heavy
-    // corpus; same documented-quadratic family as ngram_jaccard, hence
-    // the same noexact skip (the LSH pipeline is the corpus-scale path)
-    if (!noExact) time("dedup_curve")(Dedup.dedupCurve(docs).count())
+    def candidates() = Dedup.minhashCandidatesFromSignatures(Dedup.minhashSignatures(docs))
+    time("minhash_candidates")(candidates().count())
+    if (!noExact) {
+      // one shingle index for the two exact arms, held for both and
+      // released after them; the capped index reads it three times
+      val index = Dedup.shingleIndexFrom(Dedup.shingled(docs)).persist()
+      val capped = Dedup.shingleIndexCapped(index, 100).persist()
+      time("ngram_jaccard")(Dedup.ngramJaccardPairsFromIndex(index).count())
+      // governance curve at the key's settings (dfCap=100, τ grid from
+      // 0.7): the cap bounds BOILERPLATE skew (a df-n shingle's C(n,2)
+      // fan-out), not honest duplication — this replica ladder's shared
+      // shingles sit below the cap by construction (df ≈ replicas), so
+      // the arm prices the curve's real mining cost on a
+      // duplicate-heavy corpus; same documented-quadratic family as
+      // ngram_jaccard, hence the same noexact skip (the LSH pipeline is
+      // the corpus-scale path)
+      time("dedup_curve")(Dedup.dedupCurveFromIndex(capped).count())
+      capped.unpersist(); index.unpersist()
+    }
     time("neardup_pipeline")(Dedup.nearDupPairs(docs).count())
     // CC closure over the LSH dedup graph: cost ∝ edges per round, and
     // the ROUND COUNT is the O(log n) claim — star-contraction rounds
     // must stay flat-ish as the corpus doubles (they track component
     // diameter, not corpus size)
     time("dup_clusters") {
-      val cc = graft.ops.DupClusters
-        .dupClusters(docs, Dedup.minhashCandidates(docs)).count()
+      val cc = graft.ops.DupClusters.dupClusters(docs, candidates()).count()
       s"$cc assigned, ${graft.ops.DupClusters.lastRounds} CC rounds"
     }
     // pHash near-dup clusters over the replicated synthetic media —
@@ -118,7 +127,7 @@ object Stress {
     // dup matrix: pair mining is the neardup_pipeline cost (bounded by
     // LSH collisions); the matrix adds two source joins + a
     // ≤ sources²-row aggregate — must track neardup_pipeline, not pairs²
-    time("dup_matrix")(Dedup.dupMatrix(docs).count())
+    time("dup_matrix")(Dedup.dupMatrixFromPairs(Dedup.nearDupPairs(docs), docs).count())
     // bm25: cost must stay ∝ corpus (scan-side tf/dl kernel + 1-row
     // stats broadcast + per-partition heaps) — replicas multiply the
     // scan, never the shuffle (top-k and stats are fixed-size)
@@ -146,13 +155,13 @@ object Stress {
       .repartition(2 * cpus)
     val nVec = embN.count()
     // the SCALING rule applied as code (Similarity.autoNlist): nlist
-    // grows ∝ vectors so bucket width stays ≈ targetBucket — the r9
-    // ladder CONFIRMED the quadratic blow-up when this knob was held
-    // fixed (embed_canopy 5.9 → 49.7 s at 2×); with auto sizing the
-    // same arms must go ≈ linear
+    // grows ∝ vectors so bucket width stays ≈ targetBucket — the ladder
+    // showed the quadratic blow-up with this knob held fixed
+    // (embed_canopy 5.9 → 49.7 s at 2×); with auto sizing the same arms
+    // must go ≈ linear
     val autoK = Similarity.autoNlist(nVec)
     println(s"[stress] embeddings: $nVec vectors, auto nlist: $autoK")
-    // r11 fit ladder: the two-level remediation of the quadratic flat
+    // fit ladder: the two-level remediation of the quadratic flat
     // fit. Per-iteration hier cost is O(fitN·√nlist·dim) with fitN
     // bounded by autoSampleDenom, so fit time must grow ≈ LINEARLY in
     // vectors even though nlist ∝ n; the two-level assignment of the
@@ -172,12 +181,11 @@ object Stress {
     // sub-centroid model broadcast-JOINS instead of inlining as a plan
     // literal), forced here below its threshold to A/B it against the
     // literal form on the same model: routing is spec-proven identical,
-    // this arm gives the regime its perf datapoint (the r11 verdict's
-    // missing ladder row)
+    // this arm gives the regime its perf datapoint
     time("ivf_assign_joined")(
       Similarity.twoLevelAssignJoined(embN, hier._1, hier._2)
         .groupBy("cluster").count().count())
-    // r13 refit ladder: the live-only rebuild (s_ann_refit's refit arm)
+    // refit ladder: the live-only rebuild (s_ann_refit's refit arm)
     // at scale — fit cost must track the hier arm (same recipe over the
     // ~3/4 live mass), and the recovery card must stay linear (3 batch
     // window passes + |panel| exact live scans; the boundary panel is
@@ -230,7 +238,8 @@ object Stress {
     // replica groups must collapse to ≈ the original vector count
     time("semantic_dedup") {
       val cents = Similarity.ivfCentroids(embN, k = autoK, iters = 1, sampleDenom = 4)
-      Dedup.semanticDedup(embN, cents, tau = 0.99, nAssign = 2).count()
+      Dedup.semanticDedupFromPairs(embN,
+        Dedup.embedNearDupClusters(embN, cents, tau = 0.99, nAssign = 2)).count()
     }
     // canopy kNN graph over the replicated vectors: candidate work is
     // O(Σ bucket²) with buckets sized by nlist — auto-scaled k keeps
@@ -238,7 +247,7 @@ object Stress {
     // in vectors (never vectors²)
     time("knn_ivf") {
       val cents = Similarity.ivfCentroids(embN, k = autoK, iters = 1, sampleDenom = 4)
-      Similarity.knnJoinCanopy(embN, cents).count()
+      Similarity.knnJoinCanopyFromPairs(Similarity.canopyCandidatePairs(embN, cents)).count()
     }
     spark.stop()
   }

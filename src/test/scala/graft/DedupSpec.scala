@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -12,6 +13,17 @@ class DedupSpec extends SparkSpec {
 
   private lazy val docs = Tables(spark, TestSpark.sf0001).documents
   private lazy val embs = Tables(spark, TestSpark.sf0001).embeddings
+
+  // the in-plan forms of what the served keys read from the Catalog
+  private def index(d: DataFrame, dfCap: Option[Int] = None): DataFrame = {
+    val inv = Dedup.shingleIndexFrom(Dedup.shingled(d))
+    dfCap.fold(inv)(Dedup.shingleIndexCapped(inv, _))
+  }
+  private def ngramPairs(d: DataFrame, tau: Double = 0.8,
+                         dfCap: Option[Int] = None): DataFrame =
+    Dedup.ngramJaccardPairsFromIndex(index(d, dfCap), tau)
+  private def candidates(d: DataFrame): DataFrame =
+    Dedup.minhashCandidatesFromSignatures(Dedup.minhashSignatures(d))
 
   test("exactDedup: groups cover all docs, keep_id is the minimum of its group") {
     val out = Dedup.exactDedup(docs)
@@ -54,14 +66,14 @@ class DedupSpec extends SparkSpec {
   }
 
   test("ngramJaccardPairs: exact jaccard, symmetric-free (a<b), finds the planted pairs") {
-    val pairs = Dedup.ngramJaccardPairs(docs, tau = 0.8).collect()
+    val pairs = ngramPairs(docs, tau = 0.8).collect()
     assert(pairs.length == 28)
     assert(pairs.forall(r => r.getAs[Long]("doc_a") < r.getAs[Long]("doc_b")))
     assert(pairs.forall(r => r.getAs[Double]("jaccard") >= 0.8 && r.getAs[Double]("jaccard") <= 1.0))
   }
 
   test("nearDupPairs (candidates+verify) equals the exact inverted-index result") {
-    val exact = Dedup.ngramJaccardPairs(docs, tau = 0.8).collect()
+    val exact = ngramPairs(docs, tau = 0.8).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val pipeline = Dedup.nearDupPairs(docs, tau = 0.8).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
@@ -69,9 +81,9 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhashCandidates: recalls every true near-dup pair (J≈0.98 ⇒ P(candidate)≈1)") {
-    val truth = Dedup.ngramJaccardPairs(docs, tau = 0.8)
+    val truth = ngramPairs(docs, tau = 0.8)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val cand = Dedup.minhashCandidates(docs)
+    val cand = candidates(docs)
       .collect().map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet
     assert(truth.subsetOf(cand), s"missed: ${truth -- cand}")
     // banding prunes: candidates must be far fewer than all ~125k pairs
@@ -111,7 +123,7 @@ class DedupSpec extends SparkSpec {
     Dedup.minhashSignatures(docs).write.mode("overwrite").parquet(dir)
     val fromTable = Dedup.minhashCandidatesFromSignatures(spark.read.parquet(dir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val inline = Dedup.minhashCandidates(docs)
+    val inline = candidates(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fromTable == inline)
   }
@@ -121,7 +133,7 @@ class DedupSpec extends SparkSpec {
     val excerpt = (50 to 80).map(i => s"w$i").mkString(" ")   // contiguous slice of `long`
     val other = (1000 to 1200).map(i => s"v$i").mkString(" ")
     val df = Seq((1L, long), (2L, excerpt), (3L, other)).toDF("doc_id", "text")
-    val out = Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(df, None)).collect()
+    val out = Dedup.containmentPairsFromIndex(index(df)).collect()
       .map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"),
         r.getAs[Double]("containment"), r.getAs[Double]("jaccard")))
     assert(out.length == 1)
@@ -129,10 +141,10 @@ class DedupSpec extends SparkSpec {
     assert((a, b) == ((1L, 2L)))
     assert(c == 1.0, "every shingle of the excerpt appears in the source doc")
     assert(j < 0.8, s"jaccard ($j) must miss the excerpt — that is the operator's point")
-    assert(Dedup.ngramJaccardPairs(df, tau = 0.8).collect().isEmpty)
+    assert(ngramPairs(df, tau = 0.8).collect().isEmpty)
     // corpus invariants: containment >= jaccard on every pair, thresholds respected
     val corpus =
-      Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(docs, None)).collect()
+      Dedup.containmentPairsFromIndex(index(docs)).collect()
     assert(corpus.nonEmpty)
     corpus.foreach { r =>
       assert(r.getAs[Double]("containment") >= r.getAs[Double]("jaccard"))
@@ -154,13 +166,13 @@ class DedupSpec extends SparkSpec {
       .toDF("doc_id", "text")
     // θ=0 exposes the raw pair set: uncapped pays the C(50,2) fan-out...
     val uncapped =
-      Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(df, None), theta = 0.0)
+      Dedup.containmentPairsFromIndex(index(df), theta = 0.0)
       .filter($"doc_a" >= 100L).count()
     assert(uncapped == 50L * 49 / 2)
     // ...capped: the df=50 shingle is anti-joined out, boilerplate-only
     // pairs share nothing and vanish — pair work is bounded
     val capped =
-      Dedup.containmentPairsFromIndex(Dedup.shingleInvertedIndex(df, Some(10)), theta = 0.0)
+      Dedup.containmentPairsFromIndex(index(df, Some(10)), theta = 0.0)
     assert(capped.filter($"doc_a" >= 100L).count() == 0)
     // the clean excerpt pair is untouched by the cap: same containment,
     // same jaccard (its shingles are all below the cap)
@@ -170,10 +182,10 @@ class DedupSpec extends SparkSpec {
     // corpus-level: no sf0.001 shingle reaches df 100, so the shipped
     // dfCap=100 key is measure-identical to the uncapped form there
     val cappedCorpus = Dedup.containmentPairsFromIndex(
-        Dedup.shingleInvertedIndex(docs, Some(100))).collect()
+        index(docs, Some(100))).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
     val fullCorpus = Dedup.containmentPairsFromIndex(
-        Dedup.shingleInvertedIndex(docs, None)).collect()
+        index(docs)).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3))).toSet
     assert(cappedCorpus == fullCorpus)
   }
@@ -187,7 +199,7 @@ class DedupSpec extends SparkSpec {
     val base = (1 to 39).map(i => s"word$i").mkString(" ")
     val df = (boiler ++ Seq((1L, base + " end"), (2L, base + " tail end")))
       .toDF("doc_id", "text")                      // J = 37/40 = 0.925
-    val curve = Dedup.dedupCurve(df).collect()
+    val curve = Dedup.dedupCurveFromIndex(index(df, Some(100))).collect()
       .map(r => r.getAs[Double]("tau") -> r.getAs[Long]("n_pairs")).toMap
     assert(curve == Map(0.7 -> 1L, 0.8 -> 1L, 0.9 -> 1L),
       "only the clean near-dup pair per tau; no boilerplate-only pairs")
@@ -215,13 +227,13 @@ class DedupSpec extends SparkSpec {
   }
 
   test("fuzzyPairs: planted near-dups found, distances within bound, no false matches") {
-    val pairs = Dedup.fuzzyPairsFromCandidates(docs, Dedup.minhashCandidates(docs), maxDist = 10)
+    val pairs = Dedup.fuzzyPairsFromCandidates(docs, candidates(docs), maxDist = 10)
       .collect()
     assert(pairs.nonEmpty)
     assert(pairs.forall(r => r.getAs[Int]("edit_distance") >= 0 &&
       r.getAs[Int]("edit_distance") <= 10))
     // every fuzzy pair is also a high-jaccard near-dup on this corpus
-    val truth = Dedup.ngramJaccardPairs(docs, tau = 0.5)
+    val truth = ngramPairs(docs, tau = 0.5)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.map(r => (r.getAs[Long]("doc_a"), r.getAs[Long]("doc_b"))).toSet.subsetOf(truth))
   }
@@ -244,7 +256,7 @@ class DedupSpec extends SparkSpec {
     val shuffled = docs.repartition(7)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     assert(rows(Dedup.exactDedup(shuffled)) == rows(Dedup.exactDedup(docs)))
-    assert(rows(Dedup.ngramJaccardPairs(shuffled)) == rows(Dedup.ngramJaccardPairs(docs)))
+    assert(rows(ngramPairs(shuffled)) == rows(ngramPairs(docs)))
     assert(rows(graft.ops.TextAnalysis.tokenStats(shuffled)) ==
       rows(graft.ops.TextAnalysis.tokenStats(docs)))
   }
@@ -256,12 +268,12 @@ class DedupSpec extends SparkSpec {
       (3L, "common shingle here plus ccc"),
       (4L, "totally different text entirely now")).toDF("doc_id", "text")
     // cap=2: "common shingle here" (df=3) is dropped, pairs lose that overlap
-    val uncapped = Dedup.ngramJaccardPairs(skewed, tau = 0.1, dfCap = None).count()
-    val capped = Dedup.ngramJaccardPairs(skewed, tau = 0.1, dfCap = Some(2)).count()
+    val uncapped = ngramPairs(skewed, tau = 0.1, dfCap = None).count()
+    val capped = ngramPairs(skewed, tau = 0.1, dfCap = Some(2)).count()
     assert(capped <= uncapped)
     // the anti-join keeps sub-cap overlap: docs 1-3 still share "here plus"
     // ... only through sub-cap shingles, so capped jaccard is well-defined
-    val cappedPairs = Dedup.ngramJaccardPairs(skewed, tau = 0.0001, dfCap = Some(2)).collect()
+    val cappedPairs = ngramPairs(skewed, tau = 0.0001, dfCap = Some(2)).collect()
     assert(cappedPairs.forall(r => r.getAs[Double]("jaccard") <= 1.0))
   }
 
@@ -280,7 +292,7 @@ class DedupSpec extends SparkSpec {
     // 12-token quote → 12−8+1 = 5 distinct 8-gram runs shared
     assert(subs(0).getAs[Long]("n_shared_runs") == 5L)
     // whole-doc jaccard at the near-dup threshold misses this pair entirely
-    assert(Dedup.ngramJaccardPairs(df, tau = 0.8).count() == 0)
+    assert(ngramPairs(df, tau = 0.8).count() == 0)
     // dfCap guard: a run present in EVERY doc is boilerplate, excluded
     val boiler = (1L to 150L).map(i => (i, s"common boilerplate header shared by all docs everywhere $i unique"))
       .toDF("doc_id", "text")
@@ -412,7 +424,8 @@ class DedupSpec extends SparkSpec {
 
   test("semanticDedup (IVF blocking): one min-id survivor per planted replica group") {
     val cents = graft.ops.Similarity.ivfCentroids(replicaEmbs, k = 8, iters = 2)
-    val out = Dedup.semanticDedup(replicaEmbs, cents, tau = 0.8, nAssign = 2).collect()
+    val out = Dedup.semanticDedupFromPairs(replicaEmbs,
+      Dedup.embedNearDupClusters(replicaEmbs, cents, tau = 0.8, nAssign = 2)).collect()
     assert(out.length == 40, s"expected 40 survivors, got ${out.length}")
     // survivor of group g is its min vec_id (= 3g), and every group fully merged
     assert(out.map(_.getAs[Long]("vec_id")).toSet ==
@@ -490,7 +503,8 @@ class DedupSpec extends SparkSpec {
 
   test("crossSemanticDedup: batch replicas rejected against survivors, novel vectors pass") {
     val cents = graft.ops.Similarity.ivfCentroids(replicaEmbs, k = 8, iters = 2)
-    val keep = Dedup.semanticDedup(replicaEmbs, cents, tau = 0.8, nAssign = 2)
+    val keep = Dedup.semanticDedupFromPairs(replicaEmbs,
+      Dedup.embedNearDupClusters(replicaEmbs, cents, tau = 0.8, nAssign = 2))
       .select("vec_id")
     val survVecs = replicaEmbs.join(keep, Seq("vec_id"), "left_semi")
     val rnd = new scala.util.Random(23)
@@ -528,7 +542,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("dedupCurve: monotone in tau, consistent with per-threshold pair counts") {
-    val out = Dedup.dedupCurve(docs).collect()
+    val out = Dedup.dedupCurveFromIndex(index(docs, Some(100))).collect()
       .map(r => r.getDouble(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     assert(out.nonEmpty)
     // tighter τ can only shrink both counts
@@ -536,9 +550,9 @@ class DedupSpec extends SparkSpec {
     taus.zip(taus.tail).foreach { case (lo, hi) =>
       assert(out(lo)._1 >= out(hi)._1 && out(lo)._2 >= out(hi)._2)
     }
-    // each τ row equals an independent ngramJaccardPairs run at that τ
+    // each τ row equals an independent pair run at that τ over the uncapped index
     taus.foreach { tau =>
-      val pairs = Dedup.ngramJaccardPairs(docs, tau).collect()
+      val pairs = ngramPairs(docs, tau).collect()
       assert(out(tau)._1 == pairs.length, s"n_pairs at $tau")
       val docsAffected = pairs.flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
       assert(out(tau)._2 == docsAffected.size, s"n_docs at $tau")
@@ -633,13 +647,13 @@ class DedupSpec extends SparkSpec {
       (3L, "y", "alpha beta gamma delta epsilon"),  // cross-source copy
       (4L, "y", "totally different words over here now")
     ).toDF("doc_id", "source", "text")
-    val out = Dedup.dupMatrix(d).collect()
+    val out = Dedup.dupMatrixFromPairs(Dedup.nearDupPairs(d), d).collect()
       .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3)))).toMap
     // pairs (1,2) → (x,x) j=1; (1,3) and (2,3) → (x,y) j=1
     assert(out == Map(("x", "x") -> ((1L, 1.0)), ("x", "y") -> ((2L, 1.0))))
     // corpus-level conservation on real docs: matrix pair mass equals
     // the verified near-dup pair count, and means sit in [0.8, 1]
-    val full = Dedup.dupMatrix(docs).collect()
+    val full = Dedup.dupMatrixFromPairs(Dedup.nearDupPairs(docs), docs).collect()
     val matrixPairs = full.map(_.getLong(2)).sum
     assert(matrixPairs == Dedup.nearDupPairs(docs).count())
     full.foreach { r =>
@@ -715,9 +729,9 @@ class DedupSpec extends SparkSpec {
       "exact hash: blind")
     assert(Dedup.exactDedupCanonical(planted).filter(col("n_dups") > 1).count() == 0,
       "canonical hash: blind")
-    assert(Dedup.minhashCandidates(planted).count() == 0, "MinHash LSH: blind")
+    assert(candidates(planted).count() == 0, "MinHash LSH: blind")
     assert(Dedup.simhashPairs(planted).count() == 0, "SimHash: blind")
-    assert(Dedup.ngramJaccardPairs(planted).count() == 0,
+    assert(ngramPairs(planted).count() == 0,
       "shingle Jaccard: blind (zero shared shingles, no candidate at any tau)")
     // even the script classifier splits the pair across scripts: the
     // two sides read as DIFFERENT languages, so any same-language

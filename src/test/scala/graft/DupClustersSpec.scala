@@ -13,6 +13,9 @@ class DupClustersSpec extends SparkSpec {
 
   private lazy val docs = Tables(spark, TestSpark.sf0001).documents
 
+  private def candidates(d: org.apache.spark.sql.DataFrame) =
+    Dedup.minhashCandidatesFromSignatures(Dedup.minhashSignatures(d))
+
   private def assignMap(pairs: Seq[(Long, Long)], vertices: Seq[Long]): Map[Long, Long] =
     DupClusters.connectedComponents(
         pairs.toDF("doc_a", "doc_b"), vertices.toDF("doc_id"))
@@ -70,15 +73,16 @@ class DupClustersSpec extends SparkSpec {
       (1L, "hi"), (2L, "hi"), (7L, " HI "),   // <3 tokens: no shingles, still exact dups
       (3L, "totally unrelated text about completely other things")
     ).toDF("doc_id", "text")
-    val edges = DupClusters.dupEdges(d, Dedup.minhashCandidates(d))
+    val edges = DupClusters.dupEdges(d, candidates(d))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(edges == Set((1L, 2L), (1L, 7L))) // hub = min id, one edge per member
   }
 
   test("corpus clusters: every near-dup pair lands in one cluster, roots are minima") {
-    val pairs = Dedup.ngramJaccardPairs(docs, tau = 0.8)
+    val pairs = Dedup.ngramJaccardPairsFromIndex(
+        Dedup.shingleIndexFrom(Dedup.shingled(docs)), tau = 0.8)
       .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
-    val assign = DupClusters.dupClusters(docs, Dedup.minhashCandidates(docs))
+    val assign = DupClusters.dupClusters(docs, candidates(docs))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     assert(assign.size == docs.count())
     pairs.foreach { case (a, b) =>
@@ -107,7 +111,7 @@ class DupClustersSpec extends SparkSpec {
 
   test("funnel: stages nest and match the directly-computed survivor sets") {
     import graft.ops.{Funnel, TextAnalysis}
-    val assign = DupClusters.dupClusters(docs, Dedup.minhashCandidates(docs))
+    val assign = DupClusters.dupClusters(docs, candidates(docs))
     val out = Funnel.funnel(docs, assign).collect()
       .map(r => r.getInt(0) -> (r.getString(1), r.getLong(2))).toMap
     assert(out(0)._1 == "total" && out(0)._2 == docs.count())
@@ -127,7 +131,7 @@ class DupClustersSpec extends SparkSpec {
   }
 
   test("clusterSizes: conserves every doc and matches a direct histogram") {
-    val assign = DupClusters.dupClusters(docs, Dedup.minhashCandidates(docs))
+    val assign = DupClusters.dupClusters(docs, candidates(docs))
     val sizes = DupClusters.clusterSizes(assign).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // conservation: Σ n_docs = corpus size, Σ n_clusters = #components
@@ -141,7 +145,7 @@ class DupClustersSpec extends SparkSpec {
   }
 
   test("clusterKeep: exactly one survivor per cluster, min doc_id wins") {
-    val assign = DupClusters.dupClusters(docs, Dedup.minhashCandidates(docs))
+    val assign = DupClusters.dupClusters(docs, candidates(docs))
     val kept = DupClusters.clusterKeep(docs, assign)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     val byCluster = assign.collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -169,7 +173,7 @@ class DupClustersSpec extends SparkSpec {
       s"argmax per cluster with null-last + min-id fallback, got $out")
     // corpus-level: exactly one survivor per cluster, and every
     // survivor's score is the max of its cluster's scored members
-    val corpusAssign = DupClusters.dupClusters(docs, graft.ops.Dedup.minhashCandidates(docs))
+    val corpusAssign = DupClusters.dupClusters(docs, candidates(docs))
     val qs = graft.ops.TextAnalysis.qualityModelScores(docs)
     val kq = DupClusters.clusterKeepQuality(docs, corpusAssign, qs).collect()
     assert(kq.length == corpusAssign.select("cluster_id").distinct().count())

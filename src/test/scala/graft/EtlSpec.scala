@@ -151,7 +151,7 @@ class EtlSpec extends SparkSpec {
   test("extractFromJsonFiles: distributed text scan parses page files") {
     val dir = java.nio.file.Files.createTempDirectory("graft-json")
     java.nio.file.Files.writeString(dir.resolve("page0.json"), payload + "\n" + payload)
-    val out = VehicleFeed.extractFromJsonFiles(spark, dir.toString)
+    val out = VehicleFeed.extract(spark.read.textFile(dir.toString))
     assert(out.count() == 2)
     assert(out.select("id").distinct().collect()(0).getString(0) == "test-vehicle-1")
   }

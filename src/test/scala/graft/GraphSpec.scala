@@ -9,6 +9,11 @@ import graft.ops.DomainGraph
 class GraphSpec extends SparkSpec {
   import spark.implicits._
 
+  // HITS over an edge list: one weight per (src, dst)
+  private def hits(edges: org.apache.spark.sql.DataFrame) =
+    DomainGraph.domainHitsFromWeights(
+      edges.groupBy($"src", $"dst").agg(org.apache.spark.sql.functions.count("*").as("w")))
+
   test("domainRank: symmetric 2-cycle is the uniform fixpoint") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     val r = DomainGraph.domainRank(edges).collect()
@@ -153,7 +158,7 @@ class GraphSpec extends SparkSpec {
 
   test("domainHits: symmetric 2-cycle is the uniform fixpoint for both scores") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
-    val got = DomainGraph.domainHits(edges).collect()
+    val got = hits(edges).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     assert(got == Map("a" -> ((0.5, 0.5)), "b" -> ((0.5, 0.5))))
   }
@@ -163,7 +168,7 @@ class GraphSpec extends SparkSpec {
     // better hub; a1 (linked by both hubs) the better authority; pure
     // hubs carry authority 0, pure authorities hub 0
     val edges = Seq(("h1", "a1"), ("h1", "a2"), ("h2", "a1")).toDF("src", "dst")
-    val got = DomainGraph.domainHits(edges).collect()
+    val got = hits(edges).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     assert(got.keySet == Set("h1", "h2", "a1", "a2"))
     assert(got("h1")._1 > got("h2")._1 && got("h2")._1 > 0.0)
@@ -177,7 +182,7 @@ class GraphSpec extends SparkSpec {
   test("domainHits: matches a JVM L1-normalized HITS reference within round-6 slack") {
     val rnd = new scala.util.Random(11)
     val es = Seq.fill(200)((s"h${rnd.nextInt(12)}", s"h${rnd.nextInt(12)}"))
-    val got = DomainGraph.domainHits(es.toDF("src", "dst")).collect()
+    val got = hits(es.toDF("src", "dst")).collect()
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     val w = es.groupBy(identity).view.mapValues(_.size.toDouble).toMap
     val nodes = es.flatMap(e => Seq(e._1, e._2)).distinct

@@ -740,7 +740,9 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("mixReport: realized fractions reconcile with the sampler exactly; targets echo the declared rates") {
-    val report = Sampling.mixReport(docs, Sampling.MixRates, Sampling.MixDefault).collect()
+    val report = Sampling.mixReportFromCards(
+        Sampling.mixturePartials(docs, Sampling.MixRates, Sampling.MixDefault),
+        Sampling.MixRates, Sampling.MixDefault).collect()
       .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5)))).toMap
     // the report's kept counts must equal the ACTUAL sampler output

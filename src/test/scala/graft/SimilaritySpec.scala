@@ -111,7 +111,8 @@ class SimilaritySpec extends SparkSpec {
   test("annLsh: returns candidates whose cosine matches brute force ranking") {
     val brute = Similarity.annTopK(embs, queryVecId = 0L, k = 500).collect()
       .map(r => r.getAs[Long]("vec_id") -> r.getAs[Double]("cos_sim")).toMap
-    val lsh = Similarity.annLsh(embs, queryVecId = 0L, k = 10).collect()
+    val lsh = Similarity.annLshFromSignatures(Similarity.withSignatures(embs),
+      queryVecId = 0L, k = 10).collect()
     assert(lsh.nonEmpty, "query bucket + multi-probe produced no candidates")
     // every LSH hit's cosine agrees with the brute-force computation
     lsh.foreach { r =>
@@ -650,7 +651,8 @@ class SimilaritySpec extends SparkSpec {
     (0L until 60L).foreach(id => assert(exact(id) == mates(id),
       s"exact kNN: $id's top-2 are not its group-mates"))
     val cents = Similarity.ivfCentroids(knnReplicaEmbs, k = 8, iters = 2)
-    val canopy = topTwo(Similarity.knnJoinCanopy(knnReplicaEmbs, cents, k = 2))
+    val canopy = topTwo(Similarity.knnJoinCanopyFromPairs(
+      Similarity.canopyCandidatePairs(knnReplicaEmbs, cents), k = 2))
     (0L until 60L).foreach(id => assert(canopy(id) == mates(id),
       s"canopy kNN: $id's top-2 are not its group-mates"))
   }
@@ -1399,21 +1401,25 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("annMrlServe: degenerate settings recover annTopK exactly; funnel is exchange-free") {
+    // the s_ann_mrl serve over an in-plan prefix of `shortDim` coordinates
+    def serve(shortDim: Int, shortlist: Int) = Similarity.annMrlServeFromPrefix(
+      Similarity.mrlPrefixProjection(embs, shortDim), embs, 0L, k = 10, shortlist = shortlist)
     val exact = Similarity.annTopK(embs, 0L, 10).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"), r.getAs[Double]("cos_sim"))).toSeq
     // shortlist ≥ corpus: stage 1 keeps everything, the rerank IS annTopK
-    val wide = Similarity.annMrlServe(embs, 0L, k = 10, shortDim = 16, shortlist = 100000)
+    val wide = serve(shortDim = 16, shortlist = 100000)
       .collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"), r.getAs[Double]("cos_sim"))).toSeq
     assert(wide == exact)
     // shortDim = D: stage-1 order is already the exact order, and the
     // two emitted cosines coincide per hit
-    val fullDim = Similarity.annMrlServe(embs, 0L, k = 10, shortDim = 64, shortlist = 10).collect()
+    val fullDim = serve(shortDim = 64, shortlist = 10).collect()
     assert(fullDim.map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"),
       r.getAs[Double]("cos_sim"))).toSeq == exact)
     fullDim.foreach(r =>
       assert(r.getAs[Double]("cos_sim") == r.getAs[Double]("cos_short"), r.toString))
-    // production settings: k rows, both stages TakeOrdered, zero shuffles
-    val df = Similarity.annMrlServe(embs)
+    // production settings (the s_ann_mrl key): k rows, both stages
+    // TakeOrdered, zero shuffles
+    val df = serve(shortDim = 16, shortlist = 50)
     val rows = df.collect()
     assert(rows.length == 10)
     val plan = df.queryExecution.executedPlan.toString

@@ -294,10 +294,11 @@ class StoreSpec extends SparkSpec {
     // the read really is the stored table
     assert(prefixed.queryExecution.analyzed.toString.contains("t_mrl_prefix"))
     // bit-identical serve off either shape (the stored slice carries
-    // exactly the floats the scan-side slice computes)
+    // exactly the floats the scan-side slice computes): the stored tier
+    // against the s_ann_mrl key's in-plan prefix of the one table
     val fromStore = Similarity.annMrlServeFromPrefix(prefixed, emb)
       .collect().map(_.toString).sorted.toSeq
-    val single = Similarity.annMrlServe(emb)
+    val single = SparkEntry.queries("s_ann_mrl")(spark, TestSpark.sf0001)
       .collect().map(_.toString).sorted.toSeq
     assert(fromStore == single, "stored-prefix serve must equal the single-table serve")
     // and off the in-session fallback projection too

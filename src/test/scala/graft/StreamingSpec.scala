@@ -25,6 +25,18 @@ class StreamingSpec extends SparkSpec {
   private lazy val batchVehicles =
     VehicleFeed.fromEvents(graft.core.Tables(spark, TestSpark.sf0001).events)
 
+  // the batch d_mix_report and t_corpus_drift cards over in-hand frames
+  private def batchMixReport(docs: org.apache.spark.sql.DataFrame,
+                             rates: Map[String, Double]) = {
+    import graft.ops.Sampling.{MixDefault, mixReportFromCards, mixturePartials}
+    mixReportFromCards(mixturePartials(docs, rates, MixDefault), rates, MixDefault)
+  }
+  private def batchDrift(prev: org.apache.spark.sql.DataFrame,
+                         cur: org.apache.spark.sql.DataFrame) = {
+    import graft.ops.TextAnalysis.{corpusDriftFromCards, sourceCard}
+    corpusDriftFromCards(sourceCard(prev), sourceCard(cur))
+  }
+
   test("ingest: streaming derivation matches the batch derivation") {
     val stream = VehicleStream.ingest(spark, mkSourceDir("ingest"))
     assert(stream.isStreaming)
@@ -270,10 +282,11 @@ class StreamingSpec extends SparkSpec {
       assert(streamed.count() == embs.count())
       assert(streamed.exceptAll(batch).count() == 0)
       assert(batch.exceptAll(streamed).count() == 0)
-      // and serving off the streamed index gives the exact annLsh answer
+      // and serving off the streamed index gives the exact in-plan answer
       val served = Similarity.annLshFromSignatures(spark.table("ann_sigs"))
         .collect().map(_.toString).toSeq
-      val direct = Similarity.annLsh(embs).collect().map(_.toString).toSeq
+      val direct = Similarity.annLshFromSignatures(Similarity.withSignatures(embs))
+        .collect().map(_.toString).toSeq
       assert(served == direct)
     } finally q.stop()
   }
@@ -352,7 +365,7 @@ class StreamingSpec extends SparkSpec {
     // the audit serves the full corpus exactly (it never reads tokens)
     val served = MixStream.report(spark, "t_mix_legacy", rates, Sampling.MixDefault)
       .collect().map(_.toString).sorted.toSeq
-    assert(served == Sampling.mixReport(docs, rates, Sampling.MixDefault)
+    assert(served == batchMixReport(docs, rates)
       .collect().map(_.toString).sorted.toSeq)
     // the re-plan refuses to serve over NULL legacy capacity — loud,
     // never silently under-allocated
@@ -971,7 +984,7 @@ class StreamingSpec extends SparkSpec {
     // production shape — the gate applies it to docs it never saw),
     // plus a planted single-token doc with NO bigram signal
     val corpus = graft.core.Tables(spark, TestSpark.sf0001).documents
-    val model = Sampling.dsirModel(corpus).localCheckpoint()
+    val model = Sampling.dsirModelFromFeats(Sampling.dsirFeats(corpus)).localCheckpoint()
     val batch = corpus.filter($"doc_id" >= 10L && $"doc_id" < 40L)
       .unionByName(Seq((9999L, "solo", "en", "srcx", 4L))
         .toDF("doc_id", "text", "lang", "source", "n_chars"))
@@ -1793,14 +1806,14 @@ class StreamingSpec extends SparkSpec {
     DriftStream.ingestBatch(pre.filter(pmod($"doc_id", lit(2)) === 0), 0L, "t_drift_s")
     DriftStream.ingestBatch(pre.filter(pmod($"doc_id", lit(2)) =!= 0), 1L, "t_drift_s")
     val cold = DriftStream.refresh(spark, "t_drift_s", "t_drift_snap")
-    assert(show(cold) == show(TextAnalysis.corpusDrift(docs.filter(lit(false)), pre)),
+    assert(show(cold) == show(batchDrift(docs.filter(lit(false)), pre)),
       "cold bootstrap must equal the batch drift card against an empty snapshot")
     // stream today's delta, then one warm refresh — must equal the
     // batch t_corpus_drift card bit-for-bit (summed partials are the
     // same integers the batch aggregate counts directly)
     DriftStream.ingestBatch(delta, 2L, "t_drift_s")
     val card = DriftStream.refresh(spark, "t_drift_s", "t_drift_snap")
-    assert(show(card) == show(TextAnalysis.corpusDrift(pre, docs)),
+    assert(show(card) == show(batchDrift(pre, docs)),
       "streamed warm refresh must equal the batch t_corpus_drift card")
     // the rotated snapshot now carries today's card (one row per source)
     assert(show(fresh("t_drift_snap").select($"source", $"n_docs")) ==
@@ -1822,7 +1835,7 @@ class StreamingSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     spark.catalog.refreshTable("t_drift2_s")
     val cold2 = DriftStream.refresh(spark, "t_drift2_s", "t_drift2_snap")
-    assert(show(cold2) == show(TextAnalysis.corpusDrift(docs.filter(lit(false)), docs)),
+    assert(show(cold2) == show(batchDrift(docs.filter(lit(false)), docs)),
       "streamed counters must serve the exact batch card")
     dropGateTables("t_drift2_s", "t_drift2_snap")
   }
@@ -1843,7 +1856,7 @@ class StreamingSpec extends SparkSpec {
     MixStream.ingestBatch(docs.filter(pmod($"doc_id", lit(3)) === 0), 1L, "t_mix_p", rates, Sampling.MixDefault)
     MixStream.ingestBatch(docs.filter(pmod($"doc_id", lit(3)) === 1), 2L, "t_mix_p", rates, Sampling.MixDefault)
     val served = MixStream.report(spark, "t_mix_p", rates, Sampling.MixDefault)
-    assert(show(served) == show(Sampling.mixReport(docs, rates, Sampling.MixDefault)),
+    assert(show(served) == show(batchMixReport(docs, rates)),
       "served audit must equal the batch d_mix_report")
     // the RE-PLAN off the same partials table: bit-equal to the batch
     // d_mix_waterfill planner over the same documents (additive token
@@ -1855,7 +1868,7 @@ class StreamingSpec extends SparkSpec {
     dropGateTables("t_mix_p")
     MixStream.ingestBatch(docs.filter(pmod($"doc_id", lit(3)) === 2), 0L, "t_mix_p", rates, Sampling.MixDefault)
     assert(show(MixStream.report(spark, "t_mix_p", rates, Sampling.MixDefault)) ==
-      show(Sampling.mixReport(docs.filter(pmod($"doc_id", lit(3)) === 2), rates, Sampling.MixDefault)),
+      show(batchMixReport(docs.filter(pmod($"doc_id", lit(3)) === 2), rates)),
       "mid-stream report must equal the batch audit over the ingested prefix")
     // crash replay: a re-delivered batch_id is a no-op on the WAL
     val before = fresh("t_mix_p").count()
@@ -1873,7 +1886,7 @@ class StreamingSpec extends SparkSpec {
     try q.processAllAvailable() finally q.stop()
     spark.catalog.refreshTable("t_mix2_p")
     assert(show(MixStream.report(spark, "t_mix2_p", rates, Sampling.MixDefault)) ==
-      show(Sampling.mixReport(docs, rates, Sampling.MixDefault)),
+      show(batchMixReport(docs, rates)),
       "streamed partials must serve the exact batch audit")
     assert(show(MixStream.waterfillPlan(spark, "t_mix2_p")) ==
       show(Sampling.mixWaterfill(docs)),
@@ -1955,7 +1968,8 @@ class StreamingSpec extends SparkSpec {
         DomainGraph.syntheticEdges(docs.filter(pmod($"doc_id", lit(3)) === (2 - k))),
         k.toLong, "t_hits_w", buckets = 4)
     assert(show(RankStream.hitsCard(spark, "t_hits_w")) ==
-      show(DomainGraph.domainHits(e)),
+      show(DomainGraph.domainHitsFromWeights(
+        e.groupBy($"src", $"dst").agg(count(lit(1)).as("w")))),
       "streamed weight partials must serve the exact batch HITS card")
     dropGateTables("t_hits_w")
   }
@@ -1999,7 +2013,7 @@ class StreamingSpec extends SparkSpec {
     // a derived card (HITS) served off the twice-compacted table is
     // still the batch card over the same edge multiset
     assert(show(RankStream.hitsCard(spark, "t_cw_w")) ==
-      show(DomainGraph.domainHits(expected)),
+      show(DomainGraph.domainHitsFromWeights(expectedW)),
       "derived cards must be unchanged by compaction")
     // mixture maintainer: a legacy (pre-token) row poisons its source's
     // folded n_tokens to NULL — the audit survives bit-for-bit, the

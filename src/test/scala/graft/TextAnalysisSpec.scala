@@ -1124,7 +1124,8 @@ class TextAnalysisSpec extends SparkSpec {
       .toDF("source", "n_chars")                       // totals: 36 docs
     val cur = (Seq(("A", 10), ("A", 20), ("B", 7), ("B", 9), ("C", 5)) ++ tRows)
       .toDF("source", "n_chars")                       // totals: 37 docs
-    val got = TextAnalysis.corpusDrift(prev, cur).collect()
+    val got = TextAnalysis.corpusDriftFromCards(
+        TextAnalysis.sourceCard(prev), TextAnalysis.sourceCard(cur)).collect()
       .map(r => r.getString(0) -> r).toMap
     def row(s: String) = {
       val r = got(s)

@@ -530,6 +530,21 @@ class VehicleQueriesSpec extends SparkSpec {
     }
   }
 
+  // a caller-parameterized path: Cli's `--tau` runs the pair miner over
+  // the session's index, so nothing it persists outlives a clear
+  test("Catalog.clear releases what Cli's d_ngram_jaccard --tau run persisted") {
+    graft.core.Catalog.clear(spark)
+    val before = persistedAfterGc()
+    Cli.run(spark, TestSpark.sf0001, "d_ngram_jaccard", Cli.Params(tau = 0.9)).collect()
+    graft.core.Catalog.clear(spark)
+    val after = persistedAfterGc()
+    assert(after == before, s"d_ngram_jaccard --tau left ${after - before} persisted RDD(s) after clear")
+    val docs = graft.core.Tables(spark, TestSpark.sf0001).documents
+    val inPlan = graft.ops.Dedup.shingleIndexFrom(graft.ops.Dedup.shingled(docs))
+    assert(inPlan.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+      "the in-plan shingle index must not be cached outside the Catalog")
+  }
+
   // two served keys: a one-stage plan over the vehicles and a plan with
   // a shuffle over the observations
   Seq("v_top10_fastest", "v_headway").foreach { k =>

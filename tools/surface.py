@@ -17,9 +17,19 @@ is a call. Names are matched as whole words, so an overloaded def is
 listed only when no overload has a caller. `override def`s, `main` and
 `apply`/`unapply` are left out: the runtime calls them, not a name.
 
-No flags; the output is deterministic. A def listed here is either
-deleted, served by something outside the specs, or recorded as kept on
-purpose (ROADMAP direction 3 holds that census).
+Then the twin census: every member def `X` of a top-level object (or
+class) that has an `X(From|Over)...` sibling in the same object -- a
+self-contained form beside a form over prebuilt input -- one line each:
+
+    <file>:<line>  <Object>.<name>  forms=<siblings>  callers=<file:line,...|none>
+
+`callers` lists the code lines in src/main, perfbench/src and tools that
+name it: `<Object>.<name>` anywhere, or an unqualified `<name>` in its
+own file (a `.name` under another qualifier is some other def).
+
+No flags; the output is deterministic. A def listed in either part is
+either deleted, served by something outside the specs, or recorded as
+kept on purpose (ROADMAP direction 3 holds that census).
 """
 import os
 import re
@@ -30,6 +40,9 @@ CALLER_DIRS = ["src/main", "perfbench/src", "tools"]
 SPEC_DIRS = ["src/test"]
 RUNTIME_NAMES = {"main", "apply", "unapply"}
 DEF_RE = re.compile(r"^(.*?)\bdef\s+([A-Za-z_][A-Za-z0-9_]*)", re.M)
+MODS = r"(?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+|implicit\s+|case\s+|abstract\s+|sealed\s+)*"
+OWNER_RE = re.compile(r"^" + MODS + r"(?:object|class|trait)\s+([A-Za-z_]\w*)", re.M)
+MEMBER_RE = re.compile(r"^  " + MODS + r"def\s+([A-Za-z_]\w*)", re.M)
 WORD_RE = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
@@ -104,6 +117,49 @@ def word_counts(texts):
     return counts
 
 
+def line_of(code, pos):
+    return code.count("\n", 0, pos) + 1
+
+
+def twins(callers):
+    """(path, line, owner, name, forms) for each X beside an X(From|Over)* sibling."""
+    found = []
+    for path, code in callers:
+        if not path.startswith("src/main/"):
+            continue
+        owners = [(m.start(), m.group(1)) for m in OWNER_RE.finditer(code)]
+        members = {}
+        for m in MEMBER_RE.finditer(code):
+            owner = max(((p, o) for p, o in owners if p < m.start()), default=(0, None))[1]
+            members.setdefault(owner, []).append((line_of(code, m.start(1)), m.group(1)))
+        for owner, defs in members.items():
+            names = {n for _, n in defs}
+            seen = set()
+            for line, name in defs:
+                forms = sorted(n for n in names if re.fullmatch(re.escape(name) + r"(From|Over)\w*", n))
+                if owner and forms and name not in seen:
+                    seen.add(name)
+                    found.append((path, line, owner, name, forms))
+    return sorted(found)
+
+
+def twin_callers(callers, path, owner, name):
+    """Code lines naming `owner.name`, or an unqualified `name` in `path`."""
+    word = re.compile(r"(?:\b(\w+)\.)?\b" + re.escape(name) + r"\b")
+    own_def = re.compile(r"\bdef\s+" + re.escape(name) + r"\b")
+    out = set()
+    for p, code in callers:
+        lines = code.split("\n")
+        for m in word.finditer(code):
+            qualifier = m.group(1)
+            if qualifier is None and code[m.start() - 1:m.start()] == ".":
+                continue  # `expr.name`: a member of something else
+            ln = line_of(code, m.end())
+            if (qualifier == owner if qualifier else p == path) and not own_def.search(lines[ln - 1]):
+                out.add((p, ln))
+    return [f"{p}:{ln}" for p, ln in sorted(out)]
+
+
 def main():
     if len(sys.argv) > 1:
         sys.exit(__doc__)
@@ -124,6 +180,12 @@ def main():
         print(f"{path}:{line}  {name}  spec_refs={spec.get(name, 0)}")
     print(f"{len(unused)} defs with no caller outside src/test "
           f"({sum(1 for p, l, n in unused if spec.get(n, 0) == 0)} with none in src/test either)")
+    found = twins(callers)
+    for path, line, owner, name, forms in found:
+        who = twin_callers(callers, path, owner, name)
+        print(f"{path}:{line}  {owner}.{name}  forms={','.join(forms)}  "
+              f"callers={','.join(who) or 'none'}")
+    print(f"{len(found)} twins (a def beside its *From*/*Over* form in the same object)")
 
 
 if __name__ == "__main__":

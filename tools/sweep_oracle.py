@@ -2,14 +2,20 @@
 """Full-scale oracle sweep with a per-key timeout: same compare as
 tools/check_oracle.py, but each oracle runs in its own subprocess with a
 time budget so the documented quadratic-at-oracle-side keys surface as
-SKIP instead of hanging the sweep."""
+SKIP instead of hanging the sweep.
+
+A key counts OK only when its child exits 0 AND its last stdout line
+starts with OK. A matching child closes its DuckDB connection, flushes
+stdout and leaves through os._exit(0) right after printing OK, so a
+crash in DuckDB's interpreter-exit teardown cannot turn a match into a
+failure; every mismatch still exits non-zero."""
 import sys, json, glob, subprocess, os
 
 sfdir, outdir, budget = sys.argv[1], sys.argv[2], int(sys.argv[3])
 oracle = json.load(open(f"{outdir}/oracle_sql.json"))
 
 CHILD = r'''
-import sys, json, glob, duckdb, pandas as pd, numpy as np, datetime
+import os, sys, json, glob, duckdb, pandas as pd, numpy as np, datetime
 sfdir, outdir, name = sys.argv[1], sys.argv[2], sys.argv[3]
 con = duckdb.connect()
 for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
@@ -47,6 +53,9 @@ for c in got_n.columns:
         ok = np.isnan(g) | (np.signbit(g) == np.signbit(e2))
         assert ok.all(), f"signbit mismatch in {c}"
 print(f"OK ({len(got_n)} rows)")
+con.close()
+sys.stdout.flush()
+os._exit(0)
 '''
 
 ok, fail, skip = [], [], []
