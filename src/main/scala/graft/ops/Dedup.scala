@@ -1432,7 +1432,10 @@ object Dedup {
       .mkString("[", ", ", "]")
 
   /** CTE chain `documents → candm` (LSH candidate pairs) + `vm` (the
-    * per-(doc, perm) shifted signature components, for calibration). */
+    * per-(doc, perm) shifted signature components, for calibration).
+    * `vm` is MATERIALIZED: DuckDB inlines a CTE at each reference, and
+    * the 128-permutation HUGEINT minimum is the chain's cost, read by
+    * the banding and by the calibration mirrors' signature lists. */
   private def minhashSigCte: String =
     raw"""WITH toksm AS (
       |  SELECT doc_id,
@@ -1452,7 +1455,7 @@ object Dedup {
       |  FROM exm),
       |pvm AS (SELECT p, ($minhashALit)[p+1] AS a, ($minhashCLit)[p+1] AS c
       |        FROM (SELECT unnest(generate_series(0, 127)) AS p)),
-      |vm AS (SELECT doc_id, p,
+      |vm AS MATERIALIZED (SELECT doc_id, p,
       |    MIN((a * (base % 4294967296::HUGEINT)
       |         + ((a * (base // 4294967296::HUGEINT)) % 4294967296::HUGEINT)
       |           * 4294967296::HUGEINT
@@ -1851,11 +1854,14 @@ object Dedup {
     // signature agreements per candidate p (a p-perm MinHash is the
     // first p rows of the 128-perm signature), exact-integer n/p
     // estimates and the integer-mean MAE, unioned per p.
+    // The CTEs read more than once (`ga` by each of the four union
+    // arms, `sigl` and `shl` by both pair sides) are MATERIALIZED, so
+    // the MinHash chain runs once rather than once per reference.
     "d_perm_curve" -> {
       val perms = Seq(16, 32, 64, 128)
       s"""$minhashSigCte,
-         |sigl AS (SELECT doc_id, list(u ORDER BY p) AS sig FROM vm GROUP BY doc_id),
-         |shl AS (SELECT doc_id, sh, len(sh) AS l FROM dm),
+         |sigl AS MATERIALIZED (SELECT doc_id, list(u ORDER BY p) AS sig FROM vm GROUP BY doc_id),
+         |shl AS MATERIALIZED (SELECT doc_id, sh, len(sh) AS l FROM dm),
          |jp AS (SELECT c.doc_a, c.doc_b,
          |    ROUND(CAST(len(list_intersect(x.sh, y.sh)) AS DOUBLE)
          |          / (x.l + y.l - len(list_intersect(x.sh, y.sh))), 4) AS ej,
@@ -1874,7 +1880,7 @@ object Dedup {
                 s"ROUND(ABS(CAST((20000 * n$p + $p) // (2 * $p) AS DOUBLE) / 10000.0 - ej), 4) + 0.0 AS err$p")
                 .mkString(",\n    ")}
          |  FROM jp),
-         |ga AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
+         |ga AS MATERIALIZED (SELECT CAST(COUNT(*) AS BIGINT) AS n_pairs,
          |    ${perms.flatMap(p => Seq(
                 s"CAST(COALESCE(SUM(CAST(round(err$p * 10000) AS BIGINT)), 0) AS BIGINT) AS s$p",
                 s"COALESCE(MAX(err$p), 0.0) AS m$p")).mkString(",\n    ")}

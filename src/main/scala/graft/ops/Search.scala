@@ -140,12 +140,10 @@ object Search {
                 queryVecId: Long = RrfQueryVecId, n: Int = 100, k: Int = 20,
                 rrfK: Int = 60): DataFrame =
     fuseRrf(rrfRankLists(documents, embeddings, lexTerms, queryVecId, n),
-      k, rrfK)
+      k, Seq(rrfK)).drop("rrf_k")
 
   /** The two rrfK-INDEPENDENT rank lists the fusion consumes (≤ n rows
-    * each — the expensive corpus scans live here, shared by
-    * [[hybridRrf]] and the [[rrfCurve]] sweep so adding a candidate
-    * rrfK never costs another scan). */
+    * each — the expensive corpus scans live here). */
   private def rrfRankLists(documents: DataFrame, embeddings: DataFrame,
                            lexTerms: Seq[String], queryVecId: Long,
                            n: Int): (DataFrame, DataFrame) = {
@@ -170,22 +168,26 @@ object Search {
     (lex, vec)
   }
 
-  /** The rrfK-PARAMETERIZED fusion over pre-computed rank lists. */
-  private def fuseRrf(lists: (DataFrame, DataFrame), k: Int, rrfK: Int): DataFrame = {
+  /** The fused top-`k` at each of `rrfKs`, tagged `rrf_k`: the
+    * rrfK-independent full-outer fusion of the two rank lists is built
+    * once and exploded over the candidates, and a window per `rrf_k`
+    * keeps each candidate's top-k. The fused rows (≤ 2n per candidate)
+    * sit in one partition, so the windows need no exchange. */
+  private def fuseRrf(lists: (DataFrame, DataFrame), k: Int, rrfKs: Seq[Int]): DataFrame = {
     val (lex, vec) = lists
-    val fused = lex.join(vec, col("doc_id") === col("vec_id"), "full_outer")
+    def term(rank: String) =
+      coalesce((lit(1.0) / (col("rrf_k") + col(rank))).cast("decimal(28,10)"),
+        lit(0).cast("decimal(28,10)"))
+    val w = Window.partitionBy(col("rrf_k")).orderBy(col("rrf_exact").desc, col("doc_id").asc)
+    lex.join(vec, col("doc_id") === col("vec_id"), "full_outer")
       .select(
         coalesce(col("doc_id"), col("vec_id")).as("doc_id"),
-        col("lex_rank"), col("vec_rank"))
-      .withColumn("rrf_exact",
-        coalesce((lit(1.0) / (lit(rrfK) + col("lex_rank"))).cast("decimal(28,10)"),
-          lit(0).cast("decimal(28,10)")) +
-          coalesce((lit(1.0) / (lit(rrfK) + col("vec_rank"))).cast("decimal(28,10)"),
-            lit(0).cast("decimal(28,10)")))
-    fused
-      .orderBy(col("rrf_exact").desc, col("doc_id").asc)
-      .limit(k)
-      .select(col("doc_id"), col("lex_rank"), col("vec_rank"),
+        col("lex_rank"), col("vec_rank"), explode(typedlit(rrfKs)).as("rrf_k"))
+      .coalesce(1)
+      .withColumn("rrf_exact", term("lex_rank") + term("vec_rank"))
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select(col("rrf_k"), col("doc_id"), col("lex_rank"), col("vec_rank"),
         (round(col("rrf_exact").cast("double"), 4) + lit(0.0)).as("rrf_score"))
   }
 
@@ -193,36 +195,27 @@ object Search {
     * [[hybridRrf]]'s single fusion constant (the s_nprobe_curve
     * governance discipline applied to retrieval fusion): the graded
     * [[metricsFromRanked]] card of the fused top-k at EACH candidate
-    * rrfK, over the SAME two rank lists (computed once and
-    * localCheckpointed — ≤ n rows each, model-scale, the mmrDiversify
-    * precedent; rrfK only re-weights ranks, so extra candidates cost
-    * tiny ≤ n-row fusions, never another corpus scan). Cormack et
-    * al.'s k=60 is a pinned default, not a law — a small k trusts
-    * head agreement, a large k flattens toward vote counting; this
-    * card is the evidence that PICKS one for a corpus. One row per
-    * (arm = rrf<k>), ndcg/mrr vs the label/source graded panel. */
+    * rrfK, over ONE fusion of the two rank lists (the plan reads each
+    * list and their full-outer join once; rrfK only re-weights ranks,
+    * so extra candidates cost one more ≤ n-row window partition, never
+    * another corpus scan). Cormack et al.'s k=60 is a pinned default,
+    * not a law — a small k trusts head agreement, a large k flattens
+    * toward vote counting; this card is the evidence that PICKS one
+    * for a corpus. One row per (arm = rrf<k>), ndcg/mrr vs the
+    * label/source graded panel. */
   def rrfCurve(documents: DataFrame, embeddings: DataFrame,
                lexTerms: Seq[String] = Seq("hash", "join"),
                queryVecId: Long = RrfQueryVecId, n: Int = 100, k: Int = 10,
                rrfKs: Seq[Int] = Seq(20, 60, 120)): DataFrame = {
-    val (lex0, vec0) = rrfRankLists(documents, embeddings, lexTerms, queryVecId, n)
-    // r16 opt: lazily cached (the annTombstoneReport note) — the three
-    // rrfK arms read the two cached rank lists inside the one action
-    val lex = lex0.cache()
-    val vec = vec0.cache()
-    val ranked = rrfKs.map { kk =>
-      fuseRrf((lex, vec), k, kk)
-        .select(lit(s"rrf$kk").as("arm"), lit(queryVecId).as("query_id"),
-          col("doc_id").as("vec_id"),
-          row_number().over(Window.orderBy(desc("rrf_score"), asc("doc_id")))
-            .as("rank"))
-    }.reduce(_ unionByName _)
+    val ranked = fuseRrf(rrfRankLists(documents, embeddings, lexTerms, queryVecId, n),
+        k, rrfKs)
+      .select(concat(lit("rrf"), col("rrf_k").cast("string")).as("arm"),
+        lit(queryVecId).as("query_id"), col("doc_id").as("vec_id"),
+        row_number().over(Window.partitionBy(col("rrf_k"))
+          .orderBy(desc("rrf_score"), asc("doc_id"))).as("rank"))
     val meta = embeddings.select(col("vec_id"), col("label"))
       .join(documents.select(col("doc_id").as("vec_id"), col("source")),
         Seq("vec_id"))
-    // the two ≤ n-row checkpoints stay pinned for the returned plan's
-    // lifetime (the nprobeCurve convention — model-scale, GC'd with
-    // the session)
     metricsFromRanked(ranked, meta, Seq(queryVecId), k)
   }
 

@@ -578,41 +578,26 @@ object Similarity {
     * vec_id % 7 == 3 panel (~14% of the corpus — a heavy-delete
     * regime); the query panel is chosen live.
     *
-    * Per query: n_exact (live brute-force top-k, computed once and
-    * localCheckpointed), n_served / n_hit / n_leaked from the served
-    * side (n_leaked is a LIVE assertion column — 0 by construction of
+    * Per query ([[recallCounts]] over one live exact panel and the
+    * batch serve [[annIvfBatchFromIndex]] over the pre-filtered scan):
+    * n_exact, n_served, n_hit, and n_leaked, a served-side count of
+    * tombstoned hits (a LIVE assertion column — 0 by construction of
     * the pre-filter, and the oracle hash-checks it stays 0), recall as
     * the exact-integer half-away quotient. */
   def annTombstoneReport(embeddings: DataFrame, centroids: Seq[Seq[Double]],
                          assigned: DataFrame,
                          queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 4L, 5L),
                          k: Int = 10, nProbe: Int = 2): DataFrame = {
-    val liveP = uniformLive
-    val live = embeddings.filter(liveP)
-    queryVecIds.map { id =>
-      require(id % UniformTombMod != UniformTombRem,
-        s"query $id is tombstoned — pick a live query")
-      // r16 opt: lazily cached, not eagerly checkpointed — the exact
-      // arm is computed inside the report's single action (its two
-      // readers share the cache) instead of one blocking driver job
-      // per query cell; the 5 cells' stages then overlap (guide §2.6)
-      val exact = annTopK(live, id, k).select(col("vec_id")).cache()
-      val approx = annIvfFilteredFromIndex(centroids, assigned, liveP, id, k, nProbe)
-        .select(col("vec_id").as("a_vec_id"))
-      approx.join(exact.withColumn("in_exact", lit(1L)),
-          col("a_vec_id") === col("vec_id"), "left")
-        .agg(count(lit(1)).as("n_served"),
-          coalesce(sum(col("in_exact")), lit(0L)).as("n_hit"),
-          coalesce(sum(when(col("a_vec_id") % lit(UniformTombMod.toLong) ===
-            lit(UniformTombRem.toLong), lit(1L))), lit(0L))
-            .as("n_leaked"))
-        .crossJoin(broadcast(exact.agg(count(lit(1)).as("n_exact"))))
-        .select(lit(id).as("query_id"), col("n_exact"), col("n_served"),
-          col("n_hit"), col("n_leaked"),
-          when(col("n_exact") === 0L, lit(0.0)).otherwise(
-            expr("CAST((20000 * n_hit + n_exact) DIV (2 * n_exact) AS DOUBLE) / 10000.0"))
-            .as("recall"))
-    }.reduce(_ unionByName _)
+    queryVecIds.foreach(id => require(id % UniformTombMod != UniformTombRem,
+      s"query $id is tombstoned — pick a live query"))
+    val exact = annTopKBatch(embeddings.filter(uniformLive), queryVecIds, k)
+    val served = annIvfBatchFromIndex(centroids, assigned.filter(uniformLive),
+        queryVecIds, k, nProbe)
+      .select(lit("ivf").as("arm"), col("query_id"), col("vec_id"),
+        when(!uniformLive, lit(1L)).otherwise(lit(0L)).as("n_leaked"))
+    recallCounts(exact, served, Seq(lit("ivf")))
+      .select(col("query_id"), col("n_exact"), col("n_served"), col("n_hit"),
+        col("n_leaked"), recall)
   }
 
   /** The refit card's delete regime: a LIST-LEVEL takedown — every
@@ -678,9 +663,10 @@ object Similarity {
     * finding the tombstone card already covers.
     *
     * Serving is the BATCH window form ([[annIvfBatchFromIndex]] over
-    * the pre-filtered scan + one exact-arm batch), so the card costs
-    * ~3 window passes, not 2·|panel| chained subplans. Recall is the
-    * exact-integer half-away quotient. */
+    * the pre-filtered scan), counted by [[recallCounts]] against one
+    * exact-arm batch, so the card costs ~2 window passes, not
+    * 2·|panel| chained subplans. Recall is the exact-integer half-away
+    * quotient. */
   def annRefitReport(centsStale: Seq[Seq[Double]], assignedStale: DataFrame,
                      centsLive: Seq[Seq[Double]], assignedLive: DataFrame,
                      nQueries: Int = 10, k: Int = 10, nProbe: Int = 2): DataFrame = {
@@ -692,35 +678,19 @@ object Similarity {
       .orderBy(col("vec_id")).limit(nQueries)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
     // degenerate corpus/delete layout with NO boundary queries: match
-    // the mirror's graceful n_exact = 0 rows instead of crashing on an
-    // empty union
+    // the mirror's graceful n_exact = 0 rows (annTopKBatch needs a query)
     if (panel.isEmpty) {
       val spark = assignedStale.sparkSession
       import spark.implicits._
       return Seq(("stale", 0L, 0L, 0.0), ("refit", 0L, 0L, 0.0))
         .toDF("arm", "n_exact", "n_hit", "recall")
     }
-    // r16 opt: lazily cached (the annTombstoneReport note) — both arms
-    // read the one cached exact panel inside the single action
-    val exact = annTopKBatch(live, panel, k).select(col("query_id"), col("vec_id"))
-      .cache()
-    def arm(name: String, cents: Seq[Seq[Double]], assigned: DataFrame) = {
-      // the served side is ≤ |panel|·k rows — broadcast it explicitly
-      // (AQE can't size the window output against the checkpointed
-      // exact arm and falls back to a 4-exchange SMJ otherwise)
-      val served = broadcast(annIvfBatchFromIndex(cents, assigned, panel, k, nProbe)
-        .select(col("query_id").as("a_query_id"), col("vec_id").as("a_vec_id")))
-      exact.join(served,
-          col("query_id") === col("a_query_id") && col("vec_id") === col("a_vec_id"),
-          "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("a_vec_id")).as("n_hit"))
-        .select(lit(name).as("arm"), col("n_exact"), col("n_hit"),
-          (when(col("n_exact") === 0L, lit(0.0)).otherwise(
-            expr("CAST((20000 * n_hit + n_exact) DIV (2 * n_exact) AS DOUBLE)")
-              / lit(10000.0)) + lit(0.0)).as("recall"))
-    }
-    arm("stale", centsStale, live)
-      .unionByName(arm("refit", centsLive, assignedLive))
+    def arm(name: String, cents: Seq[Seq[Double]], assigned: DataFrame) =
+      annIvfBatchFromIndex(cents, assigned, panel, k, nProbe)
+        .select(lit(name).as("arm"), col("query_id"), col("vec_id"))
+    armRecall("arm", recallCounts(annTopKBatch(live, panel, k),
+      arm("stale", centsStale, live).unionByName(arm("refit", centsLive, assignedLive)),
+      Seq(lit("stale"), lit("refit"))))
   }
 
   /** The deterministic RE-EMBEDDING wave fixture: every vec_id ≡ 2
@@ -808,38 +778,23 @@ object Similarity {
     * against the exact brute-force top-k, aggregated over the query
     * panel. Both serving arms are the shipped plans
     * ([[annPqFromIndex]] / [[annOpqFromIndex]] off the Catalog-cached
-    * indexes); the exact ground truth is computed ONCE per query and
-    * localCheckpointed (the nprobeCurve recipe), so the card costs
-    * 2·|panel| code-table serves + |panel| exact scans. Recall is a
-    * quotient of exact integer counts → the exact-integer half-away
-    * idiom. */
+    * indexes), one per (arm, query), counted by [[recallCounts]]
+    * against one exact panel, so the card costs 2·|panel| code-table
+    * serves + |panel| exact scans. Recall is a quotient of exact
+    * integer counts → the exact-integer half-away idiom. */
   def opqRecallReport(embeddings: DataFrame,
                       booksPq: Seq[Seq[Seq[Double]]], codesPq: DataFrame,
                       perm: Seq[Int], booksOpq: Seq[Seq[Seq[Double]]],
                       codesOpq: DataFrame,
                       queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                       k: Int = 10): DataFrame = {
-    // r16 opt: lazily cached (the annTombstoneReport note) — every
-    // probe/dim/arm cell reads its query's one cached exact top-k
-    // inside the single action; no per-query blocking checkpoint jobs
-    val exacts = queryVecIds.map(id =>
-      id -> annTopK(embeddings, id, k).select(col("vec_id")).cache())
-    def cells(arm: String, serve: Long => DataFrame) =
-      exacts.map { case (id, exact) =>
-        val approx = serve(id).select(col("vec_id").as("a_vec_id"))
-        exact.join(approx, col("vec_id") === col("a_vec_id"), "left")
-          .agg(count(lit(1)).as("e"), count(col("a_vec_id")).as("h"))
-          .select(lit(arm).as("arm"), col("e"), col("h"))
-      }
-    (cells("pq", id => annPqFromIndex(booksPq, codesPq, embeddings, id, k)) ++
-      cells("opq", id => annOpqFromIndex(perm, booksOpq, codesOpq, embeddings, id, k)))
-      .reduce(_ unionByName _)
-      .groupBy(col("arm"))
-      .agg(sum(col("e")).as("n_exact"), sum(col("h")).as("n_hit"))
-      .select(col("arm"), col("n_exact"), col("n_hit"),
-        (when(col("n_exact") === 0L, lit(0.0)).otherwise(
-          expr("CAST((20000 * n_hit + n_exact) DIV (2 * n_exact) AS DOUBLE)")
-            / lit(10000.0)) + lit(0.0)).as("recall"))
+    val arms = Seq[(String, Long => DataFrame)](
+      "pq" -> (id => annPqFromIndex(booksPq, codesPq, embeddings, id, k)),
+      "opq" -> (id => annOpqFromIndex(perm, booksOpq, codesOpq, embeddings, id, k)))
+    val served = for ((arm, serve) <- arms; id <- queryVecIds)
+      yield serve(id).select(lit(arm).as("arm"), lit(id).as("query_id"), col("vec_id"))
+    armRecall("arm", recallCounts(annTopKBatch(embeddings, queryVecIds, k),
+      served.reduce(_ unionByName _), arms.map(a => lit(a._1))))
   }
 
   /** The PQ code table: every embedding compressed to m small ints
@@ -1381,27 +1336,65 @@ object Similarity {
     }.toSeq.toDF("rank", "vec_id", "label", "relevance", "max_sim_selected", "mmr_score")
   }
 
+  /** The recall kernel of the ANN recall cards: per (arm, query_id),
+    * `n_exact` (the exact panel's list), `n_served` (the arm's list)
+    * and `n_hit` (vectors on both). `exact` = (query_id, vec_id), the
+    * card's one exact panel; `served` = (arm, query_id, vec_id, …), the
+    * union of its serving arms, where each further column is a per-row
+    * served-side count summed under its own name. The exact rows,
+    * exploded over `arms`, and the served rows are tagged and unioned,
+    * so the plan reads the exact panel once and joins nothing; two
+    * aggregates then count them, per (arm, query, vector) and per
+    * (arm, query). Both sides are top-k lists (one row per vector, ≤
+    * |arms|·|panel|·k rows in all), so one partition holds them and no
+    * aggregate here or in [[armRecall]] needs an exchange. */
+  private[graft] def recallCounts(exact: DataFrame, served: DataFrame,
+                                  arms: Seq[Column]): DataFrame = {
+    val counts = served.columns.toSeq.diff(Seq("arm", "query_id", "vec_id"))
+    val exactRows = exact.select(Seq(explode(array(arms: _*)).as("arm"), col("query_id"),
+      col("vec_id"), lit(1L).as("e"), lit(0L).as("s")) ++ counts.map(lit(0L).as(_)): _*)
+    val servedRows = served.select(Seq(col("arm"), col("query_id"), col("vec_id"),
+      lit(0L).as("e"), lit(1L).as("s")) ++ counts.map(col): _*)
+    exactRows.unionByName(servedRows)
+      .coalesce(1)
+      .groupBy(col("arm"), col("query_id"), col("vec_id"))
+      .agg(max(col("e")).as("e"), max(col("s")).as("s") +: counts.map(c => sum(col(c)).as(c)): _*)
+      .groupBy(col("arm"), col("query_id"))
+      .agg(sum(col("e")).as("n_exact"), sum(col("s")).as("n_served") +:
+        sum(col("e") * col("s")).as("n_hit") +: counts.map(c => sum(col(c)).as(c)): _*)
+  }
+
+  /** Recall@k from the `n_hit` / `n_exact` counts: the exact-integer
+    * half-away ROUND(, 4) quotient, 0.0 on an empty exact list. */
+  private[graft] def recall: Column =
+    (when(col("n_exact") === 0L, lit(0.0)).otherwise(
+      expr("CAST((20000 * n_hit + n_exact) DIV (2 * n_exact) AS DOUBLE)") / lit(10000.0))
+      + lit(0.0)).as("recall")
+
+  /** [[recallCounts]] summed over the query panel: one row per arm,
+    * the arm column named `armName`. */
+  private def armRecall(armName: String, counts: DataFrame): DataFrame =
+    counts.groupBy(col("arm"))
+      .agg(sum(col("n_exact")).as("n_exact"), sum(col("n_hit")).as("n_hit"))
+      .select(col("arm").as(armName), col("n_exact"), col("n_hit"), recall)
+
   /** ANN index quality report: recall@k of the IVF serving path against
     * the exact brute-force top-k, per query — the evaluation artifact
     * that justifies an index's nProbe/nlist settings before a corpus
     * rollout (the FAISS-benchmark convention). Both arms are the
-    * existing plans ([[annTopK]] exact, [[annIvfFromIndex]] approx off
-    * the Catalog-cached fit); the join/count runs per query over ≤ k
-    * rows. Oracle-checked off the portable fit CTE (both arms
-    * replayed per query); spec proves recall = 1.0 when every list is
-    * probed and bounds recall in [0,1] otherwise. */
+    * existing plans ([[annTopKBatch]] exact, [[annIvfBatchFromIndex]]
+    * approx off the Catalog-cached fit), counted by [[recallCounts]].
+    * Oracle-checked off the portable fit CTE (both arms replayed per
+    * query); spec proves recall = 1.0 when every list is probed and
+    * bounds recall in [0,1] otherwise. */
   def recallReport(embeddings: DataFrame, centroids: Seq[Seq[Double]],
                    assigned: DataFrame, queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                    k: Int = 10, nProbe: Int = 2): DataFrame =
-    queryVecIds.map { id =>
-      val exact = annTopK(embeddings, id, k).select(col("vec_id"))
-      val approx = annIvfFromIndex(centroids, assigned, id, k, nProbe)
-        .select(col("vec_id").as("a_vec_id"))
-      exact.join(approx, col("vec_id") === col("a_vec_id"), "left")
-        .agg(count(lit(1)).as("n_exact"), count(col("a_vec_id")).as("n_hit"))
-        .select(lit(id).as("query_id"), col("n_exact"), col("n_hit"),
-          (round(col("n_hit") / col("n_exact"), 4) + lit(0.0)).as("recall"))
-    }.reduce(_ unionByName _)
+    recallCounts(annTopKBatch(embeddings, queryVecIds, k),
+      annIvfBatchFromIndex(centroids, assigned, queryVecIds, k, nProbe)
+        .select(lit("ivf").as("arm"), col("query_id"), col("vec_id")),
+      Seq(lit("ivf")))
+      .select(col("query_id"), col("n_exact"), col("n_hit"), recall)
 
   /** nProbe TUNING curve — the calibration sweep behind
     * [[recallReport]]'s single setting: recall@k of the IVF serving
@@ -1412,50 +1405,21 @@ object Similarity {
     * is the cheapest setting that clears the recall target. Run once
     * per index fit / embedding-model change, then pin.
     *
-    * The exact ground-truth arm is computed ONCE per query and
-    * localCheckpointed (10 rows — model-scale, the mmrDiversify
-    * precedent), so adding probe settings costs only cluster-bounded
-    * approx arms, never extra corpus scans. Recall is a quotient of
-    * exact integer counts → the exact-integer half-away idiom. */
+    * One exact panel serves every probe setting ([[recallCounts]]), so
+    * adding a probe setting costs one cluster-bounded batch serve
+    * ([[annIvfBatchFromIndex]]), never an extra corpus scan. Recall is
+    * a quotient of exact integer counts → the exact-integer half-away
+    * idiom. */
   def nprobeCurve(embeddings: DataFrame, centroids: Seq[Seq[Double]],
                   assigned: DataFrame,
                   queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                   k: Int = 10, probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    // r16 opt: lazily cached (the annTombstoneReport note) — every
-    // probe/dim/arm cell reads its query's one cached exact top-k
-    // inside the single action; no per-query blocking checkpoint jobs
-    val exacts = queryVecIds.map(id =>
-      id -> annTopK(embeddings, id, k).select(col("vec_id")).cache())
-    val cells = for (np <- probes; (id, exact) <- exacts) yield {
-      val approx = annIvfFromIndex(centroids, assigned, id, k, np)
-        .select(col("vec_id").as("a_vec_id"))
-      exact.join(approx, col("vec_id") === col("a_vec_id"), "left")
-        .agg(count(lit(1)).as("e"), count(col("a_vec_id")).as("h"))
-        .select(lit(np).as("n_probe"), col("e"), col("h"))
-    }
-    cells.reduce(_ unionByName _)
-      .groupBy(col("n_probe"))
-      .agg(sum(col("e")).as("n_exact"), sum(col("h")).as("n_hit"))
-      .select(col("n_probe"), col("n_exact"), col("n_hit"),
-        (when(col("n_exact") === 0L, lit(0.0)).otherwise(
-          expr("CAST((20000 * n_hit + n_exact) DIV (2 * n_exact) AS DOUBLE)")
-            / lit(10000.0)) + lit(0.0)).as("recall"))
+    val served = probes.map(np =>
+      annIvfBatchFromIndex(centroids, assigned, queryVecIds, k, np)
+        .select(lit(np).as("arm"), col("query_id"), col("vec_id")))
+    armRecall("n_probe", recallCounts(annTopKBatch(embeddings, queryVecIds, k),
+      served.reduce(_ unionByName _), probes.map(lit)))
   }
-
-  /** Brute-force cosine top-k IDs on the first `dim` coordinates — the
-    * truncated arm of [[mrlRecallCurve]]: exactly [[annTopK]] over the
-    * prefix-projected frame (ONE plan body for both, so any future
-    * tie-break/rounding fix to the serving operator automatically
-    * reaches the calibration card — r13 review finding). The slice is
-    * scan-side, so the prefix cosine still runs inside the same
-    * WholeStageCodegen span, per-partition heaps, never a global sort. */
-  private def truncTopKIds(embeddings: DataFrame, queryVecId: Long, k: Int,
-                           dim: Int): DataFrame =
-    annTopK(
-      embeddings.select(col("vec_id"), col("label"),
-        slice(col("embedding"), 1, dim).as("embedding")),
-      queryVecId, k)
-      .select(col("vec_id"))
 
   /** MATRYOSHKA truncation-recall curve — the embedding-dimension
     * calibration card (Kusupati et al. 2022, Matryoshka Representation
@@ -1472,37 +1436,26 @@ object Similarity {
     * "don't truncate this model". Run once per embedding-model change,
     * then pin (the s_nprobe_curve governance discipline).
     *
-    * Plan: the exact ground-truth arm is computed ONCE per query and
-    * localCheckpointed (k rows — model-scale, the nprobeCurve recipe);
-    * each (dim, query) cell is one pruned-scan TakeOrderedAndProject
-    * arm reading ONLY slice(embedding, 1, d) — cells never shuffle
-    * corpus rows, the per-cell join/count runs over ≤ k rows. Recall
-    * is a quotient of exact integer counts → the exact-integer
-    * half-away ROUND(,4) idiom. At 100 TB the truncated arms run over
-    * a stored prefix-column table (or the d-dim IVF fit) instead of
-    * slicing the full vectors — the card's arithmetic is unchanged. */
+    * Plan: one exact panel ([[annTopKBatch]]) and, per prefix length,
+    * the same [[annTopKBatch]] plan body over the prefix-sliced frame
+    * (so any tie-break/rounding fix to the serving operator reaches
+    * the calibration card), counted by [[recallCounts]]. The slice is
+    * scan-side: each (dim, query) arm is one pruned-scan
+    * TakeOrderedAndProject reading ONLY slice(embedding, 1, d), and no
+    * arm shuffles corpus rows. Recall is a quotient of exact integer
+    * counts → the exact-integer half-away ROUND(,4) idiom. At 100 TB
+    * the truncated arms run over a stored prefix-column table (or the
+    * d-dim IVF fit) instead of slicing the full vectors — the card's
+    * arithmetic is unchanged. */
   def mrlRecallCurve(embeddings: DataFrame,
                      queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                      k: Int = 10, dims: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
-    // r16 opt: lazily cached (the annTombstoneReport note) — every
-    // probe/dim/arm cell reads its query's one cached exact top-k
-    // inside the single action; no per-query blocking checkpoint jobs
-    val exacts = queryVecIds.map(id =>
-      id -> annTopK(embeddings, id, k).select(col("vec_id")).cache())
-    val cells = for (dm <- dims; (id, exact) <- exacts) yield {
-      val approx = truncTopKIds(embeddings, id, k, dm)
-        .select(col("vec_id").as("a_vec_id"))
-      exact.join(approx, col("vec_id") === col("a_vec_id"), "left")
-        .agg(count(lit(1)).as("e"), count(col("a_vec_id")).as("h"))
-        .select(lit(dm).as("mrl_dim"), col("e"), col("h"))
-    }
-    cells.reduce(_ unionByName _)
-      .groupBy(col("mrl_dim"))
-      .agg(sum(col("e")).as("n_exact"), sum(col("h")).as("n_hit"))
-      .select(col("mrl_dim"), col("n_exact"), col("n_hit"),
-        (when(col("n_exact") === 0L, lit(0.0)).otherwise(
-          expr("CAST((20000 * n_hit + n_exact) DIV (2 * n_exact) AS DOUBLE)")
-            / lit(10000.0)) + lit(0.0)).as("recall"))
+    val served = dims.map(dm =>
+      annTopKBatch(embeddings.select(col("vec_id"), col("label"),
+          slice(col("embedding"), 1, dm).as("embedding")), queryVecIds, k)
+        .select(lit(dm).as("arm"), col("query_id"), col("vec_id")))
+    armRecall("mrl_dim", recallCounts(annTopKBatch(embeddings, queryVecIds, k),
+      served.reduce(_ unionByName _), dims.map(lit)))
   }
 
   /** The scan-tier prefix projection `Store.saveMrlPrefix` materializes

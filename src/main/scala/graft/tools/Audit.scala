@@ -52,15 +52,14 @@ object Audit {
     // both shapes: the 1-row stats frame on the lexical arm and the
     // 1-row query vector on the cosine arm
     "s_hybrid_rrf",
-    // union of per-query (exact ⋈ approx) comparisons: the arms are
-    // the whitelisted 1-row-broadcast ANN subplans (one query-vector
-    // BNLJ per query); the recall join itself is a ≤ k-row equi-join
+    // the exact panel is annTopKBatch: one 1-row query-vector crossJoin
+    // per query (the s_ann_batch shape); the recall kernel unions it
+    // with the served rows and aggregates, joining nothing
     "s_recall_report",
-    // the same 1-row query-vector broadcast, one BNLJ per (probe,
-    // query) cell of the tuning sweep
+    // the same one-exact-panel shape, read once for every probe setting
     "s_nprobe_curve",
-    // the same per-(dim, query)-cell 1-row query-vector broadcast (the
-    // s_nprobe_curve shape with prefix-slice arms)
+    // the same exact panel, plus one annTopKBatch per prefix length over
+    // the prefix-sliced frame (the same 1-row query-vector crossJoins)
     "s_mrl_recall",
     // the 1-row query-vector crossJoin feeding both funnel stages
     "s_ann_mrl",
@@ -68,14 +67,14 @@ object Audit {
     "s_ann_mrl_ivf",
     // the same per-query 1-row query-vector crossJoin in both serving
     // arms' exact-cosine reranks (the s_ann_pq / s_ann_opq shapes,
-    // one per (arm, query) cell)
+    // one per (arm, query)) and in the one exact panel
     "s_opq_recall",
-    // per query: the 1-row query-vector broadcast in the filtered IVF
-    // serve + the 1-row exact-count frame crossJoined onto the 1-row
-    // served-side aggregate (the t_bm25 corpus-stats shape)
+    // the live exact panel is annTopKBatch (one 1-row query-vector
+    // crossJoin per query); the served side is the batch IVF serve,
+    // and the recall kernel joins nothing
     "s_ann_tombstone",
-    // the exact arm is annTopKBatch: one 1-row query-vector crossJoin
-    // per panel member (the s_ann_batch shape)
+    // the same live exact panel over the boundary queries (the
+    // s_ann_batch shape); both arms are batch IVF serves
     "s_ann_refit",
     // the same 1-row query-vector crossJoin over the upserted corpus
     "s_ann_reembed",
@@ -129,8 +128,8 @@ object Audit {
     // panel for the IDCG terms — every BNLJ side is ≤ k rows
     "s_rank_metrics",
     // the same shapes again: the 1-row stats + query-vector
-    // crossJoins of the shared rank lists (computed ONCE for all
-    // rrfK candidates) and the k-row ranks × 1-query panel IDCG frame
+    // crossJoins of the two rank lists (each read once for all rrfK
+    // candidates) and the k-row ranks × 1-query panel IDCG frame
     "s_rrf_curve")
 
   /** Keys where a SortMergeJoin is the RIGHT strategy (fact×fact joins
@@ -244,28 +243,25 @@ object Audit {
     // full corpus-side semantic dedup (pairs + CC closure) composed
     // with the batch×survivor vetting join
     "d_semantic_cross" -> 10,
-    // 4 probe settings × 5 queries: each cell is its OWN cluster-
-    // bounded top-k (one single-partition heap collect each) — the
-    // cells are independent serving plans, not a corpus pipeline
-    "s_nprobe_curve" -> 24,
-    // 4 prefix lengths × 5 queries: the same independent-cell class
-    // (each cell one pruned-scan TakeOrdered arm + a ≤ k-row agg)
-    "s_mrl_recall" -> 26,
+    // one window exchange per probe setting (each a batch IVF serve
+    // over the 5-query panel); the recall kernel counts the ≤ 250
+    // unioned top-k rows in one partition, with no exchange
+    "s_nprobe_curve" -> 4,
+    // every arm is a TakeOrdered annTopKBatch (no exchange node) and
+    // the recall kernel adds none
+    "s_mrl_recall" -> 0,
     // 4 β arms × a 2-phase union collapse, every exchange over the
     // localCheckpointed ≤ #sources-row quality frame (the corpus scan
     // is paid once at build time and is NOT in the audited plan) —
-    // the s_nprobe_curve independent-model-scale-arm class
+    // model-scale arms, not a corpus pipeline
     "d_anneal_curve" -> 8,
-    // 3 rrfK arms × a full-outer fusion + re-rank, every exchange over
-    // the TWO localCheckpointed ≤ 100-row rank lists (the corpus scans
-    // are paid once at build time and are NOT in the audited plan),
-    // plus the meta join and the panel-count aggregates — the
-    // d_anneal_curve independent-model-scale-arm class
-    "s_rrf_curve" -> 14,
-    // 2 arms × 5 queries: each cell an independent PQ/OPQ serving plan
-    // (ADC TakeOrdered + rerank) + the 2-row final collapse — the
-    // s_nprobe_curve class
-    "s_opq_recall" -> 30,
+    // ONE full-outer fusion of the two ≤ 100-row rank lists (its two
+    // exchanges), exploded over the 3 rrfK arms in one partition, plus
+    // the meta join and the panel-count aggregates
+    "s_rrf_curve" -> 5,
+    // the s_mrl_recall shape: per (arm, query) PQ/OPQ serves are
+    // TakeOrdered plans and the recall kernel adds no exchange
+    "s_opq_recall" -> 0,
     // the pair set is localCheckpointed at build time; the audited
     // plan is the two 1-row aggregates (pair counts + exploded
     // distinct-doc counts with its countDistinct expand) over it

@@ -1,12 +1,13 @@
 package graft
 
-/** Cache-lifecycle contract for the per-invocation LAZY caches
-  * (VERDICT r16 #4): the r16 optimizations added `.cache()` on frames
-  * that feed several consumers inside ONE action (q_basket_lift's
-  * distinct collapse, the ANN report exact arms, Search.rrf, the
-  * self-contained shingle-index path). Spark's CacheManager keys
-  * cached plans on their CANONICALIZED form, so re-invoking the same
-  * query re-uses the existing entry instead of accumulating blocks —
+/** Cache-lifecycle contract for the per-invocation LAZY caches: a
+  * `.cache()` on a frame that feeds several consumers inside ONE action
+  * (q_basket_lift's distinct collapse is the one left; the ANN recall
+  * cards and Search.rrfCurve read their shared frames once in-plan and
+  * cache nothing — SimilaritySpec and SearchSpec pin that). Spark's
+  * CacheManager keys cached plans on their CANONICALIZED form, so
+  * re-invoking the same query re-uses the existing entry instead of
+  * accumulating blocks —
   * session-lifetime residency bounded per distinct input is the
   * documented design. The alternative (unpersist right after the
   * operator returns) is impossible here: the action that populates the
@@ -22,9 +23,8 @@ package graft
 class CacheLifecycleSpec extends SparkSpec {
   test("repeated invocations of cache-carrying keys do not grow the cached-block set") {
     val dir = TestSpark.sf0001
-    // every r16/r17 lazy-cache site that a driver key exercises:
-    // q_basket_lift (AnalyticsQueries collapse), s_rrf_curve
-    // (Search.rrf arms), s_ann_tombstone (Similarity exact arms),
+    // q_basket_lift (the AnalyticsQueries collapse), two keys that
+    // once cached their shared frames (s_rrf_curve, s_ann_tombstone);
     // d_ngram_jaccard exercises the Catalog shingle index (one
     // persisted entry per (session, dir, cap) — session-scoped by
     // design, identical on re-invocation)

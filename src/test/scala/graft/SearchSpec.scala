@@ -171,4 +171,10 @@ class SearchSpec extends SparkSpec {
     assert(w(1L) == ((3L, 0.3333)) && w(2L) == ((3L, 0.3333)) && w(3L) == ((3L, 0.3333)))
     assert(w(4L) == ((1L, 1.0)))
   }
+
+  test("s_rrf_curve: collecting the key persists nothing") {
+    val grown = persistedBy(())(
+      SparkEntry.queries("s_rrf_curve")(spark, TestSpark.sf0001).collect())
+    assert(grown == 0, s"s_rrf_curve left $grown persisted RDD(s)")
+  }
 }

@@ -1428,4 +1428,29 @@ class SimilaritySpec extends SparkSpec {
       s"MRL funnel should not shuffle:\n$plan")
     assert(plan.contains("TakeOrderedAndProject"), s"expected heap top-k stages:\n$plan")
   }
+
+  // each recall card counts its serving arms against one in-plan exact
+  // panel: on warm Catalog entries, collecting the key persists nothing
+  private def warmIvf(): Unit =
+    graft.core.Catalog.ivfIndex(spark, TestSpark.sf0001)._2.count()
+  Seq[(String, () => Unit)](
+    "s_recall_report" -> (() => warmIvf()),
+    "s_nprobe_curve" -> (() => warmIvf()),
+    "s_mrl_recall" -> (() => ()),
+    "s_opq_recall" -> (() => {
+      graft.core.Catalog.pqIndex(spark, TestSpark.sf0001)._2.count()
+      graft.core.Catalog.opqIndex(spark, TestSpark.sf0001)._3.count()
+    }),
+    "s_ann_tombstone" -> (() => warmIvf()),
+    "s_ann_refit" -> (() => {
+      warmIvf()
+      graft.core.Catalog.ivfIndexLive(spark, TestSpark.sf0001)._2.count()
+    })
+  ).foreach { case (key, warm) =>
+    test(s"$key: collecting the key on warm Catalog entries persists nothing") {
+      val grown = persistedBy(warm())(
+        SparkEntry.queries(key)(spark, TestSpark.sf0001).collect())
+      assert(grown == 0, s"$key left $grown persisted RDD(s) beyond its Catalog entries")
+    }
+  }
 }

@@ -53,4 +53,19 @@ abstract class SparkSpec extends AnyFunSuite {
       counted.get
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Persisted RDDs `run` adds beyond the Catalog entries `warm` builds.
+    * The session's caches are dropped first, so a frame `run` caches
+    * for itself counts even when an earlier call in this JVM cached
+    * the same plan (the CacheManager would otherwise dedupe it). */
+  protected def persistedBy(warm: => Unit)(run: => Unit): Int = {
+    graft.core.Catalog.clear(spark)
+    spark.catalog.clearCache()
+    warm
+    System.gc()
+    val before = spark.sparkContext.getPersistentRDDs.size
+    run
+    System.gc()
+    spark.sparkContext.getPersistentRDDs.size - before
+  }
 }
