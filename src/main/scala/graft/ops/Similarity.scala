@@ -72,19 +72,54 @@ object Similarity {
   }
 
   /** Batch ANN serving: exact top-k for a SET of query vectors in ONE
-    * plan — a union of per-query `TakeOrderedAndProject` subplans (each
-    * per-partition heaps over a pruned scan; the k-row result per query
-    * reaches the driver, never a global sort). The correctness baseline
-    * for batch serving; at corpus scale a query batch serves off the
-    * shared IVF/PQ index instead (each query probes its nProbe lists,
-    * the batch amortizing the code-table scan) — same composition as
-    * the single-query keys. */
+    * plan. The panel's query vectors reach the driver in one collect
+    * ([[queryVectors]]) and ship with the plan as a literal; each corpus
+    * row is exploded over them, scored by cosine in the scan, and each
+    * query keeps its top k through one row_number window (its partial
+    * limit runs before the exchange, so ≤ k rows per query and
+    * partition are shuffled). The corpus is scanned once, however many
+    * queries the panel holds — the correctness baseline for batch
+    * serving; at corpus scale a query batch serves off the shared
+    * IVF/PQ index instead ([[annIvfBatchFromIndex]], [[annPqFromIndex]]). */
   def annTopKBatch(embeddings: DataFrame, queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                    k: Int = 10): DataFrame =
-    queryVecIds.map { id =>
-      annTopK(embeddings, id, k).withColumn("query_id", lit(id))
-    }.reduce(_ unionByName _)
-      .select(col("query_id"), col("vec_id"), col("label"), col("cos_sim"))
+    topKBatch(embeddings, queryVectors(embeddings, queryVecIds), k)
+
+  /** [[annTopKBatch]]'s plan over query vectors already on the driver,
+    * so a card that serves one panel through several arms collects the
+    * panel once. */
+  private def topKBatch(embeddings: DataFrame, queries: Seq[(Long, Seq[Float])],
+                        k: Int): DataFrame =
+    topKPerQuery(embeddings
+      .select(col("vec_id"), col("label"), col("embedding"), explode(typedlit(queries)).as("q"))
+      .filter(col("vec_id") =!= col("q._1"))
+      .select(col("q._1").as("query_id"), col("vec_id"), col("label"),
+        GraftFunctions.cosine(col("embedding"), col("q._2")).as("cos")), "cos", k)
+      .select(col("query_id"), col("vec_id"), col("label"),
+        (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
+
+  /** The panel's query vectors `(vec_id, embedding)`, in panel order,
+    * read from `embeddings` in one driver collect (≤ |panel| rows).
+    * Fails on an id the table does not hold: a query with no vector has
+    * no top-k to serve or count. */
+  private def queryVectors(embeddings: DataFrame,
+                           queryVecIds: Seq[Long]): Seq[(Long, Seq[Float])] = {
+    val found = embeddings.filter(col("vec_id").isin(queryVecIds: _*))
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+    val missing = queryVecIds.filterNot(found.contains)
+    require(missing.isEmpty, s"query vec_ids not in the table: ${missing.mkString(", ")}")
+    queryVecIds.distinct.map(id => id -> found(id))
+  }
+
+  /** Each query's top `k` rows of `df` by `score` descending, vec_id
+    * ascending (the single-query serves' tie-break): one row_number
+    * window per `query_id`. */
+  private def topKPerQuery(df: DataFrame, score: String, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("query_id"))
+      .orderBy(desc(score), asc("vec_id"))
+    df.withColumn("rn", row_number().over(w)).filter(col("rn") <= k).drop("rn")
+  }
 
   /** The LSH index table: embeddings with their hyperplane bucket id.
     * bucket = Σ_p (dot(embedding, planes[p]) > 0) << p — scan-side via the
@@ -393,18 +428,14 @@ object Similarity {
   def annIvfBatchFromIndex(centroids: Seq[Seq[Double]], assigned: DataFrame,
                            queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                            k: Int = 10, nProbe: Int = 2): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val probes = assigned.filter(col("vec_id").isin(queryVecIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_embedding"),
         explode(GraftFunctions.nearestCentroids(col("embedding"), typedlit(centroids),
           lit(nProbe))).as("cluster"))
-    val w = Window.partitionBy(col("query_id")).orderBy(desc("cos"), asc("vec_id"))
-    assigned
+    topKPerQuery(assigned
       .join(broadcast(probes), Seq("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding"))), "cos", k)
       .select(col("query_id"), col("vec_id"), col("label"), col("cluster"),
         round(col("cos"), 4).as("cos_sim"))
   }
@@ -593,9 +624,8 @@ object Similarity {
     val exact = annTopKBatch(embeddings.filter(uniformLive), queryVecIds, k)
     val served = annIvfBatchFromIndex(centroids, assigned.filter(uniformLive),
         queryVecIds, k, nProbe)
-      .select(lit("ivf").as("arm"), col("query_id"), col("vec_id"),
-        when(!uniformLive, lit(1L)).otherwise(lit(0L)).as("n_leaked"))
-    recallCounts(exact, served, Seq(lit("ivf")))
+      .withColumn("n_leaked", when(!uniformLive, lit(1L)).otherwise(lit(0L)))
+    recallCounts(exact, Seq("ivf" -> served), Seq("n_leaked"))
       .select(col("query_id"), col("n_exact"), col("n_served"), col("n_hit"),
         col("n_leaked"), recall)
   }
@@ -652,7 +682,8 @@ object Similarity {
     * The panel is PREDICATE-DEFINED — the `nQueries` smallest live
     * vec_ids whose SECOND-nearest stale centroid is a purged list (a
     * fixed id list can't stay on the takedown boundary across corpora;
-    * the ≤ nQueries-row collect is the query-vector class). These are
+    * the ≤ nQueries-row collect is the query-vector class, and it
+    * brings the panel's vectors for the exact arm along). These are
     * the BOUNDARY queries — the ones the purge actually affected: their
     * second probe lands on a 100%-ghost list, so the stale arm serves
     * on half its probe budget (measured: stale recall is IDENTICAL at
@@ -664,33 +695,33 @@ object Similarity {
     *
     * Serving is the BATCH window form ([[annIvfBatchFromIndex]] over
     * the pre-filtered scan), counted by [[recallCounts]] against one
-    * exact-arm batch, so the card costs ~2 window passes, not
+    * exact-arm batch, so the card costs 3 window passes, not
     * 2·|panel| chained subplans. Recall is the exact-integer half-away
     * quotient. */
   def annRefitReport(centsStale: Seq[Seq[Double]], assignedStale: DataFrame,
                      centsLive: Seq[Seq[Double]], assignedLive: DataFrame,
                      nQueries: Int = 10, k: Int = 10, nProbe: Int = 2): DataFrame = {
     val live = assignedStale.filter(takedownLive)
-    val panel: Seq[Long] = live
+    val panel: Seq[(Long, Seq[Float])] = live
       .withColumn("n2", GraftFunctions.nearestCentroids(
         col("embedding"), typedlit(centsStale), lit(2)).getItem(1))
       .filter(col("n2") % lit(TakedownMod) === lit(1))
       .orderBy(col("vec_id")).limit(nQueries)
-      .select(col("vec_id")).collect().map(_.getLong(0)).toSeq
+      .select(col("vec_id"), col("embedding")).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
     // degenerate corpus/delete layout with NO boundary queries: match
-    // the mirror's graceful n_exact = 0 rows (annTopKBatch needs a query)
+    // the mirror's graceful n_exact = 0 rows (the kernel emits no row for
+    // an arm that serves no query)
     if (panel.isEmpty) {
       val spark = assignedStale.sparkSession
       import spark.implicits._
       return Seq(("stale", 0L, 0L, 0.0), ("refit", 0L, 0L, 0.0))
         .toDF("arm", "n_exact", "n_hit", "recall")
     }
-    def arm(name: String, cents: Seq[Seq[Double]], assigned: DataFrame) =
-      annIvfBatchFromIndex(cents, assigned, panel, k, nProbe)
-        .select(lit(name).as("arm"), col("query_id"), col("vec_id"))
-    armRecall("arm", recallCounts(annTopKBatch(live, panel, k),
-      arm("stale", centsStale, live).unionByName(arm("refit", centsLive, assignedLive)),
-      Seq(lit("stale"), lit("refit"))))
+    val ids = panel.map(_._1)
+    armRecall("arm", recallCounts(topKBatch(live, panel, k), Seq(
+      "stale" -> annIvfBatchFromIndex(centsStale, live, ids, k, nProbe),
+      "refit" -> annIvfBatchFromIndex(centsLive, assignedLive, ids, k, nProbe))))
   }
 
   /** The deterministic RE-EMBEDDING wave fixture: every vec_id ≡ 2
@@ -776,25 +807,25 @@ object Similarity {
     * just lower quantization error; a rollout gates on recall): per
     * arm (plain PQ vs permutation-OPQ), recall@k of the served top-k
     * against the exact brute-force top-k, aggregated over the query
-    * panel. Both serving arms are the shipped plans
-    * ([[annPqFromIndex]] / [[annOpqFromIndex]] off the Catalog-cached
-    * indexes), one per (arm, query), counted by [[recallCounts]]
-    * against one exact panel, so the card costs 2·|panel| code-table
-    * serves + |panel| exact scans. Recall is a quotient of exact
-    * integer counts → the exact-integer half-away idiom. */
+    * panel. Both serving arms are the shipped serve ([[pqServe]], the
+    * plan of [[annPqFromIndex]] / [[annOpqFromIndex]] off the
+    * Catalog-cached indexes) over the whole panel, counted by
+    * [[recallCounts]] against one exact panel. The panel's vectors are
+    * collected once (the OPQ arm permutes them on the driver), and
+    * each arm costs |panel| code-table rankings and one broadcast
+    * rerank. Recall is a quotient of exact integer counts →
+    * the exact-integer half-away idiom. */
   def opqRecallReport(embeddings: DataFrame,
                       booksPq: Seq[Seq[Seq[Double]]], codesPq: DataFrame,
                       perm: Seq[Int], booksOpq: Seq[Seq[Seq[Double]]],
                       codesOpq: DataFrame,
                       queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                       k: Int = 10): DataFrame = {
-    val arms = Seq[(String, Long => DataFrame)](
-      "pq" -> (id => annPqFromIndex(booksPq, codesPq, embeddings, id, k)),
-      "opq" -> (id => annOpqFromIndex(perm, booksOpq, codesOpq, embeddings, id, k)))
-    val served = for ((arm, serve) <- arms; id <- queryVecIds)
-      yield serve(id).select(lit(arm).as("arm"), lit(id).as("query_id"), col("vec_id"))
-    armRecall("arm", recallCounts(annTopKBatch(embeddings, queryVecIds, k),
-      served.reduce(_ unionByName _), arms.map(a => lit(a._1))))
+    val queries = queryVectors(embeddings, queryVecIds)
+    armRecall("arm", recallCounts(topKBatch(embeddings, queries, k), Seq(
+      "pq" -> pqServe(booksPq, codesPq, embeddings, queries, k),
+      "opq" -> pqServe(booksOpq, codesOpq, opqPermute(embeddings, perm),
+        queries.map { case (id, v) => id -> perm.map(v) }, k))))
   }
 
   /** The PQ code table: every embedding compressed to m small ints
@@ -807,42 +838,54 @@ object Similarity {
       GraftFunctions.pqEncode(col("embedding"), typedlit(books)).as("codes"))
 
   /** PQ ANN served off a pre-fitted index: rank the CODE table by ADC
-    * approximate cosine (m lookup-table reads per row, codegen,
-    * `TakeOrderedAndProject` — the float corpus is never scanned), then
-    * re-rank the top k×rerank candidates by exact cosine with one
-    * broadcast join back to the embeddings. `Catalog.pqIndex` pays fit
-    * and encode once per corpus; one-off use fits in-plan
-    * ([[pqCodebooks]], then [[pqCodes]]). */
+    * approximate cosine (m lookup-table reads per row, codegen — the
+    * float corpus is never scanned), then re-rank the top k×rerank
+    * candidates by exact cosine with one broadcast join back to the
+    * embeddings. `Catalog.pqIndex` pays fit and encode once per corpus;
+    * one-off use fits in-plan ([[pqCodebooks]], then [[pqCodes]]). The
+    * plan is [[pqServe]]'s over a one-query panel. */
   def annPqFromIndex(books: Seq[Seq[Seq[Double]]], codes: DataFrame,
                      embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 10,
-                     rerank: Int = 4): DataFrame = {
-    val qVec = embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).collect()(0).getSeq[Float](0).map(_.toDouble)
-    val qNorm = math.sqrt(qVec.map(v => v * v).sum)
+                     rerank: Int = 4): DataFrame =
+    pqServe(books, codes, embeddings, queryVectors(embeddings, Seq(queryVecId)), k, rerank)
+      .drop("query_id")
+
+  /** PQ serving for a query panel in one plan, from the panel's
+    * vectors on the driver ([[queryVectors]]): each query's ADC
+    * dot-product table is built there and ships with the plan. Per
+    * query, the code table is ranked by ADC into its top k×rerank
+    * candidates (`TakeOrderedAndProject`: per-partition heaps merged in
+    * one partition), tagged with the query's id and vector. The union
+    * of the ≤ |panel|·k·rerank candidates broadcasts back to the
+    * embeddings once, and one row_number window ([[topKPerQuery]])
+    * keeps each query's top k by exact cosine. Output
+    * `(query_id, vec_id, label, cos_sim)`. */
+  private def pqServe(books: Seq[Seq[Seq[Double]]], codes: DataFrame,
+                      embeddings: DataFrame, queries: Seq[(Long, Seq[Float])], k: Int,
+                      rerank: Int = 4): DataFrame = {
     val m = books.length
     val kk = books.head.length
-    val sub = qVec.length / m
-    val dotLut: Seq[Double] = for (j <- 0 until m; c <- 0 until kk) yield {
-      val cent = books(j)(c)
-      val d = (0 until sub).map(i => qVec(j * sub + i) * cent(i)).sum
-      if (qNorm == 0.0) 0.0 else d / qNorm
-    }
     val norm2Lut: Seq[Double] =
       for (j <- 0 until m; c <- 0 until kk) yield books(j)(c).map(v => v * v).sum
-    val cand = codes.filter(col("vec_id") =!= queryVecId)
-      .withColumn("adc",
-        GraftFunctions.pqAdcCosine(col("codes"), typedlit(dotLut), typedlit(norm2Lut)))
-      .orderBy(desc("adc"), asc("vec_id"))
-      .limit(k * rerank)
-      .select(col("vec_id"))
-    val q = broadcast(embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    embeddings.join(broadcast(cand), "vec_id")
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), round(col("cos"), 4).as("cos_sim"))
+    val cand = queries.map { case (id, v) =>
+      val qVec = v.map(_.toDouble)
+      val qNorm = math.sqrt(qVec.map(x => x * x).sum)
+      val sub = qVec.length / m
+      val dotLut: Seq[Double] = for (j <- 0 until m; c <- 0 until kk) yield {
+        val cent = books(j)(c)
+        val d = (0 until sub).map(i => qVec(j * sub + i) * cent(i)).sum
+        if (qNorm == 0.0) 0.0 else d / qNorm
+      }
+      codes.filter(col("vec_id") =!= id)
+        .withColumn("adc",
+          GraftFunctions.pqAdcCosine(col("codes"), typedlit(dotLut), typedlit(norm2Lut)))
+        .orderBy(desc("adc"), asc("vec_id"))
+        .limit(k * rerank)
+        .select(lit(id).as("query_id"), col("vec_id"), typedlit(v).as("q_embedding"))
+    }.reduce(_ unionByName _)
+    topKPerQuery(embeddings.join(broadcast(cand), "vec_id")
+      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding"))), "cos", k)
+      .select(col("query_id"), col("vec_id"), col("label"), round(col("cos"), 4).as("cos_sim"))
   }
 
   /** OPQ-permuted PQ ANN served off the Catalog-cached OPQ index — the
@@ -1338,24 +1381,28 @@ object Similarity {
 
   /** The recall kernel of the ANN recall cards: per (arm, query_id),
     * `n_exact` (the exact panel's list), `n_served` (the arm's list)
-    * and `n_hit` (vectors on both). `exact` = (query_id, vec_id), the
-    * card's one exact panel; `served` = (arm, query_id, vec_id, …), the
-    * union of its serving arms, where each further column is a per-row
-    * served-side count summed under its own name. The exact rows,
-    * exploded over `arms`, and the served rows are tagged and unioned,
-    * so the plan reads the exact panel once and joins nothing; two
-    * aggregates then count them, per (arm, query, vector) and per
-    * (arm, query). Both sides are top-k lists (one row per vector, ≤
-    * |arms|·|panel|·k rows in all), so one partition holds them and no
-    * aggregate here or in [[armRecall]] needs an exchange. */
-  private[graft] def recallCounts(exact: DataFrame, served: DataFrame,
-                                  arms: Seq[Column]): DataFrame = {
-    val counts = served.columns.toSeq.diff(Seq("arm", "query_id", "vec_id"))
-    val exactRows = exact.select(Seq(explode(array(arms: _*)).as("arm"), col("query_id"),
-      col("vec_id"), lit(1L).as("e"), lit(0L).as("s")) ++ counts.map(lit(0L).as(_)): _*)
-    val servedRows = served.select(Seq(col("arm"), col("query_id"), col("vec_id"),
-      lit(0L).as("e"), lit(1L).as("s")) ++ counts.map(col): _*)
-    exactRows.unionByName(servedRows)
+    * and `n_hit` (vectors on both), plus each column named in `counts`,
+    * a per-row served-side count, summed. `exact` = (query_id, vec_id),
+    * the card's one exact panel; `arms` = each serving arm's label and
+    * its rows (query_id, vec_id, counts…), any other column ignored.
+    * The exact rows, exploded over the arm labels, and the labelled
+    * served rows are tagged and unioned, so the plan reads the exact
+    * panel once and joins nothing; two aggregates then count them, per
+    * (arm, query, vector) and per (arm, query). Both sides are top-k
+    * lists (one row per vector, ≤ |arms|·|panel|·k rows in all), so one
+    * partition holds them and no aggregate here or in [[armRecall]]
+    * needs an exchange. */
+  private def recallCounts(exact: DataFrame, arms: Seq[(Any, DataFrame)],
+                           counts: Seq[String] = Nil): DataFrame = {
+    require(arms.map(_._1).distinct.size == arms.size, "arm labels must be distinct")
+    val exactRows = exact.select(Seq(explode(array(arms.map(a => lit(a._1)): _*)).as("arm"),
+      col("query_id"), col("vec_id"), lit(1L).as("e"), lit(0L).as("s")) ++
+      counts.map(lit(0L).as(_)): _*)
+    val servedRows = arms.map { case (label, rows) =>
+      rows.select(Seq(lit(label).as("arm"), col("query_id"), col("vec_id"),
+        lit(0L).as("e"), lit(1L).as("s")) ++ counts.map(col): _*)
+    }
+    servedRows.foldLeft(exactRows)(_ unionByName _)
       .coalesce(1)
       .groupBy(col("arm"), col("query_id"), col("vec_id"))
       .agg(max(col("e")).as("e"), max(col("s")).as("s") +: counts.map(c => sum(col(c)).as(c)): _*)
@@ -1366,7 +1413,7 @@ object Similarity {
 
   /** Recall@k from the `n_hit` / `n_exact` counts: the exact-integer
     * half-away ROUND(, 4) quotient, 0.0 on an empty exact list. */
-  private[graft] def recall: Column =
+  private def recall: Column =
     (when(col("n_exact") === 0L, lit(0.0)).otherwise(
       expr("CAST((20000 * n_hit + n_exact) DIV (2 * n_exact) AS DOUBLE)") / lit(10000.0))
       + lit(0.0)).as("recall")
@@ -1391,9 +1438,7 @@ object Similarity {
                    assigned: DataFrame, queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                    k: Int = 10, nProbe: Int = 2): DataFrame =
     recallCounts(annTopKBatch(embeddings, queryVecIds, k),
-      annIvfBatchFromIndex(centroids, assigned, queryVecIds, k, nProbe)
-        .select(lit("ivf").as("arm"), col("query_id"), col("vec_id")),
-      Seq(lit("ivf")))
+      Seq("ivf" -> annIvfBatchFromIndex(centroids, assigned, queryVecIds, k, nProbe)))
       .select(col("query_id"), col("n_exact"), col("n_hit"), recall)
 
   /** nProbe TUNING curve — the calibration sweep behind
@@ -1414,11 +1459,8 @@ object Similarity {
                   assigned: DataFrame,
                   queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                   k: Int = 10, probes: Seq[Int] = Seq(1, 2, 4, 8)): DataFrame = {
-    val served = probes.map(np =>
-      annIvfBatchFromIndex(centroids, assigned, queryVecIds, k, np)
-        .select(lit(np).as("arm"), col("query_id"), col("vec_id")))
     armRecall("n_probe", recallCounts(annTopKBatch(embeddings, queryVecIds, k),
-      served.reduce(_ unionByName _), probes.map(lit)))
+      probes.map(np => np -> annIvfBatchFromIndex(centroids, assigned, queryVecIds, k, np))))
   }
 
   /** MATRYOSHKA truncation-recall curve — the embedding-dimension
@@ -1436,26 +1478,27 @@ object Similarity {
     * "don't truncate this model". Run once per embedding-model change,
     * then pin (the s_nprobe_curve governance discipline).
     *
-    * Plan: one exact panel ([[annTopKBatch]]) and, per prefix length,
-    * the same [[annTopKBatch]] plan body over the prefix-sliced frame
-    * (so any tie-break/rounding fix to the serving operator reaches
-    * the calibration card), counted by [[recallCounts]]. The slice is
-    * scan-side: each (dim, query) arm is one pruned-scan
-    * TakeOrderedAndProject reading ONLY slice(embedding, 1, d), and no
-    * arm shuffles corpus rows. Recall is a quotient of exact integer
-    * counts → the exact-integer half-away ROUND(,4) idiom. At 100 TB
+    * Plan: one exact panel ([[annTopKBatch]]'s plan) and, per prefix
+    * length, the same plan body over the prefix-sliced frame (so any
+    * tie-break/rounding fix to the serving operator reaches the
+    * calibration card), counted by [[recallCounts]]. The panel's
+    * vectors are collected once and each arm takes their first d
+    * coordinates on the driver. The slice is scan-side: each arm is
+    * one scan reading ONLY slice(embedding, 1, d) and one top-k window,
+    * which shuffles ≤ k rows per query and partition. Recall is a
+    * quotient of exact integer counts → the exact-integer half-away
+    * ROUND(,4) idiom. At 100 TB
     * the truncated arms run over a stored prefix-column table (or the
     * d-dim IVF fit) instead of slicing the full vectors — the card's
     * arithmetic is unchanged. */
   def mrlRecallCurve(embeddings: DataFrame,
                      queryVecIds: Seq[Long] = Seq(0L, 1L, 2L, 3L, 4L),
                      k: Int = 10, dims: Seq[Int] = Seq(8, 16, 32, 64)): DataFrame = {
-    val served = dims.map(dm =>
-      annTopKBatch(embeddings.select(col("vec_id"), col("label"),
-          slice(col("embedding"), 1, dm).as("embedding")), queryVecIds, k)
-        .select(lit(dm).as("arm"), col("query_id"), col("vec_id")))
-    armRecall("mrl_dim", recallCounts(annTopKBatch(embeddings, queryVecIds, k),
-      served.reduce(_ unionByName _), dims.map(lit)))
+    val queries = queryVectors(embeddings, queryVecIds)
+    armRecall("mrl_dim", recallCounts(topKBatch(embeddings, queries, k),
+      dims.map(dm => dm -> topKBatch(embeddings.select(col("vec_id"), col("label"),
+          slice(col("embedding"), 1, dm).as("embedding")),
+        queries.map { case (id, v) => id -> v.take(dm) }, k))))
   }
 
   /** The scan-tier prefix projection `Store.saveMrlPrefix` materializes

@@ -35,15 +35,10 @@ object Audit {
   /** Keys whose plan legitimately contains a BroadcastNestedLoopJoin:
     * every one is a crossJoin against a broadcast 1-row query vector. */
   private val BnljAllowed = Set(
-    "s_ann_topk", "s_ann_ivf", "s_ann_pq", "s_ann_ivfpq",
-    // the s_ann_pq serve over the OPQ-permuted frame: the identical
-    // 1-row query-vector crossJoin in the exact-cosine rerank
-    "s_ann_opq",
+    "s_ann_topk", "s_ann_ivf", "s_ann_ivfpq",
     // the s_ann_ivf serve (1-row query-vector crossJoin) over the
     // predicate-filtered probed lists
     "s_ann_ivf_filtered",
-    // union of per-query 1-row-broadcast subplans (one BNLJ per query)
-    "s_ann_batch",
     // same 1-row query-vector crossJoin, over the predicate-pruned scan
     "s_ann_filtered",
     // crossJoin of the 1-row corpus-stats frame (N, Σdl, per-term df)
@@ -52,30 +47,10 @@ object Audit {
     // both shapes: the 1-row stats frame on the lexical arm and the
     // 1-row query vector on the cosine arm
     "s_hybrid_rrf",
-    // the exact panel is annTopKBatch: one 1-row query-vector crossJoin
-    // per query (the s_ann_batch shape); the recall kernel unions it
-    // with the served rows and aggregates, joining nothing
-    "s_recall_report",
-    // the same one-exact-panel shape, read once for every probe setting
-    "s_nprobe_curve",
-    // the same exact panel, plus one annTopKBatch per prefix length over
-    // the prefix-sliced frame (the same 1-row query-vector crossJoins)
-    "s_mrl_recall",
     // the 1-row query-vector crossJoin feeding both funnel stages
     "s_ann_mrl",
     // the same 1-row query-vector crossJoin over the probed lists
     "s_ann_mrl_ivf",
-    // the same per-query 1-row query-vector crossJoin in both serving
-    // arms' exact-cosine reranks (the s_ann_pq / s_ann_opq shapes,
-    // one per (arm, query)) and in the one exact panel
-    "s_opq_recall",
-    // the live exact panel is annTopKBatch (one 1-row query-vector
-    // crossJoin per query); the served side is the batch IVF serve,
-    // and the recall kernel joins nothing
-    "s_ann_tombstone",
-    // the same live exact panel over the boundary queries (the
-    // s_ann_batch shape); both arms are batch IVF serves
-    "s_ann_refit",
     // the same 1-row query-vector crossJoin over the upserted corpus
     "s_ann_reembed",
     // the 1-row corpus-total frame crossJoined onto the 4-row stacked
@@ -122,9 +97,8 @@ object Audit {
     // TWO 1-row snapshot-total frames crossJoined onto the #sources-row
     // drift join — the t_bm25 corpus-stats shape, twice
     "t_corpus_drift",
-    // its arms ARE the whitelisted shapes (annTopKBatch's per-query
-    // 1-row query-vector crossJoins, hybridRrf's 1-row stats + query
-    // vector), plus one k-row ranks frame crossJoined onto the 5-row
+    // hybridRrf's 1-row stats + query-vector crossJoins, plus one k-row
+    // ranks frame crossJoined onto the 5-row
     // panel for the IDCG terms — every BNLJ side is ≤ k rows
     "s_rank_metrics",
     // the same shapes again: the 1-row stats + query-vector
@@ -243,13 +217,14 @@ object Audit {
     // full corpus-side semantic dedup (pairs + CC closure) composed
     // with the batch×survivor vetting join
     "d_semantic_cross" -> 10,
-    // one window exchange per probe setting (each a batch IVF serve
-    // over the 5-query panel); the recall kernel counts the ≤ 250
-    // unioned top-k rows in one partition, with no exchange
-    "s_nprobe_curve" -> 4,
-    // every arm is a TakeOrdered annTopKBatch (no exchange node) and
-    // the recall kernel adds none
-    "s_mrl_recall" -> 0,
+    // one top-k window exchange per probe setting (each a batch IVF
+    // serve over the 5-query panel) and one for the exact panel; the
+    // recall kernel counts the unioned top-k rows in one partition,
+    // with no exchange
+    "s_nprobe_curve" -> 5,
+    // one top-k window exchange for the exact panel and one per prefix
+    // length (each annTopKBatch's plan); the recall kernel adds none
+    "s_mrl_recall" -> 5,
     // 4 β arms × a 2-phase union collapse, every exchange over the
     // localCheckpointed ≤ #sources-row quality frame (the corpus scan
     // is paid once at build time and is NOT in the audited plan) —
@@ -259,9 +234,10 @@ object Audit {
     // exchanges), exploded over the 3 rrfK arms in one partition, plus
     // the meta join and the panel-count aggregates
     "s_rrf_curve" -> 5,
-    // the s_mrl_recall shape: per (arm, query) PQ/OPQ serves are
-    // TakeOrdered plans and the recall kernel adds no exchange
-    "s_opq_recall" -> 0,
+    // the exact panel's top-k window and one rerank window per arm (the
+    // per-query ADC rankings are TakeOrdered, no exchange node); the
+    // recall kernel adds none
+    "s_opq_recall" -> 3,
     // the pair set is localCheckpointed at build time; the audited
     // plan is the two 1-row aggregates (pair counts + exploded
     // distinct-doc counts with its countDistinct expand) over it

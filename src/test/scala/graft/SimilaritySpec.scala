@@ -832,6 +832,16 @@ class SimilaritySpec extends SparkSpec {
     }
   }
 
+  test("recall cards fail on a query vec_id the table does not hold") {
+    val (cents, assigned) = graft.core.Catalog.ivfIndex(spark, TestSpark.sf0001)
+    val missing = Long.MaxValue
+    val e = intercept[IllegalArgumentException](Similarity.recallReport(embs, cents, assigned,
+      queryVecIds = Seq(0L, missing), k = 5).collect())
+    assert(e.getMessage.contains(missing.toString), e.getMessage)
+    intercept[IllegalArgumentException](
+      Similarity.mrlRecallCurve(embs, queryVecIds = Seq(missing), k = 5).collect())
+  }
+
   test("nprobeCurve: recall nondecreasing in n_probe; saturates at 1.0 when every list is probed; counts consistent") {
     val (cents, assigned) = graft.core.Catalog.ivfIndex(spark, TestSpark.sf0001)
     val got = Similarity.nprobeCurve(embs, cents, assigned,
