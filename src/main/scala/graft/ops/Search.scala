@@ -25,7 +25,7 @@ import graft.functions.GraftFunctions
   *    stream, the corpus text never shuffles.
   *  - Corpus stats (N, Σdl, per-term df) are ONE tiny map-side-combined
   *    aggregate producing a single row, recombined via broadcast
-  *    (`crossJoin` of a 1-row frame — same shape the ANN queries use).
+  *    (`crossJoin` of a 1-row frame).
   *  - Top-k is `orderBy(score).limit(k)` → TakeOrderedAndProject:
   *    per-partition heaps, only k rows ever reach the driver-side merge;
   *    the rank `row_number` window runs AFTER the limit, over ≤ k rows.
@@ -150,20 +150,12 @@ object Search {
     // the lexical arm excludes the query's own document just like the
     // vector arm below — a self-hit in the fused list would grade 2 in
     // DCG while the IDCG panel excludes it, skewing cross-arm ndcg
-    // (ADVICE r14)
     val lex = bm25TopK(documents, Seq("q" -> lexTerms), n,
         excludeDocId = Some(queryVecId))
       .select(col("doc_id"), col("rank").as("lex_rank"))
-    val q = broadcast(embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    val vecScored = embeddings
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(col("cos").desc, col("vec_id").asc)
-      .limit(n)
-    val vec = vecScored.select(col("vec_id"),
-      row_number().over(
+    val vec = Similarity.topKByCosine(embeddings.filter(col("vec_id") =!= queryVecId),
+        Similarity.queryVector(embeddings, queryVecId), n)
+      .select(col("vec_id"), row_number().over(
         Window.orderBy(col("cos").desc, col("vec_id").asc)).as("vec_rank"))
     (lex, vec)
   }

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -9,14 +9,15 @@ import graft.functions.GraftFunctions
 /** Similarity search over an embedding column (SURVEY.md §2.3).
   *
   * Two paths:
-  *  - [[annTopK]] — brute-force cosine top-k against a broadcast query
-  *    vector. The correctness baseline: one scan, cosine inside
-  *    WholeStageCodegen (`graft_cosine`), `TakeOrderedAndProject` for the
-  *    top-k (per-partition heaps, no global sort). At 100 TB this is the
-  *    plan you run when you genuinely must rank everything.
+  *  - [[annTopK]] — brute-force cosine top-k against the query vector,
+  *    shipped with the plan as a literal. The correctness baseline: one
+  *    scan, cosine inside WholeStageCodegen (`graft_cosine`),
+  *    `TakeOrderedAndProject` for the top-k (per-partition heaps, no
+  *    global sort). At 100 TB this is the plan you run when you
+  *    genuinely must rank everything.
   *  - [[annLshFromSignatures]] — the scale path: random-hyperplane signatures bucket
   *    the corpus; the query probes its own bucket plus all buckets within
-  *    hamming 1 (multi-probe), as an equi-join on the bucket id. Scan
+  *    hamming 1 (multi-probe), as a bucket-id filter on the scan. Scan
   *    cost is unchanged (signatures are scan-side), but ranking touches
   *    only the probed buckets — ~(1+P)/2^P of the corpus for P planes.
   */
@@ -30,46 +31,24 @@ object Similarity {
     Seq.fill(nPlanes)(Seq.fill(dim)(rnd.nextGaussian()))
   }
 
-  /** Brute-force cosine top-k vs the embedding of `queryVecId`. */
-  def annTopK(embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 20): DataFrame = {
-    val q = broadcast(embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    embeddings
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+  /** Brute-force cosine top-k vs the embedding of `queryVecId`, among
+    * the rows `pred` keeps. The correctness baseline: one scan, cosine
+    * inside WholeStageCodegen, per-partition heaps for the top-k.
+    *
+    * `pred` is a metadata predicate ("nearest among docs with label ∈
+    * {…}" / "from source X" / "after date D"), the vector-DB filtered
+    * search. It lands on the scan before any cosine, so Catalyst pushes
+    * it to the parquet reader (`PushedFilters`, spec-asserted) and the
+    * top-k is the top-k of the filtered corpus, never a post-filtered
+    * list that comes back short. The query vector itself need not pass
+    * `pred`. */
+  def annTopK(embeddings: DataFrame, queryVecId: Long = 0L, k: Int = 20,
+              pred: Column = lit(true)): DataFrame =
+    topKByCosine(embeddings.filter(pred && col("vec_id") =!= queryVecId),
+        queryVector(embeddings, queryVecId), k)
       // `+ 0.0` kills IEEE −0.0 (a cosine in (−5e−5, 0) would round to
       // −0.0 in DuckDB but +0.0 in Spark — same class as the q_corr fix)
       .select(col("vec_id"), col("label"), (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
-  }
-
-  /** FILTERED exact ANN — vector search under a metadata predicate
-    * ("nearest neighbors among docs with label ∈ {…}" / "from source X"
-    * / "after date D"), the standard vector-DB filtered-search shape.
-    * The predicate composes into the SCAN (a plain `filter` before the
-    * cosine, so Catalyst pushes it to the parquet reader —
-    * `PushedFilters` carries it, spec-asserted): candidates are pruned
-    * before any distance math, which is exactly what pre-filtered
-    * vector search must do at scale. Top-k then runs per-partition
-    * heaps over the pruned scan (TakeOrderedAndProject), never a
-    * global sort. At corpus scale the same predicate composes in front
-    * of the IVF/PQ serving paths (their code/list tables carry the
-    * metadata columns) — this brute-force form is the correctness
-    * baseline, like [[annTopK]] for the unfiltered case. */
-  def annTopKFiltered(embeddings: DataFrame, pred: Column,
-                      queryVecId: Long = 0L, k: Int = 20): DataFrame = {
-    val q = broadcast(embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    embeddings
-      .filter(pred && col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
-  }
 
   /** Batch ANN serving: exact top-k for a SET of query vectors in ONE
     * plan. The panel's query vectors reach the driver in one collect
@@ -98,19 +77,51 @@ object Similarity {
       .select(col("query_id"), col("vec_id"), col("label"),
         (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
 
-  /** The panel's query vectors `(vec_id, embedding)`, in panel order,
-    * read from `embeddings` in one driver collect (≤ |panel| rows).
-    * Fails on an id the table does not hold: a query with no vector has
-    * no top-k to serve or count. */
+  /** The panel's query vectors `(vec_id, embedding)`, in panel order
+    * ([[queryRows]]). */
   private def queryVectors(embeddings: DataFrame,
-                           queryVecIds: Seq[Long]): Seq[(Long, Seq[Float])] = {
-    val found = embeddings.filter(col("vec_id").isin(queryVecIds: _*))
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+                           queryVecIds: Seq[Long]): Seq[(Long, Seq[Float])] =
+    queryRows(embeddings, queryVecIds, col("embedding"))
+      .map(r => r.getLong(0) -> r.getSeq[Float](1))
+
+  /** One query's vector, for the single-query serves. */
+  private[ops] def queryVector(embeddings: DataFrame, queryVecId: Long): Seq[Float] =
+    queryVectors(embeddings, Seq(queryVecId)).head._2
+
+  /** The panel's rows `(vec_id, cols…)`, in panel order, read from `df`
+    * in one driver collect (≤ |panel| rows). Fails on an id the table
+    * does not hold: a query with no vector has no top-k to serve or
+    * count. */
+  private def queryRows(df: DataFrame, queryVecIds: Seq[Long], cols: Column*): Seq[Row] = {
+    val found = df.filter(col("vec_id").isin(queryVecIds: _*))
+      .select(col("vec_id") +: cols: _*).collect()
+      .map(r => r.getLong(0) -> r).toMap
     val missing = queryVecIds.filterNot(found.contains)
     require(missing.isEmpty, s"query vec_ids not in the table: ${missing.mkString(", ")}")
-    queryVecIds.distinct.map(id => id -> found(id))
+    queryVecIds.distinct.map(found)
   }
+
+  /** The single-query ranking step: the top `k` rows of `candidates` by
+    * cosine of `vector` against the query vector `q`, which ships with
+    * the plan as a literal, in column `score`; ties by vec_id ascending.
+    * One scan and `TakeOrderedAndProject` (per-partition heaps, no
+    * global sort). */
+  private[ops] def topKByCosine(candidates: DataFrame, q: Seq[Float], k: Int,
+                                vector: Column = col("embedding"),
+                                score: String = "cos"): DataFrame =
+    candidates.withColumn(score, GraftFunctions.cosine(vector, typedlit(q)))
+      .orderBy(desc(score), asc("vec_id"))
+      .limit(k)
+
+  /** The `nProbe` lists whose centroids are nearest `q` by squared
+    * distance (in doubles), ties broken by list id: the single-query IVF
+    * serves' probe set, picked on the driver against the model-scale
+    * centroid literal. */
+  private def nearestLists(centroids: Seq[Seq[Double]], q: Seq[Float],
+                           nProbe: Int): Seq[Int] =
+    centroids.zipWithIndex.map { case (c, i) =>
+      (i, c.indices.map { j => val d = q(j).toDouble - c(j); d * d }.sum)
+    }.sortBy(_._2).take(nProbe).map(_._1)
 
   /** Each query's top `k` rows of `df` by `score` descending, vec_id
     * ascending (the single-query serves' tie-break): one row_number
@@ -137,21 +148,18 @@ object Similarity {
 
   /** Random-hyperplane LSH ANN served off a signature index
     * ([[withSignatures]] in-plan, or a materialized or stream-maintained
-    * table): candidates come from an equi-join of the corpus's bucket id
-    * against the query's multi-probe bucket set (own bucket + hamming-1
-    * neighbors); top-k by exact cosine among candidates only. */
+    * table): candidates are the rows whose bucket id is in the query's
+    * multi-probe bucket set (own bucket + hamming-1 neighbors); top-k by
+    * exact cosine among candidates only. The query's vector and bucket
+    * come from the index in one driver read, so the probe set is a
+    * literal `IN` list on the scan. */
   def annLshFromSignatures(index: DataFrame, queryVecId: Long = 0L, k: Int = 10,
                            nPlanes: Int = 8): DataFrame = {
-    val probes = index.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding"),
-        explode(concat(array(col("bucket")),
-          expr(s"transform(sequence(0, ${nPlanes - 1}), p -> bucket ^ shiftleft(1L, p))")))
-          .as("probe"))
-    index
-      .join(broadcast(probes), col("bucket") === col("probe") && col("vec_id") =!= queryVecId)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+    val q = queryRows(index, Seq(queryVecId), col("embedding"), col("bucket")).head
+    val bucket = q.getLong(2)
+    val probes = bucket +: (0 until nPlanes).map(p => bucket ^ (1L << p))
+    topKByCosine(index.filter(col("bucket").isin(probes: _*) && col("vec_id") =!= queryVecId),
+        q.getSeq[Float](1), k)
       .select(col("vec_id"), col("label"), col("bucket"), round(col("cos"), 4).as("cos_sim"))
   }
 
@@ -393,22 +401,20 @@ object Similarity {
     * happens once (see `Catalog.ivfIndex`; one-off use fits in-plan:
     * [[ivfCentroids]], then a `graft_nearest_centroid` projection adds
     * `cluster`), exactly as a materialized signature table amortizes
-    * LSH; ranking touches ~nProbe/nlist of the corpus. */
+    * LSH; ranking touches ~nProbe/nlist of the corpus.
+    *
+    * `pred` is [[annTopK]]'s pre-filter on the assigned-table scan
+    * ("nearest within a language / license / date range"): it lands
+    * before any cosine, so a selective filter prunes candidates at the
+    * reader while the probe set still bounds the scan. A filter
+    * correlated with cluster geometry can empty probed lists; raise
+    * nProbe with filter selectivity. */
   def annIvfFromIndex(centroids: Seq[Seq[Double]], assigned: DataFrame,
-                      queryVecId: Long = 0L, k: Int = 10, nProbe: Int = 2): DataFrame = {
-    val qVec = assigned.filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).collect()(0).getSeq[Float](0)
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.indices.map { j => val d = qVec(j).toDouble - c(j); d * d }.sum)
-    }.sortBy(_._2).take(nProbe).map(_._1)
-    val q = broadcast(assigned.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    assigned
-      .filter(col("cluster").isin(probes: _*) && col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+                      queryVecId: Long = 0L, k: Int = 10, nProbe: Int = 2,
+                      pred: Column = lit(true)): DataFrame = {
+    val q = queryVector(assigned, queryVecId)
+    topKByCosine(assigned.filter(col("cluster").isin(nearestLists(centroids, q, nProbe): _*) &&
+        col("vec_id") =!= queryVecId && pred), q, k)
       .select(col("vec_id"), col("label"), col("cluster"), round(col("cos"), 4).as("cos_sim"))
   }
 
@@ -438,39 +444,6 @@ object Similarity {
       .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding"))), "cos", k)
       .select(col("query_id"), col("vec_id"), col("label"), col("cluster"),
         round(col("cos"), 4).as("cos_sim"))
-  }
-
-  /** FILTERED IVF serving — [[annTopKFiltered]]'s predicate composed
-    * into the [[annIvfFromIndex]] scale path (filtered ANN is how
-    * retrieval actually runs: "nearest WITHIN a language / license /
-    * date range"). The predicate lands on the assigned-table SCAN
-    * (before any cosine — pushdown-eligible exactly like
-    * annTopKFiltered's spec-asserted PushedFilters), so a selective
-    * filter prunes candidates at the reader and the probe set still
-    * bounds the scan to ~nProbe/nlist of the corpus. Post-filtering a
-    * top-k would instead return < k rows whenever the filter is
-    * selective — this is the pre-filter form, the correct semantics
-    * ("top-k of the filtered corpus" restricted to probed lists).
-    * Caveat at scale (documented, measured by s_recall_report's
-    * convention): a filter CORRELATED with cluster geometry can empty
-    * probed lists — raise nProbe with filter selectivity. */
-  def annIvfFilteredFromIndex(centroids: Seq[Seq[Double]], assigned: DataFrame,
-                              pred: Column, queryVecId: Long = 0L, k: Int = 10,
-                              nProbe: Int = 2): DataFrame = {
-    val qVec = assigned.filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).collect()(0).getSeq[Float](0)
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.indices.map { j => val d = qVec(j).toDouble - c(j); d * d }.sum)
-    }.sortBy(_._2).take(nProbe).map(_._1)
-    val q = broadcast(assigned.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    assigned
-      .filter(col("cluster").isin(probes: _*) && col("vec_id") =!= queryVecId && pred)
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
-      .select(col("vec_id"), col("label"), col("cluster"), round(col("cos"), 4).as("cos_sim"))
   }
 
   /** Product-quantization codebooks: an independent deterministic k-means
@@ -596,7 +569,7 @@ object Similarity {
   }
 
   /** Serving under DELETES off a STALE index — the operational gap
-    * between index refits that [[annIvfFilteredFromIndex]]'s pre-filter
+    * between index refits that [[annIvfFromIndex]]'s pre-filter
     * form exists to close: vectors get tombstoned between refits
     * (takedowns, dedup removals), the fitted IVF lists still carry
     * them, and the serving path must (a) exclude them EXACTLY — the
@@ -764,14 +737,7 @@ object Similarity {
   def annReembedServe(events: DataFrame, queryVecId: Long = 2L,
                       k: Int = 10): DataFrame = {
     val latest = graft.etl.VehicleFeed.latest(events, "vec_id", Seq("version"))
-    val q = broadcast(latest.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    latest
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+    topKByCosine(latest.filter(col("vec_id") =!= queryVecId), queryVector(latest, queryVecId), k)
       .select(col("vec_id"), col("label"), col("version"),
         (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
   }
@@ -952,16 +918,13 @@ object Similarity {
                         codes: DataFrame, embeddings: DataFrame,
                         queryVecId: Long = 0L, k: Int = 10, nProbe: Int = 4,
                         rerank: Int = 4): DataFrame = {
-    val qVec = embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding")).collect()(0).getSeq[Float](0).map(_.toDouble)
+    val q = queryVector(embeddings, queryVecId)
+    val qVec = q.map(_.toDouble)
     val qNorm = math.sqrt(qVec.map(v => v * v).sum)
-    val probes = cents.zipWithIndex.map { case (c, i) =>
-      (i, c.indices.map { j => val d = qVec(j) - c(j); d * d }.sum)
-    }.sortBy(_._2).take(nProbe).map(_._1)
     val m = books.length
     val kk = books.head.length
     val sub = qVec.length / m
-    val adcBranches = probes.map { c =>
+    val adcBranches = nearestLists(cents, q, nProbe).map { c =>
       val cent = cents(c)
       val dotLut: Seq[Double] = for (j <- 0 until m; code <- 0 until kk) yield {
         val b = books(j)(code)
@@ -980,13 +943,7 @@ object Similarity {
       .orderBy(desc("adc"), asc("vec_id"))
       .limit(k * rerank)
       .select(col("vec_id"))
-    val q = broadcast(embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    embeddings.join(broadcast(cand), "vec_id")
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+    topKByCosine(embeddings.join(broadcast(cand), "vec_id"), q, k)
       .select(col("vec_id"), col("label"), round(col("cos"), 4).as("cos_sim"))
   }
 
@@ -1513,9 +1470,11 @@ object Similarity {
     * stage 1 shortlists `shortlist` candidates by prefix cosine over
     * `prefixed` (the [[mrlPrefixProjection]] of the corpus: in-plan for
     * the `s_ann_mrl` key, or the stored tier `Store.saveMrlPrefix`
-    * writes), stage 2 reranks the shortlist by FULL-dimension exact
-    * cosine and emits the top-k (the standard MRL funnel retrieval,
-    * adaptive-retrieval style).
+    * writes, `shortDim` coordinates wide), stage 2 reranks the
+    * shortlist by FULL-dimension exact cosine and emits the top-k (the
+    * standard MRL funnel retrieval, adaptive-retrieval style). The
+    * query's prefix is its vector's first `shortDim` floats, taken on
+    * the driver.
     *
     * Over the stored tier the funnel's IO claim holds at the SCAN tier,
     * not just the index: stage 1 reads ONLY (vec_id, prefix) — a
@@ -1525,8 +1484,8 @@ object Similarity {
     * for the ≤ `shortlist` survivors only, via a broadcast id-join back
     * to the full table (co-bucketed by vec_id in the Store →
     * zero-exchange at scale). The stored slice carries the same floats
-    * the in-plan slice computes, so both prefix sources give
-    * bit-identical output (spec-proven).
+    * the in-plan slice and the driver-side prefix hold, so both prefix
+    * sources give bit-identical output (spec-proven).
     *
     * Both stages are TakeOrderedAndProject (per-partition heaps; stage 2
     * sorts ≤ shortlist rows), no shuffle. Output carries both cosines so
@@ -1534,25 +1493,13 @@ object Similarity {
     * Degenerate settings recover [[annTopK]] exactly (shortlist ≥
     * corpus, or a full-dimension prefix) — spec-proven. */
   def annMrlServeFromPrefix(prefixed: DataFrame, embeddings: DataFrame,
-                            queryVecId: Long = 0L, k: Int = 10,
+                            queryVecId: Long = 0L, k: Int = 10, shortDim: Int = 16,
                             shortlist: Int = 50): DataFrame = {
-    val qt = broadcast(prefixed.filter(col("vec_id") === queryVecId)
-      .select(col("prefix").as("q_trunc")))
-    val short = prefixed
-      .filter(col("vec_id") =!= queryVecId)
-      .crossJoin(qt)
-      .withColumn("cos_s", GraftFunctions.cosine(col("prefix"), col("q_trunc")))
-      .orderBy(desc("cos_s"), asc("vec_id"))
-      .limit(shortlist)
+    val q = queryVector(embeddings, queryVecId)
+    val short = topKByCosine(prefixed.filter(col("vec_id") =!= queryVecId),
+        q.take(shortDim), shortlist, col("prefix"), "cos_s")
       .select(col("vec_id"), col("cos_s"))
-    val q = broadcast(embeddings.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding")))
-    embeddings
-      .join(broadcast(short), Seq("vec_id"))
-      .crossJoin(q)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+    topKByCosine(embeddings.join(broadcast(short), Seq("vec_id")), q, k)
       .select(col("vec_id"), col("label"),
         (round(col("cos"), 4) + lit(0.0)).as("cos_sim"),
         (round(col("cos_s"), 4) + lit(0.0)).as("cos_short"))
@@ -1585,32 +1532,19 @@ object Similarity {
     * prefix cosine, and only the ≤ `shortlist` survivors are reranked
     * by FULL-dimension cosine. The assigned table carries full vectors
     * (the rerank never re-joins at serve time); `s_mrl_recall` is the
-    * card that picks `shortDim` before this index is built. Probe
-    * selection is the [[annIvfFromIndex]] driver-side argmin over the
-    * prefix centroids (model-scale literal, distance ties broken by
-    * list id); both serving stages are TakeOrderedAndProject over the
-    * pruned lists — work ∝ probed-list sizes, never corpus. */
+    * card that picks `shortDim` before this index is built. Probes are
+    * [[nearestLists]] of the query's prefix; both serving stages are
+    * TakeOrderedAndProject over the pruned lists — work ∝ probed-list
+    * sizes, never corpus. */
   def annMrlIvfFromIndex(centroids: Seq[Seq[Double]], assigned: DataFrame,
                          queryVecId: Long = 0L, k: Int = 10, shortDim: Int = 16,
                          shortlist: Int = 50, nProbe: Int = 2): DataFrame = {
-    val qVec = assigned.filter(col("vec_id") === queryVecId)
-      .select(slice(col("embedding"), 1, shortDim)).collect()(0).getSeq[Float](0)
-    val probes = centroids.zipWithIndex.map { case (c, i) =>
-      (i, c.indices.map { j => val d = qVec(j).toDouble - c(j); d * d }.sum)
-    }.sortBy(_._2).take(nProbe).map(_._1)
-    val q = broadcast(assigned.filter(col("vec_id") === queryVecId)
-      .select(col("embedding").as("q_embedding"),
-        slice(col("embedding"), 1, shortDim).as("q_trunc")))
-    assigned
-      .filter(col("cluster").isin(probes: _*) && col("vec_id") =!= queryVecId)
-      .crossJoin(q)
-      .withColumn("cos_s",
-        GraftFunctions.cosine(slice(col("embedding"), 1, shortDim), col("q_trunc")))
-      .orderBy(desc("cos_s"), asc("vec_id"))
-      .limit(shortlist)
-      .withColumn("cos", GraftFunctions.cosine(col("embedding"), col("q_embedding")))
-      .orderBy(desc("cos"), asc("vec_id"))
-      .limit(k)
+    val q = queryVector(assigned, queryVecId)
+    val qt = q.take(shortDim)
+    val short = topKByCosine(assigned.filter(col("cluster").isin(
+        nearestLists(centroids, qt, nProbe): _*) && col("vec_id") =!= queryVecId),
+      qt, shortlist, slice(col("embedding"), 1, shortDim), "cos_s")
+    topKByCosine(short, q, k)
       .select(col("vec_id"), col("label"), col("cluster"),
         (round(col("cos"), 4) + lit(0.0)).as("cos_sim"),
         (round(col("cos_s"), 4) + lit(0.0)).as("cos_short"))
@@ -1757,7 +1691,7 @@ object Similarity {
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s_ann_topk" -> ((s, d) => annTopK(Tables(s, d).embeddings)),
     "s_ann_filtered" -> ((s, d) =>
-      annTopKFiltered(Tables(s, d).embeddings, col("label").isin(1, 3, 5))),
+      annTopK(Tables(s, d).embeddings, pred = col("label").isin(1, 3, 5))),
     "s_ann_batch" -> ((s, d) => annTopKBatch(Tables(s, d).embeddings)),
     "s_ann_lsh"  -> ((s, d) => annLshFromSignatures(withSignatures(Tables(s, d).embeddings))),
     "s_ann_ivf"  -> ((s, d) => {
@@ -1766,7 +1700,7 @@ object Similarity {
     }),
     "s_ann_ivf_filtered" -> ((s, d) => {
       val (cents, assigned) = graft.core.Catalog.ivfIndex(s, d)
-      annIvfFilteredFromIndex(cents, assigned, col("label").isin(1, 3, 5))
+      annIvfFromIndex(cents, assigned, pred = col("label").isin(1, 3, 5))
     }),
     "s_ann_ivf_batch" -> ((s, d) => {
       val (cents, assigned) = graft.core.Catalog.ivfIndex(s, d)
@@ -2520,7 +2454,7 @@ object Similarity {
         ids.map(q => s"SELECT query_id, vec_id, label, cluster, ROUND(cosr, 4) AS cos_sim FROM bs$q")
           .mkString("\nUNION ALL\n")
     },
-    // annIvfFilteredFromIndex mirror: the s_ann_ivf serve with the
+    // annIvfFromIndex mirror with `pred`: the s_ann_ivf serve with the
     // label predicate applied BEFORE ranking (pre-filter semantics).
     "s_ann_ivf_filtered" ->
       s"""WITH $ivfFitCte,

@@ -21,7 +21,7 @@ import graft.core.GraftSession
   *  - every key executes (no FAILED rows);
   *  - ZERO CartesianProduct anywhere;
   *  - BroadcastNestedLoopJoin only on the declared 1-row-broadcast
-  *    keys (ANN query vectors — a bnlj against a 1-row side is a scan,
+  *    keys (corpus-stats frames — a bnlj against a 1-row side is a scan,
   *    not a blow-up);
   *  - SortMergeJoin only on the declared fact×fact keys;
   *  - shuffle count per key (the key's own plan, not the
@@ -33,26 +33,15 @@ import graft.core.GraftSession
 object Audit {
 
   /** Keys whose plan legitimately contains a BroadcastNestedLoopJoin:
-    * every one is a crossJoin against a broadcast 1-row query vector. */
+    * every one is a crossJoin against a broadcast frame of one row (or
+    * of ≤ k rows), never a blow-up. */
   private val BnljAllowed = Set(
-    "s_ann_topk", "s_ann_ivf", "s_ann_ivfpq",
-    // the s_ann_ivf serve (1-row query-vector crossJoin) over the
-    // predicate-filtered probed lists
-    "s_ann_ivf_filtered",
-    // same 1-row query-vector crossJoin, over the predicate-pruned scan
-    "s_ann_filtered",
     // crossJoin of the 1-row corpus-stats frame (N, Σdl, per-term df)
     // into the scan — a broadcast of one row, not a blow-up
     "t_bm25",
-    // both shapes: the 1-row stats frame on the lexical arm and the
-    // 1-row query vector on the cosine arm
+    // the 1-row corpus-stats frame of the lexical arm — the t_bm25
+    // shape
     "s_hybrid_rrf",
-    // the 1-row query-vector crossJoin feeding both funnel stages
-    "s_ann_mrl",
-    // the same 1-row query-vector crossJoin over the probed lists
-    "s_ann_mrl_ivf",
-    // the same 1-row query-vector crossJoin over the upserted corpus
-    "s_ann_reembed",
     // the 1-row corpus-total frame crossJoined onto the 4-row stacked
     // threshold aggregate — the t_bm25 corpus-stats shape
     "t_decontam_curve",
@@ -97,13 +86,13 @@ object Audit {
     // TWO 1-row snapshot-total frames crossJoined onto the #sources-row
     // drift join — the t_bm25 corpus-stats shape, twice
     "t_corpus_drift",
-    // hybridRrf's 1-row stats + query-vector crossJoins, plus one k-row
-    // ranks frame crossJoined onto the 5-row
-    // panel for the IDCG terms — every BNLJ side is ≤ k rows
+    // hybridRrf's 1-row corpus-stats crossJoin, plus one k-row ranks
+    // frame crossJoined onto the 5-row panel for the IDCG terms — every
+    // BNLJ side is ≤ k rows
     "s_rank_metrics",
-    // the same shapes again: the 1-row stats + query-vector
-    // crossJoins of the two rank lists (each read once for all rrfK
-    // candidates) and the k-row ranks × 1-query panel IDCG frame
+    // the same shapes again: the 1-row corpus-stats crossJoin of the
+    // lexical rank list (read once for all rrfK candidates) and the
+    // k-row ranks × 1-query panel IDCG frame
     "s_rrf_curve")
 
   /** Keys where a SortMergeJoin is the RIGHT strategy (fact×fact joins

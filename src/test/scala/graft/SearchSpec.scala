@@ -87,6 +87,13 @@ class SearchSpec extends SparkSpec {
     }
   }
 
+  test("hybridRrf fails on a query vec_id the embeddings do not hold") {
+    val missing = Long.MaxValue
+    val e = intercept[IllegalArgumentException](
+      Search.hybridRrf(docs, embs, queryVecId = missing).collect())
+    assert(e.getMessage.contains(missing.toString), e.getMessage)
+  }
+
   test("rankMetrics: ideal order scores ndcg 1.0 / mrr 1.0; the planted inversion scores the hand-computed ndcg and mrr = 1/first-relevant") {
     import graft.ops.Search
     // query 0 (label 1, source a); corpus: ids 1,2 same label (grade 2),

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.TakeOrderedAndProjectExec
+import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -79,7 +81,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("annTopKFiltered: predicate pushed to the scan, equals brute force over the filtered subset") {
     val pred = col("label").isin(1, 3, 5)
-    val out = Similarity.annTopKFiltered(embs, pred, queryVecId = 0L, k = 20)
+    val out = Similarity.annTopK(embs, queryVecId = 0L, k = 20, pred = pred)
     val rows = out.collect()
     assert(rows.nonEmpty && rows.forall(r => Set(1, 3, 5)(r.getAs[Int]("label"))))
     // equals the unfiltered operator applied to the pre-filtered corpus
@@ -296,8 +298,8 @@ class SimilaritySpec extends SparkSpec {
       // differential against the shipped plans: exact live top-k and
       // the pre-filtered stale-index serve
       val exact = Similarity.annTopK(live, id, 5).collect().map(_.getLong(0)).toSet
-      val served = Similarity.annIvfFilteredFromIndex(cents, assigned,
-          $"vec_id" % 7 =!= 3, id, 5).collect().map(_.getLong(0)).toSet
+      val served = Similarity.annIvfFromIndex(cents, assigned, id, 5,
+          pred = $"vec_id" % 7 =!= 3).collect().map(_.getLong(0)).toSet
       assert(served.forall(_ % 7 != 3), s"q$id: serve plan returned a deleted id")
       assert(r.getAs[Long]("n_exact") == exact.size.toLong)
       assert(r.getAs[Long]("n_served") == served.size.toLong)
@@ -501,10 +503,27 @@ class SimilaritySpec extends SparkSpec {
       s"float corpus leaked into the ADC scan:\n$scanLine")
   }
 
-  test("annTopK plan: broadcast join + TakeOrderedAndProject (no global sort)") {
-    val plan = Similarity.annTopK(embs).queryExecution.executedPlan.toString
-    assert(plan.contains("TakeOrderedAndProject"), plan)
-    assert(plan.contains("Broadcast"), plan)
+  // node classes of a key's executed plan, as the Audit gate counts them
+  private def planClasses(df: DataFrame): Seq[Class[_]] = {
+    df.collect()
+    graft.tools.Audit.planNodes(df.queryExecution.executedPlan).map(_.getClass)
+  }
+
+  test("annTopK plan: TakeOrderedAndProject, no nested-loop join") {
+    val nodes = planClasses(Similarity.annTopK(embs))
+    assert(nodes.contains(classOf[TakeOrderedAndProjectExec]), nodes)
+    assert(!nodes.contains(classOf[BroadcastNestedLoopJoinExec]), nodes)
+  }
+
+  // the single-query serves ship the query vector as a plan literal:
+  // every top-k is a heap, and no key joins a 1-row query frame
+  Seq("s_ann_topk", "s_ann_filtered", "s_ann_ivf", "s_ann_ivf_filtered", "s_ann_ivfpq",
+      "s_ann_reembed", "s_ann_mrl", "s_ann_mrl_ivf").foreach { key =>
+    test(s"$key plan: TakeOrderedAndProject, no BroadcastNestedLoopJoin") {
+      val nodes = planClasses(SparkEntry.queries(key)(spark, TestSpark.sf0001))
+      assert(nodes.contains(classOf[TakeOrderedAndProjectExec]), s"$key: $nodes")
+      assert(!nodes.contains(classOf[BroadcastNestedLoopJoinExec]), s"$key: $nodes")
+    }
   }
 
   test("ivfPqCodebooks: residual codebooks bit-identical under repartitioning") {
@@ -842,6 +861,46 @@ class SimilaritySpec extends SparkSpec {
       Similarity.mrlRecallCurve(embs, queryVecIds = Seq(missing), k = 5).collect())
   }
 
+  // a serve asked for a vec_id the table does not hold fails naming it,
+  // rather than serving zero rows
+  private def failsOnMissingId(serve: Long => DataFrame): Unit = {
+    val missing = Long.MaxValue
+    val e = intercept[IllegalArgumentException](serve(missing).collect())
+    assert(e.getMessage.contains(missing.toString), e.getMessage)
+  }
+
+  test("annTopK fails on a query vec_id the table does not hold, filtered or not") {
+    failsOnMissingId(id => Similarity.annTopK(embs, id))
+    failsOnMissingId(id => Similarity.annTopK(embs, id, pred = col("label").isin(1, 3, 5)))
+  }
+
+  test("annLshFromSignatures fails on a query vec_id the index does not hold") {
+    failsOnMissingId(id => Similarity.annLshFromSignatures(Similarity.withSignatures(embs), id))
+  }
+
+  test("annIvfFromIndex fails on a query vec_id the index does not hold, filtered or not") {
+    val (cents, assigned) = graft.core.Catalog.ivfIndex(spark, TestSpark.sf0001)
+    failsOnMissingId(id => Similarity.annIvfFromIndex(cents, assigned, id))
+    failsOnMissingId(id =>
+      Similarity.annIvfFromIndex(cents, assigned, id, pred = col("label").isin(1, 3, 5)))
+  }
+
+  test("annIvfPqFromIndex fails on a query vec_id the table does not hold") {
+    val (cents, books, codes) = graft.core.Catalog.ivfPqIndex(spark, TestSpark.sf0001)
+    failsOnMissingId(id => Similarity.annIvfPqFromIndex(cents, books, codes, embs, id))
+  }
+
+  test("annReembedServe fails on a query vec_id the upserted corpus does not hold") {
+    failsOnMissingId(id => Similarity.annReembedServe(Similarity.reembeddedEvents(embs), id))
+  }
+
+  test("MRL serves fail on a query vec_id the table does not hold") {
+    failsOnMissingId(id =>
+      Similarity.annMrlServeFromPrefix(Similarity.mrlPrefixProjection(embs), embs, id))
+    val (cents, assigned) = graft.core.Catalog.ivfIndexMrl(spark, TestSpark.sf0001)
+    failsOnMissingId(id => Similarity.annMrlIvfFromIndex(cents, assigned, id))
+  }
+
   test("nprobeCurve: recall nondecreasing in n_probe; saturates at 1.0 when every list is probed; counts consistent") {
     val (cents, assigned) = graft.core.Catalog.ivfIndex(spark, TestSpark.sf0001)
     val got = Similarity.nprobeCurve(embs, cents, assigned,
@@ -1029,7 +1088,7 @@ class SimilaritySpec extends SparkSpec {
     val assigned = embs.withColumn("cluster",
       GraftFunctions.nearestCentroid($"embedding", typedlit(cents)))
     val pred = col("label").isin(1, 3, 5)
-    val out = Similarity.annIvfFilteredFromIndex(cents, assigned, pred).collect()
+    val out = Similarity.annIvfFromIndex(cents, assigned, pred = pred).collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getDouble(3)))
     assert(out.length == 10, "pre-filter must still fill k when candidates exist")
     assert(out.forall(r => Set(1, 3, 5)(r._2)), "every row satisfies the predicate")
@@ -1413,7 +1472,8 @@ class SimilaritySpec extends SparkSpec {
   test("annMrlServe: degenerate settings recover annTopK exactly; funnel is exchange-free") {
     // the s_ann_mrl serve over an in-plan prefix of `shortDim` coordinates
     def serve(shortDim: Int, shortlist: Int) = Similarity.annMrlServeFromPrefix(
-      Similarity.mrlPrefixProjection(embs, shortDim), embs, 0L, k = 10, shortlist = shortlist)
+      Similarity.mrlPrefixProjection(embs, shortDim), embs, 0L, k = 10, shortDim = shortDim,
+      shortlist = shortlist)
     val exact = Similarity.annTopK(embs, 0L, 10).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"), r.getAs[Double]("cos_sim"))).toSeq
     // shortlist ≥ corpus: stage 1 keeps everything, the rerank IS annTopK
