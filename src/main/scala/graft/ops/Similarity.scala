@@ -736,8 +736,13 @@ object Similarity {
     * contamination is countable. */
   def annReembedServe(events: DataFrame, queryVecId: Long = 2L,
                       k: Int = 10): DataFrame = {
-    val latest = graft.etl.VehicleFeed.latest(events, "vec_id", Seq("version"))
-    topKByCosine(latest.filter(col("vec_id") =!= queryVecId), queryVector(latest, queryVecId), k)
+    // the upsert is per key: the query's highest version among its own
+    // events is its upserted vector, read in one filtered scan with no
+    // corpus-wide shuffle
+    val q = queryVector(events.filter(col("vec_id") === queryVecId)
+      .orderBy(desc("version")).limit(1), queryVecId)
+    topKByCosine(graft.etl.VehicleFeed.latest(events, "vec_id", Seq("version"))
+      .filter(col("vec_id") =!= queryVecId), q, k)
       .select(col("vec_id"), col("label"), col("version"),
         (round(col("cos"), 4) + lit(0.0)).as("cos_sim"))
   }
@@ -1473,8 +1478,10 @@ object Similarity {
     * writes, `shortDim` coordinates wide), stage 2 reranks the
     * shortlist by FULL-dimension exact cosine and emits the top-k (the
     * standard MRL funnel retrieval, adaptive-retrieval style). The
-    * query's prefix is its vector's first `shortDim` floats, taken on
-    * the driver.
+    * query's full vector ships as the literal for both stages:
+    * `graft_cosine` folds over the shorter of its two arrays, so against
+    * the prefix column it scores the query's first `prefix`-width floats,
+    * whatever width the tier was written at.
     *
     * Over the stored tier the funnel's IO claim holds at the SCAN tier,
     * not just the index: stage 1 reads ONLY (vec_id, prefix) — a
@@ -1484,8 +1491,8 @@ object Similarity {
     * for the ≤ `shortlist` survivors only, via a broadcast id-join back
     * to the full table (co-bucketed by vec_id in the Store →
     * zero-exchange at scale). The stored slice carries the same floats
-    * the in-plan slice and the driver-side prefix hold, so both prefix
-    * sources give bit-identical output (spec-proven).
+    * the in-plan slice holds, so both prefix sources give bit-identical
+    * output (spec-proven).
     *
     * Both stages are TakeOrderedAndProject (per-partition heaps; stage 2
     * sorts ≤ shortlist rows), no shuffle. Output carries both cosines so
@@ -1493,11 +1500,11 @@ object Similarity {
     * Degenerate settings recover [[annTopK]] exactly (shortlist ≥
     * corpus, or a full-dimension prefix) — spec-proven. */
   def annMrlServeFromPrefix(prefixed: DataFrame, embeddings: DataFrame,
-                            queryVecId: Long = 0L, k: Int = 10, shortDim: Int = 16,
+                            queryVecId: Long = 0L, k: Int = 10,
                             shortlist: Int = 50): DataFrame = {
     val q = queryVector(embeddings, queryVecId)
     val short = topKByCosine(prefixed.filter(col("vec_id") =!= queryVecId),
-        q.take(shortDim), shortlist, col("prefix"), "cos_s")
+        q, shortlist, col("prefix"), "cos_s")
       .select(col("vec_id"), col("cos_s"))
     topKByCosine(embeddings.join(broadcast(short), Seq("vec_id")), q, k)
       .select(col("vec_id"), col("label"),

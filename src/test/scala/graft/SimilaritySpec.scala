@@ -1470,10 +1470,10 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("annMrlServe: degenerate settings recover annTopK exactly; funnel is exchange-free") {
-    // the s_ann_mrl serve over an in-plan prefix of `shortDim` coordinates
+    // the s_ann_mrl serve over an in-plan prefix of `shortDim`
+    // coordinates: the prefix column's width alone sets stage 1's width
     def serve(shortDim: Int, shortlist: Int) = Similarity.annMrlServeFromPrefix(
-      Similarity.mrlPrefixProjection(embs, shortDim), embs, 0L, k = 10, shortDim = shortDim,
-      shortlist = shortlist)
+      Similarity.mrlPrefixProjection(embs, shortDim), embs, 0L, k = 10, shortlist = shortlist)
     val exact = Similarity.annTopK(embs, 0L, 10).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("label"), r.getAs[Double]("cos_sim"))).toSeq
     // shortlist ≥ corpus: stage 1 keeps everything, the rerank IS annTopK
