@@ -10,9 +10,10 @@ import org.apache.spark.sql.SparkSession
   * cluster, and the session timezone is UTC for oracle parity.
   *
   * The builder also injects every graft native Catalyst expression —
-  * the authoritative list is `GraftFunctions.register` — via
-  * `SparkSessionExtensions`; sessions built elsewhere won't resolve any
-  * `graft_*` function.
+  * the authoritative list is the kernel table `GraftFunctions.Kernels`
+  * plus the six expressions `GraftFunctions.register` lists beside it —
+  * via `SparkSessionExtensions`; sessions built elsewhere won't resolve
+  * any `graft_*` function.
   */
 object GraftSession {
   def builder(master: String = "local[*]", appName: String = "graft"): SparkSession.Builder = {

@@ -1,13 +1,14 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSessionExtensions}
+import org.apache.spark.sql.{AnalysisException, Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{BloomFilterAggregate, TypedImperativeAggregate}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.trees.UnaryLike
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, FloatType, IntegerType, LongType, StringType, StructField, StructType}
@@ -95,30 +96,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
     })
 }
 
-/** Hamming distance between two 64-bit fingerprints (e.g. SimHash).
-  * Compiles to a single `Long.bitCount(a ^ b)` inside codegen. */
-case class HammingDistance64(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_hamming64"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (LongType, LongType) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_hamming64 expects two bigint columns, got ${l.sql} and ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): HammingDistance64 =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(a: Any, b: Any): Any =
-    java.lang.Long.bitCount(a.asInstanceOf[Long] ^ b.asInstanceOf[Long])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"java.lang.Long.bitCount($a ^ $b)")
-}
-
 /** Static kernels for the text-dedup expressions. Called from both
   * interpreted `eval` and generated code (the codegen for each expression
   * is ONE static call — no boxing, no per-element lambda dispatch, which
@@ -152,11 +129,10 @@ object TextKernels {
     z ^ (z >>> 31)
   }
 
-  /** Is `c` a codepoint of a space-free CJK letter class? Covered
-    * (r15, widened from the r14 three-block set): CJK Unified
-    * Ideographs + Extension A, Hiragana/Katakana + katakana phonetic
-    * extensions + HALFWIDTH katakana, Hangul syllables — all BMP, so a
-    * Char test suffices. EXPLICITLY EXCLUDED (documented scope, not an
+  /** Is `c` a codepoint of a space-free CJK letter class? Covered:
+    * CJK Unified Ideographs + Extension A, Hiragana/Katakana + katakana
+    * phonetic extensions + HALFWIDTH katakana, Hangul syllables — all
+    * BMP, so a Char test suffices. EXPLICITLY EXCLUDED (documented scope, not an
     * oversight): supplementary-plane ideographs (Ext B+, U+20000+ —
     * surrogate pairs; rare outside dictionaries), Hangul Jamo
     * (composed syllables cover modern ko text), CJK Compatibility
@@ -165,8 +141,7 @@ object TextKernels {
   @inline private def isCjk(c: Char): Boolean =
     // one lower-bound compare rejects every ASCII/Latin char before the
     // per-block checks — this scan runs once per char of EVERY tokenized
-    // string (the shingle/minhash/simhash hot path), and the r15 block
-    // widening would otherwise have doubled its all-ASCII cost
+    // string (the shingle/minhash/simhash hot path)
     c >= 0x3040 && (
       (c <= 0x30ff) ||                // Hiragana + Katakana
       (c >= 0x4e00 && c <= 0x9fff) || // CJK Unified Ideographs
@@ -198,6 +173,32 @@ object TextKernels {
       i += 1
     }
     sb.toString
+  }
+
+  /** Hamming distance between two 64-bit fingerprints (e.g. SimHash). */
+  def hamming64(a: Long, b: Long): Int = java.lang.Long.bitCount(a ^ b)
+
+  /** L2 norm of a float-array embedding: sqrt of the index-order double
+    * fold of squares — the same fold discipline as [[CosineSimilarity]],
+    * so DuckDB's `sqrt(list_sum(list_transform(v, x -> x*x)))` reproduces
+    * it bit-for-bit. */
+  def vecNorm(x: ArrayData): Double = {
+    val n = x.numElements()
+    var s = 0.0
+    var i = 0
+    while (i < n) { val v = x.getFloat(i).toDouble; s += v * v; i += 1 }
+    math.sqrt(s)
+  }
+
+  /** Component-agreement count of two bigint signatures over the shorter
+    * length — the MinHash Jaccard estimator's numerator (est J =
+    * agree/perms). */
+  def sigAgree(x: ArrayData, y: ArrayData): Int = {
+    val n = math.min(x.numElements(), y.numElements())
+    var agree = 0
+    var i = 0
+    while (i < n) { if (x.getLong(i) == y.getLong(i)) agree += 1; i += 1 }
+    agree
   }
 
   /** Normalized word tokens: CJK segmentation ([[segmentCjk]]), then
@@ -505,11 +506,9 @@ object TextKernels {
     * per task, so compiling it once per (task, literal) amortizes to
     * nothing. The compiled form is ONE word → list-indices map (not a
     * hash set per list): a token pays a single hash probe regardless
-    * of how many lists exist — r14, when langOrder grew 7 → 10 lists
-    * the per-token × per-list probing would otherwise have scaled
-    * with. Words on several lists (fr/es "que", pt/nl "de") carry all
-    * their indices. Bounded: cleared if it ever exceeds 64 distinct
-    * literals (it holds a handful in practice). */
+    * of how many lists exist. Words on several lists (fr/es "que",
+    * pt/nl "de") carry all their indices. Bounded: cleared if it ever
+    * exceeds 64 distinct literals (it holds a handful in practice). */
   private val stopwordCache = java.util.Collections.synchronizedMap(
     new java.util.IdentityHashMap[ArrayData, (java.util.HashMap[String, Array[Int]], Int)]())
 
@@ -809,627 +808,112 @@ object TextKernels {
   }
 }
 
-/** 64-bit blockhash perceptual fingerprint of a binary payload
-  * (scan-side, codegen — one static call per row). */
-case class PHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_phash64"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_phash64 expects binary, got ${t.sql}")
+/** One row of the kernel table ([[GraftFunctions.Kernels]]): the SQL
+  * function `name`, the [[TextKernels]] static `method` it calls, the
+  * declared input types (a child matches when its type equals the
+  * declared one up to `containsNull`) and the output type. */
+private[graft] case class Kernel(name: String, method: String, inputs: Seq[DataType],
+                                 dataType: DataType) {
+  def expression(args: Seq[Expression]): Expression = args match {
+    case Seq(a) => Kernel1(this, a)
+    case Seq(a, b) => Kernel2(this, a, b)
+    case Seq(a, b, c) => Kernel3(this, a, b, c)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): PHash64 =
-    copy(child = newChild)
-
-  override def nullSafeEval(b: Any): Any =
-    TextKernels.phash64(b.asInstanceOf[Array[Byte]])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, b => s"graft.functions.TextKernels.phash64($b)")
 }
 
-/** Distinct word 3-gram shingles of normalized text (scan-side, codegen). */
-case class WordShingles(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_shingles expects string, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): WordShingles =
-    copy(child = newChild)
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.shingles3(text.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextKernels.shingles3($t)")
-}
-
-/** L2 norm of a float-array embedding: sqrt of the index-order double
-  * fold of squares — the same fold discipline as [[CosineSimilarity]],
-  * so DuckDB's `sqrt(list_sum(list_transform(v, x -> x*x)))` reproduces
-  * it bit-for-bit. */
-case class VectorNorm(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_vec_norm"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_vec_norm expects array<float>, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): VectorNorm =
-    copy(child = newChild)
-
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    var s = 0.0; var i = 0
-    while (i < x.numElements()) { val v = x.getFloat(i).toDouble; s += v * v; i += 1 }
-    math.sqrt(s)
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val s = ctx.freshName("s")
-      val v = ctx.freshName("v")
-      s"""
-         |final int $n = $a.numElements();
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final double $v = (double) $a.getFloat($i);
-         |  $s += $v * $v;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);
-         |""".stripMargin
-    })
-}
-
-/** Component-agreement count of two equal-length bigint signatures —
-  * the MinHash Jaccard estimator's numerator (est J = agree/perms). */
-case class SignatureAgreement(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_sig_agree"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_sig_agree expects two array<bigint> columns, got ${l.sql} and ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SignatureAgreement =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var agree = 0; var i = 0
-    while (i < n) { if (x.getLong(i) == y.getLong(i)) agree += 1; i += 1 }
-    agree
-  }
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val agree = ctx.freshName("agree")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |int $agree = 0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.getLong($i) == $b.getLong($i)) $agree++;
-         |}
-         |${ev.value} = $agree;
-         |""".stripMargin
-    })
-}
-
-/** Winnowing fingerprints of the k-gram hash stream (window w). */
-case class WinnowFingerprints(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_winnow"
+/** A kernel-table row as a Catalyst expression. Generated code is one
+  * `graft.functions.TextKernels.<method>(…)` call; interpreted `eval`
+  * (constant folding, non-codegen operators) invokes the same static
+  * through reflection, looked up from the declared input types, so the
+  * two paths cannot run different kernels. Prints, and names its
+  * result column, as `<name>(args)`. */
+private[graft] sealed trait KernelExpression extends Expression {
+  def kernel: Kernel
+  override def dataType: DataType = kernel.dataType
+  override def prettyName: String = kernel.name
+  override protected def stringArgs: Iterator[Any] = children.iterator
 
   override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, IntegerType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_winnow expects (string, int, int), got ${a.sql}, ${b.sql}, ${c.sql}")
-    }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): WinnowFingerprints =
-    copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def nullSafeEval(text: Any, k: Any, w: Any): Any =
-    TextKernels.winnow(text.asInstanceOf[UTF8String], k.asInstanceOf[Int], w.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k, w) => s"graft.functions.TextKernels.winnow($t, $k, $w)")
-}
-
-/** Adjacent char pairs per word with multiplicity (BPE merge stats). */
-case class BpePairs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_pairs"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_bpe_pairs expects string, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): BpePairs =
-    copy(child = newChild)
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.bpePairs(text.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextKernels.bpePairs($t)")
-}
-
-/** NFC + control-strip + whitespace-collapse canonical text cleanup. */
-case class NormalizeText(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def prettyName: String = "graft_normalize_text"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_normalize_text expects string, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): NormalizeText =
-    copy(child = newChild)
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.normalizeText(text.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextKernels.normalizeText($t)")
-}
-
-/** One symbol per codepoint of a word (round-0 BPE segmentation). */
-case class CharSyms(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_char_syms"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_char_syms expects string, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): CharSyms =
-    copy(child = newChild)
-
-  override def nullSafeEval(word: Any): Any =
-    TextKernels.charSyms(word.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, w => s"graft.functions.TextKernels.charSyms($w)")
-}
-
-/** Greedy leftmost non-overlapping merge of adjacent (a, b) symbols. */
-case class BpeMergePair(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_merge"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(StringType, _), StringType, StringType) => TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_bpe_merge expects (array<string>, string, string), got ${a.sql}, ${b.sql}, ${c.sql}")
-    }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): BpeMergePair =
-    copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def nullSafeEval(syms: Any, a: Any, b: Any): Any =
-    TextKernels.bpeMerge(syms.asInstanceOf[ArrayData],
-      a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (s, a, b) => s"graft.functions.TextKernels.bpeMerge($s, $a, $b)")
-}
-
-/** 128-perm MinHash signature of a shingle array (scan-side, codegen). */
-case class MinHashSignature(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_minhash expects array<string>, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashSignature =
-    copy(child = newChild)
-
-  override def nullSafeEval(shingles: Any): Any =
-    TextKernels.minhash128(shingles.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, s => s"graft.functions.TextKernels.minhash128($s)")
-}
-
-/** 64-bit SimHash fingerprint of a token array (scan-side, codegen). */
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_simhash"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_simhash expects array<string>, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-
-  override def nullSafeEval(tokens: Any): Any =
-    TextKernels.simhash64(tokens.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextKernels.simhash64($t)")
-}
-
-/** Random-hyperplane LSH bucket id of an embedding against a literal
-  * plane matrix (scan-side, codegen). */
-case class HyperplaneSignature(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_hyperplane_sig"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
+    if (children.map(_.dataType).corresponds(kernel.inputs)(DataTypeUtils.equalsIgnoreNullability))
       TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_hyperplane_sig expects (array<float>, array<array<double>>), got ${l.sql}, ${r.sql}")
-  }
+    else TypeCheckResult.TypeCheckFailure(
+      s"${kernel.name} expects (${kernel.inputs.map(_.sql).mkString(", ")}), " +
+        s"got ${children.map(_.dataType.sql).mkString(", ")}")
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): HyperplaneSignature =
-    copy(left = newLeft, right = newRight)
+  @transient private lazy val static =
+    KernelExpression.Statics.getMethod(kernel.method, kernel.inputs.map(CodeGenerator.javaClass): _*)
 
-  override def nullSafeEval(emb: Any, planes: Any): Any =
-    TextKernels.hyperplaneSig(emb.asInstanceOf[ArrayData], planes.asInstanceOf[ArrayData])
+  protected def call(args: Any*): Any =
+    try static.invoke(null, args.asInstanceOf[Seq[AnyRef]]: _*)
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
 
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextKernels.hyperplaneSig($a, $b)")
+  protected def callCode(args: String*): String =
+    s"${KernelExpression.Statics.getName}.${kernel.method}(${args.mkString(", ")})"
 }
 
-/** Nearest-centroid index (squared L2) of an embedding against a literal
-  * centroid matrix (scan-side, codegen) — the IVF assignment step. */
-case class NearestCentroid(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_nearest_centroid"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_nearest_centroid expects (array<float>, array<array<double>>), got ${l.sql}, ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): NearestCentroid =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(emb: Any, cents: Any): Any =
-    TextKernels.nearestCentroid(emb.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextKernels.nearestCentroid($a, $b)")
+private[graft] object KernelExpression {
+  /** The class holding [[TextKernels]]' static forwarders — what
+    * generated code names. */
+  private val Statics: Class[_] = Class.forName(TextKernels.getClass.getName.stripSuffix("$"))
 }
 
-/** Indices of the m nearest centroids (squared L2) of an embedding vs a
-  * literal centroid matrix (scan-side, codegen) — the multi-assignment
-  * step of canopy blocking (see Dedup.embedNearDupClusters). */
-case class NearestCentroids(first: Expression, second: Expression, third: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.TernaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_nearest_centroids"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(ArrayType(DoubleType, _), _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_nearest_centroids expects (array<float>, array<array<double>>, int), got ${a.sql}, ${b.sql}, ${c.sql}")
-    }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): NearestCentroids =
-    copy(first = f, second = s, third = t)
-
-  override def nullSafeEval(emb: Any, cents: Any, m: Any): Any =
-    TextKernels.nearestCentroids(emb.asInstanceOf[ArrayData],
-      cents.asInstanceOf[ArrayData], m.asInstanceOf[Int])
-
+private[graft] case class Kernel1(kernel: Kernel, child: Expression) extends UnaryExpression with KernelExpression {
+  override def nullSafeEval(a: Any): Any = call(a)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b, c) => s"graft.functions.TextKernels.nearestCentroids($a, $b, $c)")
+    defineCodeGen(ctx, ev, a => callCode(a))
+  override protected def withNewChildInternal(c: Expression): Kernel1 = copy(child = c)
 }
 
-/** FNV-1a 64 of a string (scan-side, codegen) — the engine-portable
-  * scalar hash as a first-class column function (weighted-sampling
-  * scores, portable bucketing; DuckDB oracles replay it byte-exactly
-  * with the HUGEINT `list_reduce` the MinHash family established). */
-case class Fnv64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_fnv64"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_fnv64 expects string, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Fnv64 =
-    copy(child = newChild)
-
-  override def nullSafeEval(s: Any): Any =
-    TextKernels.fnv64Str(s.asInstanceOf[UTF8String])
-
+private[graft] case class Kernel2(kernel: Kernel, left: Expression, right: Expression)
+    extends BinaryExpression with KernelExpression {
+  override def nullSafeEval(a: Any, b: Any): Any = call(a, b)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.TextKernels.fnv64Str($c)")
+    defineCodeGen(ctx, ev, (a, b) => callCode(a, b))
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Kernel2 =
+    copy(left = l, right = r)
 }
 
-/** Squared-L2 to the nearest and second-nearest centroid as `[d2_1st,
-  * d2_2nd]` (scan-side, codegen) — the simplified-silhouette distance
-  * pair against a literal centroid matrix. */
-case class CentroidDist2s(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_centroid_dist2s"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(ArrayType(DoubleType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_centroid_dist2s expects (array<float>, array<array<double>>), got ${l.sql}, ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): CentroidDist2s =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(emb: Any, cents: Any): Any =
-    TextKernels.nearestTwoDist2(emb.asInstanceOf[ArrayData], cents.asInstanceOf[ArrayData])
-
+private[graft] case class Kernel3(kernel: Kernel, first: Expression, second: Expression, third: Expression)
+    extends TernaryExpression with KernelExpression {
+  override def nullSafeEval(a: Any, b: Any, c: Any): Any = call(a, b, c)
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.TextKernels.nearestTwoDist2($a, $b)")
+    defineCodeGen(ctx, ev, (a, b, c) => callCode(a, b, c))
+  override protected def withNewChildrenInternal(a: Expression, b: Expression, c: Expression): Kernel3 =
+    copy(first = a, second = b, third = c)
 }
 
-/** Distinct word k-gram shingles of normalized text (scan-side,
-  * codegen) — the parameterized [[WordShingles]] for long-run
-  * (exact-substring) duplication detection. */
-case class WordShinglesK(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_shingles_k"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, IntegerType) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_shingles_k expects (string, int), got ${l.sql}, ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): WordShinglesK =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(text: Any, k: Any): Any =
-    TextKernels.shinglesK(text.asInstanceOf[UTF8String], k.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, k) => s"graft.functions.TextKernels.shinglesK($t, $k)")
-}
-
-/** One-pass word-3-gram repetition profile of a text column
-  * (scan-side, codegen): `[total, distinct, maxFreq]` — the counts
-  * behind duplicate-trigram and most-common-trigram quality filters. */
-case class RepetitionProfile(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_repetition_profile"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_repetition_profile expects string, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): RepetitionProfile =
-    copy(child = newChild)
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.repetitionProfile(text.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextKernels.repetitionProfile($t)")
-}
-
-/** Product-quantization encoder (scan-side, codegen): embedding +
-  * literal codebook tensor [m][k][dim/m] → array<int> of m code indices. */
-case class PqEncode(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(ArrayType(ArrayType(DoubleType, _), _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_encode expects (array<float>, array<array<array<double>>>), got ${l.sql}, ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqEncode =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(emb: Any, books: Any): Any =
-    TextKernels.pqEncode(emb.asInstanceOf[ArrayData], books.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, b) => s"graft.functions.TextKernels.pqEncode($e, $b)")
-}
-
-/** Per-subspace PQ quantization error `[min_c d²(slice_j, book_j[c])]`
-  * against a literal codebook tensor (scan-side, codegen) — the
-  * distance-VALUE twin of [[PqEncode]]'s argmin. */
-case class PqErrors(left: Expression, right: Expression) extends BinaryExpression {
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_pq_errors"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(FloatType, _), ArrayType(ArrayType(ArrayType(DoubleType, _), _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_errors expects (array<float>, array<array<array<double>>>), got ${l.sql}, ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): PqErrors =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(emb: Any, books: Any): Any =
-    TextKernels.pqErrors(emb.asInstanceOf[ArrayData], books.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, b) => s"graft.functions.TextKernels.pqErrors($e, $b)")
-}
-
-/** ADC approximate cosine from PQ codes against literal per-(subspace,
-  * code) lookup tables (scan-side, codegen): m array lookups per row. */
-case class PqAdcCosine(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = first.nullable || second.nullable || third.nullable
-  override def prettyName: String = "graft_pq_adc_cosine"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(IntegerType, _), ArrayType(DoubleType, _), ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_pq_adc_cosine expects (array<int>, array<double>, array<double>), got ${a.sql}, ${b.sql}, ${c.sql}")
-    }
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): PqAdcCosine =
-    copy(first = newFirst, second = newSecond, third = newThird)
-
-  override def nullSafeEval(codes: Any, dotLut: Any, norm2Lut: Any): Any =
-    TextKernels.pqAdcCosine(codes.asInstanceOf[ArrayData],
-      dotLut.asInstanceOf[ArrayData], norm2Lut.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (c, d, n) => s"graft.functions.TextKernels.pqAdcCosine($c, $d, $n)")
-}
-
-/** Coarse-centroid residual of an embedding (scan-side, codegen):
-  * embedding − centroids[cluster], as array<float> — the IVF-PQ encode
-  * kernel (codebooks quantize residuals, not raw vectors). */
-case class VecResidual(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = ArrayType(FloatType, containsNull = false)
-  override def prettyName: String = "graft_vec_residual"
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(FloatType, _), ArrayType(ArrayType(DoubleType, _), _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_vec_residual expects (array<float>, array<array<double>>, int), got ${a.sql}, ${b.sql}, ${c.sql}")
-    }
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression, t: Expression): VecResidual =
-    copy(first = f, second = s, third = t)
-
-  override def nullSafeEval(emb: Any, cents: Any, cluster: Any): Any =
-    TextKernels.vecResidual(emb.asInstanceOf[ArrayData],
-      cents.asInstanceOf[ArrayData], cluster.asInstanceOf[Int])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (e, c, i) => s"graft.functions.TextKernels.vecResidual($e, $c, $i)")
-}
-
-/** One-pass type/token profile of a text column (scan-side, codegen):
-  * `[n_tokens, n_distinct]` — the inputs of a type-token-ratio lexical
-  * diversity filter. */
-case class TtrProfile(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_ttr_profile"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_ttr_profile expects string, got ${t.sql}")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): TtrProfile =
-    copy(child = newChild)
-
-  override def nullSafeEval(text: Any): Any =
-    TextKernels.ttrProfile(text.asInstanceOf[UTF8String])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, t => s"graft.functions.TextKernels.ttrProfile($t)")
-}
-
-/** One-pass stopword/token profile of a text column against a literal
-  * array of word lists (scan-side, codegen): `[n_tokens, hits_0, …]`.
-  * Replaces one interpreted `filter` HOF per language (CodegenFallback,
-  * per-element closure dispatch) with a single tokenize + hash-set pass. */
-case class StopwordProfile(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_stopword_profile"
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (StringType, ArrayType(ArrayType(StringType, _), _)) =>
-      TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_stopword_profile expects (string, array<array<string>>), got ${l.sql}, ${r.sql}")
-  }
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): StopwordProfile =
-    copy(left = newLeft, right = newRight)
-
-  override def nullSafeEval(text: Any, lists: Any): Any =
-    TextKernels.stopwordProfile(text.asInstanceOf[UTF8String], lists.asInstanceOf[ArrayData])
-
-  override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, l) => s"graft.functions.TextKernels.stopwordProfile($t, $l)")
-}
-
-/** Element-wise fixed-point sum of an `array<float>` column — the
-  * one-pass vector aggregate behind the IVF k-means fit (each Lloyd
-  * iteration aggregates per-cluster vector sums in a single map-side-
-  * combined pass, instead of `posexplode`-ing every vector into dim rows).
+/** Element-wise fixed-point sum of an `array<float>` column — of the
+  * elements (`graft_vecsum`) or of their squares (`graft_vecsum_sq`).
+  * The plain sum is the one-pass vector aggregate behind the IVF
+  * k-means fit (each Lloyd iteration aggregates per-cluster vector sums
+  * in a single map-side-combined pass, instead of `posexplode`-ing every
+  * vector into dim rows); with the squares it gives exact per-dimension
+  * variance ranks (n·Σx²·S − (Σx)² in integer arithmetic), which is what
+  * the permutation-OPQ dimension allocation sorts on.
   *
-  * Accumulates `round(v * 1e9)` in longs, so the sum is EXACT and
+  * Accumulates `round(term * 1e9)` in longs, so the sum is EXACT and
   * order-independent (long addition commutes) — the fitted centroids are
   * bit-identical across partitionings and runs, which the repo's
-  * determinism policy requires of every model fit. Output is the scaled
-  * sum vector `array<bigint>`; divide by `VectorSumFixed.Scale * n` for
-  * the mean. Long range: 9.2e18 / 1e9 leaves ~9e9 of summed magnitude
-  * per dimension before overflow — far beyond any per-cluster fit batch
-  * (fit on a bounded sample at corpus scale). */
+  * determinism policy requires of every model fit, and SQL replays it
+  * with the same floor+carry rounding as the vecsum oracles. Output is
+  * the scaled sum vector `array<bigint>`; divide by
+  * `VectorSumFixed.Scale * n` for the mean. Long range: 9.2e18 / 1e9
+  * leaves ~9e9 of summed magnitude per dimension before overflow — far
+  * beyond any per-cluster fit batch (fit on a bounded sample at corpus
+  * scale). */
 case class VectorSumFixed(child: Expression,
+                          squares: Boolean,
                           mutableAggBufferOffset: Int = 0,
                           inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullable: Boolean = false
-  override def prettyName: String = "graft_vecsum"
+  override def prettyName: String = if (squares) "graft_vecsum_sq" else "graft_vecsum"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_vecsum expects array<float>, got ${t.sql}")
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName expects (ARRAY<FLOAT>), got ${t.sql}")
   }
 
   override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
@@ -1442,7 +926,8 @@ case class VectorSumFixed(child: Expression,
     val b = if (buffer.length < n) java.util.Arrays.copyOf(buffer, n) else buffer
     var i = 0
     while (i < n) {
-      b(i) += math.round(arr.getFloat(i).toDouble * VectorSumFixed.Scale)
+      val x = arr.getFloat(i).toDouble
+      b(i) += math.round((if (squares) x * x else x) * VectorSumFixed.Scale)
       i += 1
     }
     b
@@ -1480,73 +965,6 @@ case class VectorSumFixed(child: Expression,
 object VectorSumFixed {
   /** Fixed-point scale: 1e-9 resolution per element. */
   val Scale: Long = 1000000000L
-}
-
-/** Element-wise fixed-point sum of SQUARES of an `array<float>` column —
-  * the second moment to [[VectorSumFixed]]'s first: together they give
-  * exact per-dimension variance ranks (n·Σx²·S − (Σx)² in integer
-  * arithmetic), which is what the permutation-OPQ dimension allocation
-  * sorts on. Accumulates `round(v²·1e9)` in longs — exact,
-  * order-independent, and portably replayable in SQL with the same
-  * floor+carry rounding as the vecsum oracles. */
-case class VectorSumSqFixed(child: Expression,
-                            mutableAggBufferOffset: Int = 0,
-                            inputAggBufferOffset: Int = 0)
-    extends TypedImperativeAggregate[Array[Long]] with UnaryLike[Expression] {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = false
-  override def prettyName: String = "graft_vecsum_sq"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"graft_vecsum_sq expects array<float>, got ${t.sql}")
-  }
-
-  override def createAggregationBuffer(): Array[Long] = Array.emptyLongArray
-
-  override def update(buffer: Array[Long], input: InternalRow): Array[Long] = {
-    val v = child.eval(input)
-    if (v == null) return buffer
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    val b = if (buffer.length < n) java.util.Arrays.copyOf(buffer, n) else buffer
-    var i = 0
-    while (i < n) {
-      val x = arr.getFloat(i).toDouble
-      b(i) += math.round(x * x * VectorSumFixed.Scale)
-      i += 1
-    }
-    b
-  }
-
-  override def merge(b1: Array[Long], b2: Array[Long]): Array[Long] = {
-    val (big, small) = if (b1.length >= b2.length) (b1, b2) else (b2, b1)
-    var i = 0
-    while (i < small.length) { big(i) += small(i); i += 1 }
-    big
-  }
-
-  override def eval(buffer: Array[Long]): Any = new GenericArrayData(buffer.clone())
-
-  override def serialize(buffer: Array[Long]): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(buffer.length * 8)
-    bb.asLongBuffer().put(buffer)
-    bb.array()
-  }
-
-  override def deserialize(bytes: Array[Byte]): Array[Long] = {
-    val out = new Array[Long](bytes.length / 8)
-    java.nio.ByteBuffer.wrap(bytes).asLongBuffer().get(out)
-    out
-  }
-
-  override def withNewMutableAggBufferOffset(newOffset: Int): VectorSumSqFixed =
-    copy(mutableAggBufferOffset = newOffset)
-  override def withNewInputAggBufferOffset(newOffset: Int): VectorSumSqFixed =
-    copy(inputAggBufferOffset = newOffset)
-  override protected def withNewChildInternal(newChild: Expression): VectorSumSqFixed =
-    copy(child = newChild)
 }
 
 /** Bounded top-k neighbor heap aggregate: keeps the k best
@@ -1656,146 +1074,72 @@ case class TopKPairsAgg(first: Expression, second: Expression, third: Expression
 /** Registration (via `SparkSessionExtensions`, wired in `GraftSession`)
   * plus Column-API wrappers. Any session built through
   * `GraftSession.builder` has every `graft_*` function registered here
-  * (see [[GraftFunctions.register]] for the authoritative list) available
-  * both in SQL and through these wrappers. */
+  * ([[GraftFunctions.Kernels]] plus the six expressions `register`
+  * lists beside it are the authoritative list) available both in SQL
+  * and through these wrappers. */
 object GraftFunctions {
 
+  /** The kernel table: every scalar `graft_*` function that is one
+    * [[TextKernels]] call. */
+  private[graft] val Kernels: Seq[Kernel] = {
+    def out(t: DataType) = ArrayType(t, containsNull = false)
+    val text = StringType
+    val int = IntegerType
+    val strs = ArrayType(StringType)
+    val emb = ArrayType(FloatType)
+    val mat = ArrayType(ArrayType(DoubleType)) // literal planes / centroids
+    val books = ArrayType(mat)                  // literal PQ codebooks [m][k][dim/m]
+    Seq(
+      Kernel("graft_hamming64", "hamming64", Seq(LongType, LongType), IntegerType),
+      Kernel("graft_vec_norm", "vecNorm", Seq(emb), DoubleType),
+      Kernel("graft_sig_agree", "sigAgree", Seq(ArrayType(LongType), ArrayType(LongType)), IntegerType),
+      Kernel("graft_phash64", "phash64", Seq(BinaryType), LongType),
+      Kernel("graft_fnv64", "fnv64Str", Seq(text), LongType),
+      Kernel("graft_normalize_text", "normalizeText", Seq(text), StringType),
+      Kernel("graft_shingles", "shingles3", Seq(text), out(StringType)),
+      Kernel("graft_shingles_k", "shinglesK", Seq(text, int), out(StringType)),
+      Kernel("graft_winnow", "winnow", Seq(text, int, int), out(StringType)),
+      Kernel("graft_bpe_pairs", "bpePairs", Seq(text), out(StringType)),
+      Kernel("graft_char_syms", "charSyms", Seq(text), out(StringType)),
+      Kernel("graft_bpe_merge", "bpeMerge", Seq(strs, text, text), out(StringType)),
+      Kernel("graft_repetition_profile", "repetitionProfile", Seq(text), out(IntegerType)),
+      Kernel("graft_ttr_profile", "ttrProfile", Seq(text), out(IntegerType)),
+      Kernel("graft_stopword_profile", "stopwordProfile", Seq(text, ArrayType(strs)), out(IntegerType)),
+      Kernel("graft_minhash", "minhash128", Seq(strs), out(LongType)),
+      Kernel("graft_simhash", "simhash64", Seq(strs), LongType),
+      Kernel("graft_hyperplane_sig", "hyperplaneSig", Seq(emb, mat), LongType),
+      Kernel("graft_nearest_centroid", "nearestCentroid", Seq(emb, mat), IntegerType),
+      Kernel("graft_nearest_centroids", "nearestCentroids", Seq(emb, mat, int), out(IntegerType)),
+      Kernel("graft_centroid_dist2s", "nearestTwoDist2", Seq(emb, mat), out(DoubleType)),
+      Kernel("graft_vec_residual", "vecResidual", Seq(emb, mat, int), out(FloatType)),
+      Kernel("graft_pq_encode", "pqEncode", Seq(emb, books), out(IntegerType)),
+      Kernel("graft_pq_errors", "pqErrors", Seq(emb, books), out(DoubleType)),
+      Kernel("graft_pq_adc_cosine", "pqAdcCosine",
+        Seq(ArrayType(IntegerType), ArrayType(DoubleType), ArrayType(DoubleType)), DoubleType))
+  }
+
   def register(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("graft_cosine"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "graft_cosine"),
-      (children: Seq[Expression]) => CosineSimilarity(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hamming64"),
-      new ExpressionInfo(classOf[HammingDistance64].getName, "graft_hamming64"),
-      (children: Seq[Expression]) => HammingDistance64(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles"),
-      new ExpressionInfo(classOf[WordShingles].getName, "graft_shingles"),
-      (children: Seq[Expression]) => WordShingles(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSignature].getName, "graft_minhash"),
-      (children: Seq[Expression]) => MinHashSignature(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_simhash"),
-      new ExpressionInfo(classOf[SimHash64].getName, "graft_simhash"),
-      (children: Seq[Expression]) => SimHash64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_hyperplane_sig"),
-      new ExpressionInfo(classOf[HyperplaneSignature].getName, "graft_hyperplane_sig"),
-      (children: Seq[Expression]) => HyperplaneSignature(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nearest_centroid"),
-      new ExpressionInfo(classOf[NearestCentroid].getName, "graft_nearest_centroid"),
-      (children: Seq[Expression]) => NearestCentroid(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_nearest_centroids"),
-      new ExpressionInfo(classOf[NearestCentroids].getName, "graft_nearest_centroids"),
-      (children: Seq[Expression]) => NearestCentroids(children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_stopword_profile"),
-      new ExpressionInfo(classOf[StopwordProfile].getName, "graft_stopword_profile"),
-      (children: Seq[Expression]) => StopwordProfile(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_vecsum"),
-      new ExpressionInfo(classOf[VectorSumFixed].getName, "graft_vecsum"),
-      (children: Seq[Expression]) => VectorSumFixed(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_vecsum_sq"),
-      new ExpressionInfo(classOf[VectorSumSqFixed].getName, "graft_vecsum_sq"),
-      (children: Seq[Expression]) => VectorSumSqFixed(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_topk_pairs"),
-      new ExpressionInfo(classOf[TopKPairsAgg].getName, "graft_topk_pairs"),
-      (children: Seq[Expression]) => TopKPairsAgg(children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_repetition_profile"),
-      new ExpressionInfo(classOf[RepetitionProfile].getName, "graft_repetition_profile"),
-      (children: Seq[Expression]) => RepetitionProfile(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pq_encode"),
-      new ExpressionInfo(classOf[PqEncode].getName, "graft_pq_encode"),
-      (children: Seq[Expression]) => PqEncode(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pq_adc_cosine"),
-      new ExpressionInfo(classOf[PqAdcCosine].getName, "graft_pq_adc_cosine"),
-      (children: Seq[Expression]) => PqAdcCosine(children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_vec_residual"),
-      new ExpressionInfo(classOf[VecResidual].getName, "graft_vec_residual"),
-      (children: Seq[Expression]) => VecResidual(children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_ttr_profile"),
-      new ExpressionInfo(classOf[TtrProfile].getName, "graft_ttr_profile"),
-      (children: Seq[Expression]) => TtrProfile(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_shingles_k"),
-      new ExpressionInfo(classOf[WordShinglesK].getName, "graft_shingles_k"),
-      (children: Seq[Expression]) => WordShinglesK(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_phash64"),
-      new ExpressionInfo(classOf[PHash64].getName, "graft_phash64"),
-      (children: Seq[Expression]) => PHash64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_normalize_text"),
-      new ExpressionInfo(classOf[NormalizeText].getName, "graft_normalize_text"),
-      (children: Seq[Expression]) => NormalizeText(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_char_syms"),
-      new ExpressionInfo(classOf[CharSyms].getName, "graft_char_syms"),
-      (children: Seq[Expression]) => CharSyms(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_merge"),
-      new ExpressionInfo(classOf[BpeMergePair].getName, "graft_bpe_merge"),
-      (children: Seq[Expression]) => BpeMergePair(children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bpe_pairs"),
-      new ExpressionInfo(classOf[BpePairs].getName, "graft_bpe_pairs"),
-      (children: Seq[Expression]) => BpePairs(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_winnow"),
-      new ExpressionInfo(classOf[WinnowFingerprints].getName, "graft_winnow"),
-      (children: Seq[Expression]) => WinnowFingerprints(children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_sig_agree"),
-      new ExpressionInfo(classOf[SignatureAgreement].getName, "graft_sig_agree"),
-      (children: Seq[Expression]) => SignatureAgreement(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_pq_errors"),
-      new ExpressionInfo(classOf[PqErrors].getName, "graft_pq_errors"),
-      (children: Seq[Expression]) => PqErrors(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_fnv64"),
-      new ExpressionInfo(classOf[Fnv64].getName, "graft_fnv64"),
-      (children: Seq[Expression]) => Fnv64(children.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_centroid_dist2s"),
-      new ExpressionInfo(classOf[CentroidDist2s].getName, "graft_centroid_dist2s"),
-      (children: Seq[Expression]) => CentroidDist2s(children(0), children(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_vec_norm"),
-      new ExpressionInfo(classOf[VectorNorm].getName, "graft_vec_norm"),
-      (children: Seq[Expression]) => VectorNorm(children.head)))
-    // Spark's own Bloom sketch expressions (public Catalyst classes,
-    // used internally for runtime row-level filtering) surfaced as
-    // graft functions: build with an aggregate over xxhash64(value),
-    // probe scan-side against the serialized filter literal.
-    ext.injectFunction((
-      new FunctionIdentifier("graft_bloom_agg"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-        "graft_bloom_agg"),
-      (children: Seq[Expression]) =>
-        new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-          children(0), children(1), children(2))))
-    ext.injectFunction((
-      new FunctionIdentifier("graft_might_contain"),
-      new ExpressionInfo(
-        classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-        "graft_might_contain"),
-      (children: Seq[Expression]) =>
-        org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(children(0), children(1))))
+    val others = Seq[(String, Class[_], Int, Seq[Expression] => Expression)](
+      ("graft_cosine", classOf[CosineSimilarity], 2, c => CosineSimilarity(c(0), c(1))),
+      ("graft_vecsum", classOf[VectorSumFixed], 1, c => VectorSumFixed(c(0), squares = false)),
+      ("graft_vecsum_sq", classOf[VectorSumFixed], 1, c => VectorSumFixed(c(0), squares = true)),
+      ("graft_topk_pairs", classOf[TopKPairsAgg], 3, c => TopKPairsAgg(c(0), c(1), c(2))),
+      // Spark's own Bloom sketch expressions (public Catalyst classes,
+      // used internally for runtime row-level filtering) surfaced as
+      // graft functions: build with an aggregate over xxhash64(value),
+      // probe scan-side against the serialized filter literal.
+      ("graft_bloom_agg", classOf[BloomFilterAggregate], 3,
+        c => new BloomFilterAggregate(c(0), c(1), c(2))),
+      ("graft_might_contain", classOf[BloomFilterMightContain], 2,
+        c => BloomFilterMightContain(c(0), c(1))))
+    val kernels = Kernels.map(k => (k.name, classOf[KernelExpression], k.inputs.length, k.expression _))
+    for ((name, cls, arity, build) <- kernels ++ others)
+      ext.injectFunction((new FunctionIdentifier(name), new ExpressionInfo(cls.getName, name),
+        (children: Seq[Expression]) =>
+          if (children.length == arity) build(children)
+          else throw new AnalysisException("WRONG_NUM_ARGS.WITHOUT_SUGGESTION", Map(
+            "functionName" -> s"`$name`", "expectedNum" -> arity.toString,
+            "actualNum" -> children.length.toString, "docroot" -> org.apache.spark.SPARK_DOC_ROOT))))
   }
 
   /** Cosine similarity of two Array[Float] columns → double. */

@@ -439,6 +439,16 @@ object VehicleQueries {
       |     WHEN bearing < 292.5 THEN 'West'
       |     ELSE 'Northwest' END""".stripMargin
 
+  /** The reference's route CASE (`y%` before `ynk%`, as [[routeType]]). */
+  private val routeSql =
+    """CASE WHEN id LIKE 'R-%' THEN 'Red Line'
+      |     WHEN id LIKE 'O-%' THEN 'Orange Line'
+      |     WHEN id LIKE 'G-%' THEN 'Green Line'
+      |     WHEN id LIKE 'B-%' THEN 'Blue Line'
+      |     WHEN id LIKE 'y%' THEN 'Bus'
+      |     WHEN id LIKE 'ynk%' THEN 'Commuter Rail'
+      |     ELSE 'Other' END""".stripMargin
+
   val oracles: Map[String, String] = Map(
     "v_transform" -> s"$VehiclesCte SELECT * FROM vehicles_all",
     "v_upsert_latest" -> s"$VehiclesCte SELECT * FROM vehicles",
@@ -476,13 +486,7 @@ object VehicleQueries {
     "v_top10_fastest" -> s"$VehiclesCte SELECT * FROM vehicles ORDER BY speed DESC, id LIMIT 10",
     "v_route_breakdown" ->
       s"""$VehiclesCte SELECT
-         |  CASE WHEN id LIKE 'R-%' THEN 'Red Line'
-         |       WHEN id LIKE 'O-%' THEN 'Orange Line'
-         |       WHEN id LIKE 'G-%' THEN 'Green Line'
-         |       WHEN id LIKE 'B-%' THEN 'Blue Line'
-         |       WHEN id LIKE 'y%' THEN 'Bus'
-         |       WHEN id LIKE 'ynk%' THEN 'Commuter Rail'
-         |       ELSE 'Other' END AS route_type,
+         |  $routeSql AS route_type,
          |  COUNT(*) AS n,
          |  CAST(SUM(CAST(speed AS DECIMAL(18,2))) AS DOUBLE) / COUNT(*) AS avg_speed,
          |  MAX(speed) AS max_speed
@@ -514,13 +518,7 @@ object VehicleQueries {
          |FROM vehicles WHERE speed > 0""".stripMargin,
     "v_route_percentiles" ->
       s"""$VehiclesCte SELECT
-         |  CASE WHEN id LIKE 'R-%' THEN 'Red Line'
-         |       WHEN id LIKE 'O-%' THEN 'Orange Line'
-         |       WHEN id LIKE 'G-%' THEN 'Green Line'
-         |       WHEN id LIKE 'B-%' THEN 'Blue Line'
-         |       WHEN id LIKE 'y%' THEN 'Bus'
-         |       WHEN id LIKE 'ynk%' THEN 'Commuter Rail'
-         |       ELSE 'Other' END AS route_type,
+         |  $routeSql AS route_type,
          |  ROUND(quantile_cont(speed, 0.5), 4) AS p50,
          |  ROUND(quantile_cont(speed, 0.9), 4) AS p90,
          |  COUNT(*) AS n_moving
@@ -575,13 +573,7 @@ object VehicleQueries {
     "v_headway" ->
       s"""$VehiclesCte,
          |rt AS (SELECT
-         |    CASE WHEN id LIKE 'R-%' THEN 'Red Line'
-         |         WHEN id LIKE 'O-%' THEN 'Orange Line'
-         |         WHEN id LIKE 'G-%' THEN 'Green Line'
-         |         WHEN id LIKE 'B-%' THEN 'Blue Line'
-         |         WHEN id LIKE 'y%' THEN 'Bus'
-         |         WHEN id LIKE 'ynk%' THEN 'Commuter Rail'
-         |         ELSE 'Other' END AS route_type,
+         |    $routeSql AS route_type,
          |    updated_at, obs_id
          |  FROM vehicles_all),
          |dd AS (SELECT route_type,

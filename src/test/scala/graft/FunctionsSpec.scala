@@ -136,6 +136,78 @@ class FunctionsSpec extends SparkSpec {
     val agg = spark.sql(
       "SELECT graft_vecsum(embedding) FROM sql_embs GROUP BY label LIMIT 1").collect()
     assert(agg.nonEmpty && agg(0).getSeq[Long](0).length == 64)
+    // every kernel-table row, twice: over columns of a scanned frame
+    // (generated code) and over literals alone (ConstantFolding runs the
+    // interpreted, reflective eval) — the two must agree
+    assert(kernelArgs.keySet == GraftFunctions.Kernels.map(_.name).toSet)
+    for (k <- GraftFunctions.Kernels) {
+      val args = kernelArgs(k.name)
+      val cols = k.inputs.indices.map(i => s"a$i")
+      val lits = spark.sql(s"SELECT $args").toDF(cols: _*)
+      val input = spark.createDataFrame(lits.rdd, lits.schema) // a scan: nothing to fold
+      val onCols = input.selectExpr(s"${k.name}(${cols.mkString(", ")})")
+      val viaCodegen = onCols.collect()
+      val plan = onCols.queryExecution.executedPlan.toString
+      val line = plan.linesIterator.find(_.contains(s"${k.name}("))
+      assert(line.isDefined && line.get.trim.stripPrefix("+- ").startsWith("*"),
+        s"${k.name} not in a codegen stage:\n$plan")
+      val onLits = spark.sql(s"SELECT ${k.name}($args)")
+      assert(!onLits.queryExecution.optimizedPlan.expressions.exists(
+        _.exists(_.isInstanceOf[graft.functions.KernelExpression])), s"${k.name} was not folded")
+      assert(onLits.collect().toSeq == viaCodegen.toSeq, s"${k.name}: interpreted != generated")
+    }
+  }
+
+  /** One literal argument list per kernel-table row. */
+  private val kernelArgs: Map[String, String] = {
+    val emb = "array(0.5F, -2.25F, 1.0F, 0.125F)"
+    val mat = "array(array(0.0d, 0.0d, 0.0d, 0.0d), array(1.0d, -2.0d, 1.0d, 0.0d), array(-1.0d, 2.0d, 0.5d, 3.0d))"
+    val books = "array(array(array(0.0d, 0.0d), array(1.0d, -2.0d)), array(array(1.0d, 0.0d), array(0.0d, 1.0d)))"
+    Map(
+      "graft_hamming64" -> "5L, 4L",
+      "graft_vec_norm" -> emb,
+      "graft_sig_agree" -> "array(1L, 2L, 3L), array(1L, 5L, 3L, 4L)",
+      "graft_phash64" -> "X'00FF10A07F80C3'",
+      "graft_fnv64" -> "'spark'",
+      "graft_normalize_text" -> "'  Cafe\u0301   au\tlait '",
+      "graft_shingles" -> "'one two three four'",
+      "graft_shingles_k" -> "'one two three four five', 4",
+      "graft_winnow" -> "'a b c d e f g h', 3, 2",
+      "graft_bpe_pairs" -> "'hello big world'",
+      "graft_char_syms" -> "'h\u00e9llo'",
+      "graft_bpe_merge" -> "array('a', 'b', 'a', 'b', 'c'), 'a', 'b'",
+      "graft_repetition_profile" -> "'a b a b a b'",
+      "graft_ttr_profile" -> "'a b a b a b'",
+      "graft_stopword_profile" -> "'the cat and dog', array(array('the', 'and'), array('dog'))",
+      "graft_minhash" -> "array('a b c', 'b c d')",
+      "graft_simhash" -> "array('x', 'y')",
+      "graft_hyperplane_sig" -> s"$emb, $mat",
+      "graft_nearest_centroid" -> s"$emb, $mat",
+      "graft_nearest_centroids" -> s"$emb, $mat, 2",
+      "graft_centroid_dist2s" -> s"$emb, $mat",
+      "graft_vec_residual" -> s"$emb, $mat, 1",
+      "graft_pq_encode" -> s"$emb, $books",
+      "graft_pq_errors" -> s"$emb, $books",
+      "graft_pq_adc_cosine" -> "array(1, 0), array(0.5d, 0.25d, 0.125d, 0.0625d), array(1.0d, 2.0d, 3.0d, 4.0d)")
+  }
+
+  test("every graft_* function rejects a wrong argument count, and every kernel a wrong type, at analysis") {
+    import org.apache.spark.sql.AnalysisException
+    val arities = GraftFunctions.Kernels.map(k => k.name -> k.inputs.length).toMap ++ Map(
+      "graft_cosine" -> 2, "graft_vecsum" -> 1, "graft_vecsum_sq" -> 1,
+      "graft_topk_pairs" -> 3, "graft_bloom_agg" -> 3, "graft_might_contain" -> 2)
+    val registered = spark.sql("SHOW FUNCTIONS LIKE 'graft_*'").collect().map(_.getString(0)).toSet
+    assert(registered == arities.keySet)
+    for ((name, arity) <- arities; n <- Seq(arity - 1, arity + 1)) {
+      val e = intercept[AnalysisException](
+        spark.sql(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})"))
+      assert(e.getMessage.contains(s"`$name` requires $arity parameters"), e.getMessage)
+    }
+    for (k <- GraftFunctions.Kernels) {
+      val e = intercept[AnalysisException](
+        spark.sql(s"SELECT ${k.name}(${Seq.fill(k.inputs.length)("true").mkString(", ")})"))
+      assert(e.getMessage.contains(s"${k.name} expects ("), e.getMessage)
+    }
   }
 
   test("graft.GraftExtensions loads through Spark's spark.sql.extensions contract") {

@@ -1073,15 +1073,19 @@ class TextAnalysisSpec extends SparkSpec {
     val df = Seq((1L, "aa aa b"), (2L, "aaa"))
       .toDF("doc_id", "text")
       .unionByName(Seq(3L).toDF("doc_id").withColumn("text", lit(null).cast("string")))
-    val got = TextAnalysis.bpeApplyFromModel(df, TextAnalysis.bpeLoop(df, rounds = 1)._2).collect()
+    val syms1 = TextAnalysis.bpeLoop(df, rounds = 1)._2
+    val got = TextAnalysis.bpeApplyFromModel(df, syms1).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    syms1.unpersist(blocking = false)
     assert(got == Map(1L -> ((3L, 3L)), 2L -> ((1L, 2L)), 3L -> ((0L, 0L))),
       s"got $got")
     // real corpus invariants: merging only ever SHRINKS the char-level
     // segmentation and can never go below one token per word
-    val applied = TextAnalysis.bpeApplyFromModel(docs, TextAnalysis.bpeLoop(docs, rounds = 8)._2)
+    val syms8 = TextAnalysis.bpeLoop(docs, rounds = 8)._2
+    val applied = TextAnalysis.bpeApplyFromModel(docs, syms8)
       .collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    syms8.unpersist(blocking = false)
     val norm = lower(trim(regexp_replace(col("text"), "\\s+", " ")))
     val charRef = docs
       .select(col("doc_id"), explode(split(norm, " ")).as("w"))
@@ -1163,9 +1167,11 @@ class TextAnalysisSpec extends SparkSpec {
       .map(r => r.getInt(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val ts = Seq(0, 2, 4, 8).map(r => curve(r)._1)
     assert(ts.zip(ts.tail).forall { case (a, b) => a >= b }, s"totals $ts")
-    val applied = TextAnalysis.bpeApplyFromModel(docs, TextAnalysis.bpeLoop(docs, rounds = 8)._2)
+    val syms = TextAnalysis.bpeLoop(docs, rounds = 8)._2
+    val applied = TextAnalysis.bpeApplyFromModel(docs, syms)
       .agg(org.apache.spark.sql.functions.sum($"n_bpe_tokens"),
         org.apache.spark.sql.functions.sum($"n_words")).collect()(0)
+    syms.unpersist(blocking = false)
     assert(curve(8)._1 == applied.getLong(0), "r=8 total == bpeApplyFromModel token mass")
     assert(curve(8)._2 == applied.getLong(1), "word instances agree")
   }

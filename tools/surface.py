@@ -27,6 +27,11 @@ self-contained form beside a form over prebuilt input -- one line each:
 name it: `<Object>.<name>` anywhere, or an unqualified `<name>` in its
 own file (a `.name` under another qualifier is some other def).
 
+Last, the `src/main` code-line total -- the non-blank lines of its
+Scala sources after comments are blanked (the same stripping as above):
+
+    <n> src/main code lines
+
 No flags; the output is deterministic. A def listed in either part is
 either deleted, served by something outside the specs, or recorded as
 kept on purpose (ROADMAP direction 3 holds that census).
@@ -186,6 +191,9 @@ def main():
         print(f"{path}:{line}  {owner}.{name}  forms={','.join(forms)}  "
               f"callers={','.join(who) or 'none'}")
     print(f"{len(found)} twins (a def beside its *From*/*Over* form in the same object)")
+    lines = sum(1 for path, code in callers if path.startswith("src/main/")
+                for line in code.split("\n") if line.strip())
+    print(f"{lines} src/main code lines")
 
 
 if __name__ == "__main__":
